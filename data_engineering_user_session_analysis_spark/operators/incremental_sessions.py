@@ -5,10 +5,10 @@ sessions from ALL events it is given.  A daily job at 100 TB cannot
 re-read history, and sessionizing one day in isolation silently
 splits every session that crosses midnight (the reference's daily
 job, ``spark_jobs/spark_batch_job.py``, has exactly this bug — it
-sessionizes the single day partition it reads).  This module is the
-incremental twin: process day N's events plus an O(active users)
-carry state, emit every session that can no longer grow, and carry
-each user's still-open tail session forward.
+sessionizes the single day partition it reads).  This module folds
+one day at a time instead: day N's events plus an O(active users)
+carry state go in; every session that can no longer grow comes out,
+and each user's still-open tail session is carried forward.
 
 Design — mergeable partial aggregates, not event retention:
 
@@ -21,12 +21,13 @@ Design — mergeable partial aggregates, not event retention:
   by schema), and first/last event types combine POSITIONALLY
   because every carried event strictly precedes every day-N event
   (day partitions are disjoint, half-open time ranges).
-* Day N's events are sessionized locally (one user-partitioned
-  window over ONE day), rolled up to per-session partials, and the
-  user's first local session merges into the carried session iff
-  its first event is within ``gap_seconds`` of the carried
-  ``last_ts`` — the same strict-``>`` boundary rule as
-  ``sessionize``, so the stitched result is event-identical to
+* One step is one SQL statement (``_STEP_SQL``).  The carried open
+  session enters the day's rows as a PSEUDO-EVENT whose ts is the
+  carried ``last_ts``; it sorts before every day event (``_carry
+  DESC`` breaks a tie), so "does the first local session continue
+  the carry?" IS the ordinary lag-gap rule — the same strict-``>``
+  boundary as ``sessionize`` — evaluated by the one window that
+  sessionizes the day.  The stitched result is event-identical to
   batch sessionization of the union.
 * Sessions emitted = closed forever; the invariant (pinned in
   ``tests/test_incremental_sessions.py``) is that replaying days in
@@ -34,28 +35,30 @@ Design — mergeable partial aggregates, not event retention:
   ``session_rollup(sessionize(all_events))`` EXACTLY — ids,
   ordinals, aggregates, types.
 
-Scale shape: per day, ONE ``user_id`` hash exchange total (the carry
-enters the day's rows as a pseudo-event ahead of the single window
-pass; the session rollup and the open/closed split reuse the same
-partitioning) over O(day events + active users) rows — never
-O(history), and no joins at all.  State lives as a
-parquet table keyed by user, written at the end of each step and
-read back at the start of the next — do NOT chain daily steps
-through ``localCheckpoint`` instead: eagerly-checkpointed blocks pin
-memory across steps and the measured per-day cost degrades from
-~2 s to 16+ s by day 15 of a 30-day replay, while the parquet
-round-trip stays flat (and is what a restartable daily job needs
-anyway).  Days MUST be processed in ascending date order (the
-positional merge rule assumes carried events precede today's).
+Scale shape: per day, ONE ``user_id`` hash exchange total (the
+session rollup and the open/closed split reuse its partitioning)
+over O(day events + active users) rows — never O(history), and no
+joins at all (plan-pinned in tests).  State lives as a parquet table
+keyed by user, written at the end of each step and read back at the
+start of the next — do NOT chain daily steps through
+``localCheckpoint`` instead: eagerly-checkpointed blocks pin memory
+across steps and the measured per-day cost degrades from ~2 s to
+16+ s by day 15 of a 30-day replay, while the parquet round-trip
+stays flat (and is what a restartable daily job needs anyway).  Days
+MUST be processed in ascending date order (the positional merge rule
+assumes carried events precede today's).
+
+Inputs use the events schema: ``user_id``, ``ts`` (TIMESTAMP or
+TIMESTAMP_NTZ), ``event_id`` (the tie-break), ``event_type`` and
+``value``; other columns are ignored.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.operators.sessionize import (
-    epoch_micros,
     epoch_seconds,
 )
 
@@ -72,14 +75,157 @@ _STATE_COLS = (
     "last_event_type",
 )
 
+# First day: an EMPTY carry with the state table's column types (the
+# timestamps borrow the day's ts type, so TIMESTAMP and TIMESTAMP_NTZ
+# lakes both work).
+_EMPTY_STATE_SQL = """
+SELECT user_id,
+       CAST(NULL AS BIGINT) AS session_seq,
+       ts AS session_start_time,
+       ts AS last_ts,
+       CAST(NULL AS BIGINT) AS number_of_events,
+       CAST(NULL AS DECIMAL(28,2)) AS session_value,
+       CAST(NULL AS INT) AS is_purchase,
+       CAST(NULL AS ARRAY<STRING>) AS event_types,
+       CAST(NULL AS STRING) AS first_event_type,
+       CAST(NULL AS STRING) AS last_event_type
+FROM {day}
+WHERE false
+"""
 
-def _to_rollup(partials: DataFrame, user_col: str) -> DataFrame:
+# One step.  `{day}` and `{state}` are DataFrames (PySpark registers
+# each as a temp view for the call); `:gap_us` is a bound parameter.
+# The result is every (user, session) partial after folding the day,
+# plus `_is_open`: the user's LAST session stays open (a user with no
+# events today has only the carry row, so it is the max and stays
+# open); every earlier one is closed.
+_STEP_SQL = """
+WITH u AS (
+  SELECT user_id, ts, event_id, event_type,
+         CAST(value AS DECIMAL(18,2)) AS _val,
+         false AS _carry,
+         NULL AS _cseq, NULL AS _cstart, NULL AS _cnev, NULL AS _cval,
+         NULL AS _cpurch, NULL AS _ctypes, NULL AS _cfirst, NULL AS _clast
+  FROM {day}
+  UNION ALL
+  SELECT user_id, last_ts AS ts, NULL AS event_id, NULL AS event_type,
+         NULL AS _val,
+         true AS _carry,
+         session_seq AS _cseq,
+         session_start_time AS _cstart,
+         number_of_events AS _cnev,
+         session_value AS _cval,
+         is_purchase AS _cpurch,
+         event_types AS _ctypes,
+         first_event_type AS _cfirst,
+         last_event_type AS _clast
+  FROM {state}
+),
+seqd AS (
+  SELECT *,
+         sum(CASE WHEN _prev_ts IS NULL
+                    OR unix_micros(CAST(ts AS TIMESTAMP))
+                       - unix_micros(CAST(_prev_ts AS TIMESTAMP)) > :gap_us
+                  THEN 1 ELSE 0 END)
+           OVER (PARTITION BY user_id
+                 ORDER BY _carry DESC, ts, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS _seq_local,
+         max(_cseq) OVER (PARTITION BY user_id) AS _ucseq
+  FROM (
+    SELECT *,
+           lag(ts) OVER (PARTITION BY user_id
+                         ORDER BY _carry DESC, ts, event_id)
+             AS _prev_ts
+    FROM u
+  )
+),
+combined AS (
+  SELECT user_id,
+         coalesce(max(_ucseq), 1) + _seq_local - 1 AS session_seq,
+         min(CASE WHEN _carry THEN _cstart ELSE ts END)
+           AS session_start_time,
+         max(ts) AS last_ts,
+         sum(CASE WHEN _carry THEN _cnev ELSE 1 END) AS number_of_events,
+         CAST(sum(CASE WHEN _carry THEN _cval ELSE _val END)
+              AS DECIMAL(28,2)) AS session_value,
+         max(CASE WHEN _carry THEN _cpurch
+                  WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+           AS is_purchase,
+         CASE WHEN max(CASE WHEN _carry THEN 1 ELSE 0 END) = 1
+              THEN array_union(
+                     first(CASE WHEN _carry THEN _ctypes END, true),
+                     collect_set(CASE WHEN NOT _carry THEN event_type END))
+              ELSE collect_set(CASE WHEN NOT _carry THEN event_type END)
+         END AS event_types,
+         min_by(CASE WHEN _carry THEN _cfirst ELSE event_type END,
+                struct(CASE WHEN _carry THEN 0 ELSE 1 END, ts, event_id))
+           AS first_event_type,
+         max_by(CASE WHEN _carry THEN _clast ELSE event_type END,
+                struct(CASE WHEN _carry THEN 0 ELSE 1 END, ts, event_id))
+           AS last_event_type
+  FROM seqd
+  GROUP BY user_id, _seq_local
+)
+SELECT *,
+       session_seq = max(session_seq) OVER (PARTITION BY user_id) AS _is_open
+FROM combined
+"""
+
+
+def advance_sessions(
+    day: DataFrame,
+    state: DataFrame | None = None,
+    gap_seconds: int = 1800,
+    materialize_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """One incremental step: fold one day of events into the carry.
+
+    Returns ``(closed, new_state)``: ``closed`` has the
+    ``session_rollup`` schema and contains every session that ended
+    within this day (a later day can no longer extend it);
+    ``new_state`` is the full carry to pass to the next day.  Pass
+    ``state=None`` on the first day.
+
+    Both outputs are filters over ONE materialized fold, so a caller
+    that writes both (and counts them) runs the step once:
+
+    * by default the fold is eagerly ``localCheckpoint``-ed —
+      O(sessions-per-day + active-users) rows, released when the
+      step's references die (a within-step block, not the
+      across-days chaining the module docstring warns about);
+    * with ``materialize_dir`` the fold is written to parquet at that
+      path instead (overwriting it) and both outputs read it back, so
+      a replay loop pays one job per day and ``new_state`` is already
+      restart-safe on disk.  Use a per-day path: ``closed`` keeps a
+      live reference to the files.
+    """
+    spark = day.sparkSession
+    if state is None:
+        state = spark.sql(_EMPTY_STATE_SQL, day=day)
+    combined = spark.sql(
+        _STEP_SQL,
+        args={"gap_us": int(gap_seconds) * 1_000_000},
+        day=day,
+        state=state,
+    )
+    if materialize_dir is None:
+        combined = combined.localCheckpoint(eager=True)
+    else:
+        combined.write.mode("overwrite").parquet(materialize_dir)
+        combined = spark.read.schema(combined.schema).parquet(materialize_dir)
+    closed = _to_rollup(combined.filter(~F.col("_is_open")))
+    new_state = combined.filter(F.col("_is_open")).select("user_id", *_STATE_COLS)
+    return closed, new_state
+
+
+def _to_rollup(partials: DataFrame) -> DataFrame:
     """Project carried/merged partials to the exact ``session_rollup``
     output schema (same names, same types, same column order)."""
     return partials.select(
-        F.col(user_col),
+        F.col("user_id"),
         F.concat_ws(
-            "-", F.col(user_col).cast("string"), F.col("session_seq")
+            "-", F.col("user_id").cast("string"), F.col("session_seq")
         ).alias("session_id"),
         F.col("session_start_time"),
         F.col("last_ts").alias("session_end_time"),
@@ -96,560 +242,7 @@ def _to_rollup(partials: DataFrame, user_col: str) -> DataFrame:
     )
 
 
-def advance_sessions(
-    day: DataFrame,
-    state: DataFrame | None = None,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    event_type_col: str = "event_type",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    purchase_value: str = "purchase",
-    materialize_partials: bool = True,
-    materialize_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """One incremental step: fold one day of events into the carry.
-
-    Returns ``(closed, new_state)``: ``closed`` has the
-    ``session_rollup`` schema and contains every session that ended
-    within this day (a later day can no longer extend it);
-    ``new_state`` is the full carry to pass to the next day.  Pass
-    ``state=None`` on the first day.  Both outputs are plain
-    DataFrames — persist/write them before the next step if the
-    lineage chain would otherwise grow across many days.
-
-    Both outputs share one expensive upstream — the day scan + the
-    sessionize window + the fold of the carry — so a caller that
-    writes both would trigger that DAG twice.  With
-    ``materialize_partials`` (default) the folded per-day frame is
-    eagerly ``localCheckpoint``-ed ONCE: O(sessions-per-day +
-    active-users) rows, released by the ContextCleaner when the
-    step's references die.  This is a within-step materialization —
-    the module-docstring warning about localCheckpoint is about
-    chaining the carried STATE through it across many days, which
-    pins blocks for the whole replay; a per-day block dropped at step
-    end does not.
-
-    ``materialize_dir`` materializes the SAME fold to parquet at that
-    path instead (overwriting it), and both outputs become filters
-    over the parquet read.  This folds the caller's own state write
-    into the step — a daily-replay loop that would otherwise run the
-    checkpoint job AND a state-write job per day (the state must
-    round-trip through storage anyway, per the module docstring) pays
-    exactly ONE job per day, and the returned ``new_state`` is
-    already restart-safe on disk.  Use a per-day path: ``closed``
-    keeps a live reference to the files, so overwriting a ping-pong
-    pair would corrupt accumulated frames.
-    """
-    # Seeded fold, ONE shuffle (r14; mirrors _STEP_SQL below): the
-    # carried open session enters the day's rows as a PSEUDO-EVENT
-    # whose ts is the carried last_ts — days are processed in
-    # ascending order over disjoint ranges (module contract), so it
-    # sorts before every day event (`_carry DESC` breaks any tie) and
-    # the "does the first local session continue the carry?" merge
-    # rule IS the ordinary lag-gap rule, evaluated by the same window
-    # that sessionizes the day.  The per-(user, local-session) rollup
-    # and the open/closed window then reuse the one hash(user)
-    # exchange (subset rule): the whole step plans as scan → ONE
-    # exchange → window chain → agg (plan-pinned in tests).  The
-    # previous formulation sessionized the day (exchange #1), rolled
-    # it up, and unioned the partials with the carry (exchange #2).
-    if state is None:
-        state = day.limit(0).select(
-            F.col(user_col),
-            F.lit(None).cast("bigint").alias("session_seq"),
-            F.col(ts_col).alias("session_start_time"),
-            F.col(ts_col).alias("last_ts"),
-            F.lit(None).cast("bigint").alias("number_of_events"),
-            F.lit(None).cast("decimal(28,2)").alias("session_value"),
-            F.lit(None).cast("int").alias("is_purchase"),
-            F.lit(None).cast("array<string>").alias("event_types"),
-            F.lit(None).cast("string").alias("first_event_type"),
-            F.lit(None).cast("string").alias("last_event_type"),
-        )
-
-    day_types = dict(day.dtypes)
-    ev_side = day.select(
-        F.col(user_col),
-        F.col(ts_col),
-        F.col(tiebreak_col),
-        F.col(event_type_col),
-        F.col(value_col).cast("decimal(18,2)").alias("_val"),
-        F.lit(False).alias("_carry"),
-        F.lit(None).cast("bigint").alias("_cseq"),
-        F.lit(None).cast(day_types[ts_col]).alias("_cstart"),
-        F.lit(None).cast("bigint").alias("_cnev"),
-        F.lit(None).cast("decimal(28,2)").alias("_cval"),
-        F.lit(None).cast("int").alias("_cpurch"),
-        F.lit(None).cast("array<string>").alias("_ctypes"),
-        F.lit(None).cast("string").alias("_cfirst"),
-        F.lit(None).cast("string").alias("_clast"),
-    )
-    carry_side = state.select(
-        F.col(user_col),
-        F.col("last_ts").alias(ts_col),
-        F.lit(None).cast(day_types[tiebreak_col]).alias(tiebreak_col),
-        F.lit(None).cast(day_types[event_type_col]).alias(event_type_col),
-        F.lit(None).cast("decimal(18,2)").alias("_val"),
-        F.lit(True).alias("_carry"),
-        F.col("session_seq").alias("_cseq"),
-        F.col("session_start_time").alias("_cstart"),
-        F.col("number_of_events").alias("_cnev"),
-        F.col("session_value").alias("_cval"),
-        F.col("is_purchase").alias("_cpurch"),
-        F.col("event_types").alias("_ctypes"),
-        F.col("first_event_type").alias("_cfirst"),
-        F.col("last_event_type").alias("_clast"),
-    )
-    u = ev_side.unionByName(carry_side)
-
-    order = [F.col("_carry").desc(), F.col(ts_col).asc(), F.col(tiebreak_col).asc()]
-    w_ord = Window.partitionBy(user_col).orderBy(*order)
-    w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_u = Window.partitionBy(user_col)
-    prev_ts = F.lag(ts_col).over(w_ord)
-    # strict-> gap rule matches `sessionize`: delta <= gap extends,
-    # delta > gap opens a new session; a null prev (partition head —
-    # the carry row, or the first event of a carry-less user) opens
-    is_new = F.when(
-        prev_ts.isNull()
-        | (
-            epoch_micros(F.col(ts_col)) - epoch_micros(prev_ts)
-            > F.lit(gap_seconds) * 1_000_000
-        ),
-        1,
-    ).otherwise(0)
-    seqd = u.select(
-        "*",
-        F.sum(is_new).over(w_run).alias("_seq_local"),
-        # the user's carried global ordinal (at most one carry row per
-        # user; max over the partition is that row's value, null when
-        # the user is new)
-        F.max("_cseq").over(w_u).alias("_ucseq"),
-    )
-
-    # one rollup per (user, local session): carry partials and event
-    # rows combine inside ordinary aggregates.  Positional combine is
-    # exact: the carry sorts first, so min_by/max_by over
-    # (carry-first, ts, tie) give carried-first / latest-event-last.
-    order_key = F.struct(
-        F.when(F.col("_carry"), F.lit(0)).otherwise(F.lit(1)).alias("c"),
-        F.col(ts_col).alias("t"),
-        F.col(tiebreak_col).alias("k"),
-    )
-    carried = lambda c, other: F.when(F.col("_carry"), c).otherwise(other)  # noqa: E731
-    combined = (
-        seqd.groupBy(user_col, "_seq_local")
-        .agg(
-            F.max("_ucseq").alias("_ucseq_g"),
-            F.max(carried(F.lit(1), F.lit(0))).alias("_has_carry"),
-            F.min(carried(F.col("_cstart"), F.col(ts_col))).alias(
-                "session_start_time"
-            ),
-            F.max(ts_col).alias("last_ts"),
-            F.sum(carried(F.col("_cnev"), F.lit(1))).alias("number_of_events"),
-            F.sum(carried(F.col("_cval"), F.col("_val")))
-            .cast("decimal(28,2)")
-            .alias("session_value"),
-            F.max(
-                F.when(F.col("_carry"), F.col("_cpurch"))
-                .when(F.col(event_type_col) == purchase_value, 1)
-                .otherwise(0)
-            ).alias("is_purchase"),
-            F.first(
-                F.when(F.col("_carry"), F.col("_ctypes")), ignorenulls=True
-            ).alias("_ctypes_g"),
-            F.collect_set(
-                F.when(~F.col("_carry"), F.col(event_type_col))
-            ).alias("_etypes_g"),
-            F.min_by(
-                carried(F.col("_cfirst"), F.col(event_type_col)), order_key
-            ).alias("first_event_type"),
-            F.max_by(
-                carried(F.col("_clast"), F.col(event_type_col)), order_key
-            ).alias("last_event_type"),
-        )
-        .select(
-            F.col(user_col),
-            # carry present: global = carried_seq + local - 1 (the
-            # carry IS local session 1); new user: global = local
-            (F.coalesce(F.col("_ucseq_g"), F.lit(1)) + F.col("_seq_local") - 1)
-            .alias("session_seq"),
-            "session_start_time",
-            "last_ts",
-            "number_of_events",
-            "session_value",
-            "is_purchase",
-            F.when(
-                F.col("_has_carry") == 1,
-                F.array_union(F.col("_ctypes_g"), F.col("_etypes_g")),
-            )
-            .otherwise(F.col("_etypes_g"))
-            .alias("event_types"),
-            "first_event_type",
-            "last_event_type",
-        )
-    )
-
-    # The user's LAST global session stays open (carried forward);
-    # everything before it is closed.  A user with no events today
-    # has only their pseudo-row -> it is the max -> stays open.
-    # Window max over user — no ordering needed, unbounded frame.
-    combined = combined.withColumn(
-        "_is_open", F.col("session_seq") == F.max("session_seq").over(w_u)
-    )
-    if materialize_dir is not None:
-        combined.write.mode("overwrite").parquet(materialize_dir)
-        combined = combined.sparkSession.read.parquet(materialize_dir)
-    elif materialize_partials:
-        # Both outputs consume `combined` (closed = ~_is_open rows,
-        # new_state = _is_open rows), so a caller that writes both
-        # would otherwise run the whole window chain twice — and
-        # again for any count.  One O(sessions-today + active-users)
-        # within-step materialization makes every downstream
-        # consumption a cheap filter over the checkpointed block.
-        combined = combined.localCheckpoint(eager=True)
-
-    closed = _to_rollup(
-        combined.filter(~F.col("_is_open")).drop("_is_open"), user_col
-    )
-    new_state = _to_state(
-        combined.filter(F.col("_is_open")).drop("_is_open"), user_col
-    )
-    return closed, new_state
-
-
-def _to_state(partials: DataFrame, user_col: str) -> DataFrame:
-    """Normalize partials to the state-table column set/order."""
-    return partials.select(F.col(user_col), *[F.col(c) for c in _STATE_COLS])
-
-
-# SQL twin of one `advance_sessions` step (VERDICT r13 #5).  The
-# DataFrame form costs ~2,650 Py4J round-trips of Column construction
-# per invocation (~0.5 s/day measured at sf0.1 on local[8]) — fine for
-# the production verb that runs ONCE a day, but a 30-day replay pays
-# it 30 times and the fixed overhead drowns the operator signal.  One
-# step here is ONE `spark.sql` call plus the write.
-#
-# The formulation is also one SHUFFLE better than the DataFrame
-# operator's: instead of (sessionize the day: exchange #1) →
-# (union partials with the carry: exchange #2), the carry enters the
-# day's rows as a PSEUDO-EVENT before the single user-partitioned
-# window pass — its ts is the carried last_ts, so the "does the first
-# local session continue the carried session?" merge rule IS the
-# ordinary lag-gap rule, evaluated by the same window that sessionizes
-# the day.  The group-by that rolls sessions up and the open/closed
-# window both reuse the one hash(user) exchange (subset rule), so the
-# whole step is scan → ONE exchange → window chain → agg → write.
-# The pseudo-event ordering is sound by the module contract: days are
-# replayed in ascending order over disjoint ranges, so the carried
-# last_ts precedes every day event (and `_carry DESC` breaks any tie).
-#
-# Parity with `advance_sessions` is pinned in
-# tests/test_incremental_sessions.py (bit-identical replay outputs)
-# and by the registry row's batch-sessionization DuckDB oracle.
-_STEP_SQL = """
-WITH u AS (
-  SELECT {user}, {ts}, {tie}, {etype},
-         CAST({val} AS DECIMAL(18,2)) AS _val,
-         false AS _carry,
-         NULL AS _cseq, NULL AS _cstart, NULL AS _cnev, NULL AS _cval,
-         NULL AS _cpurch, NULL AS _ctypes, NULL AS _cfirst, NULL AS _clast
-  FROM {day_rel}
-  UNION ALL
-  SELECT {user}, last_ts AS {ts}, NULL AS {tie}, NULL AS {etype},
-         NULL AS _val,
-         true AS _carry,
-         session_seq AS _cseq,
-         session_start_time AS _cstart,
-         number_of_events AS _cnev,
-         session_value AS _cval,
-         is_purchase AS _cpurch,
-         event_types AS _ctypes,
-         first_event_type AS _cfirst,
-         last_event_type AS _clast
-  FROM {state_rel} AS _state_src
-),
-seqd AS (
-  SELECT *,
-         sum(CASE WHEN _prev_ts IS NULL
-                    OR unix_micros(CAST({ts} AS TIMESTAMP))
-                       - unix_micros(CAST(_prev_ts AS TIMESTAMP)) > {gap_us}
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY {user}
-                 ORDER BY _carry DESC, {ts}, {tie}
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS _seq_local,
-         max(_cseq) OVER (PARTITION BY {user}) AS _ucseq
-  FROM (
-    SELECT *,
-           lag({ts}) OVER (PARTITION BY {user}
-                           ORDER BY _carry DESC, {ts}, {tie})
-             AS _prev_ts
-    FROM u
-  )
-),
-combined AS (
-  SELECT {user},
-         coalesce(max(_ucseq), 1) + _seq_local - 1 AS session_seq,
-         min(CASE WHEN _carry THEN _cstart ELSE {ts} END)
-           AS session_start_time,
-         max({ts}) AS last_ts,
-         sum(CASE WHEN _carry THEN _cnev ELSE 1 END) AS number_of_events,
-         CAST(sum(CASE WHEN _carry THEN _cval ELSE _val END)
-              AS DECIMAL(28,2)) AS session_value,
-         max(CASE WHEN _carry THEN _cpurch
-                  WHEN {etype} = '{purchase}' THEN 1 ELSE 0 END)
-           AS is_purchase,
-         CASE WHEN max(CASE WHEN _carry THEN 1 ELSE 0 END) = 1
-              THEN array_union(
-                     first(CASE WHEN _carry THEN _ctypes END, true),
-                     collect_set(CASE WHEN NOT _carry THEN {etype} END))
-              ELSE collect_set(CASE WHEN NOT _carry THEN {etype} END)
-         END AS event_types,
-         min_by(CASE WHEN _carry THEN _cfirst ELSE {etype} END,
-                struct(CASE WHEN _carry THEN 0 ELSE 1 END, {ts}, {tie}))
-           AS first_event_type,
-         max_by(CASE WHEN _carry THEN _clast ELSE {etype} END,
-                struct(CASE WHEN _carry THEN 0 ELSE 1 END, {ts}, {tie}))
-           AS last_event_type
-  FROM seqd
-  GROUP BY {user}, _seq_local
-)
-SELECT *,
-       session_seq = max(session_seq) OVER (PARTITION BY {user}) AS _is_open
-FROM combined
-"""
-
-
-def _check_sql_path(path: str) -> str:
-    """Paths spliced into ``parquet.`...``` relations: refuse the two
-    characters that would break out of the backtick quoting."""
-    if "`" in path or "\n" in path:
-        raise ValueError(f"path not expressible in SQL relation: {path!r}")
-    return path
-
-
-_SQL_IDENT = __import__("re").compile(r"^[A-Za-z_][A-Za-z0-9_]{0,127}$")
-
-
-def _check_sql_idents(*names: str) -> None:
-    """Column names spliced into the step template (same posture as
-    span_index's DDL guard): an exotic identifier fails loudly here
-    instead of breaking — or injecting into — the SQL text."""
-    for n in names:
-        if not _SQL_IDENT.match(str(n)):
-            raise ValueError(f"unsupported column name for step SQL: {n!r}")
-
-
-def incremental_step_sql(
-    day_rel: str,
-    state_rel: "str | None" = None,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    event_type_col: str = "event_type",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    purchase_value: str = "purchase",
-) -> str:
-    """Render one replay step as a single SQL statement.  ``day_rel``
-    is the day's relation (``parquet.`/lake/_d=<ds>``` or a view
-    name); ``state_rel`` is the previous step's open-state relation
-    (``(SELECT * FROM parquet.`/step_k` WHERE _is_open)``) or None on
-    the first day (an empty carry with `loc`'s exact column types).
-    The statement's result is `advance_sessions`' ``combined`` frame
-    plus ``_is_open`` — write it, and (closed, new_state) are the two
-    filters over the written files, exactly like
-    ``materialize_dir``.  Run the loop at
-    ``spark.sql.shuffle.partitions = 1`` so the final window's
-    exchange leaves the state at one file (replay days are small by
-    construction; the production verb processes one day per run and
-    keeps the session width)."""
-    _check_sql_idents(
-        user_col, ts_col, event_type_col, value_col, tiebreak_col
-    )
-    if "'" in purchase_value:
-        raise ValueError(
-            f"purchase value not expressible in step SQL: {purchase_value!r}"
-        )
-    if state_rel is None:
-        # first day: an EMPTY carry with the state schema's exact
-        # column types (timestamps borrow the day's ts column type so
-        # TIMESTAMP vs TIMESTAMP_NTZ fixtures both work; the union
-        # coerces the bare-NULL columns from the concrete side)
-        state_rel = (
-            f"(SELECT {user_col}, CAST(NULL AS BIGINT) AS session_seq, "
-            f"{ts_col} AS session_start_time, {ts_col} AS last_ts, "
-            "CAST(NULL AS BIGINT) AS number_of_events, "
-            "CAST(NULL AS DECIMAL(28,2)) AS session_value, "
-            "CAST(NULL AS INT) AS is_purchase, "
-            "CAST(NULL AS ARRAY<STRING>) AS event_types, "
-            "CAST(NULL AS STRING) AS first_event_type, "
-            "CAST(NULL AS STRING) AS last_event_type "
-            f"FROM {day_rel} WHERE 1 = 0)"
-        )
-    return _STEP_SQL.format(
-        day_rel=day_rel,
-        state_rel=state_rel,
-        gap_us=int(gap_seconds) * 1_000_000,
-        user=user_col,
-        ts=ts_col,
-        etype=event_type_col,
-        val=value_col,
-        tie=tiebreak_col,
-        purchase=purchase_value,
-    )
-
-
-def replay_sessions_sql(
-    spark,
-    lake_dir: str,
-    work_dir: str,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    day_prefix: str = "_d=",
-    **col_kwargs,
-) -> DataFrame:
-    """Replay a date-partitioned event lake day by day through the
-    SQL step and return the stitched full rollup (closed sessions +
-    finalized carry) — output bit-identical to looping
-    ``advance_sessions`` with per-day ``materialize_dir``s (pinned).
-
-    Per day this pays one day-view repoint (a plan-level partition
-    filter over ONE lake-wide relation), one state-view repoint, ONE
-    step-plan analysis, and one parquet write job.  Fixed-cost design
-    (round 16 — the 30-day replay's cost is almost entirely this
-    per-day constant, measured r15 at ~0.4 s/day on a fixture day):
-
-    * The day relation is a single SCHEMA-PINNED, partition-aware
-      read of the WHOLE lake, constructed (and file-listed) ONCE; the
-      per-day repoint is ``filter(part_col = day)``, which prunes the
-      scan back to that one day directory at planning
-      (PartitionFilters — pinned in tests).  The previous form
-      re-read and re-listed the single day directory every day.
-      The partition column is pinned STRING so the filter compares
-      the raw directory values the loop enumerates — no date-parse
-      semantics between the two.
-    * The state relation stays a per-day SCHEMA-PINNED read of the
-      previous step (its path changes every day; a view created once
-      would freeze the day-0 file listing).  Without the schema pins,
-      every day's analysis re-infers schemas from parquet footers —
-      measured at ~0.13 s/day.
-    * The two constant step SQL texts are PARSED ONCE; each day only
-      re-ANALYZES the cached parse tree against the repointed views
-      (``Dataset.ofRows`` — the same internal entry ``spark.sql``
-      calls after its own parse; Catalyst trees are immutable, so one
-      parse tree analyzes cleanly every day).  Guarded by a one-time
-      probe with a plain ``spark.sql`` fallback, so a Spark-version
-      drift degrades to the public parse-per-day path instead of
-      breaking the replay.
-
-    The closed rows are assembled at the end with a single multi-path
-    read filtered to ``NOT _is_open`` — a session closes in exactly
-    one step, so that read IS the union of the per-day closed frames.
-    The two view names carry a per-call uuid suffix (VERDICT r14 #5),
-    so concurrent replays on one session cannot repoint each other's
-    views mid-loop."""
-    import os
-    import uuid
-
-    from pyspark.sql import types as T
-
-    _check_sql_path(lake_dir)
-    _check_sql_path(work_dir)
-    days = sorted(
-        p[len(day_prefix):]
-        for p in os.listdir(lake_dir)
-        if p.startswith(day_prefix)
-    )
-    if not days:
-        raise ValueError(f"no {day_prefix}* partitions under {lake_dir}")
-    if not day_prefix.endswith("="):
-        raise ValueError(
-            f"day_prefix must name a partition column ('<col>='): {day_prefix!r}"
-        )
-    part_col = day_prefix[:-1]
-    tag = uuid.uuid4().hex[:12]
-    day_view, state_view = f"_incr_replay_day_{tag}", f"_incr_replay_state_{tag}"
-    # both SQL texts are constant across the loop; only the views move
-    sql_first = incremental_step_sql(
-        day_rel=day_view, state_rel=None, gap_seconds=gap_seconds,
-        user_col=user_col, **col_kwargs,
-    )
-    sql_rest = incremental_step_sql(
-        day_rel=day_view, state_rel=state_view, gap_seconds=gap_seconds,
-        user_col=user_col, **col_kwargs,
-    )
-    day_schema = spark.read.parquet(
-        f"{lake_dir}/{day_prefix}{days[0]}"
-    ).schema
-    lake = spark.read.schema(
-        T.StructType(
-            list(day_schema) + [T.StructField(part_col, T.StringType())]
-        )
-    ).parquet(lake_dir)
-
-    # Parse the two constant texts once; analysis stays per-day (the
-    # views move).  The probe constructs and analyzes a trivial plan
-    # through the same entry — if any piece is missing on this Spark,
-    # fall back to public spark.sql for the whole loop.
-    _ofrows = jspark = parsed_first = parsed_rest = None
-    try:
-        jspark = spark._jsparkSession
-        parser = jspark.sessionState().sqlParser()
-        _ofrows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-        assert DataFrame(
-            _ofrows(jspark, parser.parsePlan("SELECT 1 AS _probe")), spark
-        ).schema.fieldNames() == ["_probe"]
-        parsed_first = parser.parsePlan(sql_first)
-        parsed_rest = parser.parsePlan(sql_rest)
-    except Exception:
-        _ofrows = None
-
-    def _step_df(first: bool) -> DataFrame:
-        if _ofrows is not None:
-            return DataFrame(
-                _ofrows(jspark, parsed_first if first else parsed_rest), spark
-            )
-        return spark.sql(sql_first if first else sql_rest)
-
-    state_schema = None
-    steps = []
-    for i, d in enumerate(days):
-        step_dir = os.path.join(work_dir, f"step_{i}")
-        lake.filter(F.col(part_col) == d).createOrReplaceTempView(day_view)
-        if steps:
-            spark.read.schema(state_schema).parquet(steps[-1]).filter(
-                "_is_open"
-            ).createOrReplaceTempView(state_view)
-        df = _step_df(first=not steps)
-        df.write.mode("overwrite").parquet(step_dir)
-        if state_schema is None:
-            state_schema = df.schema
-        steps.append(step_dir)
-    spark.catalog.dropTempView(day_view)
-    if len(steps) > 1:
-        spark.catalog.dropTempView(state_view)
-    # assembly reads are schema-pinned too (the step schema is known
-    # from day 0): an unpinned multi-path read re-infers from footers
-    closed = (
-        spark.read.schema(state_schema).parquet(*steps)
-        .filter(~F.col("_is_open"))
-        .drop("_is_open")
-    )
-    state = (
-        spark.read.schema(state_schema).parquet(steps[-1])
-        .filter(F.col("_is_open"))
-        .drop("_is_open")
-    )
-    return _to_rollup(closed, user_col).unionByName(
-        finalize_sessions(_to_state(state, user_col), user_col)
-    )
-
-
-def finalize_sessions(state: DataFrame, user_col: str = "user_id") -> DataFrame:
+def finalize_sessions(state: DataFrame) -> DataFrame:
     """Emit every still-open carried session as a final rollup row
     (end of stream / end of backfill)."""
-    return _to_rollup(state, user_col)
+    return _to_rollup(state)

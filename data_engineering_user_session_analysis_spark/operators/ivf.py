@@ -1052,8 +1052,8 @@ def ivf2_topk(
     tl = _two_level_arrays(seeds.orderBy("sid").collect())
     # the routing UDF's closure references this module's functions —
     # ship the package to the Python workers (same convention as
-    # pandas_ops/multimodal; a plain session from a foreign cwd has
-    # no other way to import it)
+    # multimodal; a plain session from a foreign cwd has no other way
+    # to import it)
     from data_engineering_user_session_analysis_spark.runtime import ensure_worker_imports
 
     ensure_worker_imports(emb.sparkSession)

@@ -298,92 +298,59 @@ GROUP BY user_id, session_id
 )
 def session_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day incremental sessionization replay
-    (``operators/incremental_sessions.py``) — the engine's flagship
-    original capability, driver-guarded: the events table is replayed
-    one calendar day at a time through ``advance_sessions`` (each
-    day's partials eagerly materialized, exactly like the production
-    ``job sessions <ds>`` verb), closed sessions accumulate, and the
-    final open carry is flushed with ``finalize_sessions``.  The
-    oracle is BATCH gap-sessionization over the union of all days —
-    the stitched result must match it row-for-row, including sessions
-    crossing midnight (the reference's daily job splits those:
+    (``operators/incremental_sessions.py``), driver-guarded.  The
+    events are written once to a date-partitioned lake; each calendar
+    day, in ascending order, is then folded through
+    ``advance_sessions`` — the same step the production
+    ``job sessions <ds>`` verb runs — with the fold written to a
+    per-day parquet dir that is also the next day's carry.  The
+    closed sessions of every day plus ``finalize_sessions`` of the
+    last carry are the result.  The oracle is BATCH
+    gap-sessionization over all events: the stitched result must
+    match it row-for-row, including sessions crossing midnight (the
+    reference's daily job splits those:
     ``spark_jobs/spark_batch_job.py`` sessionizes one partition at a
-    time).  Scale shape per day: one user-partitioned window over the
-    day + two hash joins against O(active users) state — never
-    O(history)."""
+    time).  Per day the step is one user-partitioned window pass over
+    the day's events plus O(active users) carry rows — never
+    O(history).
+
+    An event with a null ``ts`` belongs to no day, so it cannot be
+    folded: the row raises ``ValueError`` rather than drop it."""
     import os
     import tempfile
+    from functools import reduce
 
     from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
-        replay_sessions_sql,
+        advance_sessions,
+        finalize_sessions,
     )
 
-    ev = load_events(spark, sf_dir)
-    # State round-trips through parquet exactly like the production
-    # verb (batch_job.run_incremental_sessions) — NOT through chained
-    # localCheckpoint: the operator docstring documents (and a
-    # round-6 re-measure confirmed) that checkpoint chaining degrades
-    # exponentially past ~day 15 while the parquet ping-pong stays
-    # flat.  The temp dir backs the RETURNED DataFrame (the final
-    # state read), so it is left for the consumer; OS tmp reaping
-    # reclaims the few MB.
+    # the five columns the step reads, projected before the lake write
+    # so the payload (`props`) never reaches the per-day scans
+    ev = load_events(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "event_type", "value"
+    ).withColumn("_d", F.to_date("ts"))
+    days = [r["_d"] for r in ev.select("_d").distinct().orderBy("_d").collect()]
+    if None in days:
+        raise ValueError(
+            "session_rollup_incremental: events with a null ts belong to no "
+            "day and cannot be folded"
+        )
+    # The temp dir backs the RETURNED DataFrame (the step dirs), so it
+    # is left for the consumer; OS tmp reaping reclaims the few MB.
     tmp = tempfile.mkdtemp(prefix="session_incr_")
-    # Scope the shuffle width to the per-day data size for the replay
-    # loop (the connected_components pattern): each day holds a
-    # fixture-day of rows, and a plain driver session's 200-wide
-    # shuffles cost more in task overhead than the work.  Restored in
-    # finally; same session-scoped-width caveat as
-    # connected_components (single-threaded callers only).
-    width_key = "spark.sql.shuffle.partitions"
-    aqe_key = "spark.sql.adaptive.enabled"
-    sess_width = spark.conf.get(width_key)
-    sess_aqe = spark.conf.get(aqe_key)
-    # width 1: a fixture day is ~1/30 of sf0.1 (~3k events) and the
-    # replay's cost is per-task fixed overhead × 30 days × stages —
-    # width 1 measured fastest (r14 profile: 0.52 s/day vs 0.95 at
-    # width 4) and leaves each step's state at one file.  The
-    # PRODUCTION verb keeps the session width: a real day is millions
-    # of rows.
-    try:
-        # Replay from a date-PARTITIONED lake, like production: the
-        # daily verb reads a partition-pruned `date=<ds>` directory,
-        # so the replay must not pay 30 full-table scans the real
-        # pipeline never does.  One partitioned write (~3 s), then
-        # every day's read is a single pruned file.  The lake write
-        # stays at SESSION width (one writer task per day partition);
-        # only the replay loop narrows.
-        lake = os.path.join(tmp, "lake")
-        # Project to the five replay columns BEFORE the lake exchange
-        # (guide §2.3: the write is an opaque materialization barrier,
-        # so Catalyst cannot prune for the downstream consumer): the
-        # step SQL touches only (user, ts, tie, type, value) — at real
-        # event widths the payload columns (`props` here) dominate the
-        # shuffled/encoded bytes and every per-day scan.
-        ev.select(
-            "user_id", "ts", "event_id", "event_type", "value"
-        ).withColumn("_d", F.to_date("ts")).repartition("_d").write.partitionBy(
-            "_d"
-        ).parquet(lake)
-        spark.conf.set(width_key, "1")
-        # AQE off for the replay only: at fixture-day sizes each AQE
-        # re-plan adds jobs that dominate the day's actual work
-        # (measured 35% of the loop); the PRODUCTION verb (batch_job)
-        # keeps AQE on because a real day is big enough to need
-        # skew/coalesce re-plans.
-        spark.conf.set(aqe_key, "false")
-        # The SQL-template replay (one spark.sql + one write job per
-        # day) — bit-identical to looping advance_sessions with
-        # per-day materialize_dirs (pinned in
-        # tests/test_incremental_sessions.py), but without the
-        # ~2,650 Py4J round-trips/day of Column construction the
-        # DataFrame form pays (VERDICT r13 #5: that fixed overhead
-        # was 96% of this row's bench time).  The production verb
-        # keeps the DataFrame operator: it builds the plan once per
-        # daily run, where construction cost is noise.
-        full = replay_sessions_sql(spark, lake, tmp)
-    finally:
-        spark.conf.set(width_key, sess_width)
-        spark.conf.set(aqe_key, sess_aqe)
+    lake_dir = os.path.join(tmp, "lake")
+    ev.repartition("_d").write.partitionBy("_d").parquet(lake_dir)
+    lake = spark.read.parquet(lake_dir)
+    state, closed = None, []
+    for i, d in enumerate(days):
+        day_closed, state = advance_sessions(
+            lake.filter(F.col("_d") == d),
+            state,
+            materialize_dir=os.path.join(tmp, f"step_{i}"),
+        )
+        closed.append(day_closed)
+    full = reduce(DataFrame.unionByName, closed, finalize_sessions(state))
     return full.withColumns(
         {
             "is_purchase": F.col("is_purchase").cast("int"),

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the repo this conftest lives in, not an installed or sibling copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineering_user_session_analysis_spark import get_spark  # noqa: E402
 
@@ -26,50 +28,3 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
-
-
-# ---- fast/slow test tiers (round 16, VERDICT r15 #2) ----------------
-# The full 464-test suite runs 40-60 min on this box and the driver's
-# verify window truncated it mid-run in r15 (`tests_ok: false` with
-# zero failures — a runtime-budget red, not a failing test).  Tests
-# whose cost is dominated by heavyweight machinery rather than the
-# operator under test (Derby JDBC round-trips, streaming restarts,
-# hypothesis sweeps, multi-100k-row fixtures) carry @pytest.mark.slow
-# and are SKIPPED by default; `--slow` (or SPARK_GRAFT_SLOW_TESTS=1)
-# runs everything.  The closing battery runs the full suite with
-# --slow once per session, so the slow tier stays exercised.
-
-
-def pytest_addoption(parser):
-    parser.addoption(
-        "--slow",
-        action="store_true",
-        default=False,
-        help="also run tests marked slow (full suite)",
-    )
-
-
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: heavyweight test (Derby JDBC, streaming restart, "
-        "hypothesis sweep, multi-100k-row fixture) — skipped by "
-        "default, run with --slow",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    import os
-
-    from tests.slow_tier import SLOW_TESTS
-
-    if config.getoption("--slow") or os.environ.get(
-        "SPARK_GRAFT_SLOW_TESTS"
-    ) == "1":
-        return
-    skip_slow = pytest.mark.skip(
-        reason="slow tier: run with --slow (or SPARK_GRAFT_SLOW_TESTS=1)"
-    )
-    for item in items:
-        if "slow" in item.keywords or item.nodeid in SLOW_TESTS:
-            item.add_marker(skip_slow)

@@ -134,29 +134,41 @@ def test_midnight_boundary_cases(spark, tmp_path):
     assert got["5-2"]["is_purchase"] == 1
 
 
-def _sql_replay(spark, events, tmp, gap_seconds=GAP):
-    """Drive the SQL-template replay the way the registry row does:
-    date-partitioned lake, then replay_sessions_sql."""
+
+def _lake_replay(spark, events, tmp, gap_seconds=GAP):
+    """Drive the step the way the registry row does: a date-partitioned
+    lake, one ``advance_sessions`` per day over a partition filter,
+    each fold written to a per-day ``materialize_dir``."""
     import os
 
-    from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
-        replay_sessions_sql,
-    )
-
-    lake = os.path.join(tmp, "lake")
+    lake_dir = os.path.join(tmp, "lake")
     events.withColumn("_d", F.to_date("ts")).repartition("_d").write.partitionBy(
         "_d"
-    ).parquet(lake)
-    return replay_sessions_sql(
-        spark, lake, os.path.join(tmp, "steps"), gap_seconds=gap_seconds
-    )
+    ).parquet(lake_dir)
+    lake = spark.read.parquet(lake_dir)
+    days = [r["_d"] for r in lake.select("_d").distinct().orderBy("_d").collect()]
+    state, parts = None, []
+    for i, d in enumerate(days):
+        closed, state = advance_sessions(
+            lake.filter(F.col("_d") == d),
+            state,
+            gap_seconds=gap_seconds,
+            materialize_dir=os.path.join(tmp, f"step_{i}"),
+        )
+        parts.append(closed)
+    out = finalize_sessions(state)
+    for c in parts:
+        out = out.unionByName(c)
+    return out
 
 
 def test_sql_replay_equals_dataframe_replay(spark, tmp_path):
-    """The SQL step template (VERDICT r13 #5) is the SAME logical
-    step as advance_sessions — pinned bit-identical on the corpus
-    built to cross midnight every way that matters, and against the
-    batch rollup (the ground truth both replays must equal)."""
+    """The registry row's replay shape (partitioned lake, SQL fold
+    written to parquet per day) and the production shape
+    (``_replay``: checkpointed fold, explicit state-table write) run
+    the same step and must agree bit-for-bit on the corpus built to
+    cross midnight every way that matters, and with the batch rollup
+    (the ground truth both replays must equal)."""
     ev = _mk_events(
         spark,
         [
@@ -177,13 +189,12 @@ def test_sql_replay_equals_dataframe_replay(spark, tmp_path):
             (None, "2024-03-02 00:05:00", 14, "click", 2.0),
         ],
     )
-    sql_replay = _sql_replay(spark, ev, str(tmp_path / "sql"))
+    lake_replay = _lake_replay(spark, ev, str(tmp_path / "lake_run"))
     df_replay = _replay(spark, ev, str(tmp_path / "df"))
     batch = session_rollup(sessionize(ev, order_cols=("event_id",)))
     # names + types (nullability differs trivially: _replay's closed
-    # rows round-trip through an append-mode parquet dir, which makes
-    # every field nullable)
-    assert [(f.name, f.dataType) for f in sql_replay.schema.fields] == [
+    # rows round-trip through an append-mode parquet dir)
+    assert [(f.name, f.dataType) for f in lake_replay.schema.fields] == [
         (f.name, f.dataType) for f in df_replay.schema.fields
     ]
 
@@ -192,14 +203,90 @@ def test_sql_replay_equals_dataframe_replay(spark, tmp_path):
     def rows(df):
         return sorted((tuple(r) for r in df.collect()), key=str)
 
-    assert rows(sql_replay) == rows(df_replay)
-    assert rows(sql_replay) == rows(batch)
+    assert rows(lake_replay) == rows(df_replay)
+    assert rows(lake_replay) == rows(batch)
 
 
-def test_sql_replay_equals_batch_on_fixture(spark, sf_small, tmp_path):
-    ev = load_events(spark, sf_small)
-    batch = session_rollup(sessionize(ev, order_cols=("event_id",)))
-    _assert_equal(_sql_replay(spark, ev, str(tmp_path)), batch)
+def test_sql_step_plan_has_one_exchange(spark, tmp_path):
+    """The fold's scale claim in the replay's shape: a mid-replay step
+    over one pruned lake partition and a parquet-backed carry is
+    scan -> ONE hash(user) exchange -> window chain -> agg -> project.
+    The rollup GROUP BY (user, seq) and the open/closed window both
+    reuse the exchange via the subset rule — a second Exchange or a
+    join in this plan means a formulation regression."""
+    from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
+        _STEP_SQL,
+    )
+
+    ev = _mk_events(
+        spark,
+        [
+            (1, "2024-03-01 23:50:00", 1, "view", 1.0),
+            (1, "2024-03-02 00:10:00", 2, "purchase", 2.5),
+        ],
+    ).withColumn("_d", F.to_date("ts"))
+    lake_dir = str(tmp_path / "lake")
+    ev.repartition("_d").write.partitionBy("_d").parquet(lake_dir)
+    lake = spark.read.parquet(lake_dir)
+    days = [r["_d"] for r in lake.select("_d").distinct().orderBy("_d").collect()]
+    _, state = advance_sessions(
+        lake.filter(F.col("_d") == days[0]),
+        None,
+        materialize_dir=str(tmp_path / "s0"),
+    )
+    step = spark.sql(
+        _STEP_SQL,
+        args={"gap_us": GAP * 1_000_000},
+        day=lake.filter(F.col("_d") == days[1]),
+        state=state,
+    )
+    plan = step._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+
+def test_registry_replay_equals_batch_on_fixture(spark, sf_small):
+    """The registry row's replay (date-partitioned lake, one
+    ``advance_sessions`` per day with a per-day ``materialize_dir``)
+    equals the batch rollup."""
+    from data_engineering_user_session_analysis_spark.queries.session_queries import (
+        session_rollup_incremental,
+    )
+
+    batch = session_rollup(
+        sessionize(load_events(spark, sf_small), order_cols=("event_id",))
+    ).withColumn("session_value", F.col("session_value").cast("double"))
+    _assert_equal(session_rollup_incremental(spark, sf_small), batch)
+
+
+def test_registry_replay_refuses_null_ts(spark, sf_small, tmp_path):
+    """An event with a null ts belongs to no day: the registry row
+    must fail with a named error, never drop the row silently (its
+    lake partition would be ``__HIVE_DEFAULT_PARTITION__``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from data_engineering_user_session_analysis_spark.queries.session_queries import (
+        session_rollup_incremental,
+    )
+
+    events = pq.read_table(f"{sf_small}/events.parquet")
+    bad = pa.Table.from_pylist(
+        [
+            {
+                "event_id": 10**9,
+                "ts": None,
+                "user_id": events["user_id"][0].as_py(),
+                "event_type": "view",
+                "value": 1.0,
+                "props": "{}",
+            }
+        ],
+        schema=events.schema,
+    )
+    pq.write_table(pa.concat_tables([events, bad]), tmp_path / "events.parquet")
+    with pytest.raises(ValueError, match="null ts"):
+        session_rollup_incremental(spark, str(tmp_path))
 
 
 def test_incremental_replay_property(spark, tmp_path_factory):
@@ -263,61 +350,6 @@ def test_incremental_replay_property(spark, tmp_path_factory):
     run()
 
 
-def test_step_sql_validates_spliced_identifiers():
-    """Column names and the purchase literal are spliced into the
-    step template — exotic values must fail loudly, not reach SQL."""
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
-        incremental_step_sql,
-    )
-
-    with pytest.raises(ValueError, match="column name"):
-        incremental_step_sql("t", None, user_col="user; DROP TABLE x")
-    with pytest.raises(ValueError, match="purchase"):
-        incremental_step_sql("t", None, purchase_value="a'b")
-
-
-def test_sql_step_plan_has_one_exchange(spark, tmp_path):
-    """The seeded-carry formulation's scale claim: a mid-replay step
-    is scan -> ONE hash(user) exchange -> window chain -> agg ->
-    project.  The rollup groupBy (user, seq) and the open/closed
-    window both reuse the exchange via the subset rule — a second
-    Exchange in this plan means a formulation regression."""
-    import os
-
-    from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
-        incremental_step_sql,
-    )
-
-    ev = _mk_events(
-        spark,
-        [
-            (1, "2024-03-01 23:50:00", 1, "view", 1.0),
-            (1, "2024-03-02 00:10:00", 2, "purchase", 2.5),
-        ],
-    )
-    lake = str(tmp_path / "lake")
-    ev.withColumn("_d", F.to_date("ts")).repartition("_d").write.partitionBy(
-        "_d"
-    ).parquet(lake)
-    days = sorted(
-        p.split("=", 1)[1] for p in os.listdir(lake) if p.startswith("_d=")
-    )
-    s0 = str(tmp_path / "s0")
-    spark.sql(
-        incremental_step_sql(f"parquet.`{lake}/_d={days[0]}`", None)
-    ).write.parquet(s0)
-    step = spark.sql(
-        incremental_step_sql(
-            f"parquet.`{lake}/_d={days[1]}`",
-            f"(SELECT * FROM parquet.`{s0}` WHERE _is_open)",
-        )
-    )
-    plan = step._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-
-
 def test_closed_sessions_never_reemitted(spark, tmp_path):
     """Each session id is emitted exactly once across the whole replay
     (closed means closed — a downstream sink can append blindly)."""
@@ -336,23 +368,26 @@ def test_closed_sessions_never_reemitted(spark, tmp_path):
 
 
 def test_incremental_plan_is_user_partitioned(spark):
-    """The daily step must stay O(day + active users): its physical
-    plan may shuffle on the user key but must not contain a cartesian
-    or nested-loop join against state."""
+    """The daily step must stay O(day + active users): a mid-replay
+    fold is scan -> ONE hash(user) exchange -> window chain -> agg.
+    The rollup GROUP BY (user, seq) and the open/closed window reuse
+    the exchange via the subset rule; a second Exchange, a join, a
+    cartesian or a nested-loop join against state is a formulation
+    regression."""
+    from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
+        _STEP_SQL,
+    )
+
     ev = _mk_events(spark, [(1, "2024-03-01 10:00:00", 1, "view", 1.0)])
-    closed, state = advance_sessions(ev, None)
+    _, state = advance_sessions(ev, None)
     day2 = _mk_events(spark, [(1, "2024-03-02 10:00:00", 2, "view", 1.0)])
-    closed2, _ = advance_sessions(day2, state)
-    plan = closed2._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the r14 seeded-carry formulation: the whole step reuses ONE
-    # hash(user) exchange (the rollup agg and the open/closed window
-    # ride it via the subset rule) — and no joins at all
-    raw, _ = advance_sessions(day2, state, materialize_partials=False)
-    raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-    assert raw_plan.count("Exchange") == 1, raw_plan
-    assert "Join" not in raw_plan, raw_plan
+    fold = spark.sql(
+        _STEP_SQL, args={"gap_us": GAP * 1_000_000}, day=day2, state=state
+    )
+    plan = fold._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_run_incremental_sessions_job(spark, sf_small, tmp_path):
@@ -463,14 +498,7 @@ def test_null_user_rows_match_batch(spark, tmp_path):
         # a normal user for contrast
         (7, "2024-03-01 12:00:00", 4, "view", 1.0),
     ]
-    data = [
-        (u, dt.datetime.fromisoformat(ts), e, et, float(v))
-        for (u, ts, e, et, v) in rows
-    ]
-    ev = spark.createDataFrame(
-        data,
-        "user_id long, ts timestamp, event_id long, event_type string, value double",
-    )
+    ev = _mk_events(spark, rows)
     batch = session_rollup(sessionize(ev, order_cols=("event_id",)))
     inc = _replay(spark, ev, str(tmp_path))
     a = {tuple(r) for r in batch.collect()}
@@ -512,16 +540,13 @@ def test_materialize_dir_equals_checkpoint_replay(spark, sf_small, tmp_path):
 
 
 def test_replay_day_scan_is_partition_pruned(spark, tmp_path):
-    """The r16 replay reads the lake through ONE partition-aware
-    relation and repoints each day with a filter on the partition
-    column — that is only a win if the day scan actually PRUNES back
-    to the one directory at planning.  Pin the PartitionFilters on
-    the exact construction the replay loop uses (schema-pinned lake
-    read, string partition column, equality filter)."""
-    import os
-
-    from pyspark.sql import types as T
-
+    """The registry row's replay reads the lake through ONE
+    partition-aware relation and repoints each day with a filter on
+    the partition column — that is only a win if the day scan
+    actually PRUNES back to the one directory at planning.  Pin the
+    PartitionFilters on the exact construction the replay uses
+    (inferred date partition column, equality filter on a day taken
+    from the data)."""
     ev = _mk_events(
         spark,
         [
@@ -529,54 +554,14 @@ def test_replay_day_scan_is_partition_pruned(spark, tmp_path):
             (1, "2024-03-02 10:00:00", 2, "view", 1.0),
             (1, "2024-03-03 10:00:00", 3, "view", 1.0),
         ],
-    )
+    ).withColumn("_d", F.to_date("ts"))
+    days = [r["_d"] for r in ev.select("_d").distinct().orderBy("_d").collect()]
     lake = str(tmp_path / "lake")
-    ev.withColumn("_d", F.to_date("ts")).repartition("_d").write.partitionBy(
-        "_d"
-    ).parquet(lake)
-    days = sorted(
-        p.split("=", 1)[1] for p in os.listdir(lake) if p.startswith("_d=")
-    )
-    day_schema = spark.read.parquet(f"{lake}/_d={days[0]}").schema
-    lake_df = spark.read.schema(
-        T.StructType(list(day_schema) + [T.StructField("_d", T.StringType())])
-    ).parquet(lake)
-    one_day = lake_df.filter(F.col("_d") == days[1])
+    ev.repartition("_d").write.partitionBy("_d").parquet(lake)
+    one_day = spark.read.parquet(lake).filter(F.col("_d") == days[1])
     plan = one_day._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan, plan
-    assert days[1] in plan, plan
+    assert str(days[1]) in plan, plan
     # the pruned scan must read exactly the one day's rows
     assert one_day.count() == 1
     assert one_day.select("event_id").collect()[0][0] == 2
-
-
-def test_sql_replay_ofrows_fallback_equal(spark, tmp_path, monkeypatch):
-    """replay_sessions_sql parses its two constant step texts once and
-    re-analyzes them per day through Spark's own Dataset.ofRows entry;
-    if that internal entry is unavailable the loop must degrade to the
-    public spark.sql path with IDENTICAL output.  Force the fallback
-    by making the probe fail and compare replays row-for-row."""
-    from data_engineering_user_session_analysis_spark.operators import (
-        incremental_sessions as inc,
-    )
-
-    ev = _mk_events(
-        spark,
-        [
-            (1, "2024-03-01 23:50:00", 1, "view", 1.0),
-            (1, "2024-03-02 00:10:00", 2, "purchase", 2.5),
-            (2, "2024-03-01 12:00:00", 3, "view", 1.0),
-            (2, "2024-03-03 12:00:00", 4, "click", 0.0),
-        ],
-    )
-    fast = _sql_replay(spark, ev, str(tmp_path / "fast"))
-    fast_rows = sorted((tuple(r) for r in fast.collect()), key=str)
-
-    class _BoomDataFrame:
-        def __call__(self, *a, **k):
-            raise RuntimeError("probe disabled: force spark.sql fallback")
-
-    monkeypatch.setattr(inc, "DataFrame", _BoomDataFrame())
-    slow = _sql_replay(spark, ev, str(tmp_path / "slow"))
-    slow_rows = sorted((tuple(r) for r in slow.collect()), key=str)
-    assert fast_rows == slow_rows

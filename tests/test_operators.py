@@ -1,7 +1,6 @@
-"""Operator-equivalence and property tests: the pandas escape hatch
-must agree with the JVM path; salted aggregation must equal direct
-aggregation; sessionize must satisfy its invariants on arbitrary
-inputs (Hypothesis)."""
+"""Operator-equivalence and property tests: salted aggregation must
+equal direct aggregation; sessionize must satisfy its invariants on
+arbitrary inputs (Hypothesis)."""
 
 from __future__ import annotations
 
@@ -11,23 +10,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.operators.pandas_ops import (
-    sessionize_applyinpandas,
-    zscore_pandas_udf,
-)
 from data_engineering_user_session_analysis_spark.operators.sessionize import sessionize
 from data_engineering_user_session_analysis_spark.operators.skew import salted_agg
 from data_engineering_user_session_analysis_spark.sources.events import load_events
-
-
-def test_applyinpandas_sessionize_equals_window(spark, sf_small):
-    ev = load_events(spark, sf_small)
-    jvm = sessionize(ev, order_cols=("event_id",)).select(
-        "event_id", "session_seq", "session_id"
-    )
-    py = sessionize_applyinpandas(ev).select("event_id", "session_seq", "session_id")
-    assert jvm.exceptAll(py).count() == 0
-    assert py.exceptAll(jvm).count() == 0
 
 
 def test_salted_agg_equals_direct(spark, sf_small):
@@ -45,13 +30,6 @@ def test_salted_agg_equals_direct(spark, sf_small):
     )
     assert direct.exceptAll(salted).count() == 0
     assert salted.exceptAll(direct).count() == 0
-
-
-def test_zscore_pandas_udf_runs(spark, sf_small):
-    out = zscore_pandas_udf(load_events(spark, sf_small).limit(100))
-    rows = out.select("value", "value_centered_batch").collect()
-    assert len(rows) == 100
-    assert all(r.value_centered_batch is not None for r in rows)
 
 
 def _py_sessionize(events: list[tuple[int, datetime.datetime]], gap: int = 1800):

@@ -182,58 +182,6 @@ def test_streaming_drop_duplicates(spark, tmp_path):
     assert ids == [1, 2, 3, 4], ids
 
 
-def test_apply_in_pandas_with_state(spark, tmp_path):
-    """Custom stateful operator: per-user lifetime counters survive
-    across micro-batches (applyInPandasWithState, update mode)."""
-    import pandas as pd
-
-    from data_engineering_user_session_analysis_spark.streaming.custom_state import running_user_totals
-
-    src = tmp_path / "state_src"
-    src.mkdir()
-
-    def mk(path, rows):
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": [pd.Timestamp("2024-01-01 12:00:00").value] * len(rows),
-                "user_id": [r[1] for r in rows],
-                "event_type": ["view"] * len(rows),
-                "value": [r[2] for r in rows],
-                "props": ["{}"] * len(rows),
-            }
-        ).to_parquet(path)
-
-    mk(src / "a.parquet", [(1, 1, 1.0), (2, 1, 2.0), (3, 2, 10.0)])
-    stream = read_file_stream(spark, str(src), max_files_per_trigger=1)
-    totals = running_user_totals(stream)
-    name = f"st_{uuid.uuid4().hex[:8]}"
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        mk(src / "b.parquet", [(4, 1, 4.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(name).collect()
-    # last emission per user reflects lifetime totals
-    latest = {}
-    for r in rows:
-        latest[r.user_id] = (r.n_events, r.total_value)
-    assert latest[1] == (3, 7.0), latest
-    assert latest[2] == (1, 10.0), latest
-    # user 1 emitted twice (once per batch), cumulative both times
-    user1 = sorted(
-        [(r.n_events, r.total_value) for r in rows if r.user_id == 1]
-    )
-    assert user1 == [(2, 3.0), (3, 7.0)], user1
-
-
 def test_foreach_batch_upsert_idempotent(spark, sf_small, tmp_path):
     """Replaying the same micro-batch through the upsert sink leaves
     the output unchanged (key-level MERGE semantics)."""

@@ -97,12 +97,7 @@ def main() -> None:
     py = sys.executable
 
     if "pytest" not in skip:
-        # --slow: the battery is the once-per-session FULL-suite run
-        # (the default tier skips the measured >=10 s tests so the
-        # driver's bounded verify window can complete — r16)
-        r = _run(
-            [py, "-m", "pytest", "tests/", "-q", "--slow"], log_name="pytest"
-        )
+        r = _run([py, "-m", "pytest", "tests/", "-q"], log_name="pytest")
         last = [
             ln
             for ln in r.pop("tail").splitlines()
