@@ -8,12 +8,13 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:

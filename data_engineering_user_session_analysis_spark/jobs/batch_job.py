@@ -18,6 +18,7 @@
 
 from __future__ import annotations
 
+import datetime
 import os
 import sys
 
@@ -500,10 +501,9 @@ def run_vectors_index_step(
         clean, idx, ds, target_n=max(report["shard_rows"], 1) * target_days
     )
     report["indexed_rows"] = clean.count()
-    # the geometry-outgrown signal (the vector twin of the IVF
-    # staleness report): a fixed-geometry index past its design point
-    # pays linearly growing probes SILENTLY — surface it daily so the
-    # operator knows when `job reindex-vectors` is due
+    # the geometry-outgrown signal: a fixed-geometry index past its
+    # design point pays linearly growing probes SILENTLY — surface it
+    # daily so the operator knows when `job reindex-vectors` is due
     report["index_outgrown"] = vector_index_outgrown(spark, idx, margin=rebuild_margin)
     report["index_rebuilt"] = None
     if auto_rebuild and report["index_outgrown"]["outgrown"]:
@@ -785,8 +785,6 @@ def run_daily_pipeline(
     ``tests/test_batch_job.py`` with a 3-day replay + day-2 re-run).
     Returns a per-step report dict for observability.
     """
-    import datetime as _dt
-
     report: dict = {"ds": ds}
 
     # one cached pass: both counts come from a single aggregation,
@@ -828,7 +826,7 @@ def run_daily_pipeline(
     report["serving_tables"] = sorted(serving)
 
     if compact_previous:
-        prev = (_dt.date.fromisoformat(ds) - _dt.timedelta(days=1)).isoformat()
+        prev = (datetime.date.fromisoformat(ds) - datetime.timedelta(days=1)).isoformat()
         if os.path.isdir(os.path.join(lake_path, f"date={prev}")):
             report["compacted_previous"] = compact_closed_partition(
                 spark, lake_path, prev
@@ -880,10 +878,8 @@ def run_backfill(
     Writes the SAME ``out_dir/<table>/ds=<ds>`` locations the daily
     job writes — a backfill replaces the live serving output for the
     range, which is the whole point of running one."""
-    import datetime as _dt
-
-    start = _dt.date.fromisoformat(ds_start)
-    end = _dt.date.fromisoformat(ds_end)
+    start = datetime.date.fromisoformat(ds_start)
+    end = datetime.date.fromisoformat(ds_end)
     if end < start:
         raise ValueError(f"backfill range is empty: {ds_start}..{ds_end}")
     out: dict[str, dict[str, DataFrame]] = {}
@@ -891,18 +887,22 @@ def run_backfill(
     while day <= end:
         ds = day.isoformat()
         out[ds] = run_daily_job(spark, lake_path, ds, out_dir)
-        day += _dt.timedelta(days=1)
+        day += datetime.timedelta(days=1)
     return out
+
+
+JOB_VERBS = (
+    "daily", "sessions", "backfill", "compact", "reindex-vectors",
+    "validate-vector-recall", "validate-minhash-recall",
+    "tune-recall-vectors", "tune-recall-minhash", "span-index",
+    "compact-span-index",
+)
 
 
 def main(argv: list[str]) -> None:
     """CLI contract of the reference batch job: ``job <ds>`` (plus the
     maintenance verbs ``job compact <ds>`` and
-    ``job reindex <ivf_index_path> [k_cells] [refine_iters] [seed_init]`` /
     ``job reindex-vectors <vector_index_path> <target_n>`` /
-    ``job validate-recall <ivf_index_path> [sample_q] [recall_target]`` /
-    ``job diagnose-seeding <ivf_index_path> [sample_q] [recall_target]`` /
-    ``job tune-recall <ivf_index_path> [recall_target] [sample_q]`` /
     ``job tune-recall-vectors <vector_index_path> [threshold] [recall_target] [sample_q]`` /
     ``job validate-vector-recall <vector_index_path> [threshold] [sample_q]`` /
     ``job validate-minhash-recall <minhash_index_path> [threshold] [sample_q]`` /
@@ -1004,29 +1004,10 @@ def main(argv: list[str]) -> None:
         report = compact_closed_partition(get_spark("lake_compaction"), lake, ds)
         print(report)
         return
-    if argv[1] == "reindex":
-        # rebuild a drifted persistent IVF index from its current
-        # membership (the staleness signal on `append_to_ivf_index`
-        # says WHEN; this verb is the answer).  Optional trailing
-        # k_cells overrides the build-policy sizing — without it a
-        # two-level index re-sizes unclamped (rebuild_ivf_index reads
-        # the quantizer marker), a flat one takes the flat clamp.
-        from data_engineering_user_session_analysis_spark.operators.ivf import rebuild_ivf_index
-
-        k_cells = int(argv[3]) if len(argv) > 3 else None
-        refine_iters = int(argv[4]) if len(argv) > 4 else 0
-        seed_init = argv[5] if len(argv) > 5 else "md5"
-        print(
-            rebuild_ivf_index(
-                get_spark("ivf_reindex"), argv[2], k_cells,
-                refine_iters=refine_iters, seed_init=seed_init,
-            )
-        )
-        return
     if argv[1] == "reindex-vectors":
         # re-bucket the persistent vector index under a geometry sized
         # for the corpus it has grown into (`job reindex-vectors
-        # <path> <target_n>`) — the vector twin of `reindex`
+        # <path> <target_n>`)
         from data_engineering_user_session_analysis_spark.operators.dedup_index import (
             rebuild_vector_index,
         )
@@ -1037,54 +1018,10 @@ def main(argv: list[str]) -> None:
             )
         )
         return
-    if argv[1] == "validate-recall":
-        # measured-vs-predicted recall of a persistent IVF index on a
-        # deterministic exact-kNN sample (`job validate-recall <path>
-        # [sample_q] [recall_target] [--stratified]`) — the
-        # operational check the sizing model's docstring prescribes
-        # before trusting recall_target on a new corpus shape;
-        # --stratified samples one query per cell (tail recall) —
-        # population sampling hides seed starvation
-        from data_engineering_user_session_analysis_spark.operators.ivf import (
-            ivf_index_recall_sample,
-        )
-
-        stratified = "--stratified" in argv
-        argv = [a for a in argv if a != "--stratified"]
-        sample_q = int(argv[3]) if len(argv) > 3 else 30
-        target = float(argv[4]) if len(argv) > 4 else None
-        print(
-            ivf_index_recall_sample(
-                get_spark("ivf_recall_check"), argv[2],
-                sample_q=sample_q, recall_target=target,
-                stratify_by_cell=stratified,
-            )
-        )
-        return
-    if argv[1] == "diagnose-seeding":
-        # seeding-vs-width triage for a recall shortfall (`job
-        # diagnose-seeding <ivf_index_path> [sample_q] [recall_target]`):
-        # the stratified-vs-population gap is the measured signature of
-        # seed starvation; the report names the lever (d2 reindex vs
-        # probe autotune) instead of leaving the operator to guess
-        from data_engineering_user_session_analysis_spark.operators.ivf import (
-            ivf_index_seeding_diagnostic,
-        )
-
-        sample_q = int(argv[3]) if len(argv) > 3 else 30
-        target = float(argv[4]) if len(argv) > 4 else 0.95
-        print(
-            ivf_index_seeding_diagnostic(
-                get_spark("ivf_seeding_diagnostic"), argv[2],
-                recall_target=target, sample_q=sample_q,
-            )
-        )
-        return
     if argv[1] == "validate-vector-recall":
         # measured near-dup recall of the persistent vector index on
         # an exact-cosine sample (`job validate-vector-recall <path>
-        # [threshold] [sample_q]`) — the vector twin of
-        # validate-recall: prediction next to measurement
+        # [threshold] [sample_q]`): prediction next to measurement
         from data_engineering_user_session_analysis_spark.operators.dedup_index import (
             vector_index_recall_sample,
         )
@@ -1101,7 +1038,8 @@ def main(argv: list[str]) -> None:
     if argv[1] == "validate-minhash-recall":
         # measured near-dup recall of the persistent MinHash index on
         # an exact-Jaccard sample (`job validate-minhash-recall <path>
-        # [threshold] [sample_q]`) — the text twin of validate-recall
+        # [threshold] [sample_q]`) — the text twin of
+        # validate-vector-recall
         from data_engineering_user_session_analysis_spark.operators.dedup_index import (
             minhash_index_recall_sample,
         )
@@ -1152,27 +1090,6 @@ def main(argv: list[str]) -> None:
             minhash_index_recall_autotune(
                 get_spark("minhash_recall_tune"), argv[2],
                 threshold=threshold, recall_target=target, sample_q=sample_q,
-            )
-        )
-        return
-    if argv[1] == "tune-recall":
-        # closed-loop probe sizing (`job tune-recall <path> [target]
-        # [sample_q] [--stratified]`): escalate probe widths until
-        # MEASURED sample recall meets the target — the actuation for
-        # a validate-recall breach
-        from data_engineering_user_session_analysis_spark.operators.ivf import (
-            ivf_index_probe_autotune,
-        )
-
-        stratified = "--stratified" in argv
-        argv = [a for a in argv if a != "--stratified"]
-        target = float(argv[3]) if len(argv) > 3 else 0.95
-        sample_q = int(argv[4]) if len(argv) > 4 else 30
-        print(
-            ivf_index_probe_autotune(
-                get_spark("ivf_recall_tune"), argv[2],
-                recall_target=target, sample_q=sample_q,
-                stratify_by_cell=stratified,
             )
         )
         return
@@ -1258,16 +1175,14 @@ def main(argv: list[str]) -> None:
             )
         )
         return
-    if argv[1] == "compact-index":
-        # fold accumulated daily increments into the base members
-        # table (small-files maintenance; assignments unchanged)
-        from data_engineering_user_session_analysis_spark.operators.ivf import (
-            compact_ivf_increments,
-        )
-
-        print(compact_ivf_increments(get_spark("ivf_compaction"), argv[2]))
-        return
     ds = argv[1]
+    try:
+        datetime.date.fromisoformat(ds)
+    except ValueError:
+        raise SystemExit(
+            f"job: {ds!r} is neither a verb nor a YYYY-MM-DD date; "
+            f"verbs: {', '.join(JOB_VERBS)}"
+        ) from None
     lake = argv[2] if len(argv) > 2 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
     out = argv[3] if len(argv) > 3 else os.environ.get("SERVING_PATH", "/tmp/serving")
     run_daily_job(get_spark("daily_batch_job"), lake, ds, out)

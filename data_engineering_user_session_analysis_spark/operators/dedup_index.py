@@ -650,11 +650,10 @@ def rebuild_vector_index(
 ) -> dict:
     """Re-bucket the ENTIRE index under a geometry sized for
     ``target_n`` — the operational answer when the corpus outgrows
-    the geometry it was frozen with (the vector twin of
-    ``rebuild_ivf_index``): with fixed planes the random-candidate
-    load per probe grows as N/2^planes, so an index that blew past
-    its creation-time ``target_n`` pays linearly growing probes until
-    it is re-bucketed.  Signatures are deterministic functions of
+    the geometry it was frozen with: with fixed planes the
+    random-candidate load per probe grows as N/2^planes, so an index
+    that blew past its creation-time ``target_n`` pays linearly
+    growing probes until it is re-bucketed.  Signatures are deterministic functions of
     (vector, geometry), so the rebuild recomputes every bucket row
     from the stored vectors — no re-ingestion.
 
@@ -668,9 +667,10 @@ def rebuild_vector_index(
     The stored ``dim`` is preserved (it defines the hash family and
     the vectors' shape); only (tables, planes) are re-sized.
 
-    Crash safety mirrors ``rebuild_ivf_index``: the rebuild lands in
-    ``<path>.rebuild`` and is swapped in with two renames — same
-    rename-window and single-writer/no-concurrent-probe caveats.
+    Crash safety: the rebuild lands in ``<path>.rebuild`` and is
+    swapped in with two renames — a probe racing the rename window
+    can miss the index, so run it single-writer with no concurrent
+    probes.
     Returns ``{"n_vectors", "geometry", "layout"}``.
 
     ``geometry`` (``{"tables": T, "planes": b}``) overrides the
@@ -818,9 +818,7 @@ def vector_index_recall_sample(
     salt: str = "recall",
 ) -> dict:
     """Measured near-dup recall of the persistent vector index on a
-    deterministic exact sample — the vector-index twin of the IVF
-    family's ``ivf_index_recall_sample`` (CLI:
-    ``job validate-vector-recall``).  The index's recall today is
+    deterministic exact sample (CLI: ``job validate-vector-recall``).  The index's recall today is
     stated two ways, both indirect: the sizing rule's
     ``predicted_recall_at_threshold`` (a banding-model closed form)
     and planted-clone recovery pins (clones share signatures and
@@ -971,13 +969,9 @@ def vector_index_recall_autotune(
     the 1M clustered sensor read 0.28–0.36 at thresholds 0.8/0.85
     with prediction ≈ measurement, i.e. the GEOMETRY, not the model,
     was the limit, and the only remedy was a manual rebuild with
-    hand-picked knobs).  CLI: ``job tune-recall-vectors``.  The
-    mirror of ``ivf_index_probe_autotune``'s
-    measure-escalate-verify contract, with one structural
-    difference stated up front: an IVF escalation step widens a
-    PROBE (cheap, and exact at full width), while a hyperplane
-    index's recall lives in its FROZEN geometry — every escalation
-    here is a full re-bucketing rebuild (signatures are
+    hand-picked knobs).  CLI: ``job tune-recall-vectors``.  A
+    hyperplane index's recall lives in its FROZEN geometry, so every
+    escalation here is a full re-bucketing rebuild (signatures are
     deterministic functions of (vector, geometry), so no
     re-ingestion), and the family has no structurally exact
     endpoint, so exhaustion with ``met=False`` is a possible,
@@ -1105,8 +1099,7 @@ def minhash_index_recall_sample(
 ) -> dict:
     """Measured near-dup recall of the persistent MinHash index on a
     deterministic exact-Jaccard sample — the TEXT-index member of the
-    sensor family (``ivf_index_recall_sample`` /
-    ``vector_index_recall_sample``; CLI:
+    sensor family (with ``vector_index_recall_sample``; CLI:
     ``job validate-minhash-recall``).  Sample: the ``sample_q``
     indexed docs with the smallest ``md5(id:salt)``.  Truth: ONE
     pass of the stored ``sets/`` table against the broadcast sample —
@@ -1223,9 +1216,8 @@ def minhash_geometry_for_recall(
     """INVERSE banding solve for the MinHash family: the (bands,
     rows_per_band) that hold ``recall_target`` at the caller's
     Jaccard ``threshold`` — the text twin of
-    ``vector_geometry_for_recall``, completing the three-family
-    sensor+actuator symmetry (IVF probes widen, both LSH families
-    re-band).  The banding closed form: a pair at Jaccard J matches
+    ``vector_geometry_for_recall``, completing the sensor+actuator
+    symmetry (both LSH families re-band).  The banding closed form: a pair at Jaccard J matches
     one band with probability J^rows, so ``bands =
     ⌈ln(1−target)/ln(1−threshold^rows)⌉``.
 

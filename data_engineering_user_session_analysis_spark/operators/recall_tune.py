@@ -1,19 +1,17 @@
 """Shared closed-loop recall-autotune core — the one
-measure → escalate → act → re-measure walk all three persistent
-index families run (VERDICT r10 #3: the contracts were deliberately
+measure → escalate → act → re-measure walk both persistent index
+families run (VERDICT r10 #3: the contracts were deliberately
 identical, so the engine is written once and the families plug in as
 adapters):
 
-- IVF (``operators/ivf.py::ivf_index_probe_autotune``): the actuator
-  WIDENS A PROBE (cheap, truth computed once, structurally exact
-  endpoint at full width);
 - hyperplane vector index
   (``operators/dedup_index.py::vector_index_recall_autotune``) and
 - MinHash text index
-  (``operators/dedup_index.py::minhash_index_recall_autotune``): the
-  actuator REBUILDS FROZEN GEOMETRY (every step is a full
-  re-bucketing, no exact endpoint — exhaustion with ``met=False`` is
-  a possible, honest outcome).
+  (``operators/dedup_index.py::minhash_index_recall_autotune``).
+
+Both actuators REBUILD FROZEN GEOMETRY: every step is a full
+re-bucketing with no exact endpoint, so exhaustion with
+``met=False`` is a possible, honest outcome.
 
 The core owns the walk mechanics every family shares — the
 measure-first step (a healthy index never acts), the vacuous-sample
@@ -46,7 +44,6 @@ def autotune_walk(
     apply_geometry: Callable[[dict], Optional[float]],
     candidate_load: Optional[Callable[[dict], Optional[float]]] = None,
     max_candidate_load: Optional[float] = None,
-    structural_stop: Optional[Callable[[dict], bool]] = None,
 ) -> dict:
     """Run the shared escalation walk; returns ``{"steps", "met",
     "exhausted", "stopped_on_candidate_load"}`` for the family verb
@@ -61,7 +58,7 @@ def autotune_walk(
     - ``next_geometry(cur_step)``: the family's solve-then-ladder
       policy; ``None`` means the ladder is out of moves
       (``exhausted=True``).
-    - ``apply_geometry(geometry)``: act (rebuild / set probe widths);
+    - ``apply_geometry(geometry)``: act (rebuild);
       returns the action's cost in seconds or ``None``.
     - ``candidate_load(geometry_or_step)``: expected per-item
       candidate count under a geometry (``None`` = unpriceable).
@@ -70,9 +67,6 @@ def autotune_walk(
       (``exhausted=True`` + a ``stopped_on_candidate_load`` record)
       — load-reducing moves are never blocked, so a ladder that
       starts above the ceiling can still walk down.
-    - ``structural_stop(cur_step)``: the family's exact endpoint
-      (e.g. an IVF probe at full width) — checked after each
-      measurement, stops without exhaustion.
 
     ``met`` is ``True``/``False`` against ``recall_target``, or
     ``None`` when the FIRST measurement has no truth to tune against
@@ -90,8 +84,6 @@ def autotune_walk(
         and not exhausted
     ):
         cur = steps[-1]
-        if structural_stop is not None and structural_stop(cur):
-            break
         nxt = next_geometry(cur)
         if nxt is None:
             exhausted = True

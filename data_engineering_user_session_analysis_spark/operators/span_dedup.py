@@ -75,7 +75,7 @@ def sample_mod_for_recall(
     """Largest ``sample_mod`` whose predicted detection recall for
     duplicated spans of >= ``min_span_tokens`` tokens meets
     ``target_recall`` — the actionable inverse of the winnowing
-    knob, mirroring how the LSH/IVF families derive geometry from a
+    knob, mirroring how the LSH families derive geometry from a
     recall target instead of asking the caller to guess.
 
     A span of L tokens carries ``a = L - window + 1`` anchor windows,

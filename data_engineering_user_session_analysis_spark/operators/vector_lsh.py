@@ -174,10 +174,9 @@ def vector_geometry_for_recall(
     cannot reach the target — the caller decides whether the achieved
     number is acceptable.
 
-    Unlike the IVF probe ladder there is NO structurally exact
-    endpoint in this family (a probe can widen to brute force; a
-    frozen geometry cannot), so the prediction here is a banding
-    closed form, not a guarantee — the autotune verb pairs it with
+    There is NO structurally exact endpoint in this family (a frozen
+    geometry cannot widen to brute force), so the prediction here is
+    a banding closed form, not a guarantee — the autotune verb pairs it with
     the measured sensor."""
     if not 0.0 < recall_target < 1.0:
         raise ValueError(f"recall_target must be in (0, 1), got {recall_target}")
@@ -368,8 +367,8 @@ def lsh_similarity_pairs_auto(
 ) -> DataFrame:
     """Scale-aware near-dup pairs: (planes, tables) derived from the
     MEASURED corpus size via ``lsh_params`` (one count() job — the
-    same measured-sizing pattern as ``connected_components`` and
-    ``ivf_topk_auto``), then the standard bucket→verify pipeline.
+    same measured-sizing pattern as ``connected_components``), then
+    the standard bucket→verify pipeline.
     This is the entry point a growing corpus should use; the
     registered query's fixed 4/8 knobs are an oracle-parity fixture.
     Validated at 20k and 200k vectors in STRESS_sf1_r05: random

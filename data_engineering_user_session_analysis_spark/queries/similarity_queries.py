@@ -293,39 +293,24 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid id); each anchor searches its top-2 cells (nprobe=2),
     exact top-3 by dot.
 
-    Scale shape: centroids are an O(K) constant embedded in a
-    map-only Arrow assignment kernel (no N·K crossJoin, no
-    assignment shuffle — the kernel accumulates in the fold's exact
-    IEEE order, so the oracle's crossJoin+fold replay is bit-equal);
-    the search join is cell-equi (shuffle on cell id, cells ~N/K
-    vectors) instead of a full cross join — candidates drop from N
-    to nprobe*N/K per query.  Recall vs brute force is the probe
-    tradeoff (recall@3 = 0.70 at nprobe=2 on the clusterless
-    synthetic set, tested).
+    Scale shape: centroids are an O(K) broadcast constant; assignment
+    is a broadcast crossJoin + interpreted fold dots (N·K pairs, no
+    Arrow stage — at N·K in the thousands a pandas-UDF stage costs
+    more in Python-worker setup than the whole fold); the search join
+    is cell-equi (shuffle on cell id, cells ~N/K vectors) instead of a
+    full cross join — candidates drop from N to nprobe*N/K per query.
+    Recall vs brute force is the probe tradeoff (recall@3 = 0.70 at
+    nprobe=2 on the clusterless synthetic set, tested).
 
     The FIXED literal seed list is what lets the DuckDB oracle replay
-    the construction; it is an sf0.01 fixture, not a scaling rule —
-    a growing corpus uses ``operators/ivf.py`` ``ivf_topk_auto``
-    (K ≈ √N from the measured count, deterministic md5-sample seeds),
-    whose clone-corpus recall at derived K is pinned in
-    tests/test_similarity.py."""
+    the construction; it is an sf0.01 fixture, not a scaling rule."""
     from data_engineering_user_session_analysis_spark.operators.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     seeds = emb.filter(F.col("vec_id").isin(*IVF_SEED_IDS)).select(
         F.col("vec_id").alias("sid"), F.col("embedding").alias("se")
     )
-    # K=5 fixture seeds: the join assignment has the lowest fixed
-    # overhead at this size (no seed-collect job); the kernel path is
-    # for derived-K scale (see ivf_topk docstring — outputs pinned
-    # identical).  scorer="fold" likewise: at N·K in the thousands
-    # the interpreted F.aggregate fold beats three Arrow stages'
-    # Python-worker setup (the r05 0.54→0.92 s drift came from the
-    # shared operator's Arrow scorer; both scorers are pinned
-    # bit-identical).
-    return ivf_topk(
-        emb, ANCHOR_IDS, seeds, nprobe=2, topk=3, assignment="join", scorer="fold"
-    )
+    return ivf_topk(emb, ANCHOR_IDS, seeds, nprobe=2, topk=3)
 
 
 ROUTE_SEED_K = 6
@@ -377,17 +362,13 @@ SELECT vec_id, CAST(sid AS BIGINT) AS cell FROM scored WHERE rn = 1
 """,
 )
 def ann_cos_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Max-COSINE routing of every embedding to a literal float-mean
-    seed set, through the chunked-BLAS cosine kernel itself
-    (`operators/ivf.py:_max_cos_matmul_kernel` / ``_best_cos_udf``) —
-    the kernel the QUALITY seed paths run on (D²-init scoring, Lloyd
-    refinement assignment: their seeds are float means, not corpus
-    vectors, and they route by cosine, not dot).  Those paths are
-    pytest-pinned but were oracle-excluded by design (float-mean
-    centroids are not engine-replayable); this fixture variant gives
-    the routing kernel a DuckDB row at row grain, the same
-    literal-fixture pattern as ``ann_ivf_topk`` (VERDICT r09 next
-    #6).
+    """Max-COSINE routing of every embedding to a literal seed set,
+    through the chunked-BLAS cosine kernel
+    (`operators/ivf.py:_max_cos_matmul_kernel` / ``_best_cos_udf``).
+    Seeds that are float means rather than corpus vectors are not
+    engine-replayable, so this fixture variant gives the routing
+    kernel a DuckDB row at row grain, the same literal-fixture pattern
+    as ``ann_ivf_topk``.
 
     Fixture construction: K=6 literal seeds whose components are
     exact (t+2)/256 dyadic multiples — identical doubles in every
@@ -402,8 +383,7 @@ def ann_cos_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the seed set is an O(K) literal collected once into
     a SparkContext broadcast; routing is ONE map-only Arrow pass over
-    the corpus (no N·K crossJoin, no shuffle) — the identical plan
-    the d2 init and Lloyd iterations run at 1M vectors."""
+    the corpus (no N·K crossJoin, no shuffle)."""
     from data_engineering_user_session_analysis_spark.operators.ivf import (
         _max_cos_matmul_kernel,
     )
@@ -416,9 +396,7 @@ def ann_cos_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "sid long, se array<double>",
     )
-    return _max_cos_matmul_kernel(emb, seeds, "vec_id", "embedding").select(
-        "vec_id", "cell"
-    )
+    return _max_cos_matmul_kernel(emb, seeds, "vec_id", "embedding")
 
 
 @register(

@@ -19,15 +19,11 @@ plus a summary line.  ``--emb-100x`` (or SPARK_GRAFT_EMB_100X=1)
 adds a second scaling decade for the vector tier only: 100 clone
 shards = 200k vectors, checking that the budget-sized LSH keeps
 random-candidate load per vector flat across 2k -> 20k -> 200k while
-clone recall stays 1.0; the tier also builds the PERSISTENT IVF
-index and records the partition-pruned probe cost next to the
-one-shot ivf_topk cost.  ``--events-100x`` (SPARK_GRAFT_EVENTS_100X)
+clone recall stays 1.0.  ``--events-100x`` (SPARK_GRAFT_EVENTS_100X)
 does the same for the core sessionization workload: 10M events, 100×
 the users.  ``--tpch-100x`` (SPARK_GRAFT_TPCH_100X) adds a 100×
 decade for the relational/join tier (60M-row lineitem on disk).
-``--ivf-maint`` (SPARK_GRAFT_IVFMAINT) measures the IVF
-increments-compaction economics (probe cost and file count,
-fragmented vs compacted).  ``--docs-100x`` (SPARK_GRAFT_DOCS_100X)
+``--docs-100x`` (SPARK_GRAFT_DOCS_100X)
 adds the doc tier's third
 decade (200k docs) via the STAR-EDGE dedup pipeline
 (``minhash_dedup_edges``): linear edge output where the all-pairs
@@ -159,30 +155,17 @@ def _quiesce(spark) -> None:
     spark._jvm.System.gc()
 
 
-def measure_vectors(
-    spark, emb, replicas: int | None = None, with_index: bool = False
-) -> dict:
-    """The vector tier (LSH near-dup + derived-K IVF) over any
-    embeddings DataFrame — shared by the sf-dir measurement and the
-    100x embeddings-only pass.  ``with_index`` additionally measures
-    the PERSISTENT IVF index (build once + partition-pruned probe):
-    the probe number is what a serving deployment pays per query
-    batch, and should be far below the one-shot ivf_topk cost that
-    re-assigns the corpus every call."""
-    from pyspark.sql import Window
+def measure_vectors(spark, emb, replicas: int | None = None) -> dict:
+    """The vector tier (LSH near-dup) over any embeddings DataFrame —
+    shared by the sf-dir measurement and the 100x embeddings-only
+    pass."""
     from pyspark.sql import functions as F
 
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_cells_for_n,
-        ivf_topk_auto,
-    )
     from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        foldl_dot_column,
         lsh_candidate_pairs,
         lsh_params,
         lsh_similarity_pairs,
     )
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
 
     res: dict = {}
     n_vec = emb.count()
@@ -231,99 +214,6 @@ def measure_vectors(
     res["dedup_edges_per_vector"] = (
         round(res["dedup_edges"] / n_vec, 3) if n_vec else None
     )
-
-    # Derived-K IVF recall@3 vs brute force for the fixed anchors —
-    # the scale check that K ≈ √N keeps probes useful as N grows.
-    # Ground truth scores with the Arrow dot kernel (bit-identical to
-    # the fold — 10 anchors x N dots is itself fold-hostile at 100x).
-    res["ivf_k_cells"] = ivf_cells_for_n(n_vec)
-    emb_c = emb.cache()
-    (ivf3, res["ivf_topk_sec"]) = timed(
-        lambda: {
-            (r.q_id, r.neighbor_id)
-            for r in ivf_topk_auto(emb_c, ANCHOR_IDS, nprobe=2, topk=3).collect()
-        }
-    )
-    q = emb_c.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("neighbor_id").asc())
-    true3 = {
-        (r.q_id, r.neighbor_id)
-        for r in F.broadcast(q)
-        .crossJoin(emb_c.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            foldl_dot_column("q_emb", "embedding").alias("dot"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .collect()
-    }
-    res["ivf_recall_at_3"] = round(len(true3 & ivf3) / len(true3), 4) if true3 else None
-    if with_index:
-        import shutil
-        import tempfile
-
-        from data_engineering_user_session_analysis_spark.operators.ivf import (
-            ivf_index_topk,
-            write_ivf_index,
-        )
-
-        idx = tempfile.mkdtemp(prefix="stress_ivf_idx_")
-        try:
-            _, res["ivf_index_build_sec"] = timed(
-                lambda: write_ivf_index(emb_c, idx)
-            )
-            q = emb_c.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-                F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-            )
-            probed, res["ivf_index_probe_sec"] = timed(
-                lambda: {
-                    (r.q_id, r.neighbor_id)
-                    for r in ivf_index_topk(
-                        spark, idx, q, nprobe=2, topk=3
-                    ).collect()
-                }
-            )
-            res["ivf_index_probe_matches_direct"] = probed == ivf3
-        finally:
-            shutil.rmtree(idx, ignore_errors=True)
-    # Two-level coarse quantizer at the same scale: ~2*sqrt(K) dots
-    # per vector routed vs K for the flat kernel — the cost structure
-    # that takes over past the flat operator's K=4096 clamp.
-    # Measured LAST on purpose: the index-economics numbers above
-    # stay comparable across rounds (in-JVM pressure from an extra
-    # preceding Arrow stage measured 10x on the cold probe).
-    from data_engineering_user_session_analysis_spark.operators.ivf import ivf2_topk
-
-    (ivf2, res["ivf2_topk_sec"]) = timed(
-        lambda: {
-            (r.q_id, r.neighbor_id)
-            for r in ivf2_topk(
-                emb_c, ANCHOR_IDS, nprobe_super=2, nprobe_cell=4, topk=3
-            ).collect()
-        }
-    )
-    res["ivf2_recall_at_3"] = (
-        round(len(true3 & ivf2) / len(true3), 4) if true3 else None
-    )
-    # the auto-sized probe point (recall_target API, r08): the sizing
-    # model's claim measured next to the fixed-knob baseline
-    (ivf2a, res["ivf2_auto_sec"]) = timed(
-        lambda: {
-            (r.q_id, r.neighbor_id)
-            for r in ivf2_topk(
-                emb_c, ANCHOR_IDS, topk=3, recall_target=0.95
-            ).collect()
-        }
-    )
-    res["ivf2_auto_recall_at_3"] = (
-        round(len(true3 & ivf2a) / len(true3), 4) if true3 else None
-    )
-    emb_c.unpersist()
     return res
 
 
@@ -643,205 +533,7 @@ def measure_embeddings_100x(spark, replicas: int = 100) -> dict:
         .localCheckpoint(eager=True)  # materialize once (~50 MB)
     )
     res = {"label": f"embeddings 100x ({replicas} clone shards)"}
-    res.update(measure_vectors(spark, emb, replicas, with_index=True))
-    return res
-
-
-def measure_ivf2_recall_curve(
-    spark, replicas: int = 100, k_cells: int | None = None
-) -> dict:
-    """Recall-vs-nprobe curve for the TWO-LEVEL quantizer at the
-    200k-vector decade (VERDICT r07 next #4): build the levels=2
-    persistent index ONCE, then sweep (nprobe_super, nprobe_cell)
-    probe-only (probe == direct is pinned in tests, so the curve
-    transfers to the one-shot operator).  Ground truth is exact
-    brute-force top-3 for the fixed anchors.  The measured curve
-    calibrates ``ivf2_probe_params``'s geometric rank-decay
-    constants, and the auto-sized point for the default 0.95 target
-    is measured alongside the grid so the sizing claim is evidence,
-    not extrapolation.
-
-    Round 9 (VERDICT r08 next #1) re-runs the same grid at the NEXT
-    decade — ``replicas=500`` → 1M vectors — in two geometries:
-    the natural K=⌈√N⌉=1000, and an explicit ``k_cells=4096`` (the
-    flat clamp's boundary, the K regime a beyond-clamp corpus
-    actually runs with at N ≈ 16.7M) so the decay-constant fit is
-    validated both along N and along K."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-    shift = SHIFTS["embeddings"]["vec_id"]
-    emb = (
-        base.crossJoin(
-            F.broadcast(spark.range(replicas).select(F.col("id").alias("_r")))
-        )
-        .withColumn("vec_id", F.col("vec_id") + F.col("_r") * F.lit(shift))
-        .drop("_r")
-        .localCheckpoint(eager=True)
-    )
-    q = emb.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    label = (
-        f"ivf2 recall curve ({replicas} clone shards"
-        + (f", k_cells={k_cells}" if k_cells else "")
-        + ")"
-    )
-    return _ivf2_recall_grid(spark, emb, q, k_cells, label)
-
-
-def _ivf2_recall_grid(spark, emb, q, k_cells, label, seeds=None) -> dict:
-    """Shared measurement harness for the two-level recall curves:
-    exact brute-force top-3 ground truth for the given queries, one
-    ``levels=2`` index build (optionally from caller-supplied
-    ``seeds`` — the refined-centroid variants), the 30-point
-    (nprobe_super, nprobe_cell) grid probe-only, and the auto-sized
-    point for the default 0.95 target measured alongside.  Build
-    quality stats (mean assignment cosine, max cell fraction) are
-    recorded so seed variants are comparable."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf2_probe_params,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        foldl_dot_column,
-    )
-
-    n = emb.count()
-    import math as _math
-
-    k = k_cells or max(_math.ceil(_math.sqrt(n)), 16)
-    res: dict = {"label": label, "n_vectors": n, "k_cells": k}
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    true3 = {
-        (r.q_id, r.neighbor_id)
-        for r in F.broadcast(q)
-        .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            foldl_dot_column("q_emb", "embedding").alias("dot"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .collect()
-    }
-    idx = tempfile.mkdtemp(prefix="stress_ivf2curve_")
-    try:
-        build, res["index_build_sec"] = timed(
-            lambda: write_ivf_index(emb, idx, k_cells=k, levels=2, seeds=seeds)
-        )
-        res["mean_assign_cos"] = round(build["mean_assign_cos"], 4)
-        res["max_cell_frac"] = round(build["max_cell_frac"], 5)
-        curve = []
-        for ns in (1, 2, 3, 4, 6, 8):
-            for nc in (2, 4, 8, 16, 32):
-                got, sec = timed(
-                    lambda ns=ns, nc=nc: {
-                        (r.q_id, r.neighbor_id)
-                        for r in ivf_index_topk(
-                            spark, idx, q, nprobe=ns, topk=3, nprobe_cell=nc
-                        ).collect()
-                    }
-                )
-                curve.append(
-                    {
-                        "nprobe_super": ns,
-                        "nprobe_cell": nc,
-                        "recall_at_3": round(len(true3 & got) / len(true3), 4),
-                        "probe_sec": sec,
-                    }
-                )
-        res["curve"] = curve
-        # the auto-sized point for the default target, measured
-        sized = ivf2_probe_params(k, recall_target=0.95)
-        got, sec = timed(
-            lambda: {
-                (r.q_id, r.neighbor_id)
-                for r in ivf_index_topk(
-                    spark,
-                    idx,
-                    q,
-                    nprobe=sized["nprobe_super"],
-                    topk=3,
-                    nprobe_cell=sized["nprobe_cell"],
-                ).collect()
-            }
-        )
-        res["auto_sized"] = {
-            **sized,
-            "measured_recall_at_3": round(len(true3 & got) / len(true3), 4),
-            "probe_sec": sec,
-        }
-        return res
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def measure_ivf2_recall_curve_clustered(
-    spark,
-    n_centers: int = 1000,
-    k_cells: int | None = None,
-    sigma: float = 0.2,
-    refine_iters: int = 0,
-    init: str = "md5",
-) -> dict:
-    """The two-level recall grid on a CLUSTERED NON-CLONE corpus —
-    the strongest calibration data for ``ivf2_probe_params``: on
-    clone corpora an anchor's true top-3 are same-cell copies, so
-    the task EASES as replication grows (the honest caveat on the
-    1M/4M clone curves); here neighbors are noise-perturbed siblings
-    with real ranking structure (within-cluster cosine ≈ 0.8,
-    cross ≈ 0), so a probe that misses the right cells actually
-    misses.  ``n_centers=1000`` → ~1M points in skew-sized
-    clusters.
-
-    ``refine_iters > 0`` builds the index from spherical-k-means
-    refined seeds instead of the md5 sample — the paired run that
-    separates "probe model wrong" from "centroid placement wrong"
-    (the md5-seed run measured recall 0.57/0.73 at the auto point vs
-    0.97 predicted, with even (8,32) topping out at 0.80-0.87 —
-    probe width was NOT the binding factor)."""
-    _quiesce(spark)
-    emb, q = _clustered_embeddings(spark, n_centers, sigma)
-    seeds = None
-    refine_sec = None
-    if refine_iters > 0:
-        from data_engineering_user_session_analysis_spark.operators.ivf import (
-            ivf_cells_for_n,
-            kmeans_refine_seeds,
-        )
-
-        k = k_cells or ivf_cells_for_n(emb.count())
-        seeds, refine_sec = timed(
-            lambda: kmeans_refine_seeds(
-                emb, k, iters=refine_iters, init=init
-            ).localCheckpoint(eager=True)
-        )
-    label = (
-        f"ivf2 recall curve clustered ({n_centers} skewed clusters, sigma={sigma}"
-        + (f", k_cells={k_cells}" if k_cells else "")
-        + (f", refined x{refine_iters}" if refine_iters else "")
-        + (", d2 init" if init == "d2" else "")
-        + ")"
-    )
-    res = _ivf2_recall_grid(spark, emb, q, k_cells, label, seeds=seeds)
-    if refine_sec is not None:
-        res["refine_iters"] = refine_iters
-        res["refine_sec"] = refine_sec
+    res.update(measure_vectors(spark, emb, replicas))
     return res
 
 
@@ -853,8 +545,7 @@ def measure_vector_recall_sensor(spark, n_centers: int = 1000, sigma: float = 0.
     clustered vectors, index built with its honest growth target, the
     sensor run at the sibling cosine (~0.82 for this corpus's noise
     model) and just above it.  The point is calibration-grade
-    prediction-vs-measurement rows for the SECOND index family, like
-    the ivf2 grids are for the first."""
+    prediction-vs-measurement rows for the hyperplane index family."""
     import shutil
     import tempfile
 
@@ -1134,126 +825,6 @@ def measure_minhash_recall_autotune(
         shutil.rmtree(idx, ignore_errors=True)
 
 
-def measure_d2_timing(spark, n_centers: int = 1000, k_cells: int = 1000) -> dict:
-    """Isolated d2-init cost point (VERDICT r09 next #5): one fresh-JVM
-    measurement of ``select_seeds_d2`` alone and the full
-    ``kmeans_refine_seeds(init="d2", iters=3)`` at 1M/K=1000 — run
-    the tier N times (N JVMs) and compare the spread against the
-    round-9 dispersion (71–261 s), whose attributed mechanism (lazy
-    kernel recomputation under the per-round TakeOrdered) the
-    incremental best-so-far state removes by construction.  The
-    record carries a fixed-size CPU probe so residual spread can be
-    attributed to the box (microVM host steal) with paired data
-    rather than assertion."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        kmeans_refine_seeds,
-        select_seeds_d2,
-    )
-
-    _quiesce(spark)
-    probe = _cpu_speed_probe()
-    emb, _ = _clustered_embeddings(spark, n_centers, 0.2)
-    n = emb.count()
-    _, init_sec = timed(
-        lambda: select_seeds_d2(emb, k_cells).localCheckpoint(eager=True)
-    )
-    _, refine_sec = timed(
-        lambda: kmeans_refine_seeds(
-            emb, k_cells, iters=3, init="d2"
-        ).localCheckpoint(eager=True)
-    )
-    return {
-        "label": f"d2 init isolated rerun (1M, K={k_cells})",
-        "n_vectors": n,
-        **probe,
-        "d2_init_sec": init_sec,
-        "d2_refine_x3_sec": refine_sec,
-    }
-
-
-def measure_ivf2_autotune(
-    spark,
-    n_centers: int = 1000,
-    sigma: float = 0.2,
-    k_cells: int | None = None,
-    variants: tuple = ("md5", "d2_refined_x3"),
-) -> dict:
-    """The closed-loop verb on the corpus that breaks the open loop:
-    ``ivf_index_probe_autotune`` against the 1M clustered corpus, on
-    BOTH index builds — md5 seeds (the prediction-breach case: the
-    tuner must walk the ladder until measurement meets the target)
-    and d2+refined seeds (the fixed-initialization case: the tuner
-    should stop near the model's solve).  The two trails side by side
-    are the operational economics the autotune docstring points at:
-    what probe width costs when you DON'T fix the seeds, vs the
-    rebuild that makes width cheap.  ``k_cells=4096`` with
-    ``variants=("md5",)`` is the geometry where NO seeding helps
-    (the d2-neutral regime) — there the trail demonstrates measured
-    width as the only recall lever."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_cells_for_n,
-        ivf_index_probe_autotune,
-        kmeans_refine_seeds,
-        write_ivf_index,
-    )
-
-    _quiesce(spark)
-    emb, _ = _clustered_embeddings(spark, n_centers, sigma)
-    k = k_cells or ivf_cells_for_n(emb.count())
-    res: dict = {
-        # k_cells in the label: the K=1000 and K=4096 runs are distinct
-        # tiers and label-keyed artifact comparison must tell them
-        # apart (same convention as the _ivf2_recall_grid callers)
-        "label": f"ivf2 probe autotune clustered ({n_centers} skewed clusters)"
-        + (f", k_cells={k_cells}" if k_cells else ""),
-        "n_vectors": emb.count(),
-        "k_cells": k,
-        "recall_target": 0.95,
-    }
-    import shutil
-    import tempfile
-
-    seed_fns = {
-        "md5": None,
-        "d2_refined_x3": lambda: kmeans_refine_seeds(
-            emb, k, iters=3, init="d2"
-        ).localCheckpoint(eager=True),
-    }
-    for name in variants:
-        seed_fn = seed_fns[name]
-        seeds, refine_sec = (None, None) if seed_fn is None else timed(seed_fn)
-        idx = tempfile.mkdtemp(prefix=f"stress_ivf2tune_{name}_")
-        try:
-            _, build_sec = timed(
-                lambda: write_ivf_index(emb, idx, k_cells=k, levels=2, seeds=seeds)
-            )
-            res[name] = {"index_build_sec": build_sec, "refine_sec": refine_sec}
-            # population-weighted AND stratified (per-cell tail)
-            # trails: the tail sample is where a starved seeding has
-            # to pay width, so the two builds separate there
-            for mode, strat in (("population", False), ("stratified", True)):
-                tune, tune_sec = timed(
-                    lambda strat=strat: ivf_index_probe_autotune(
-                        spark, idx, recall_target=0.95, sample_q=15,
-                        stratify_by_cell=strat,
-                    )
-                )
-                res[name][mode] = {
-                    "tune_sec": tune_sec,
-                    "met": tune["met"],
-                    "final": {
-                        "nprobe": tune["nprobe"],
-                        "nprobe_cell": tune.get("nprobe_cell"),
-                        "recall_at_k": tune["recall_at_k"],
-                        "probe_sec": tune["probe_sec"],
-                    },
-                    "steps": tune["steps"],
-                }
-        finally:
-            shutil.rmtree(idx, ignore_errors=True)
-    return res
-
-
 def measure_events_100x(spark, replicas: int = 100) -> dict:
     """Second scaling decade for the CORE reference workload:
     gap-sessionization + rollup over 100 clone shards of the sf0.1
@@ -1296,81 +867,6 @@ def measure_events_100x(spark, replicas: int = 100) -> dict:
     res["session_rollup_rows"] = rows
     res["session_events_per_sec"] = round(n / best, 1)
     return res
-
-
-def measure_ivf_maintenance(spark, n_days: int = 30, shard_size: int = 500) -> dict:
-    """Economics of ``compact_ivf_increments`` — measured instead of
-    asserted: a month of daily shard appends fragments the index into
-    per-ds-per-cell small files, and every probe pays the listing +
-    open cost of all of them; compaction folds the increments into
-    the base cell partitions.  Recorded: parquet file count and probe
-    seconds fragmented vs compacted (probe results pinned identical —
-    the verb is a pure re-layout)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        compact_ivf_increments,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(OUT, "embeddings.parquet")).localCheckpoint(
-        eager=True
-    )
-    n_base = base.count()
-    idx = tempfile.mkdtemp(prefix="stress_ivfmaint_")
-    try:
-        write_ivf_index(base, idx)
-        seed_shard = base.orderBy("vec_id").limit(shard_size).localCheckpoint(
-            eager=True
-        )
-        for r in range(n_days):
-            shard = seed_shard.withColumn(
-                "vec_id", F.col("vec_id") + (100 + r) * 10_000_000
-            )
-            append_to_ivf_index(shard, idx, ds=f"2024-03-{r + 1:02d}")
-
-        def n_files() -> int:
-            return sum(
-                sum(1 for f in fs if f.endswith(".parquet"))
-                for _, _, fs in os.walk(idx)
-            )
-
-        q = base.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        )
-        res: dict = {
-            "label": f"ivf maintenance ({n_days} daily increments)",
-            "n_base": n_base,
-            "n_days": n_days,
-            "shard_size": shard_size,
-            "parquet_files_fragmented": n_files(),
-        }
-        before, res["probe_sec_fragmented"] = timed(
-            lambda: sorted(
-                tuple(r)
-                for r in ivf_index_topk(spark, idx, q, nprobe=2, topk=3).collect()
-            )
-        )
-        rep, res["compact_sec"] = timed(lambda: compact_ivf_increments(spark, idx))
-        res["members_rows_after"] = rep["members_rows"]
-        res["parquet_files_compacted"] = n_files()
-        after, res["probe_sec_compacted"] = timed(
-            lambda: sorted(
-                tuple(r)
-                for r in ivf_index_topk(spark, idx, q, nprobe=2, topk=3).collect()
-            )
-        )
-        res["probe_equal"] = before == after
-        return res
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
 
 def measure_docs_index(spark, n_days: int = 12, planted: int = 250) -> dict:
@@ -1741,53 +1237,6 @@ def measure_vector_index_auto_rebuild(
         shutil.rmtree(out, ignore_errors=True)
 
 
-def measure_kmeans_refinement(spark, replicas: int = 100, iters: int = 3) -> dict:
-    """Does the spherical-k-means quality knob hold at the 200k
-    decade?  Reports the md5-sample baseline vs refined mean
-    assignment cosine and max-cell fraction at derived K, plus the
-    refinement wall cost (iters × (one Arrow assignment pass + one
-    per-cell mean)) — the measured version of the operator's
-    fixture-scale claim."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        _assign_cells_cos_kernel,
-        ivf_cells_for_n,
-        kmeans_refine_seeds,
-        select_seeds,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-    shift = SHIFTS["embeddings"]["vec_id"]
-    emb = (
-        base.crossJoin(
-            F.broadcast(spark.range(replicas).select(F.col("id").alias("_r")))
-        )
-        .withColumn("vec_id", F.col("vec_id") + F.col("_r") * F.lit(shift))
-        .drop("_r")
-        .localCheckpoint(eager=True)
-    )
-    n = emb.count()
-    k = ivf_cells_for_n(n)
-
-    def quality(seeds) -> dict:
-        a = _assign_cells_cos_kernel(emb, seeds, "vec_id", "embedding")
-        agg = a.agg(F.avg("assign_cos").alias("mc")).first()
-        mx = a.groupBy("cell").count().agg(F.max("count")).first()[0]
-        return {"mean_assign_cos": round(float(agg["mc"]), 4),
-                "max_cell_frac": round(mx / n, 4)}
-
-    res = {"label": f"kmeans refinement ({replicas} clone shards)",
-           "n_vectors": n, "k_cells": k, "iters": iters}
-    res["md5_baseline"] = quality(select_seeds(emb, k))
-    refined, res["refine_sec"] = timed(
-        lambda: kmeans_refine_seeds(emb, k, iters=iters).localCheckpoint(eager=True)
-    )
-    res["refined"] = quality(refined)
-    return res
-
-
 def _clustered_embeddings(spark, n_centers: int, sigma: float):
     """A CLUSTERED non-clone corpus with real neighbor structure:
     ``n_centers`` sf0.1 embeddings (unit vectors) act as cluster
@@ -1855,117 +1304,6 @@ def _clustered_embeddings(spark, n_centers: int, sigma: float):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     return emb, q
-
-
-def measure_kmeans_refinement_e2e(
-    spark, n_centers: int = 200, iters: int = 3, sigma: float = 0.2
-) -> dict:
-    """The END-TO-END k-means refinement measurement (VERDICT r08
-    next #2): the proxy-metric pin (tighter mean assignment cosine)
-    says the knob does *something*; this measures what it exists FOR
-    — probe wall-time and recall of a REFINED persistent index vs
-    the md5-seed index at EQUAL nprobe, plus cell balance, on a
-    CLUSTERED (non-clone) corpus.
-
-    Corpus: ``n_centers`` sf0.1 embeddings (unit vectors) act as
-    cluster centers with SKEWED sizes (250–1750 md5-noise-perturbed
-    points each, ~n_centers·1000 total): element-wise ``± sigma/2``
-    uniform noise at sigma=0.2 gives within-cluster cosine ≈ 0.9 to
-    the center / ≈ 0.8 between siblings vs ≈ 0 cross-cluster — real
-    neighbor structure, not clones, in exactly the shape (fat + thin
-    clusters) where random seeds give unbalanced cells and Lloyd
-    rounds are supposed to pay off.  Queries are 10 in-corpus points
-    (one per first-10 center); ground truth is exact brute-force
-    top-3.  Both indexes are the FLAT persistent form (same K, same
-    probe code path); only the centroids differ."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_cells_for_n,
-        ivf_index_topk,
-        kmeans_refine_seeds,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        foldl_dot_column,
-    )
-
-    _quiesce(spark)
-    emb, q = _clustered_embeddings(spark, n_centers, sigma)
-    n = emb.count()
-    k = ivf_cells_for_n(n)
-    res: dict = {
-        "label": f"kmeans refinement e2e ({n_centers} skewed clusters, sigma={sigma})",
-        "n_vectors": n,
-        "k_cells": k,
-        "iters": iters,
-    }
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    true3 = {
-        (r.q_id, r.neighbor_id)
-        for r in F.broadcast(q)
-        .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            foldl_dot_column("q_emb", "embedding").alias("dot"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .collect()
-    }
-    refined, res["refine_sec"] = timed(
-        lambda: kmeans_refine_seeds(emb, k, iters=iters).localCheckpoint(eager=True)
-    )
-    idx_md5 = tempfile.mkdtemp(prefix="stress_kmref_md5_")
-    idx_ref = tempfile.mkdtemp(prefix="stress_kmref_ref_")
-    try:
-        for name, path, seeds in (
-            ("md5_seeds", idx_md5, None),
-            ("refined_seeds", idx_ref, refined),
-        ):
-            build, build_sec = timed(
-                lambda path=path, seeds=seeds: write_ivf_index(
-                    emb, path, k_cells=k, seeds=seeds
-                )
-            )
-            entry = {
-                "build_sec": build_sec,
-                "mean_assign_cos": build["mean_assign_cos"],
-                "max_cell_frac": build["max_cell_frac"],
-                "probes": [],
-            }
-            for np_ in (1, 2, 4):
-                best = None
-                for _ in range(2):  # min-of-2: first trial eats stage warmup
-                    got, sec = timed(
-                        lambda path=path, np_=np_: {
-                            (r.q_id, r.neighbor_id)
-                            for r in ivf_index_topk(
-                                spark, path, q, nprobe=np_, topk=3
-                            ).collect()
-                        }
-                    )
-                    best = sec if best is None else min(best, sec)
-                entry["probes"].append(
-                    {
-                        "nprobe": np_,
-                        "recall_at_3": round(len(true3 & got) / len(true3), 4),
-                        "probe_sec": best,
-                    }
-                )
-            res[name] = entry
-        return res
-    finally:
-        shutil.rmtree(idx_md5, ignore_errors=True)
-        shutil.rmtree(idx_ref, ignore_errors=True)
 
 
 def measure_truth_cache_1m(spark, variants_per_doc: int = 200) -> dict:
@@ -2476,7 +1814,7 @@ def measure_span_recall(spark, window: int = 15, replicas: int = 200) -> dict:
     the docstring's predicted ``1-(1-1/p)^(L-window+1)``, plus the
     token-coverage underestimate (sampled covered tokens / full
     covered tokens in the planted region).  The engine's standard
-    elsewhere (LSH, IVF) is measured recall, not predicted — this
+    elsewhere (LSH) is measured recall, not predicted — this
     tier brings the span family up to it."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -2927,58 +2265,6 @@ def _run_tier_inner(tier: str) -> list[dict]:
         return [measure_events_100x(spark)]
     if tier == "docsindex":
         return [measure_docs_index(spark)]
-    if tier == "ivfmaint":
-        build(spark)
-        return [measure_ivf_maintenance(spark)]
-    if tier == "ivf2recall":
-        return [measure_ivf2_recall_curve(spark)]
-    if tier == "ivf2recall1m":
-        # round-9 validation: the decay-constant fit at the next
-        # decade (1M vectors), both the natural K=1000 and the
-        # clamp-boundary K=4096 geometry
-        return [
-            measure_ivf2_recall_curve(spark, replicas=500),
-            measure_ivf2_recall_curve(spark, replicas=500, k_cells=4096),
-        ]
-    if tier == "ivf2recallclu":
-        # round-9: the non-clone calibration — 1M clustered points in
-        # both the natural and the clamp-boundary geometry
-        return [
-            measure_ivf2_recall_curve_clustered(spark, 1000),
-            measure_ivf2_recall_curve_clustered(spark, 1000, k_cells=4096),
-        ]
-    if tier == "ivf2recallcluref":
-        # round-9 paired run: same 1M clustered corpus, natural
-        # geometry, but the index built from k-means-refined seeds —
-        # isolates centroid placement from probe width as the cause
-        # of the md5-seed run's model breach
-        return [measure_ivf2_recall_curve_clustered(spark, 1000, refine_iters=3)]
-    if tier == "ivf2recallcluref10":
-        # round-9 plateau check: does deeper refinement (x10 vs x3)
-        # keep closing the clustered-corpus gap, or has centroid
-        # placement already converged?  Decides whether the
-        # ivf2_probe_params DOMAIN advice should be "refine more" or
-        # "validate empirically".
-        return [measure_ivf2_recall_curve_clustered(spark, 1000, refine_iters=10)]
-    if tier == "ivf2recallclud2":
-        # round-9 closer: the D² (k-means||) init attacking the seed
-        # starvation the md5/refined clustered grids exposed — same 1M
-        # corpus, refine x3 from d2 seeds
-        return [
-            measure_ivf2_recall_curve_clustered(
-                spark, 1000, refine_iters=3, init="d2"
-            )
-        ]
-    if tier == "ivf2recallclud2k4096":
-        # round-9 symmetry: the d2+refined build in the SECOND 1M
-        # geometry (clamp-boundary K=4096, where the md5 curve
-        # measured 0.73 at the auto point) — checks the init fix
-        # transfers across geometries, not just K=1000
-        return [
-            measure_ivf2_recall_curve_clustered(
-                spark, 1000, k_cells=4096, refine_iters=3, init="d2"
-            )
-        ]
     if tier == "minhashrecall":
         # round-9: measured banding-model calibration for the text
         # index on a genuine partial-overlap corpus at 200k docs
@@ -3014,37 +2300,14 @@ def _run_tier_inner(tier: str) -> list[dict]:
         # clustered index brought to a measured target via inverse
         # banding solve + rebuild ladder (VERDICT r09 next #1)
         return [measure_vector_recall_autotune(spark)]
-    if tier == "d2timing":
-        # round-10: one isolated d2 cost point (run the tier 3x for
-        # the spread claim — VERDICT r09 next #5)
-        return [measure_d2_timing(spark)]
     if tier == "vecrecall":
         # round-9: measured prediction-vs-recall rows for the vector
         # index's banding model at 1M (the sensor's scale debut)
         return [measure_vector_recall_sensor(spark)]
-    if tier == "ivf2autotunek4096":
-        # round-9 closer for the d2-neutral geometry: at K=4096 over
-        # 1000 natural clusters neither seeding moves recall, so the
-        # md5-only trail shows the width lever doing all the work
-        return [measure_ivf2_autotune(spark, 1000, k_cells=4096, variants=("md5",))]
-    if tier == "ivf2autotune":
-        # round-9: the closed loop demonstrated where the open loop
-        # breaks — autotune trails on the md5 and d2+refined 1M
-        # clustered indexes (width economics vs seed economics)
-        return [measure_ivf2_autotune(spark, 1000)]
-    if tier == "ivf2recall4m":
-        # round-9 follow-through: the RE-FIT coupling at 4× the cell
-        # occupancy (4M vectors on the same K=4096 geometry — cell
-        # size ~1000, the load shape of a true beyond-clamp corpus)
-        return [measure_ivf2_recall_curve(spark, replicas=2000, k_cells=4096)]
     if tier == "vecindex":
         return [measure_vectors_index(spark)]
     if tier == "vecautorebuild":
         return [measure_vector_index_auto_rebuild(spark)]
-    if tier == "kmeansrefine":
-        return [measure_kmeans_refinement(spark)]
-    if tier == "kmeansrefine2e":
-        return [measure_kmeans_refinement_e2e(spark)]
     if tier == "truthcache1m":
         # round-11: the content-keyed truth cache demonstrated at 1M
         # (two sensor calls on one unchanged index)
@@ -3126,14 +2389,8 @@ def main() -> None:
         tiers.append("events100")
     if "--docs-index" in sys.argv or os.environ.get("SPARK_GRAFT_DOCSINDEX"):
         tiers.append("docsindex")
-    if "--ivf-maint" in sys.argv or os.environ.get("SPARK_GRAFT_IVFMAINT"):
-        tiers.append("ivfmaint")
-    if "--ivf2-recall" in sys.argv or os.environ.get("SPARK_GRAFT_IVF2RECALL"):
-        tiers.append("ivf2recall")
     if "--vec-index" in sys.argv or os.environ.get("SPARK_GRAFT_VECINDEX"):
         tiers.append("vecindex")
-    if "--kmeans-refine" in sys.argv or os.environ.get("SPARK_GRAFT_KMEANSREFINE"):
-        tiers.append("kmeansrefine")
 
     me = os.path.abspath(__file__)
     results: dict[str, list[dict]] = {}
@@ -3227,22 +2484,11 @@ def main() -> None:
             },
             "candidate_to_pair_ratio_100x": emb100["lsh_candidate_to_pair_ratio"],
             "clone_pair_recall_100x": emb100["clone_pair_recall"],
-            "ivf_recall_at_3_100x": emb100["ivf_recall_at_3"],
-            # two-level coarse quantizer at the same decade — the
-            # cost structure that takes over past the flat K-clamp
-            "ivf2_topk_sec_100x": emb100.get("ivf2_topk_sec"),
-            "ivf2_recall_at_3_100x": emb100.get("ivf2_recall_at_3"),
             # star-edge graph vs the quadratic all-pairs output
             "dedup_edges_100x": emb100.get("dedup_edges"),
             "dedup_edges_sec_100x": emb100.get("dedup_edges_sec"),
             "allpairs_100x": emb100.get("embedding_neardup_pairs"),
             "allpairs_sec_100x": emb100.get("embedding_neardup_sec"),
-            # persistent index: build once, probe per batch
-            "ivf_index_build_sec_100x": emb100.get("ivf_index_build_sec"),
-            "ivf_index_probe_sec_100x": emb100.get("ivf_index_probe_sec"),
-            "ivf_index_probe_matches_direct": emb100.get(
-                "ivf_index_probe_matches_direct"
-            ),
         }
     def _sec_ratios(hi: dict, lo: dict) -> dict:
         return {
@@ -3308,20 +2554,6 @@ def main() -> None:
             "n_events": ev100["n_events"],
             "session_rollup_sec": ev100["session_rollup_sec"],
             "session_events_per_sec": ev100["session_events_per_sec"],
-        }
-    im = _tier("ivfmaint")[0]
-    if im is not None:
-        summary["ivf_maintenance"] = {
-            k: im[k]
-            for k in (
-                "n_days",
-                "parquet_files_fragmented",
-                "parquet_files_compacted",
-                "probe_sec_fragmented",
-                "probe_sec_compacted",
-                "compact_sec",
-                "probe_equal",
-            )
         }
     di = _tier("docsindex")[0]
     if di is not None:

@@ -103,6 +103,27 @@ def test_compact_verb_after_daily_job(spark, sf_small, tmp_path):
     assert after == before
 
 
+def test_unknown_verb_fails_before_spark(tmp_path, monkeypatch):
+    """An unrecognized verb is not a date: ``main`` must refuse it
+    before it starts a session or writes serving tables under
+    ``ds=<verb>``."""
+    import pytest
+
+    import data_engineering_user_session_analysis_spark as pkg
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import main
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("get_spark called for an unknown verb")
+
+    monkeypatch.setattr(pkg, "get_spark", no_spark)
+    serving = tmp_path / "serving"
+    monkeypatch.setenv("SERVING_PATH", str(serving))
+    with pytest.raises(SystemExit, match="'reindex'.*daily"):
+        main(["job", "reindex", str(tmp_path / "idx")])
+    assert not serving.exists()
+    assert not (tmp_path / "idx").exists()
+
+
 def test_backfill_range_matches_daily_runs(spark, sf_small, tmp_path):
     """backfill(ds1..ds2) == the per-day jobs run individually, and
     re-running a subrange is idempotent (per-day overwrite)."""

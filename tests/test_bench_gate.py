@@ -8,11 +8,8 @@ here as a concrete scenario.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from bench import gate_row, probe_series_unit  # noqa: E402
+# the repo root is on sys.path via tests/conftest.py
+from bench import gate_row, probe_series_unit
 
 
 def test_overhead_bound_rows_exempt():

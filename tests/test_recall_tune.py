@@ -1,9 +1,8 @@
 """Contract tests for the shared recall-autotune core
-(``operators/recall_tune.py``) — the one walk engine all three index
+(``operators/recall_tune.py``) — the one walk engine both index
 families adapt (VERDICT r10 #3).  Pure driver-side control flow, so
 these run without a SparkSession; each family's adapter is exercised
-live by its own autotune tests (tests/test_dedup_index.py,
-tests/test_similarity.py)."""
+live by its own autotune tests (tests/test_dedup_index.py)."""
 
 import pytest
 
@@ -89,18 +88,6 @@ def test_walk_respects_step_budget():
     )
     assert len(out["steps"]) == 3 and out["met"] is False
     assert not out["exhausted"]  # budget, not ladder exhaustion
-
-
-def test_walk_structural_stop_is_not_exhaustion():
-    measure, nxt, apply, trace = _fake_family([0.5, 0.6, 0.7])
-    out = autotune_walk(
-        measure=measure, recall_key="recall", recall_target=0.9,
-        max_steps=10, next_geometry=nxt, apply_geometry=apply,
-        structural_stop=lambda cur: cur["knob"] >= 2,
-    )
-    # stops after the knob reaches the exact endpoint; honest met
-    assert out["met"] is False and not out["exhausted"]
-    assert len(out["steps"]) == 2
 
 
 def test_candidate_load_gate_blocks_load_increasing_move():

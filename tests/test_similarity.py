@@ -148,146 +148,6 @@ def test_vector_lsh_planted_neardup_recall(spark, sf_small):
     assert dup_recall >= 0.9, f"planted near-dup recall {dup_recall:.2f} < 0.9"
 
 
-def test_ivf_cells_scale_rule():
-    """K ≈ √N bounded: a fixed K degenerates probes into scans at
-    100×; K ~ N makes assignment quadratic."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import ivf_cells_for_n
-
-    assert ivf_cells_for_n(100) == 16  # clamp floor
-    assert ivf_cells_for_n(20_000) == 142
-    assert ivf_cells_for_n(10**9) == 4096  # clamp ceiling
-    assert ivf_cells_for_n(2_000_000) == 1415
-
-
-def test_ivf_auto_recall_on_clone_corpus(spark, sf_small):
-    """The stress-scale recall check for derived-K IVF: on a cloned
-    corpus (the near-dup retrieval regime IVF exists for), an
-    anchor's clones share its cell, so recall@3 vs brute force must
-    stay high at K ≈ √N — the fixture-constant-K failure this guards
-    against is cells degenerating into scans at scale."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_cells_for_n,
-        ivf_topk_auto,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    base = load_table(spark, sf_small, "embeddings")
-    shift = 1_000_000
-    clones = base
-    for r in range(1, 8):  # 8 shards -> 4000 vectors
-        clones = clones.unionByName(
-            base.withColumn("vec_id", F.col("vec_id") + r * shift)
-        )
-    clones = clones.cache()
-    n = clones.count()
-    assert ivf_cells_for_n(n) > 16  # genuinely derived, not the floor
-
-    anchors = tuple(range(0, 500, 50))
-    ivf3 = {
-        (r.q_id, r.neighbor_id)
-        for r in ivf_topk_auto(clones, anchors, nprobe=2, topk=3).collect()
-    }
-
-    # brute-force ground truth, same tie-break (dot desc, id asc)
-    from pyspark.sql import Window
-
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import dot_double
-
-    q = clones.filter(F.col("vec_id").isin(*anchors)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("neighbor_id").asc())
-    true3 = {
-        (r.q_id, r.neighbor_id)
-        for r in F.broadcast(q)
-        .crossJoin(clones.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "neighbor_id", dot_double(F.col("q_emb"), F.col("embedding")).alias("dot"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .collect()
-    }
-    recall = len(true3 & ivf3) / len(true3)
-    assert recall >= 0.9, f"derived-K IVF recall collapsed on clones: {recall:.3f}"
-
-    # flat-regime recall_target (r08): the auto entry point widens the
-    # probe through the sizing model's cell axis and must meet the
-    # caller's target on the clone corpus
-    auto = {
-        (r.q_id, r.neighbor_id)
-        for r in ivf_topk_auto(clones, anchors, topk=3, recall_target=0.95).collect()
-    }
-    clones.unpersist()
-    recall_auto = len(true3 & auto) / len(true3)
-    assert recall_auto >= 0.95, (
-        f"flat auto-sized probe missed its 0.95 target: {recall_auto:.3f}"
-    )
-
-
-def test_ivf_kernel_assignment_equals_fold_construction(spark, sf_small):
-    """The map-only Arrow assignment kernel must reproduce the
-    crossJoin + fold + top-1-window construction EXACTLY (same dots
-    in the same IEEE order, argmax ties to smallest seed id) — this
-    equality is what lets the registered query's DuckDB oracle replay
-    assignment with a plain fold."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import ivf_topk
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import (
-        ANCHOR_IDS,
-        IVF_SEED_IDS,
-        dot_double,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    seeds = emb.filter(F.col("vec_id").isin(*IVF_SEED_IDS)).select(
-        F.col("vec_id").alias("sid"), F.col("embedding").alias("se")
-    )
-    # assignment="kernel" explicitly: auto picks "join" at this scale,
-    # which would make the comparison vacuous (join vs join)
-    got = {
-        tuple(r)
-        for r in ivf_topk(
-            emb, ANCHOR_IDS, seeds, nprobe=2, topk=3, assignment="kernel"
-        ).collect()
-    }
-
-    # reference construction: crossJoin + interpreted fold + windows
-    scored = emb.crossJoin(F.broadcast(seeds)).select(
-        "vec_id", "sid", dot_double(F.col("embedding"), F.col("se")).alias("dot")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("dot").desc(), F.col("sid").asc())
-    ranked = scored.withColumn("rn", F.row_number().over(w))
-    cells = ranked.filter(F.col("rn") == 1).select("vec_id", F.col("sid").alias("cell"))
-    anchor_cells = ranked.filter(
-        F.col("vec_id").isin(*ANCHOR_IDS) & (F.col("rn") <= 2)
-    ).select(F.col("vec_id").alias("q_id"), F.col("sid").alias("cell"))
-    anchors = anchor_cells.join(
-        emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")),
-        "q_id",
-    )
-    members = emb.join(cells, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("n_emb"), "cell"
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("neighbor_id").asc())
-    want = {
-        tuple(r)
-        for r in F.broadcast(anchors)
-        .join(members, "cell")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "neighbor_id", dot_double(F.col("q_emb"), F.col("n_emb")).alias("dot"))
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_lsh_params_scale_aware_sizing():
     """The sizing math that keeps candidates linear in N: planes grow
     with log2(N) under a fixed per-vector budget, tables rise to hold
@@ -444,121 +304,6 @@ def test_lsh_dedup_edges_same_clusters_linear_output(spark, sf_small):
     emb.unpersist()
 
 
-def test_ivf_scorer_fold_equals_arrow(spark, sf_small):
-    """Both ivf_topk scorers (interpreted F.aggregate fold vs the
-    Arrow kernel) must produce identical output — they are pinned
-    bit-identical at the dot level, so rank order cannot differ."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import ivf_topk, select_seeds
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    seeds = select_seeds(emb, 8)
-    a = {
-        tuple(r)
-        for r in ivf_topk(
-            emb, ANCHOR_IDS, seeds, assignment="join", scorer="arrow"
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in ivf_topk(
-            emb, ANCHOR_IDS, seeds, assignment="join", scorer="fold"
-        ).collect()
-    }
-    emb.unpersist()
-    assert a == b and len(a) > 0
-
-
-def test_ivf_persistent_index_probe_matches_direct(spark, sf_small, tmp_path):
-    """The persistent IVF index (build → probe) must reproduce the
-    direct kernel-assigned ivf_topk output for the same K/seeds, and
-    the probe's members scan must be partition-pruned to the probed
-    cells."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_topk,
-        ivf_topk,
-        select_seeds,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    path = str(tmp_path / "ivf")
-    rep = write_ivf_index(emb, path)
-    assert rep["n_vectors"] == emb.count()
-
-    queries = emb.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = ivf_index_topk(spark, path, queries)
-    got = {tuple(r) for r in probed.collect()}
-    direct = {
-        tuple(r)
-        for r in ivf_topk(
-            emb,
-            ANCHOR_IDS,
-            select_seeds(emb, rep["k_cells"]),
-            assignment="kernel",
-        ).collect()
-    }
-    assert got == direct and len(got) > 0
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    emb.unpersist()
-
-
-def test_ivf_index_append_increment(spark, sf_small, tmp_path):
-    """Daily-increment pattern: append a clone shard against the
-    STORED centroids; a cloned query must retrieve its origin as the
-    top neighbor (cosine 1 lands in the same cell by construction)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path)
-    shift = 1_000_000
-    shard = emb.limit(20).withColumn("vec_id", F.col("vec_id") + shift)
-    # the legacy one-shot mode double-appends on retry, so the
-    # un-flagged call must fail fast instead of arming the hazard
-    import pytest
-
-    with pytest.raises(ValueError, match="non_idempotent"):
-        append_to_ivf_index(shard, path)
-    rep = append_to_ivf_index(shard, path, allow_non_idempotent=True)
-    assert rep["appended"] == 20
-    # clone shard of the build corpus: assignment cosines match the
-    # build distribution, so the staleness signal must NOT trip
-    assert rep["stale"] is False
-    # legacy appends keep assign_cos: members/ stays schema-uniform
-    # (no mergeSchema defensiveness needed downstream)
-    import os
-
-    mem = spark.read.parquet(os.path.join(path, "members"))
-    assert "assign_cos" in mem.columns
-    assert mem.filter(F.col("assign_cos").isNull()).count() == 0
-
-    q = shard.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    top = ivf_index_topk(spark, path, q, nprobe=2, topk=1).collect()
-    assert len(top) == 3
-    for r in top:
-        # the clone's nearest neighbor is its origin vector (dot equal
-        # to self-dot; origin id < clone id wins the tie-break)
-        assert r.neighbor_id == r.q_id - shift
-
-
 def test_lsh_dedup_edges_auto_clone_recall(spark, sf_small):
     """The scale-aware star-edge entry point sizes from the
     REPRESENTATIVE count: on a 3x clone corpus it must still connect
@@ -580,1044 +325,6 @@ def test_lsh_dedup_edges_auto_clone_recall(spark, sf_small):
     stars = {(r.vec_a, r.vec_b) for r in edges if r.vec_a % shift == r.vec_b % shift}
     # every clone reaches its min-id origin: 2 star edges per base vec
     assert len(stars) == 40 * 2
-
-
-def test_ivf_index_ds_append_is_idempotent(spark, sf_small, tmp_path):
-    """The daily-verb append layout: a re-run of the same ds must
-    replace exactly its own increment (no duplicate neighbors), and
-    the probe must see base + increments unioned."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path)
-    shift = 1_000_000
-    shard = emb.limit(20).withColumn("vec_id", F.col("vec_id") + shift)
-    append_to_ivf_index(shard, path, ds="2024-01-02")
-    q = shard.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    first = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    # retry/re-run of the SAME shard day: overwrite, not double-append
-    append_to_ivf_index(shard, path, ds="2024-01-02")
-    second = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    assert first == second and len(first) == 9
-    # the increment is visible to the probe: each clone's top hit is
-    # its origin (base corpus) and the clone itself never self-matches
-    top1 = {r[0]: r[1] for r in first if r[2] == 1}
-    for qid, nid in top1.items():
-        assert nid == qid - shift
-
-
-def test_ivf_index_staleness_and_rebuild(spark, tmp_path):
-    """Drifted appends against frozen centroids must trip the
-    staleness signal, and `rebuild_ivf_index` must reset it AND
-    restore probe==direct equality over the full (drifted) corpus."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        ivf_index_topk,
-        ivf_topk,
-        rebuild_ivf_index,
-        select_seeds,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(7)
-    dim = 16
-
-    def mk(ids, base_axis):
-        # tight cluster around one axis -> high cosine to in-cluster
-        # centroids, near-orthogonal to the other cluster's
-        rows = []
-        for i in ids:
-            v = rng.normal(0, 0.05, dim)
-            v[base_axis] += 1.0
-            rows.append((int(i), [float(x) for x in v]))
-        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    base = mk(range(200), base_axis=0)
-    path = str(tmp_path / "ivf")
-    build = write_ivf_index(base, path, k_cells=16)
-    assert build["mean_assign_cos"] > 0.9
-
-    drifted = mk(range(1000, 1100), base_axis=dim - 1)  # orthogonal drift
-    rep = append_to_ivf_index(drifted, path, ds="2024-02-01")
-    assert rep["stale"] is True
-    assert rep["mean_assign_cos"] < build["mean_assign_cos"] - 0.1
-
-    stats2 = rebuild_ivf_index(spark, path, k_cells=16)
-    # rebuilt centroids cover BOTH clusters: baseline restored
-    assert stats2["n_vectors"] == 300
-    assert stats2["mean_assign_cos"] > 0.9
-
-    # probe == direct over the rebuilt index for drifted queries
-    all_vecs = base.unionByName(drifted)
-    q_ids = (1000, 1001, 1002)
-    q = all_vecs.filter(F.col("vec_id").isin(*q_ids)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    direct = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            all_vecs, q_ids, select_seeds(all_vecs, 16), assignment="kernel"
-        ).collect()
-    )
-    assert probed == direct and len(probed) == 9
-
-
-def test_ivf_append_empty_shard_is_not_stale(spark, sf_small, tmp_path):
-    """An empty daily shard carries no cosine evidence: the append
-    must report stale=None (not trip the drift signal via a
-    0.0-coerced null mean) and write nothing."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path)
-    empty = emb.filter(F.lit(False))
-    rep = append_to_ivf_index(empty, path, ds="2024-03-01")
-    assert rep == {
-        "appended": 0,
-        "ds": "2024-03-01",
-        "mean_assign_cos": None,
-        "build_mean_assign_cos": None,
-        "stale": None,
-    }
-    assert not os.path.isdir(os.path.join(path, "increments", "ds=2024-03-01"))
-
-
-def test_ivf_compact_increments_preserves_probe(spark, sf_small, tmp_path):
-    """Folding increments into members is a pure re-layout: probe
-    results identical before and after, increments dir gone, row
-    count = base + shards."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        compact_ivf_increments,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf")
-    build = write_ivf_index(emb, path)
-    s1 = emb.limit(20).withColumn("vec_id", F.col("vec_id") + 1_000_000)
-    s2 = emb.limit(10).withColumn("vec_id", F.col("vec_id") + 2_000_000)
-    append_to_ivf_index(s1, path, ds="2024-01-02")
-    append_to_ivf_index(s2, path, ds="2024-01-03")
-    q = s1.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    before = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    rep = compact_ivf_increments(spark, path)
-    assert rep["increment_rows"] == 30
-    assert rep["members_rows"] == build["n_vectors"] + 30
-    assert not os.path.isdir(os.path.join(path, "increments"))
-    after = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    assert after == before and len(after) == 9
-    # compaction is idempotent when there is nothing to fold
-    assert compact_ivf_increments(spark, path) == {
-        "members_rows": None,
-        "increment_rows": 0,
-    }
-
-
-def test_ivf2_two_level_recall_on_clone_corpus(spark, sf_small):
-    """The beyond-the-clamp coarse quantizer: two-level routing
-    (super -> cell) must keep clone-corpus recall@3 high vs brute
-    force — same regime the flat derived-K test pins — while scoring
-    only ~2*sqrt(K) seeds per vector instead of K."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import ivf2_topk
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import dot_double
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    base = load_table(spark, sf_small, "embeddings")
-    shift = 1_000_000
-    clones = base
-    for r in range(1, 8):  # 4000 vectors
-        clones = clones.unionByName(
-            base.withColumn("vec_id", F.col("vec_id") + r * shift)
-        )
-    clones = clones.cache()
-    anchors = tuple(range(0, 500, 50))
-    got3 = {
-        (r.q_id, r.neighbor_id)
-        for r in ivf2_topk(
-            clones, anchors, nprobe_super=2, nprobe_cell=4, topk=3
-        ).collect()
-    }
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    q = clones.filter(F.col("vec_id").isin(*anchors)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    true3 = {
-        (r.q_id, r.neighbor_id)
-        for r in F.broadcast(q)
-        .crossJoin(clones.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            dot_double(F.col("q_emb"), F.col("embedding")).alias("dot"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .collect()
-    }
-    recall = len(true3 & got3) / len(true3)
-    # clones route identically (same vector -> same super -> same
-    # cell), so an anchor's clones are always searchable; the top-3
-    # ARE the clones on this corpus
-    assert recall >= 0.9, f"two-level IVF recall collapsed: {recall:.3f}"
-
-    # auto-sizing (r08): a caller-specified recall target derives the
-    # probe widths through the calibrated ivf2_probe_params model and
-    # must MEET the target on the clone corpus (the sizing widens the
-    # probe beyond the fixed (2, 4) baseline, so recall can only rise)
-    got_auto = {
-        (r.q_id, r.neighbor_id)
-        for r in ivf2_topk(clones, anchors, topk=3, recall_target=0.95).collect()
-    }
-    clones.unpersist()
-    recall_auto = len(true3 & got_auto) / len(true3)
-    assert recall_auto >= 0.95, (
-        f"auto-sized two-level probe missed its 0.95 target: {recall_auto:.3f}"
-    )
-    assert recall_auto >= recall  # wider probe never loses neighbors
-
-
-def test_ivf2_probe_params_sizing_model():
-    """The closed-form sizing: monotone in the target, clamped to the
-    hierarchy bounds, never narrower than the fixed (2, 4) defaults,
-    and honest about its prediction (>= target within the clamps)."""
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf2_probe_params,
-    )
-
-    base = ivf2_probe_params(448)  # the 200k-vector derived K
-    assert base["nprobe_super"] >= 2 and base["nprobe_cell"] >= 4
-    assert base["predicted_recall"] >= base["recall_target"]
-    # the solve is open-loop and says so: every embedding of this
-    # report carries the explicit fit-domain marker, so a caller can
-    # never mistake predicted_recall for a validated claim (the 1M
-    # clustered breach was 0.4 with no signal — VERDICT r09 #2)
-    assert base["model_domain"] == "clone-fit"
-    stricter = ivf2_probe_params(448, recall_target=0.99)
-    assert stricter["nprobe_super"] >= base["nprobe_super"]
-    assert stricter["nprobe_cell"] >= base["nprobe_cell"]
-    assert stricter["predicted_recall"] >= 0.99
-    # clamps: a tiny hierarchy cannot probe more supers/cells than exist
-    tiny = ivf2_probe_params(4, recall_target=0.999)
-    assert tiny["nprobe_super"] <= 2  # K1 = ceil(sqrt(4)) = 2
-    assert tiny["nprobe_cell"] <= 4
-    # topk floors the cell budget: 10 requested neighbors need >= 10 cells
-    wide = ivf2_probe_params(448, recall_target=0.5, topk=10)
-    assert wide["nprobe_cell"] >= 10
-    # the measured-coupling floor: widening the super probe dilutes
-    # the global cell ranking, so cell depth tracks super width
-    coupled = ivf2_probe_params(4096, recall_target=0.999)
-    assert coupled["nprobe_cell"] >= 2 * coupled["nprobe_super"]
-    # K-scaled coupling (STRESS_sf1_r09, 1M-vector validation): the
-    # 200k-calibrated c >= 2s frontier transferred to K=1000 (auto
-    # point (4,8) measured recall 1.0) but NOT to K=4096, where (4,8)
-    # measured 0.9 and the recall-1.0 frontier sat at c >= 4s —
-    # (4,16) measured 1.0.  g = max(2, round(2*sqrt(K/1000))).
-    at_1000 = ivf2_probe_params(1000, recall_target=0.95)
-    assert (at_1000["nprobe_super"], at_1000["nprobe_cell"]) == (4, 8)
-    assert at_1000["cell_coupling"] == 2
-    at_4096 = ivf2_probe_params(4096, recall_target=0.95)
-    assert (at_4096["nprobe_super"], at_4096["nprobe_cell"]) == (4, 16)
-    assert at_4096["cell_coupling"] == 4
-    # r08's 200k point is untouched by the re-fit
-    assert ivf2_probe_params(448, recall_target=0.95)["cell_coupling"] == 2
-    # flat callers (levels=1) skip the dilution floor entirely: no
-    # super probe, no foreign-super crowding — every measured s=1 row
-    # (200k/K=448, 1M/K=1000, 1M/K=4096) sits at recall 1.0
-    flat = ivf2_probe_params(4096, recall_target=0.95, levels=1)
-    assert flat["cell_coupling"] == 0 and flat["nprobe_cell"] == 8
-    # ...and its prediction models the probe that actually runs: a flat
-    # probe has no super level, so predicted is the cell-decay term
-    # alone and nprobe_super is None (ADVICE r09 — the old form
-    # multiplied in a super-miss factor for a level that never runs)
-    assert flat["nprobe_super"] is None
-    assert flat["predicted_recall"] == round(1.0 - 0.6**8, 4)
-    with pytest.raises(ValueError):
-        ivf2_probe_params(448, recall_target=1.5)
-
-
-def test_ivf2_persistent_index_matches_direct(spark, sf_small, tmp_path):
-    """A two-level index (``write_ivf_index(levels=2)``) must
-    reproduce the direct ``ivf2_topk`` output for the same K and
-    probe widths — the serving form of the beyond-the-clamp
-    quantizer — and its probe must stay a partition-pruned scan."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        _index_levels,
-        ivf2_topk,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    path = str(tmp_path / "ivf2")
-    rep = write_ivf_index(emb, path, levels=2)
-    assert rep["levels"] == 2 and _index_levels(path) == 2
-
-    queries = emb.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = ivf_index_topk(spark, path, queries, nprobe=2, topk=3, nprobe_cell=4)
-    got = {tuple(r) for r in probed.collect()}
-    direct = {
-        tuple(r)
-        for r in ivf2_topk(
-            emb,
-            ANCHOR_IDS,
-            k_cells=rep["k_cells"],
-            nprobe_super=2,
-            nprobe_cell=4,
-            topk=3,
-        ).collect()
-    }
-    assert got == direct and len(got) > 0
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    emb.unpersist()
-
-
-def test_ivf2_index_append_and_rebuild_keep_quantizer(spark, sf_small, tmp_path):
-    """Appends to a two-level index must route with the build's
-    quantizer (a clone lands in its origin's cell — the top-1
-    retrieval property), and ``rebuild_ivf_index`` must preserve the
-    two-level marker so the rebuilt index keeps routing the same
-    way."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        _index_levels,
-        append_to_ivf_index,
-        ivf_index_topk,
-        rebuild_ivf_index,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf2")
-    write_ivf_index(emb, path, levels=2)
-    shift = 1_000_000
-    shard = emb.limit(20).withColumn("vec_id", F.col("vec_id") + shift)
-    rep = append_to_ivf_index(shard, path, allow_non_idempotent=True)
-    assert rep["appended"] == 20
-    # clone shard of the build corpus: two-level assignment cosines
-    # match the build distribution, so staleness must not trip
-    assert rep["stale"] is False
-
-    q = shard.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-
-    def _origin_is_top1():
-        top = ivf_index_topk(spark, path, q, nprobe=2, topk=1).collect()
-        assert len(top) == 3
-        for r in top:
-            assert r.neighbor_id == r.q_id - shift
-    _origin_is_top1()
-
-    stats = rebuild_ivf_index(spark, path)
-    assert stats["levels"] == 2 and _index_levels(path) == 2
-    assert stats["n_vectors"] == emb.count() + 20
-    _origin_is_top1()
-
-
-def test_ivf_auto_routes_two_level_beyond_clamp(spark, sf_small, monkeypatch):
-    """Past the flat clamp the auto entry point must switch to the
-    two-level quantizer rather than degrade into IVF_MAX_CELLS
-    ever-fatter cells — pinned equal to calling ivf2_topk directly
-    (clamp lowered so fixture scale crosses it)."""
-    import math
-
-    import data_engineering_user_session_analysis_spark.operators.ivf as ivf_mod
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    monkeypatch.setattr(ivf_mod, "IVF_MAX_CELLS", 8)
-    anchors = tuple(range(0, 500, 50))
-    auto = {
-        tuple(r)
-        for r in ivf_mod.ivf_topk_auto(emb, anchors, nprobe=2, topk=3).collect()
-    }
-    k = max(math.ceil(math.sqrt(emb.count())), ivf_mod.IVF_MIN_CELLS)
-    assert k > 8  # the lowered clamp is actually crossed
-    direct = {
-        tuple(r)
-        for r in ivf_mod.ivf2_topk(
-            emb, anchors, k_cells=k, nprobe_super=2, nprobe_cell=4, topk=3
-        ).collect()
-    }
-    assert auto == direct and len(auto) > 0
-    emb.unpersist()
-
-
-def test_ivf_maintenance_survives_stale_sibling_dirs(spark, sf_small, tmp_path):
-    """A crashed prior compaction/rebuild leaves dangling .compact /
-    .old / .rebuild dirs; the next run must clear them and succeed
-    with intact probe results (the documented crash-safety story,
-    pinned from the recovery side)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        append_to_ivf_index,
-        compact_ivf_increments,
-        ivf_index_topk,
-        rebuild_ivf_index,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path)
-    s1 = emb.limit(20).withColumn("vec_id", F.col("vec_id") + 1_000_000)
-    append_to_ivf_index(s1, path, ds="2024-01-02")
-    q = s1.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    want = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-
-    def _plant_garbage(d):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "junk.parquet"), "w") as f:
-            f.write("not parquet")
-
-    _plant_garbage(os.path.join(path, "members.compact"))
-    _plant_garbage(os.path.join(path, "members.old"))
-    rep = compact_ivf_increments(spark, path)
-    assert rep["increment_rows"] == 20
-    assert not os.path.isdir(os.path.join(path, "members.compact"))
-    assert not os.path.isdir(os.path.join(path, "members.old"))
-    got = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    assert got == want
-
-    _plant_garbage(path.rstrip("/") + ".rebuild")
-    _plant_garbage(path.rstrip("/") + ".old")
-    rebuild_ivf_index(spark, path)
-    assert not os.path.isdir(path.rstrip("/") + ".rebuild")
-    assert not os.path.isdir(path.rstrip("/") + ".old")
-    got = sorted(
-        tuple(r) for r in ivf_index_topk(spark, path, q, nprobe=2, topk=3).collect()
-    )
-    assert got == want
-
-
-def test_two_level_routing_survives_empty_super_hazard():
-    """With unnormalized vectors a huge-norm seed can out-dot every
-    other super seed's self-assignment; without self-anchoring that
-    super owns zero cells and routing a query there crashes (argmax
-    over an empty axis).  Pure-numpy pin on the shared helpers."""
-    import numpy as np
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        _route_two_level,
-        _two_level_arrays,
-        _two_level_probe_cells,
-    )
-
-    # one huge-norm seed that IS a super (md5 picks sids {4, 1, 2}
-    # as supers for ids 0..5 — asserted below): the huge super
-    # out-dots the other super seeds' self-assignments, so without
-    # self-anchoring supers 1 and 2 own zero cells
-    seeds = []
-    for sid in range(6):
-        v = [0.0] * 4
-        if sid == 4:
-            v = [1000.0, 1000.0, 1000.0, 1000.0]
-        else:
-            v[sid % 4] = 0.1
-        seeds.append({"sid": sid, "se": v})
-    tl = _two_level_arrays(seeds)
-    assert 4 in set(tl["sup_ids"])  # the huge seed is a super
-    # self-anchor invariant: every super owns at least its own cell
-    for s in tl["sup_ids"]:
-        assert (tl["seed_to_sup"] == s).sum() >= 1
-        assert tl["seed_to_sup"][list(tl["seed_ids"]).index(s)] == s
-    # adversarial queries (including one anti-aligned with the huge
-    # seed, which drives best_sup to the low-mass super): must route
-    # without crashing, into a cell owned by some probed super
-    x = np.array(
-        [[-1.0, -1.0, -1.0, -1.0], [0.05, 0.0, 0.0, 0.0], [0.0, 0.2, 0.0, 0.1]]
-    )
-    cells, dots = _route_two_level(x, tl)
-    assert len(cells) == 3 and np.isfinite(dots).all()
-    assert set(cells) <= set(tl["seed_ids"])
-    pc = _two_level_probe_cells(
-        [(i, list(q)) for i, q in enumerate(x)], tl, nprobe_super=1, nprobe_cell=2
-    )
-    assert all(len(v) >= 1 for v in pc.values())
-
-
-def test_rebuild_two_level_resizes_past_flat_clamp(spark, sf_small, tmp_path, monkeypatch):
-    """ADVICE r7: ``rebuild_ivf_index(k_cells=None)`` on a TWO-LEVEL
-    index must re-size with the unclamped sqrt(N) policy (the
-    ``ivf_topk_auto`` beyond-clamp rule), not the flat clamp —
-    collapsing a beyond-clamp index to ``IVF_MAX_CELLS`` while keeping
-    the ``_TWO_LEVEL`` marker would silently destroy the two-level
-    economics, and ``job reindex`` is exactly what the staleness
-    signal tells operators to run.  The clamp boundary is scaled down
-    to fixture size by patching the module constants (the sizing
-    functions read them at call time)."""
-    import math
-
-    from data_engineering_user_session_analysis_spark.operators import ivf
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").limit(100)
-    n = emb.count()
-    k_unclamped = max(math.ceil(math.sqrt(n)), 2)
-    assert k_unclamped > 4  # fixture sanity: leaves room for a clamp below it
-    monkeypatch.setattr(ivf, "IVF_MIN_CELLS", 2)
-    monkeypatch.setattr(ivf, "IVF_MAX_CELLS", k_unclamped - 2)
-
-    # flat index: rebuild keeps the flat clamp (the pre-fix behavior
-    # was CORRECT here, and must stay)
-    flat = str(tmp_path / "flat")
-    ivf.write_ivf_index(emb, flat, levels=1)
-    assert ivf.rebuild_ivf_index(spark, flat)["k_cells"] == k_unclamped - 2
-
-    # two-level index built beyond the (patched) clamp: rebuild must
-    # re-derive the UNCLAMPED size, not collapse to the flat clamp
-    two = str(tmp_path / "two")
-    ivf.write_ivf_index(emb, two, k_cells=k_unclamped, levels=2)
-    stats = ivf.rebuild_ivf_index(spark, two)
-    assert stats["k_cells"] == k_unclamped and stats["levels"] == 2
-
-    # an explicit CLI-style k_cells override wins over both policies
-    stats = ivf.rebuild_ivf_index(spark, two, k_cells=k_unclamped - 1)
-    assert stats["k_cells"] == k_unclamped - 1 and stats["levels"] == 2
-
-
-def test_kmeans_refined_seeds_tighten_assignment(spark, sf_small, tmp_path):
-    """Spherical Lloyd refinement: the refined centroid set must
-    (a) have the documented shape (K dense sids, unit-norm vectors),
-    (b) yield a MEAN ASSIGNMENT COSINE at least as tight as the
-    md5-sample baseline (the refinement's entire reason to exist —
-    and the metric the persistent index stores as its staleness
-    baseline), and (c) be a drop-in for the persistent index build
-    with clone retrieval intact."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        _assign_cells_cos_kernel,
-        ivf_index_topk,
-        kmeans_refine_seeds,
-        select_seeds,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    k = 16
-    refined = kmeans_refine_seeds(emb, k, iters=3).cache()
-    rows = refined.collect()
-    assert sorted(r["sid"] for r in rows) == list(range(k))
-    for r in rows:
-        assert abs(float(np.linalg.norm(r["se"])) - 1.0) < 1e-9
-
-    def mean_cos(seeds_df):
-        return (
-            _assign_cells_cos_kernel(emb, seeds_df, "vec_id", "embedding")
-            .agg(F.avg("assign_cos"))
-            .first()[0]
-        )
-
-    base = mean_cos(select_seeds(emb, k))
-    tightened = mean_cos(refined)
-    assert tightened >= base - 1e-6, (base, tightened)
-
-    # drop-in for the persistent index: build with refined centroids,
-    # clone query retrieves its origin through the stored index
-    path = str(tmp_path / "ivf_refined")
-    stats = write_ivf_index(emb, path, seeds=refined)
-    assert stats["k_cells"] == k
-    assert stats["mean_assign_cos"] >= base - 1e-6
-    shift = 1_000_000
-    q = (
-        emb.limit(3)
-        .select(
-            (F.col("vec_id") + shift).alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    top = ivf_index_topk(spark, path, q, nprobe=2, topk=1).collect()
-    assert len(top) == 3
-    for r in top:
-        assert r.neighbor_id == r.q_id - shift
-    refined.unpersist()
-    emb.unpersist()
-
-
-def test_refined_seeds_compose_with_two_level_index(spark, sf_small, tmp_path):
-    """The quality knob composes with the beyond-clamp quantizer:
-    a levels=2 index built on kmeans-refined centroids (synthetic
-    dense sids) must derive its super hierarchy from the STORED
-    centroids and keep clone retrieval intact — the md5-of-sid super
-    selection and the self-anchoring rule make no assumption about
-    sids being corpus vector ids."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        _index_levels,
-        ivf_index_topk,
-        kmeans_refine_seeds,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    refined = kmeans_refine_seeds(emb, 16, iters=2)
-    path = str(tmp_path / "ivf2_refined")
-    stats = write_ivf_index(emb, path, seeds=refined, levels=2)
-    assert stats["levels"] == 2 and _index_levels(path) == 2
-    assert stats["k_cells"] == 16
-    shift = 1_000_000
-    q = emb.limit(3).select(
-        (F.col("vec_id") + shift).alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    top = ivf_index_topk(spark, path, q, nprobe=2, topk=1, nprobe_cell=4).collect()
-    emb.unpersist()
-    assert len(top) == 3
-    for r in top:
-        assert r.neighbor_id == r.q_id - shift
-
-
-def test_refined_seeds_restore_auto_sizer_on_clustered_corpus(spark, tmp_path):
-    """The sizing model's DOMAIN pin (STRESS_sf1_r09 clustered
-    grids): on a clustered non-clone corpus with md5-sample seeds the
-    model's recall prediction can be breached — centroid placement,
-    not probe width, binds (the 1M md5-seed grids measured 0.57/0.73
-    at the 0.97-predicted auto point with even (8,32) at ≤ 0.87).
-    k-means refinement is the documented remedy: at EQUAL auto-sized
-    probe widths the refined two-level index must recall at least as
-    well as the md5-seed build and clear 0.9 on a corpus shaped like
-    the stress tier's (skew-sized noise-perturbed clusters)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_topk,
-        kmeans_refine_seeds,
-        write_ivf_index,
-    )
-
-    rng = np.random.RandomState(7)
-    dim, n_centers = 32, 24
-    centers = rng.randn(n_centers, dim)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows, vid = [], 0
-    for i in range(n_centers):
-        for _ in range(40 + (i * 37) % 160):  # skew-sized clusters
-            v = centers[i] + rng.uniform(-0.1, 0.1, dim)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    k = int(np.ceil(np.sqrt(len(rows))))
-
-    # exact ground truth + query points (first member of 10 clusters)
-    mat = np.array([r[1] for r in rows])
-    q_ids = [int(np.sum([40 + (j * 37) % 160 for j in range(i)])) for i in range(10)]
-    true3 = set()
-    for qi in q_ids:
-        dots = mat @ mat[qi]
-        dots[qi] = -np.inf
-        for nb in np.argsort(-dots)[:3]:
-            true3.add((qi, int(nb)))
-    q = emb.filter(F.col("vec_id").isin(q_ids)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-
-    recalls = {}
-    for name, seeds in (
-        ("md5", None),
-        ("refined", kmeans_refine_seeds(emb, k, iters=3)),
-        ("d2", kmeans_refine_seeds(emb, k, iters=3, init="d2")),
-    ):
-        path = str(tmp_path / f"ivf2_{name}")
-        write_ivf_index(emb, path, k_cells=k, levels=2, seeds=seeds)
-        got = {
-            (r.q_id, r.neighbor_id)
-            for r in ivf_index_topk(
-                spark, path, q, topk=3, recall_target=0.95
-            ).collect()
-        }
-        recalls[name] = len(true3 & got) / len(true3)
-    emb.unpersist()
-    # one-pair slack: recall here is quantized in 1/30 steps and the
-    # refined centroids are float means (ulp-level shifts can flip a
-    # borderline pair either way at fixture scale, where md5 already
-    # measures 1.0 and refinement has no headroom to show above it) —
-    # the substantive contract is the >= 0.9 restoration below
-    assert recalls["refined"] >= recalls["md5"] - 1 / 30 - 1e-9, recalls
-    assert recalls["refined"] >= 0.9, recalls
-    # the D²-init build must be at least as good as md5-init Lloyd on
-    # exactly the corpus shape whose starvation it exists to fix
-    assert recalls["d2"] >= 0.9, recalls
-
-
-def test_select_seeds_d2_covers_starved_clusters(spark):
-    """The starvation mechanism itself (why `select_seeds_d2` exists):
-    a uniform md5 sample draws seeds ∝ cluster population, so a corpus
-    with one fat cluster and many small ones leaves small clusters
-    unseeded; D² sampling finds them because their distance mass stays
-    large until they get a seed.  Assert every true center is covered
-    (cos ≥ 0.8) by a d2 seed — and that the md5 sample of the same
-    size demonstrably does NOT cover them (the deterministic fact the
-    fix is for)."""
-    import numpy as np
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        select_seeds,
-        select_seeds_d2,
-    )
-
-    rng = np.random.RandomState(11)
-    dim = 16
-    centers = rng.randn(12, dim)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows, vid = [], 0
-    for i, n in enumerate([3000] + [25] * 11):  # one fat, 11 small
-        for _ in range(n):
-            v = centers[i] + rng.uniform(-0.08, 0.08, dim)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-
-    def coverage(seed_df):
-        s = np.array([list(r["se"]) for r in seed_df.collect()], dtype=np.float64)
-        s /= np.linalg.norm(s, axis=1, keepdims=True)
-        return (centers @ s.T).max(axis=1)
-
-    cov_d2 = coverage(select_seeds_d2(emb, 16))
-    cov_md5 = coverage(select_seeds(emb, 16))
-    emb.unpersist()
-    assert (cov_d2 >= 0.8).all(), cov_d2.round(3).tolist()
-    assert (cov_md5 < 0.8).any(), cov_md5.round(3).tolist()
-
-
-def test_select_seeds_d2_deterministic(spark):
-    """Two invocations yield identical seed matrices: the uniform
-    draws are md5(id:round), the driver-side k-means++ reduction is
-    RandomState(0), and every distributed pass is order-independent
-    map arithmetic — the same engine-portable determinism discipline
-    as the sampling operators."""
-    import numpy as np
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import select_seeds_d2
-
-    rng = np.random.RandomState(3)
-    rows = [
-        (i, [float(x) for x in rng.randn(8)]) for i in range(400)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    a = np.array([r["se"] for r in select_seeds_d2(emb, 10).orderBy("sid").collect()])
-    b = np.array([r["se"] for r in select_seeds_d2(emb, 10).orderBy("sid").collect()])
-    emb.unpersist()
-    assert a.shape == b.shape == (10, 8)
-    assert np.array_equal(a, b)
-
-
-def test_ivf_index_recall_sample_exhaustive_probe_is_exact(spark, sf_small, tmp_path):
-    """`ivf_index_recall_sample` with the probe opened to ALL cells is
-    exact search — measured recall must be 1.0 by construction (the
-    self-check that the harness's truth and probe agree on semantics:
-    same member set, same self-exclusion, same tie order).  A narrow
-    probe on the same index can only report ≤ that, and two runs of
-    the same validation must agree exactly (md5-order sample,
-    deterministic kernels)."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_recall_sample,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    path = str(tmp_path / "ivf_flat")
-    rep = write_ivf_index(emb, path)
-    emb.unpersist()
-
-    full = ivf_index_recall_sample(spark, path, sample_q=8, nprobe=rep["k_cells"])
-    assert full["recall_at_k"] == 1.0, full
-    assert full["sample_q"] == 8 and full["levels"] == 1
-    assert full["n_vectors"] == rep["n_vectors"]
-
-    narrow = ivf_index_recall_sample(spark, path, sample_q=8, nprobe=1)
-    again = ivf_index_recall_sample(spark, path, sample_q=8, nprobe=1)
-    assert narrow["recall_at_k"] <= full["recall_at_k"]
-    assert narrow["recall_at_k"] == again["recall_at_k"]
-
-
-def test_ivf_index_recall_sample_reports_prediction_vs_measurement(
-    spark, sf_small, tmp_path
-):
-    """With ``recall_target`` the report must carry the sizing model's
-    claim NEXT TO the measurement — predicted vs measured side by side
-    is the whole point of the validation verb (the 1M clustered grids
-    breached the prediction by 0.4 with no error signal anywhere) —
-    and the widths it reports must be the solve's widths, i.e. exactly
-    what ran."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf2_probe_params,
-        ivf_index_recall_sample,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    path = str(tmp_path / "ivf_two_level")
-    rep = write_ivf_index(emb, path, k_cells=16, levels=2)
-    emb.unpersist()
-
-    res = ivf_index_recall_sample(spark, path, sample_q=6, recall_target=0.9)
-    sized = ivf2_probe_params(rep["k_cells"], recall_target=0.9, topk=3, levels=2)
-    assert res["levels"] == 2
-    assert res["nprobe"] == sized["nprobe_super"]
-    assert res["nprobe_cell"] == sized["nprobe_cell"]
-    assert res["predicted_recall"] == sized["predicted_recall"]
-    assert res["recall_target"] == 0.9
-    assert res["model_domain"] == "clone-fit"  # prediction, not a claim
-    assert 0.0 <= res["recall_at_k"] <= 1.0
-    assert res["probe_sec"] >= 0.0
-
-
-def test_probe_autotune_meets_target_where_prediction_fails(spark, tmp_path):
-    """`ivf_index_probe_autotune` on exactly the corpus shape that
-    breaches the open-loop prediction (md5 seeds on a starved-cluster
-    corpus): the ladder must start AT the model's solve, walk the
-    measured frontier, and terminate with measured recall >= target —
-    the closed loop's whole contract.  The trail must be consistent
-    (final widths are the last step's widths; widths never shrink)."""
-    import numpy as np
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf2_probe_params,
-        ivf_index_probe_autotune,
-        write_ivf_index,
-    )
-
-    rng = np.random.RandomState(7)
-    dim = 16
-    centers = rng.randn(10, dim)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows, vid = [], 0
-    for i, n in enumerate([2000] + [40] * 9):  # one fat, 9 starved
-        for _ in range(n):
-            v = centers[i] + rng.uniform(-0.08, 0.08, dim)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    path = str(tmp_path / "ivf2_tune")
-    rep = write_ivf_index(emb, path, k_cells=16, levels=2)
-    emb.unpersist()
-
-    res = ivf_index_probe_autotune(spark, path, recall_target=0.9, sample_q=12)
-    sized = ivf2_probe_params(rep["k_cells"], recall_target=0.9, topk=3, levels=2)
-    first, last = res["steps"][0], res["steps"][-1]
-    assert (first["nprobe"], first["nprobe_cell"]) == (
-        sized["nprobe_super"], sized["nprobe_cell"],
-    )
-    assert res["met"] and res["recall_at_k"] >= 0.9
-    assert (res["nprobe"], res["nprobe_cell"]) == (
-        last["nprobe"], last["nprobe_cell"],
-    )
-    for a, b in zip(res["steps"], res["steps"][1:]):
-        assert b["nprobe"] >= a["nprobe"] and b["nprobe_cell"] >= a["nprobe_cell"]
-
-
-def test_stratified_sample_exposes_starved_tail(spark, tmp_path):
-    """The estimator-bias pin: on a starved-cluster corpus with md5
-    seeds, the POPULATION sample (md5-order members, dominated by the
-    fat well-seeded cluster) must read recall at least as high as the
-    STRATIFIED per-cell sample at the same solve widths — the
-    stratified mode exists because the tail is where the breach
-    hides.  (Distinct-cell coverage holds by construction —
-    rank-1-per-cell.)  A stratified autotune must still terminate
-    met: the exhaustive endpoint is sample-independent."""
-    import numpy as np
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_probe_autotune,
-        ivf_index_recall_sample,
-        write_ivf_index,
-    )
-
-    rng = np.random.RandomState(19)
-    dim = 16
-    centers = rng.randn(10, dim)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows, vid = [], 0
-    for i, n in enumerate([2500] + [30] * 9):
-        for _ in range(n):
-            v = centers[i] + rng.uniform(-0.08, 0.08, dim)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    path = str(tmp_path / "ivf2_strat")
-    write_ivf_index(emb, path, k_cells=16, levels=2)
-    emb.unpersist()
-
-    pop = ivf_index_recall_sample(spark, path, sample_q=12, recall_target=0.9)
-    tail = ivf_index_recall_sample(
-        spark, path, sample_q=12, recall_target=0.9, stratify_by_cell=True
-    )
-    assert tail["stratified"] and not pop["stratified"]
-    assert tail["recall_at_k"] <= pop["recall_at_k"] + 1e-9, (pop, tail)
-
-    tuned = ivf_index_probe_autotune(
-        spark, path, recall_target=0.9, sample_q=12, stratify_by_cell=True
-    )
-    assert tuned["met"] and tuned["stratified"]
-
-
-def test_probe_autotune_flat_exhaustive_endpoint(spark, sf_small, tmp_path):
-    """Flat regime: the single-axis walk is finite and its endpoint is
-    exact — at nprobe=K the probe is brute force, so ANY target < 1 is
-    met by construction.  An aggressive target on a flat index must
-    therefore terminate met, with the trail capped at K."""
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_probe_autotune,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    path = str(tmp_path / "ivf_flat_tune")
-    rep = write_ivf_index(emb, path)
-    emb.unpersist()
-
-    res = ivf_index_probe_autotune(spark, path, recall_target=0.99, sample_q=6)
-    assert res["levels"] == 1 and res["met"], res
-    assert res["nprobe"] <= rep["k_cells"]
-    assert res["steps"][-1]["recall_at_k"] >= 0.99
-
-
-def test_reindex_with_refinement_tightens_baseline(spark, sf_small, tmp_path):
-    """``rebuild_ivf_index(refine_iters>0)`` — the operational quality
-    rebuild: the reindex that answers a degraded staleness signal must
-    reset the stored ``mean_assign_cos`` baseline measurably TIGHTER
-    than the md5-sample build it replaces (that is its entire point),
-    while keeping the index probeable."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_topk,
-        rebuild_ivf_index,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    path = str(tmp_path / "ivf")
-    base_stats = write_ivf_index(emb, path)
-    new_stats = rebuild_ivf_index(spark, path, refine_iters=2)
-    assert new_stats["mean_assign_cos"] > base_stats["mean_assign_cos"], (
-        base_stats["mean_assign_cos"], new_stats["mean_assign_cos"],
-    )
-    assert new_stats["n_vectors"] == base_stats["n_vectors"]
-    shift = 1_000_000
-    q = emb.limit(3).select(
-        (F.col("vec_id") + shift).alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    top = ivf_index_topk(spark, path, q, nprobe=2, topk=1).collect()
-    assert len(top) == 3
-    for r in top:
-        assert r.neighbor_id == r.q_id - shift
-
-
-def test_ivf_index_recall_target_applies_on_flat_index(spark, sf_small, tmp_path):
-    """ADVICE r8: recall_target must not be silently ignored on a flat
-    (levels=1) index — it maps onto the sizing model's cell axis,
-    matching ivf_topk_auto's flat-regime behavior.  Pin: the
-    target-driven probe equals an explicit-nprobe probe at the derived
-    width, and derives strictly more probed cells than the default."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf2_probe_params,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-    from data_engineering_user_session_analysis_spark.queries.similarity_queries import ANCHOR_IDS
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").cache()
-    path = str(tmp_path / "ivf_flat_rt")
-    rep = write_ivf_index(emb, path)
-    q = emb.filter(F.col("vec_id").isin(*ANCHOR_IDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    derived = ivf2_probe_params(rep["k_cells"], recall_target=0.99, topk=3, levels=1)[
-        "nprobe_cell"
-    ]
-    assert derived > 2, "0.99 must widen the probe beyond the default nprobe=2"
-    got = {
-        tuple(r)
-        for r in ivf_index_topk(spark, path, q, recall_target=0.99).collect()
-    }
-    want = {
-        tuple(r)
-        for r in ivf_index_topk(spark, path, q, nprobe=derived).collect()
-    }
-    assert got == want and len(got) > 0
-    emb.unpersist()
 
 
 def test_vector_geometry_for_recall_inverse_model():
@@ -1665,56 +372,6 @@ def test_vector_geometry_for_recall_inverse_model():
         vector_geometry_for_recall(1000, 0.9, recall_target=1.5)
     with pytest.raises(ValueError):
         vector_geometry_for_recall(1000, 1.0)
-
-
-def test_seeding_diagnostic_flags_starved_index_and_d2_clears_it(spark, tmp_path):
-    """`ivf_index_seeding_diagnostic` turns the stratified-vs-
-    population gap — the measured signature of seed starvation
-    (0.80 vs 0.60 on the md5 1M index, STRESS_sf1_r09) — into an
-    operator-facing flag with the remedy named.  Reproduced at
-    fixture scale in the starvation regime (K at/below the natural
-    cluster count: 81 clusters, K=64): the md5-seed index must trip
-    ``seeding_suspect`` (population high, tail low), and the named
-    remedy — a d2 reindex — must clear it (gap collapses, tail
-    recall restored)."""
-    import numpy as np
-
-    from data_engineering_user_session_analysis_spark.operators.ivf import (
-        ivf_index_seeding_diagnostic,
-        rebuild_ivf_index,
-        write_ivf_index,
-    )
-
-    rng = np.random.RandomState(19)
-    dim, nclu = 16, 80
-    centers = rng.randn(nclu + 1, dim)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows, vid = [], 0
-    for i, n in enumerate([3000] + [25] * nclu):  # one fat, 80 starved
-        for _ in range(n):
-            v = centers[i] + rng.uniform(-0.08, 0.08, dim)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    idx = str(tmp_path / "ivf_starved")
-    write_ivf_index(emb, idx, k_cells=64, levels=2)
-    emb.unpersist()
-
-    starved = ivf_index_seeding_diagnostic(
-        spark, idx, recall_target=0.9, sample_q=24
-    )
-    # the starvation signature: population reads healthy, tail does not
-    assert starved["seeding_suspect"], starved
-    assert starved["population_recall"] > starved["tail_recall"], starved
-    assert "d2" in starved["remedy"]
-
-    # the named remedy clears the flag: d2 re-seeding restores the tail
-    rebuild_ivf_index(spark, idx, k_cells=64, refine_iters=3, seed_init="d2")
-    fixed = ivf_index_seeding_diagnostic(spark, idx, recall_target=0.9, sample_q=24)
-    assert not fixed["seeding_suspect"], fixed
-    assert fixed["tail_recall"] > starved["tail_recall"], (starved, fixed)
-    assert fixed["tail_recall"] >= 0.9, fixed
-    assert "width" in fixed["remedy"]
 
 
 def test_oracle_geometry_law():
