@@ -7,10 +7,13 @@
   (``spark_jobs/spark_batch_job.py:17``); here the job reads the lake
   base path and filters ``date = <ds>`` — Catalyst prunes to the same
   files, with schema stability across days (SURVEY.md §4 row 1).
-* **Cache at the fan-out root**: the reference rescans the day's data
-  for every one of its 5 actions (no ``.cache()``,
-  ``spark_jobs/spark_batch_job.py:27-164``); here the day's events are
-  cached once and all downstream aggregates share the scan.
+* **One lake read, counts without jobs**: the reference rescans the
+  day's data for every one of its 5 actions (no ``.cache()``,
+  ``spark_jobs/spark_batch_job.py:27-164``); here the daily pipeline
+  reads the lake relation once and hands it to every step, the
+  serving step caches the day at its fan-out root so its aggregates
+  share one scan, and the report's row counts are ``Observation``s
+  on writes that run anyway, not ``count()`` jobs of their own.
 * **Serving sink**: parquet directories stand in for the reference's
   Postgres tables (same ``overwrite`` semantics); `jdbc_url` switches
   to real JDBC when a database is reachable.
@@ -22,7 +25,7 @@ import datetime
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
@@ -56,7 +59,7 @@ def build_lake(
 
 def run_daily_job(
     spark: SparkSession,
-    lake_path: str,
+    lake: DataFrame,
     ds: str,
     out_dir: str,
     jdbc_url: str | None = None,
@@ -73,12 +76,15 @@ def run_daily_job(
     it stitches boundary sessions through an O(active users) carry
     and is pinned equal to batch sessionization of the full history.
 
-    Returns the result DataFrames keyed by table name (also written
-    to ``out_dir`` in the lake format, or to JDBC when ``jdbc_url``
-    given).  ``fmt`` must match the lake's format (partition pruning
-    behaves identically for parquet and ORC — plan-pinned in
-    tests/test_formats.py); only columnar formats are accepted —
-    the raw read below carries no row-format header/schema options.
+    ``lake`` is the whole lake relation
+    (``spark.read.format(fmt).load(lake_path)``); the job filters it
+    to ``date = ds`` itself, so a caller running several steps or
+    days reads (and lists) the lake once.  Returns the result
+    DataFrames keyed by table name (also written to ``out_dir`` in
+    the lake format, or to JDBC when ``jdbc_url`` given).  ``fmt`` is
+    the serving format and should match the lake's (partition
+    pruning behaves identically for parquet and ORC — plan-pinned in
+    tests/test_formats.py); only columnar formats are accepted.
 
     Schema note: round 6 added ``events_truncated`` to
     ``session_full`` (the hot-key cap).  A serving dir holding
@@ -102,9 +108,7 @@ def run_daily_job(
             f"lake format must be columnar {COLUMNAR_FORMATS}, got {fmt!r}"
         )
     day = (
-        spark.read.format(fmt)
-        .load(lake_path)
-        .filter(F.col("date") == ds)  # -> PartitionFilters, file pruning
+        lake.filter(F.col("date") == ds)  # -> PartitionFilters, file pruning
         # rows with no session key cannot be sessionized or attributed
         # to a user — excluded here (the daily pipeline's hygiene step
         # records them in the quarantine sink)
@@ -126,7 +130,9 @@ def run_daily_job(
         .cast("double")
         .alias("total_spent"),
         F.count("*").alias("n_events"),
-        F.countDistinct("event_type").alias("n_event_types"),
+        # = countDistinct (both skip nulls, both bigint), but planned
+        # as one aggregation over the user_id exchange instead of two
+        F.size(F.collect_set("event_type")).cast("long").alias("n_event_types"),
     )
 
     results = {
@@ -134,33 +140,36 @@ def run_daily_job(
         "session_full": session_full,
         "user_level": user_level,
     }
-    for name, df in results.items():
-        if jdbc_url is not None:
-            df.write.jdbc(
-                url=jdbc_url,
-                table=name,
-                mode="overwrite",
-                properties=jdbc_properties or {},
-            )
-        else:
-            df.write.mode("overwrite").format(fmt).save(
-                os.path.join(out_dir, name, f"ds={ds}")
-            )
-    day.unpersist()
+    try:
+        for name, df in results.items():
+            if jdbc_url is not None:
+                df.write.jdbc(
+                    url=jdbc_url,
+                    table=name,
+                    mode="overwrite",
+                    properties=jdbc_properties or {},
+                )
+            else:
+                df.write.mode("overwrite").format(fmt).save(
+                    os.path.join(out_dir, name, f"ds={ds}")
+                )
+    finally:
+        day.unpersist()
     return results
 
 
 def run_incremental_sessions(
     spark: SparkSession,
-    lake_path: str,
+    lake: DataFrame,
     ds: str,
     out_dir: str,
     fmt: str = "parquet",
 ) -> dict[str, int]:
     """Daily incremental sessionization step (the 100 TB-shaped
     alternative to ``run_daily_job``'s within-day sessionize, which
-    splits sessions crossing midnight): fold day ``ds`` into the
-    session carry state (``operators/incremental_sessions.py``).
+    splits sessions crossing midnight): fold day ``ds`` of the lake
+    relation ``lake`` (``spark.read.format(fmt).load(lake_path)``)
+    into the session carry state (``operators/incremental_sessions.py``).
 
     Layout under ``out_dir``:
 
@@ -174,7 +183,8 @@ def run_incremental_sessions(
       in order.  (Partition discovery is a local listing here; a
       cluster deployment lists via the Hadoop FileSystem API.)
 
-    Returns closed/open row counts for observability.
+    Returns closed/open row counts for observability, observed on
+    the two writes.
     """
     from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
         advance_sessions,
@@ -195,25 +205,22 @@ def run_incremental_sessions(
         else None
     )
     day = (
-        spark.read.format(fmt)
-        .load(lake_path)
-        .filter(F.col("date") == ds)  # partition-pruned day read
+        lake.filter(F.col("date") == ds)  # partition-pruned day read
         # null-key rows cannot be stitched; quarantined by the daily
         # pipeline's hygiene step, excluded here for any entry point
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
     )
     closed, new_state = advance_sessions(day, state)
-    closed.write.mode("overwrite").format(fmt).save(
-        os.path.join(out_dir, "session_closed", f"ds={ds}")
-    )
-    new_state.write.mode("overwrite").format(fmt).save(
-        os.path.join(state_root, f"ds={ds}")
-    )
-    # observability counts come from the SAME materialized step frames
-    # (advance_sessions checkpoints the shared `combined` plan), not a
-    # re-read of what was just written — the re-read cost two extra
-    # scans per day, a fixed overhead that dominated the 30-day replay
-    return {"closed": closed.count(), "open": new_state.count()}
+    # the counts are Observations on the writes themselves: the rows
+    # are counted as they are written, with no job of their own
+    n_closed, n_open = Observation(), Observation()
+    closed.observe(n_closed, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).format(fmt).save(os.path.join(out_dir, "session_closed", f"ds={ds}"))
+    new_state.observe(n_open, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).format(fmt).save(os.path.join(state_root, f"ds={ds}"))
+    return {"closed": n_closed.get["n"], "open": n_open.get["n"]}
 
 
 def compact_closed_partition(
@@ -749,9 +756,10 @@ def run_daily_pipeline(
     sequence a real deployment runs once per day, chaining the
     individually-tested steps in dependency order:
 
-    1. **ingest hygiene**: count the day's rows, quarantine
-       structurally bad ones (null user/ts — rows sessionization
-       cannot key) to ``out_dir/quarantine/ds=<ds>``;
+    1. **ingest hygiene**: quarantine structurally bad rows (null
+       user/ts — rows sessionization cannot key) to
+       ``out_dir/quarantine/ds=<ds>``; the day's row and quarantine
+       counts are observed on that one write;
     2. **incremental session stitch** (``run_incremental_sessions``):
        fold the day into the carry state, emit closed sessions —
        the midnight-exact path;
@@ -760,7 +768,10 @@ def run_daily_pipeline(
     4. **compact <ds-1>** (``compact_closed_partition``): the
        previous day's partition is now closed (the stream's
        watermark has passed it), so merge its micro-batch small
-       files before backfills pay file-count costs forever;
+       files before backfills pay file-count costs forever.  A lake
+       written by the stream sink carries a ``_spark_metadata`` log
+       that compaction must not rename under; there the step is
+       skipped and the report records the log's path;
     5. **dedup-index probe** (``run_docs_index_step``, only when
        ``docs_path`` names today's document shard): near-dup probe
        against all prior days' index, drop dups, index survivors;
@@ -783,53 +794,58 @@ def run_daily_pipeline(
     Every step is an idempotent per-day overwrite, so re-running any
     day replaces exactly that day's outputs (pinned by
     ``tests/test_batch_job.py`` with a 3-day replay + day-2 re-run).
-    Returns a per-step report dict for observability.
+    The lake is read once per call and that one relation feeds the
+    hygiene, stitch and serving steps.  Returns a per-step report
+    dict for observability.
     """
     report: dict = {"ds": ds}
+    lake = spark.read.format(fmt).load(lake_path)
 
-    # one cached pass: both counts come from a single aggregation,
-    # the quarantine write reuses the cached read
-    day = (
-        spark.read.format(fmt)
-        .load(lake_path)
-        .filter(F.col("date") == ds)  # partition-pruned
-        .cache()
-    )
     is_bad = F.col("user_id").isNull() | F.col("ts").isNull()
-    stats = day.select(
-        F.count("*").alias("rows"),
-        F.count(F.when(is_bad, 1)).alias("quarantined"),
-    ).first()
-    # ALWAYS overwrite the day's quarantine partition — including with
-    # an empty frame when nothing is bad — so a re-run after upstream
+    stats = Observation()
+    # the filter sits ABOVE the observation, so the counts cover every
+    # row of the day while the write keeps only the bad ones.  ALWAYS
+    # overwrite the day's quarantine partition — including with an
+    # empty frame when nothing is bad — so a re-run after upstream
     # data was fixed clears the previous run's stale dead-letter rows
     # (the "re-running any day replaces exactly its own outputs"
     # invariant applies to the quarantine sink too).
-    day.filter(is_bad).write.mode("overwrite").format(fmt).save(
-        os.path.join(out_dir, "quarantine", f"ds={ds}")
+    (
+        lake.filter(F.col("date") == ds)  # partition-pruned
+        .observe(
+            stats,
+            F.count(F.lit(1)).alias("rows"),
+            F.count(F.when(is_bad, 1)).alias("quarantined"),
+        )
+        .filter(is_bad)
+        .write.mode("overwrite")
+        .format(fmt)
+        .save(os.path.join(out_dir, "quarantine", f"ds={ds}"))
     )
-    day.unpersist()
-    report["hygiene"] = {
-        "rows": stats["rows"],
-        "quarantined": stats["quarantined"],
-    }
+    report["hygiene"] = stats.get  # {"rows": …, "quarantined": …}
     # the exclusion itself is enforced by the downstream steps' reads
     # (run_incremental_sessions / run_daily_job drop null-key rows),
     # so the quarantine sink is the RECORD of what they excluded —
     # a dead-lettered row is never also sessionized or served
 
     report["sessions"] = run_incremental_sessions(
-        spark, lake_path, ds, out_dir, fmt=fmt
+        spark, lake, ds, out_dir, fmt=fmt
     )
 
-    serving = run_daily_job(spark, lake_path, ds, out_dir, fmt=fmt)
+    serving = run_daily_job(spark, lake, ds, out_dir, fmt=fmt)
     report["serving_tables"] = sorted(serving)
 
     if compact_previous:
+        from data_engineering_user_session_analysis_spark.sources.compaction import find_sink_log
+
         prev = (datetime.date.fromisoformat(ds) - datetime.timedelta(days=1)).isoformat()
-        if os.path.isdir(os.path.join(lake_path, f"date={prev}")):
-            report["compacted_previous"] = compact_closed_partition(
-                spark, lake_path, prev
+        prev_dir = os.path.join(lake_path, f"date={prev}")
+        if os.path.isdir(prev_dir):
+            sink_log = find_sink_log(spark, prev_dir)
+            report["compacted_previous"] = (
+                {"skipped": sink_log}
+                if sink_log is not None
+                else compact_closed_partition(spark, lake_path, prev)
             )
 
     if docs_path is not None:
@@ -877,16 +893,18 @@ def run_backfill(
 
     Writes the SAME ``out_dir/<table>/ds=<ds>`` locations the daily
     job writes — a backfill replaces the live serving output for the
-    range, which is the whole point of running one."""
+    range, which is the whole point of running one.  The lake is read
+    once for the whole range."""
     start = datetime.date.fromisoformat(ds_start)
     end = datetime.date.fromisoformat(ds_end)
     if end < start:
         raise ValueError(f"backfill range is empty: {ds_start}..{ds_end}")
+    lake = spark.read.parquet(lake_path)
     out: dict[str, dict[str, DataFrame]] = {}
     day = start
     while day <= end:
         ds = day.isoformat()
-        out[ds] = run_daily_job(spark, lake_path, ds, out_dir)
+        out[ds] = run_daily_job(spark, lake, ds, out_dir)
         day += datetime.timedelta(days=1)
     return out
 
@@ -987,9 +1005,8 @@ def main(argv: list[str]) -> None:
         ds = argv[2]
         lake = argv[3] if len(argv) > 3 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
         out = argv[4] if len(argv) > 4 else os.environ.get("SERVING_PATH", "/tmp/serving")
-        report = run_incremental_sessions(
-            get_spark("incremental_sessions_job"), lake, ds, out
-        )
+        spark = get_spark("incremental_sessions_job")
+        report = run_incremental_sessions(spark, spark.read.parquet(lake), ds, out)
         print(report)
         return
     if argv[1] == "backfill":
@@ -1185,7 +1202,8 @@ def main(argv: list[str]) -> None:
         ) from None
     lake = argv[2] if len(argv) > 2 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
     out = argv[3] if len(argv) > 3 else os.environ.get("SERVING_PATH", "/tmp/serving")
-    run_daily_job(get_spark("daily_batch_job"), lake, ds, out)
+    spark = get_spark("daily_batch_job")
+    run_daily_job(spark, spark.read.parquet(lake), ds, out)
 
 
 if __name__ == "__main__":

@@ -21,16 +21,17 @@ size), which is fine for human sessions (10s-100s of events) but one
 pathological key — bot traffic putting millions of events under one
 session — materializes the whole list in a single aggregation buffer
 and a single output row.  With ``max_events=K`` the collection is
-BOUNDED BEFORE the aggregation: a per-session ranking window keeps
-the first ceil(K/2) and last floor(K/2) events (the head carries
-session intent, the tail carries the exit path — the standard
-truncation for session traces), the list/trace columns aggregate
-over that bounded subset, and an ``events_truncated`` flag marks
-affected sessions.  Scalar aggregates (count, min/max, first/last
-event) always come from the FULL event set, so only the trace is
-clipped.  Equality with the uncapped form whenever every session
-fits under K, and bounded-buffer completion on a hot key, are pinned
-in tests/test_operators.py.
+BOUNDED INSIDE the aggregation: a per-session ranking window numbers
+the events, and the list/trace columns collect with a ``FILTER``
+clause that admits only the first ceil(K/2) and last floor(K/2)
+events (the head carries session intent, the tail carries the exit
+path — the standard truncation for session traces); an
+``events_truncated`` flag marks affected sessions.  Scalar
+aggregates (count, min/max, first/last event) in the SAME aggregate
+see every row, so only the trace is clipped.  Equality with the
+uncapped form whenever every session fits under K, and
+bounded-buffer completion on a hot key, are pinned in
+tests/test_functions.py.
 """
 
 from __future__ import annotations
@@ -55,29 +56,18 @@ def session_rollup_full(
 
     With ``max_events=None`` this is ONE hash aggregation (the cheap
     path — use it when sessions are known to be bounded).  With a
-    cap, the plan is: scalar aggregation over the full set + a
-    ranking window and a second aggregation over the head/tail
-    subset, joined on the session key — the window, both groupBys,
-    and the join all hash on the same (user, session) keys, so the
-    cap costs one extra sort and one co-partitioned join, never an
-    unbounded buffer.
+    cap it is still one aggregation, over ranked rows: a ranking
+    window numbers each session's events, and the trace columns
+    collect through ``FILTER (WHERE <head or tail rank>)`` while the
+    scalar columns aggregate every row.  The window and the groupBy
+    hash on the same (user, session) keys, so the cap costs one sort
+    and no extra exchange, never an unbounded buffer.
     """
     order = F.struct(F.col(ts_col), F.col(id_col))
+    event = F.struct(F.col(ts_col), F.col(id_col), F.col(event_type_col))
     start, end = F.min(ts_col), F.max(ts_col)
     dur_sec = epoch_seconds(end) - epoch_seconds(start)
-    sorted_events = F.array_sort(
-        F.collect_list(F.struct(F.col(ts_col), F.col(id_col), F.col(event_type_col)))
-    )
-    trace = F.array_join(
-        F.transform(
-            sorted_events,
-            lambda s: F.concat_ws(
-                ":", s[id_col].cast("string"), s[event_type_col]
-            ),
-        ),
-        ",",
-    )
-    scalar_aggs = [
+    aggs = [
         start.alias("session_start_time"),
         end.alias("session_end_time"),
         dur_sec.alias("session_duration_seconds"),
@@ -90,10 +80,7 @@ def session_rollup_full(
     ]
 
     if max_events is None:
-        aggs = scalar_aggs + [trace.alias("events_trace")]
-        if with_events_json:
-            aggs.append(F.to_json(sorted_events).alias("events_json"))
-        out = df.groupBy(user_col, session_col).agg(*aggs)
+        events = F.collect_list(event)
     else:
         if max_events < 2:
             raise ValueError(f"max_events must be >= 2, got {max_events}")
@@ -106,37 +93,34 @@ def session_rollup_full(
         # rank from the front; derive the back rank from the window
         # COUNT so one sort serves both bounds (same partitioning,
         # no second orderBy-desc sort spec).
-        bounded = (
-            df.withColumn("_rn", F.row_number().over(w_rank))
-            .withColumn("_n", F.count("*").over(w_all))
-            .filter(
-                (F.col("_rn") <= head) | (F.col("_rn") > F.col("_n") - tail)
-            )
+        df = df.withColumns(
+            {
+                "_rn": F.row_number().over(w_rank),
+                "_n": F.count("*").over(w_all),
+                "_event": event,
+            }
         )
-        list_aggs = [trace.alias("events_trace")]
-        if with_events_json:
-            list_aggs.append(F.to_json(sorted_events).alias("events_json"))
-        # Null-safe join keys: the uncapped single-aggregation path
-        # keeps null user/session keys as ordinary groups, so the
-        # capped path must reunite them too (eqNullSafe is still a
-        # hash equi-join on the same co-partitioned keys).
-        lists = (
-            bounded.groupBy(user_col, session_col)
-            .agg(*list_aggs)
-            .withColumnRenamed(user_col, "_lk_user")
-            .withColumnRenamed(session_col, "_lk_session")
+        events = F.expr(
+            f"collect_list(_event) FILTER (WHERE _rn <= {head} OR _rn > _n - {tail})"
         )
-        scalars = df.groupBy(user_col, session_col).agg(*scalar_aggs)
-        out = (
-            scalars.join(
-                lists,
-                F.col(user_col).eqNullSafe(F.col("_lk_user"))
-                & F.col(session_col).eqNullSafe(F.col("_lk_session")),
-            )
-            .drop("_lk_user", "_lk_session")
-            .withColumn(
-                "events_truncated", F.col("number_of_events") > F.lit(max_events)
-            )
+    sorted_events = F.array_sort(events)
+    aggs.append(
+        F.array_join(
+            F.transform(
+                sorted_events,
+                lambda s: F.concat_ws(
+                    ":", s[id_col].cast("string"), s[event_type_col]
+                ),
+            ),
+            ",",
+        ).alias("events_trace")
+    )
+    if with_events_json:
+        aggs.append(F.to_json(sorted_events).alias("events_json"))
+    out = df.groupBy(user_col, session_col).agg(*aggs)
+    if max_events is not None:
+        out = out.withColumn(
+            "events_truncated", F.col("number_of_events") > F.lit(max_events)
         )
     return out.withColumn(
         "date", F.date_format("session_start_time", "yyyy-MM-dd")

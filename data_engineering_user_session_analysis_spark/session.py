@@ -15,6 +15,18 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+
+def driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half of
+    the host's physical RAM (at least 1g), so the default heap always
+    fits the machine it runs on."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, phys // 2 // 2**20)}m"
+
+
 # Tuned for correctness-at-small-SF *and* sane scale-out defaults.
 # At 100 TB these are overridden by cluster conf (shuffle partitions
 # sized to ~128 MB post-shuffle blocks); AQE re-coalesces at runtime
@@ -33,7 +45,7 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.warehouse.dir": os.path.join(
         tempfile.gettempdir(), "data_engineering_user_session_analysis_spark_warehouse"
     ),
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": driver_memory(),
     # Streaming state store: RocksDB scales to 100T-row session state
     # where the default HDFS-backed store (reference checkpoint conf)
     # keeps everything on-heap.

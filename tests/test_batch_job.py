@@ -26,7 +26,7 @@ def test_daily_job_end_to_end(spark, sf_small, tmp_path):
         .first()
         .d
     )
-    results = run_daily_job(spark, lake, ds, out)
+    results = run_daily_job(spark, spark.read.parquet(lake), ds, out)
 
     # outputs exist and are non-empty
     for name in ("session_level", "session_full", "user_level"):
@@ -54,8 +54,8 @@ def test_daily_job_runs_on_orc_lake(spark, sf_small, tmp_path):
     build_lake(spark, sf_small, lake_pq)
     build_lake(spark, sf_small, lake_orc, fmt="orc")
     ds = "2024-01-05"
-    pq = run_daily_job(spark, lake_pq, ds, out_pq)
-    orc = run_daily_job(spark, lake_orc, ds, out_orc, fmt="orc")
+    pq = run_daily_job(spark, spark.read.parquet(lake_pq), ds, out_pq)
+    orc = run_daily_job(spark, spark.read.orc(lake_orc), ds, out_orc, fmt="orc")
     for name in ("session_level", "user_level"):
         a = {tuple(r) for r in pq[name].collect()}
         b = {tuple(r) for r in orc[name].collect()}
@@ -90,15 +90,17 @@ def test_compact_verb_after_daily_job(spark, sf_small, tmp_path):
     ds = "2024-01-05"
     before = {
         tuple(r)
-        for r in run_daily_job(spark, lake, ds, out)["user_level"].collect()
+        for r in run_daily_job(spark, spark.read.parquet(lake), ds, out)[
+            "user_level"
+        ].collect()
     }
     report = compact_closed_partition(spark, lake, ds)
     assert report["files_after"] <= report["files_before"]
     after = {
         tuple(r)
-        for r in run_daily_job(spark, lake, ds, str(tmp_path / "serving2"))[
-            "user_level"
-        ].collect()
+        for r in run_daily_job(
+            spark, spark.read.parquet(lake), ds, str(tmp_path / "serving2")
+        )["user_level"].collect()
     }
     assert after == before
 
@@ -135,7 +137,9 @@ def test_backfill_range_matches_daily_runs(spark, sf_small, tmp_path):
         spark, lake, "2024-01-05", "2024-01-06", str(tmp_path / "bf")
     )
     assert set(results) == {"2024-01-05", "2024-01-06"}
-    single = run_daily_job(spark, lake, "2024-01-05", str(tmp_path / "one"))
+    single = run_daily_job(
+        spark, spark.read.parquet(lake), "2024-01-05", str(tmp_path / "one")
+    )
     a = {tuple(r) for r in results["2024-01-05"]["user_level"].collect()}
     b = {tuple(r) for r in single["user_level"].collect()}
     assert a == b
@@ -157,7 +161,7 @@ def test_backfill_overwrites_daily_serving_location(spark, sf_small, tmp_path):
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)
     ds = "2024-01-05"
-    run_daily_job(spark, lake, ds, out)
+    run_daily_job(spark, spark.read.parquet(lake), ds, out)
     day_path = os.path.join(out, "user_level", f"ds={ds}")
     assert os.path.isdir(day_path)
     before_files = set(os.listdir(day_path))
@@ -196,6 +200,17 @@ def test_daily_pipeline_three_day_replay_idempotent(spark, sf_small, tmp_path):
     # day 1 has no predecessor partition to compact; days 2-3 do
     assert "compacted_previous" not in reports["2024-01-01"]
     assert "compacted_previous" in reports["2024-01-02"]
+    # the observed counts equal direct counts of what the day read
+    # and what the steps wrote
+    for ds in days:
+        assert reports[ds]["hygiene"] == {
+            "rows": spark.read.parquet(lake).filter(F.col("date") == ds).count(),
+            "quarantined": spark.read.parquet(f"{out}/quarantine/ds={ds}").count(),
+        }
+        assert reports[ds]["sessions"] == {
+            "closed": spark.read.parquet(f"{out}/session_closed/ds={ds}").count(),
+            "open": spark.read.parquet(f"{out}/session_state/ds={ds}").count(),
+        }
 
     def _hashable(r):
         return tuple(
@@ -219,6 +234,96 @@ def test_daily_pipeline_three_day_replay_idempotent(spark, sf_small, tmp_path):
     # day 3's outputs are untouched by the day-2 re-run
     d3 = _snap("2024-01-03")
     assert all(len(s) > 0 for s in d3)
+
+
+def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
+    """One pipeline day with a prior day present (a carry state to
+    read, a partition to compact) launches at most 16 Spark jobs: the
+    steps share one lake read, the hygiene and session counts are
+    observed on their writes, and the hot-key cap and ``user_level``
+    are one aggregate each."""
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
+
+    lake = str(tmp_path / "lake")
+    out = str(tmp_path / "serving")
+    build_lake(spark, sf_small, lake)
+    run_daily_pipeline(spark, lake, "2024-01-01", out)
+    sc = spark.sparkContext
+    group = "test_daily_pipeline_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        report = run_daily_pipeline(spark, lake, "2024-01-02", out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "compacted_previous" in report
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+
+
+def test_user_level_one_exchange(spark, sf_small, tmp_path):
+    """``user_level``'s distinct event-type count shares the user_id
+    exchange of its other aggregates: one exchange in the plan."""
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    results = run_daily_job(
+        spark, spark.read.parquet(lake), "2024-01-05", str(tmp_path / "serving")
+    )
+    plan = results["user_level"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+
+
+def test_daily_job_releases_cache_when_a_write_fails(spark, sf_small, tmp_path):
+    """A failing serving write must not leave the day cached for the
+    rest of the session."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    not_a_dir = tmp_path / "serving"
+    not_a_dir.write_text("")
+    spark.catalog.clearCache()
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        run_daily_job(spark, spark.read.parquet(lake), "2024-01-05", str(not_a_dir))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_daily_pipeline_on_stream_written_lake(spark, sf_small, tmp_path):
+    """The paper's flow, stream -> lake -> daily: on a lake written by
+    the file sink, the pipeline's compact step skips the partition
+    under the sink's _spark_metadata log (compaction would orphan the
+    log) and says so in the report; every day runs and the lake keeps
+    every row."""
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
+    from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
+        enrich_events,
+        read_file_stream,
+        write_lake_stream,
+    )
+
+    days = ["2024-01-01", "2024-01-02"]
+    src = str(tmp_path / "src")
+    load_events(spark, sf_small).filter(
+        F.date_format("ts", "yyyy-MM-dd").isin(days)
+    ).repartition(4).write.parquet(src)
+    lake = str(tmp_path / "stream_lake")
+    q = write_lake_stream(
+        enrich_events(read_file_stream(spark, src, max_files_per_trigger=1)),
+        lake,
+        str(tmp_path / "ckpt"),
+        partition_col="date",
+        trigger_available_now=True,
+    )
+    q.awaitTermination(120)
+    lake_rows = spark.read.parquet(lake).count()
+    assert lake_rows > 0
+
+    out = str(tmp_path / "serving")
+    reports = [run_daily_pipeline(spark, lake, ds, out) for ds in days]
+    assert "compacted_previous" not in reports[0]
+    skipped = reports[1]["compacted_previous"]["skipped"]
+    assert skipped.endswith("_spark_metadata")
+    assert sum(r["hygiene"]["rows"] for r in reports) == lake_rows
+    assert spark.read.parquet(lake).count() == lake_rows
 
 
 def test_docs_index_step_probes_and_is_idempotent(spark, sf_small, tmp_path):

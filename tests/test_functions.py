@@ -82,9 +82,9 @@ def test_events_json_roundtrip(spark, sf_small):
 
 def test_rollup_full_cap_equals_uncapped_when_under(spark, sf_small):
     """With every fixture session far below the cap, the capped plan
-    (window-bounded trace + co-partitioned join) must produce exactly
-    the uncapped single-aggregation result, plus an all-false
-    events_truncated flag."""
+    (ranking window + one aggregate whose trace collects through a
+    FILTER clause) must produce exactly the uncapped single-aggregation
+    result, plus an all-false events_truncated flag."""
     s = sessionize(load_events(spark, sf_small), order_cols=("event_id",))
     uncapped = session_rollup_full(s)
     capped = session_rollup_full(s, max_events=10_000)
@@ -135,10 +135,25 @@ def test_rollup_full_hot_key_bounded(spark):
     assert 0 <= agg_pos < filter_pos, "rank filter must feed the collect"
 
 
+def test_rollup_full_cap_one_exchange_no_join(spark, sf_small):
+    """The capped rollup over a sessionized frame is one aggregate on
+    sessionize's user_id exchange: no join, and the sessionize
+    shuffle is the plan's only exchange."""
+    s = sessionize(load_events(spark, sf_small), order_cols=("event_id",))
+    plan = (
+        session_rollup_full(s, max_events=10_000)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Join" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_rollup_full_cap_keeps_null_keys(spark):
     """Null grouping keys are legitimate groups in the uncapped path;
-    the capped path's scalar⋈lists reunion must keep them too
-    (null-safe join keys), not silently drop the session."""
+    the capped path's ranking window and FILTER aggregate must keep
+    them too, not silently drop the session."""
     import datetime
 
     base = datetime.datetime(2024, 1, 1)

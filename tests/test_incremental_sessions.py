@@ -411,9 +411,11 @@ def test_run_incremental_sessions_job(spark, sf_small, tmp_path):
         for r in ev.select(F.date_format("ts", "yyyy-MM-dd").alias("d")).distinct().collect()
     )[:6]
     for ds in days:
-        report = run_incremental_sessions(spark, lake, ds, out)
+        report = run_incremental_sessions(spark, spark.read.parquet(lake), ds, out)
         assert report["open"] > 0
-    rerun = run_incremental_sessions(spark, lake, days[-1], out)  # idempotent
+    rerun = run_incremental_sessions(
+        spark, spark.read.parquet(lake), days[-1], out
+    )  # idempotent
     assert rerun == report
 
     closed = spark.read.parquet(os.path.join(out, "session_closed"))
@@ -460,12 +462,12 @@ def test_late_data_replay_from_affected_day(spark, tmp_path):
     days = ("2024-03-01", "2024-03-02", "2024-03-03")
     _write_lake(base_rows)
     for ds in days:
-        run_incremental_sessions(spark, lake, ds, out)
+        run_incremental_sessions(spark, spark.read.parquet(lake), ds, out)
 
     # the late event arrives; day 2 and everything after replays
     _write_lake(base_rows + [late_row])
     for ds in days[1:]:
-        run_incremental_sessions(spark, lake, ds, out)
+        run_incremental_sessions(spark, spark.read.parquet(lake), ds, out)
 
     closed = spark.read.parquet(os.path.join(out, "session_closed")).drop("ds")
     state = spark.read.parquet(os.path.join(out, "session_state", f"ds={days[-1]}"))
