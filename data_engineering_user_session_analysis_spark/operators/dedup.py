@@ -145,8 +145,8 @@ def _verify_jaccard(
     first (the semi-join cannot push below the shingle self-join), so
     the \"LSH scale path\" silently paid the same O(Σ DF²) as the
     exact method.  This shape is what makes LSH actually cheaper at
-    corpus scale; equality with the inverted-index verify is pinned
-    in tests/test_operators.py.
+    corpus scale; equality with a brute-force Jaccard over the same
+    candidates is pinned in tests/test_operators.py.
 
     The set collection is restricted to docs that appear in some
     candidate pair BEFORE it aggregates (r15): without the semi-join,
@@ -317,10 +317,9 @@ def minhash_lsh_pairs(
     recall is the LSH catch probability).
     """
     # shingles feed signatures + the verify set-collection; the
-    # consuming action is the caller's, so the plan-keyed entry
-    # outlives this function (one entry per input, MEMORY_AND_DISK,
-    # LRU-evictable) — the same deliberate-lifecycle note as
-    # ngram_jaccard_pairs above.
+    # consuming action is the caller's, so the plan-keyed entry must
+    # outlive this function.  It is plan-keyed (repeat calls share
+    # ONE entry per input), MEMORY_AND_DISK, LRU-evictable.
     sh = shingle_docs(docs, text_col, id_col, n).cache()
     candidates = minhash_candidate_pairs(sh, bands, rows_per_band, id_col)
     return (
@@ -702,44 +701,6 @@ def _block_bounds(bits: int, n_blocks: int) -> list[tuple[int, int]]:
         bounds.append((off, width))
         off += width
     return bounds
-
-
-def simhash_candidate_pairs(
-    fingerprints: DataFrame,
-    max_hamming: int = 2,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Pigeonhole block candidate pairs from a fingerprint table —
-    lossless for Hamming distance <= max_hamming (see
-    ``simhash_pairs``).  Doc-level candidate enumeration: quadratic in
-    duplicate-fingerprint group sizes, so the production path
-    (``simhash_pairs``) enumerates at the distinct-VALUE level via
-    ``simhash_value_candidate_pairs`` instead; this form remains the
-    simplest statement of the pigeonhole property and pins the
-    value-level path in tests."""
-    n_blocks = max_hamming + 1
-    block_entries = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("blk"),
-                F.shiftright(F.col("fingerprint"), off)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("val"),
-            )
-            for i, (off, width) in enumerate(_block_bounds(SIMHASH_BITS, n_blocks))
-        ]
-    )
-    blocks = fingerprints.select(
-        F.col(id_col), F.explode(block_entries).alias("e")
-    ).select(id_col, "e.blk", "e.val")
-    left = blocks.select(F.col(id_col).alias("doc_a"), "blk", "val")
-    right = blocks.select(F.col(id_col).alias("doc_b"), "blk", "val")
-    return (
-        left.join(right, ["blk", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 def simhash_value_candidate_pairs(

@@ -35,10 +35,10 @@ shard's signatures land in the same buckets the corpus run produced
 — no weights file travels with the index.  Same equality pin vs the
 batch path.
 
-The SUBSTRING grain has its own sibling (`operators/span_index.py`):
-a bucketed positional window-hash surface under the same
-params/marker lifecycle, probed per day with a replay-union-equals-
-batch parity pin — closing the last one-shot family.
+This module is a library: no ``job`` verb and no step of the daily
+session pipeline calls it.  A caller that keeps a document or
+embedding shard per day drives the ``append_shard_*`` /
+``incremental_*`` pair itself.
 """
 
 from __future__ import annotations
@@ -175,61 +175,6 @@ def _verify_pairs_from_sets(
     )
 
 
-def index_neardup_pairs(
-    spark: SparkSession,
-    path: str,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    restrict_ids: DataFrame | None = None,
-) -> DataFrame:
-    """ALL near-dup pairs within the indexed corpus, straight from the
-    stored probe surface — zero text passes: candidates from a
-    ``buckets/`` self-join on (band, bucket), exact Jaccard from
-    ``sets/``.  Output is bit-identical to ``minhash_lsh_pairs`` over
-    the same docs at the index's frozen geometry (same banding, same
-    verification — pinned in tests/test_corpus_prep.py).
-
-    ``restrict_ids``: optional (id_col) frame — only pairs where BOTH
-    ends survive the restriction are emitted (the corpus-prep case:
-    the exact-dedup survivor set probes an index built over the full
-    scrubbed corpus; a pair with a dropped end is irrelevant because
-    its surviving end is connected through the exact-dup star edges
-    instead).  Semi-joins prune the bucket scan before the self-join.
-
-    This is what makes a maintained index pay at prep time (VERDICT
-    r11 #4): the daily pipeline already shingles/signs each shard
-    ONCE when appending; re-deriving pairs for a full-corpus prep
-    run costs only the bucket join + candidate-bounded verification,
-    not the 64-hash signature pass over every doc's text again."""
-    b = spark.read.parquet(os.path.join(path, "buckets"))
-    s = spark.read.parquet(os.path.join(path, "sets"))
-    if "ds" in b.columns:
-        b, s = b.drop("ds"), s.drop("ds")
-    if restrict_ids is not None:
-        keep = restrict_ids.select(id_col)
-        b = b.join(keep, id_col, "left_semi")
-        s = s.join(keep, id_col, "left_semi")
-    # both tables feed TWO plan branches (bucket self-join sides;
-    # verify's a/b set fetches) — cache the post-restriction scan so
-    # each parquet table is read and semi-joined once, mirroring
-    # lsh_candidate_pairs' deliberate cache lifecycle (plan-keyed,
-    # caller-consumed, LRU-evictable)
-    b, s = b.cache(), s.cache()
-    cand = (
-        b.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-        .join(
-            b.select(F.col(id_col).alias("doc_b"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sets_a = s.select(F.col(id_col).alias("doc_a"), F.col("sh_set").alias("set_a"))
-    sets_b = s.select(F.col(id_col).alias("doc_b"), F.col("sh_set").alias("set_b"))
-    return _verify_pairs_from_sets(cand, sets_a, sets_b, threshold)
-
-
 def write_minhash_index(
     docs: DataFrame,
     path: str,
@@ -295,8 +240,7 @@ def append_shard_to_minhash_index(
     """Idempotent per-day variant of ``append_to_minhash_index``: the
     shard's contribution lands under ``buckets/ds=<ds>`` and
     ``sets/ds=<ds>`` (overwrite), so re-running a day replaces
-    exactly its own index rows instead of appending duplicates —
-    the layout the daily-pipeline verb (`jobs/batch_job.py`) uses.
+    exactly its own index rows instead of appending duplicates.
     Readers load the table roots; Hive partition discovery surfaces
     ``ds`` as a column, which `incremental_neardup_pairs` uses to
     probe only PRIOR days (``before_ds``).
@@ -365,9 +309,9 @@ def incremental_neardup_pairs(
     partial partition (sets without buckets, or uncommitted bucket
     files) that a bare ``ds < before_ds`` range would still scan —
     contributing nothing or partial candidates, a silent recall hole
-    until that day reruns.  The daily verb passes the `_SUCCESS`-
-    verified day list so incomplete days are excluded by an isin
-    partition filter, not trusted to be absent.
+    until that day reruns.  Pass the `_SUCCESS`-verified day list
+    (``complete_days_only``) so incomplete days are excluded by an
+    isin partition filter, not trusted to be absent.
     """
     # the shard must shingle and band with the BUILD's stored
     # geometry — a different n gives disjoint shingle sets, different
@@ -487,12 +431,8 @@ def vector_index_outgrown(spark, path: str, margin: float = 1.0) -> dict:
     must come from an explicit check, not from wrong results.  One
     column-pruned count over ``vectors/`` vs the stored design
     point; ``outgrown=True`` when ``indexed_n > target_n · margin``.
-    The operational answer is ``rebuild_vector_index`` (``job
-    reindex-vectors``) with a new target — or, unattended,
-    ``run_vectors_index_step(auto_rebuild=True)``, which consumes
-    this signal in-line and rebuilds sized from the observed daily
-    rate (pinned in tests/test_batch_job.py::
-    test_vectors_index_step_auto_rebuilds_outgrown_geometry).
+    The operational answer is ``rebuild_vector_index`` with a new
+    target.
     ``target_n`` is None (check disabled) for legacy/fixture indexes
     that never declared a design point."""
     stored = _read_vector_params(spark, path)
@@ -619,8 +559,7 @@ def append_shard_to_vector_index(
     signature space and never match).  The FIRST shard creates the
     index and freezes the geometry — from ``target_n``
     (``vector_index_geometry``) when given, else the module-default
-    fixture geometry; the daily verb (``run_vectors_index_step``)
-    passes a year-of-shards target by default."""
+    fixture geometry."""
     stored = _read_vector_params(emb.sparkSession, path)
     if stored is not None:
         dim, tables, planes = stored["dim"], stored["tables"], stored["planes"]
@@ -662,7 +601,7 @@ def rebuild_vector_index(
     their ``_SUCCESS`` completeness markers restored — but only for
     days that were marker-complete in the PRE-rebuild index, so a
     previously crashed, partially-written day stays invisible to
-    probes until its own re-run (the daily verbs' probe/idempotence
+    probes until its own re-run (the per-day probe/idempotence
     contract survives the rebuild); a flat legacy index stays flat.
     The stored ``dim`` is preserved (it defines the hash family and
     the vectors' shape); only (tables, planes) are re-sized.
@@ -818,7 +757,7 @@ def vector_index_recall_sample(
     salt: str = "recall",
 ) -> dict:
     """Measured near-dup recall of the persistent vector index on a
-    deterministic exact sample (CLI: ``job validate-vector-recall``).  The index's recall today is
+    deterministic exact sample.  The index's recall today is
     stated two ways, both indirect: the sizing rule's
     ``predicted_recall_at_threshold`` (a banding-model closed form)
     and planted-clone recovery pins (clones share signatures and
@@ -969,7 +908,7 @@ def vector_index_recall_autotune(
     the 1M clustered sensor read 0.28–0.36 at thresholds 0.8/0.85
     with prediction ≈ measurement, i.e. the GEOMETRY, not the model,
     was the limit, and the only remedy was a manual rebuild with
-    hand-picked knobs).  CLI: ``job tune-recall-vectors``.  A
+    hand-picked knobs).  A
     hyperplane index's recall lives in its FROZEN geometry, so every
     escalation here is a full re-bucketing rebuild (signatures are
     deterministic functions of (vector, geometry), so no
@@ -1099,8 +1038,8 @@ def minhash_index_recall_sample(
 ) -> dict:
     """Measured near-dup recall of the persistent MinHash index on a
     deterministic exact-Jaccard sample — the TEXT-index member of the
-    sensor family (with ``vector_index_recall_sample``; CLI:
-    ``job validate-minhash-recall``).  Sample: the ``sample_q``
+    sensor family (with ``vector_index_recall_sample``).  Sample:
+    the ``sample_q``
     indexed docs with the smallest ``md5(id:salt)``.  Truth: ONE
     pass of the stored ``sets/`` table against the broadcast sample —
     exact shingle Jaccard (the same array_intersect/union expression

@@ -69,7 +69,7 @@ def retract_day_marker(path: str, ds: str) -> None:
 def marker_complete_days(path: str) -> list[str]:
     """Every ds whose index contribution verifiably COMPLETED (the
     bucket partition's ``_SUCCESS`` marker — the same signal
-    ``shard_indexed`` / the daily verbs consult).  The recall sensors
+    ``shard_indexed`` consults).  The recall sensors
     scope BOTH their truth and candidate scans to this set: the
     append path writes the verify surface (sets/vectors) BEFORE the
     buckets, so a crashed day's rows would otherwise enter the truth

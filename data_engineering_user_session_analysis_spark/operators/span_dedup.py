@@ -47,10 +47,7 @@ Scale notes (100 TB):
   81.8 s), and AQE's skew-join split does not apply to window
   exchanges.  For corpora where single-hash occurrence counts are
   extreme, route around it: the ``min_docs > 2`` groupBy fallback is
-  the skew-safe (map-side-combined) detection form, and the
-  persistent-index probe (``operators/span_index.py``) bounds the
-  window input to O(day + matching stored occurrences) rather than
-  O(corpus).
+  the skew-safe (map-side-combined) detection form.
 """
 
 from __future__ import annotations
@@ -231,25 +228,8 @@ def duplicated_span_stats(
         docs, text_col, id_col, window=window, sample_mod=sample_mod
     )
     dup = _flagged_occurrences(wh, id_col, min_docs)
-    return _coverage_stats(dup, docs, text_col, id_col, window)
-
-
-def _coverage_stats(
-    dup: DataFrame,
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    window: int,
-) -> DataFrame:
-    """Per-doc coverage math over a flagged-occurrence frame
-    ``(id_col, pos, ...)``: the sorted-interval merge (lag window
-    over (doc, pos), each window past the first contributing
-    ``min(window, pos - prev_pos)`` tokens) aggregated per doc, then
-    joined with doc token counts for the fractional columns.  Shared
-    by the batch operator (`duplicated_span_stats`) and the
-    persistent-index probe (`span_index.incremental_span_stats`), so
-    both grains compute bit-identical statistics from their
-    respective occurrence sets."""
+    # interval merge: sorted by pos, each window past the first
+    # contributes min(window, pos - prev_pos) tokens
     w = Window.partitionBy(id_col).orderBy("pos")
     delta = F.col("pos") - F.lag("pos").over(w)
     contrib = F.when(delta.isNull(), F.lit(window)).otherwise(
@@ -347,39 +327,9 @@ def remove_duplicated_spans(
             & (F.col("pos") == F.col("_c.pos"))
         ).alias("keep"),
     )
-    return rewrite_docs_from_spans(docs, flagged, text_col, id_col, window)
-
-
-def rewrite_docs_from_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = EXACTSUBSTR_WINDOW,
-) -> DataFrame:
-    """The rewrite HALF of the ExactSubstr protocol, decoupled from
-    detection (VERDICT r14 #2): apply a precomputed duplicated-span
-    record ``(id_col, pos, keep)`` — ``keep`` marking the canonical
-    occurrence whose copy survives — to ``docs``, excising the
-    ``window``-token spans anchored at each non-kept ``pos`` with
-    canonical coverage overriding removal, exactly as
-    ``remove_duplicated_spans`` (which now delegates here) does
-    inline.  The record's producer decides the corpus the canonical
-    pick was computed over: inline detection uses the prep corpus;
-    the daily span-index step persists positions computed against ALL
-    stored days (``span_index.incremental_span_positions``), so a
-    prep run can rewrite at O(flagged-docs) with no corpus-wide
-    detection.
-
-    Docs with no record rows pass through unchanged (removed = 0);
-    ``window`` must be the record producer's window — positions are
-    anchors, not extents.  Returns ``docs`` with ``text_col``
-    rewritten plus ``n_removed_tokens``.
-
-    Scale: one groupBy of the record on ``id_col`` (the record is
-    bounded by flagged docs' window counts, not the corpus), one left
-    join onto ``docs``, one Arrow kernel pass — per-doc state only."""
-    per_doc = spans.groupBy(id_col).agg(
+    # rewrite: each doc collects its OWN flagged occurrences (bounded
+    # by its token count) and is rebuilt in one Arrow kernel pass
+    per_doc = flagged.groupBy(id_col).agg(
         F.collect_list(F.struct("pos", "keep")).alias("_spans")
     )
 

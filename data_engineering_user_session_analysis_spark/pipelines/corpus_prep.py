@@ -37,7 +37,6 @@ quality, features) pipeline ahead of it without a barrier.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -113,42 +112,6 @@ class CorpusPrepConfig:
     span_window: int = 50
     span_sample_mod: int | None = None
     span_action: str = "drop"
-    #: path of the daily span-index step's flag record
-    #: (``jobs/batch_job.run_span_index_step`` writes over-threshold
-    #: doc ids + coverage to ``<out>/span_flags/ds=<ds>``).  When set,
-    #: the span stage CONSUMES that record instead of re-running
-    #: detection over the prep corpus: the flagged ids are anti-joined
-    #: out (span_action='drop' semantics — the only action the record
-    #: can drive, since it carries ids + coverage, not span
-    #: positions; combining with span_action='rewrite' raises).  The
-    #: flag record was computed by the index probe in
-    #: O(day + collisions) against ALL stored days, so this closes
-    #: the daily loop: cross-day paste-heavy docs are gated without
-    #: the prep run paying a corpus-wide span detection.  If
-    #: ``max_dup_span_frac`` is ALSO set, the stored coverage is
-    #: re-filtered at that threshold — a consumer may gate tighter
-    #: than the step's write threshold, never looser (ids under the
-    #: write threshold were never recorded; the step persists its
-    #: threshold in a ``_write_meta.json`` sidecar per partition and
-    #: a looser consumer raises — ADVICE r14).
-    span_flags_path: str | None = None
-    #: path of the daily span-index step's POSITIONS record
-    #: (``run_span_index_step(persist_span_positions=True)`` writes
-    #: the flagged docs' duplicated-span anchor positions — with the
-    #: corpus-wide canonical ``keep`` pick — to
-    #: ``<out>/span_positions/ds=<ds>``).  When set, requires
-    #: ``span_action='rewrite'``: the span stage applies the
-    #: canonical-preserving ExactSubstr rewrite FROM the record
-    #: (``span_dedup.rewrite_docs_from_spans``) instead of running
-    #: inline corpus-wide detection — the rewrite half of the daily
-    #: loop (VERDICT r14 #2).  The rewrite window comes from the
-    #: record's ``_write_meta.json`` sidecar (the index's frozen
-    #: window — ``span_window`` here is ignored; positions are
-    #: anchors, the window is the extent).  Docs without recorded
-    #: positions pass through unchanged; mutually exclusive with
-    #: ``span_flags_path`` (drop and rewrite of the same flagged set
-    #: contradict).
-    span_positions_path: str | None = None
     decontaminate_ngram: int = 13
     sample_k: int | None = None
     pack_budget: int | None = None
@@ -157,93 +120,8 @@ class CorpusPrepConfig:
     #: function of the doc id, so re-running prep after adding new
     #: docs can never move an old doc's split (eval-set hygiene)
     split_weights: dict[str, float] | None = None
-    #: path of a persistent MinHash index (operators/dedup_index.py)
-    #: built over the SAME text the near-dup stage sees (i.e. the
-    #: post-scrub corpus).  When set, the near-dup stage derives
-    #: pairs from the index's stored buckets/sets — skipping the
-    #: shingle + 64-hash signature + set-collection passes the daily
-    #: index maintenance already paid — restricted to exact-dedup
-    #: survivors.  The index geometry (shingle n, bands, rows) wins
-    #: over any inline default; a sampled content-parity check
-    #: (``index_validation_sample`` docs, recomputed shingle sets vs
-    #: stored) raises loudly if the index was built over different
-    #: text, because a stale index silently under- or over-dedups.
-    minhash_index_path: str | None = None
-    index_validation_sample: int = 64
     id_col: str = "doc_id"
     text_col: str = "text"
-
-
-def _indexed_neardup_pairs(exact: DataFrame, c: CorpusPrepConfig) -> DataFrame:
-    """Near-dup pairs for the survivor set from the persistent MinHash
-    index at ``c.minhash_index_path`` (see the config docstring):
-    content-parity is verified on a deterministic sample BEFORE any
-    pair is trusted — recompute the sample's shingle sets from the
-    pipeline's own text at the index's frozen ``n`` and require the
-    stored sets to match exactly (set equality per doc; a scrub-rule
-    change, re-crawl, or wrong-corpus index all surface here as a
-    loud error instead of silently wrong dedup).
-
-    Cost discipline: ``exact`` arrives PERSISTED (the exact-dedup
-    barrier materializes it), so the id projections feeding the
-    parity sample and both of ``index_neardup_pairs``'s semi-joins
-    read cached blocks instead of re-running the scrub/quality
-    lineage; the parity sample additionally filters on the broadcast
-    id sample FIRST, so even a cold read shingles ≤
-    ``index_validation_sample`` docs, not the corpus."""
-    from data_engineering_user_session_analysis_spark.operators.dedup import shingle_docs
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        _read_minhash_params,
-        index_neardup_pairs,
-    )
-
-    spark = exact.sparkSession
-    path = c.minhash_index_path
-    params = _read_minhash_params(spark, path)
-    n = params["n"] if params is not None else 3
-
-    # ids from the persisted survivor set; feeds the parity sample
-    # and both index semi-joins
-    keep_ids = exact.select(c.id_col)
-
-    k = max(int(c.index_validation_sample), 1)
-    sample_ids = keep_ids.orderBy(c.id_col).limit(k)
-    # id-filter pushes below the scrub/quality projections, so the
-    # regex chain runs only for the sampled docs
-    sample = exact.join(F.broadcast(sample_ids), c.id_col).select(
-        c.id_col, c.text_col
-    )
-    fresh = (
-        shingle_docs(sample, c.text_col, c.id_col, n)
-        .groupBy(c.id_col)
-        .agg(F.collect_list("shingle").alias("_fresh"))
-    )
-    stored = spark.read.parquet(f"{path}/sets")
-    if "ds" in stored.columns:
-        stored = stored.drop("ds")
-    joined = fresh.join(stored, c.id_col, "left").select(
-        c.id_col,
-        (
-            F.col("sh_set").isNotNull()
-            & (F.array_sort("_fresh") == F.array_sort("sh_set"))
-        ).alias("_ok"),
-    )
-    bad = [r[c.id_col] for r in joined.filter(~F.col("_ok")).head(5)]
-    if bad:
-        raise ValueError(
-            f"minhash_index_path={path} fails content parity for doc ids "
-            f"{bad}: the index's stored shingle sets differ from the "
-            f"pipeline's post-scrub text at n={n}.  The index must be "
-            "built over the SAME text the near-dup stage sees — rebuild "
-            "it (or drop minhash_index_path to compute inline)."
-        )
-    return index_neardup_pairs(
-        spark,
-        path,
-        threshold=c.neardup_threshold,
-        id_col=c.id_col,
-        restrict_ids=keep_ids,
-    )
 
 
 def prepare_corpus(
@@ -276,27 +154,6 @@ def prepare_corpus(
     if c.span_action not in ("drop", "rewrite"):
         raise ValueError(
             f"span_action must be 'drop' or 'rewrite', got {c.span_action!r}"
-        )
-    if c.span_positions_path is not None and c.span_flags_path is not None:
-        raise ValueError(
-            "span_positions_path and span_flags_path are mutually "
-            "exclusive: dropping and rewriting the same flagged set "
-            "contradict"
-        )
-    if c.span_flags_path is not None and c.span_action == "rewrite":
-        raise ValueError(
-            "span_flags_path carries flagged doc ids + coverage, not span "
-            "positions — it can only drive span_action='drop'.  The "
-            "canonical-preserving rewrite from a daily record needs the "
-            "positions record instead: span_positions_path (written by "
-            "run_span_index_step(persist_span_positions=True)), or run "
-            "detection inline (span_action='rewrite' with neither path)."
-        )
-    if c.span_positions_path is not None and c.span_action != "rewrite":
-        raise ValueError(
-            "span_positions_path carries rewrite positions — set "
-            "span_action='rewrite' (the drop gate consumes "
-            "span_flags_path instead)"
         )
     report: dict[str, int] = {}
     _t = [_time.perf_counter()]
@@ -368,125 +225,18 @@ def prepare_corpus(
     _barrier("exact_deduped", exact.count())
     filtered.unpersist()
 
-    if c.minhash_index_path is not None:
-        pairs = _indexed_neardup_pairs(exact, c)
-    else:
-        pairs = minhash_lsh_pairs(
-            exact, threshold=c.neardup_threshold, text_col=c.text_col, id_col=c.id_col
-        )
+    pairs = minhash_lsh_pairs(
+        exact, threshold=c.neardup_threshold, text_col=c.text_col, id_col=c.id_col
+    )
     neardup = dedup_canonical(exact, pairs, id_col=c.id_col)
     _barrier("neardup_deduped", neardup.count())
 
     result = neardup
-    if c.span_flags_path is not None:
-        # consume the daily span-index flag record (VERDICT r13 #1 —
-        # the loop the index step exists for): the over-threshold ids
-        # the probe recorded are anti-joined out, no corpus-wide span
-        # detection in the prep run.  The flag set is over-threshold
-        # docs of daily shards — small by construction — so it
-        # broadcasts; the survivor side never shuffles for this stage.
-        spark = docs.sparkSession
-        flags = spark.read.parquet(c.span_flags_path)
-        if c.max_dup_span_frac is not None:
-            # ADVICE r14: the record only contains docs over its WRITE
-            # threshold — a consumer threshold BELOW it would silently
-            # gate at the write threshold (docs with coverage between
-            # the two were never recorded).  The writer persists its
-            # threshold in an underscore sidecar per partition; refuse
-            # a looser consumer against every sidecar found under the
-            # path (a record written before the sidecar existed keeps
-            # the docstring-only contract).
-            import glob as _glob
-            import json as _json
-
-            for meta_path in _glob.glob(
-                os.path.join(c.span_flags_path, "**", "_write_meta.json"),
-                recursive=True,
-            ):
-                with open(meta_path) as f:
-                    wrote_at = _json.load(f).get("max_dup_span_frac")
-                if wrote_at is not None and c.max_dup_span_frac < wrote_at:
-                    raise ValueError(
-                        f"span_flags record at {meta_path} was written at "
-                        f"max_dup_span_frac={wrote_at}: docs with coverage "
-                        f"in ({c.max_dup_span_frac}, {wrote_at}] were never "
-                        "recorded, so consuming it at "
-                        f"{c.max_dup_span_frac} would silently gate at the "
-                        "write threshold — re-run the index step at the "
-                        "lower threshold instead"
-                    )
-            flags = flags.filter(F.col("dup_token_frac") > c.max_dup_span_frac)
-        flagged_ids = flags.select(c.id_col).distinct()
-        result = result.join(F.broadcast(flagged_ids), c.id_col, "left_anti")
-        _barrier("span_gated", result.count())
-    elif c.span_positions_path is not None:
-        # the rewrite half of the daily loop (VERDICT r14 #2): apply
-        # the index step's persisted positions — detection AND the
-        # corpus-wide canonical pick already paid in O(day +
-        # collisions) by the daily probe — through the shared rewrite
-        # kernel.  Prep pays one groupBy of the bounded record, one
-        # left join, one Arrow pass; no corpus-wide span detection.
-        import glob as _glob
-        import json as _json
-
-        from data_engineering_user_session_analysis_spark.operators.span_dedup import (
-            rewrite_docs_from_spans,
-        )
-
-        spark = docs.sparkSession
-        spans = spark.read.parquet(c.span_positions_path)
-        windows = set()
-        for meta_path in _glob.glob(
-            os.path.join(c.span_positions_path, "**", "_write_meta.json"),
-            recursive=True,
-        ):
-            with open(meta_path) as f:
-                windows.add(int(_json.load(f)["window"]))
-        if len(windows) != 1:
-            raise ValueError(
-                f"span_positions record at {c.span_positions_path} carries "
-                f"{'no' if not windows else 'conflicting'} _write_meta.json "
-                f"window sidecar(s) ({sorted(windows)}) — positions are "
-                "anchors and the rewrite needs the producer's exact window"
-            )
-        window = windows.pop()
-        # content parity (the minhash_index_path posture): positions
-        # are TOKEN OFFSETS into the producer's text — a record built
-        # over a different corpus revision (or text this pipeline's
-        # scrub changed) would silently excise the wrong tokens.
-        # Sample rows, recompute each window's md5 from the text the
-        # rewrite will actually see, require exact equality.
-        import hashlib as _hashlib
-
-        sample = (
-            spans.join(
-                result.select(c.id_col, c.text_col), c.id_col, "inner"
-            )
-            .orderBy(c.id_col, "pos")
-            .limit(c.index_validation_sample)
-            .collect()
-        )
-        for r in sample:
-            toks = r[c.text_col].split(" ")[r["pos"]: r["pos"] + window]
-            got = _hashlib.md5(" ".join(toks).encode("utf-8")).hexdigest()
-            if len(toks) < window or got != r["wh"]:
-                raise ValueError(
-                    f"span_positions record at {c.span_positions_path} does "
-                    f"not match this pipeline's text for doc "
-                    f"{r[c.id_col]} pos {r['pos']} — the record must be "
-                    "built over the SAME text the rewrite sees (stale "
-                    "record, different corpus revision, or a scrub rule "
-                    "that moved token offsets)"
-                )
-        result = rewrite_docs_from_spans(
-            result, spans, c.text_col, c.id_col, window=window
-        ).drop("n_removed_tokens")
-        _barrier("span_rewritten", result.count())
     # enter on EITHER signal: rewrite mode ignores the threshold (it
     # rewrites every duplicated span), so span_action='rewrite' alone
     # must enable the stage (ADVICE r13); drop mode needs the
     # threshold to select which docs die.
-    elif c.max_dup_span_frac is not None or c.span_action == "rewrite":
+    if c.max_dup_span_frac is not None or c.span_action == "rewrite":
         # runs AFTER dedup on purpose: exact clones are already down
         # to one canonical each, so a span flagged here is a genuine
         # partial overlap (pre-dedup, every clone would score 1.0 and

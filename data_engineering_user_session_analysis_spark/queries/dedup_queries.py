@@ -17,15 +17,10 @@ has the full mapping):
   inverted-index Jaccard SQL, and its Spark side shares the shingle
   construction (``shingle_docs``) and Jaccard formula — so a defect
   in shingling or the Jaccard math still breaks that row's hash
-  match.  The Spark *inverted-index join* implementation itself
-  (``_pair_jaccard``) is no longer driver-row-exercised: since round
-  3 the minhash verify tier is the candidate-bounded
-  ``_verify_jaccard`` (set intersection), pinned EQUAL to the
-  inverted-index path by
-  tests/test_operators.py::test_verify_jaccard_equals_inverted_index,
-  and the DF-cap behavior stays pinned by
-  test_ngram_df_cap_binding_and_nonbinding.  The operator remains
-  callable API surface.
+  match.  The minhash verify tier is the candidate-bounded
+  ``_verify_jaccard`` (set intersection), pinned equal to a
+  brute-force Jaccard by
+  tests/test_operators.py::test_verify_jaccard_equals_inverted_index.
 """
 
 from __future__ import annotations
@@ -50,24 +45,13 @@ _JACCARD_THRESHOLD = 0.5
 #: Fixture-scale ExactSubstr window: documents are 10-100 tokens, so
 #: the public protocol's 50 would exclude most of the corpus.  The
 #: operator default stays 50 (span_dedup.EXACTSUBSTR_WINDOW).
-SPAN_WINDOW = 15
+SPAN_ROW_WINDOW = 15
 
 
-def _jaccard_pair_ctes(max_shingle_df: int | None) -> str:
+def _jaccard_pair_ctes() -> str:
     """Shared oracle CTE chain ending in ``jpairs(doc_a, doc_b,
     intersection, jaccard)`` — the exact-Jaccard pairs at the
-    threshold, optionally under the stop-shingle DF cap (mirrored
-    from operators/dedup.py so a capped plan stays hash-checked even
-    when the cap binds)."""
-    cap_cte = (
-        f""", dfc AS (
-  SELECT s FROM sh GROUP BY s HAVING count(*) <= {max_shingle_df}
-), shc AS (
-  SELECT sh.doc_id, sh.s FROM sh JOIN dfc ON sh.s = dfc.s
-)"""
-        if max_shingle_df is not None
-        else ", shc AS (SELECT doc_id, s FROM sh)"
-    )
+    threshold."""
     return f"""toks AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), sh AS (
@@ -75,11 +59,11 @@ def _jaccard_pair_ctes(max_shingle_df: int | None) -> str:
     unnest(list_distinct(list_transform(range(1, len(w) - 1),
            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
   FROM toks WHERE len(w) >= 3
-){cap_cte}, sizes AS (
-  SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id
+), sizes AS (
+  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
 ), inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-  FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id
+  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ), jpairs AS (
   SELECT doc_a, doc_b, CAST(c AS BIGINT) AS intersection,
@@ -93,7 +77,7 @@ def _jaccard_pair_ctes(max_shingle_df: int | None) -> str:
 
 @register(
     "dedup_minhash_lsh",
-    "WITH " + _jaccard_pair_ctes(None) + "\nSELECT * FROM jpairs",
+    "WITH " + _jaccard_pair_ctes() + "\nSELECT * FROM jpairs",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs.  Oracle = the exact (uncapped)
@@ -110,10 +94,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), wh AS (
-  SELECT doc_id, unnest(list_transform(range(1, len(w) - {SPAN_WINDOW - 2}),
+  SELECT doc_id, unnest(list_transform(range(1, len(w) - {SPAN_ROW_WINDOW - 2}),
     i -> {{'pos': i - 1,
-          'h': md5(array_to_string(list_slice(w, i, i + {SPAN_WINDOW - 1}), ' '))}})) AS u
-  FROM toks WHERE len(w) >= {SPAN_WINDOW}
+          'h': md5(array_to_string(list_slice(w, i, i + {SPAN_ROW_WINDOW - 1}), ' '))}})) AS u
+  FROM toks WHERE len(w) >= {SPAN_ROW_WINDOW}
 ), f AS (
   SELECT doc_id, u.pos AS pos, u.h AS h FROM wh
 ), dups AS (
@@ -126,15 +110,15 @@ WITH toks AS (
   FROM dw
 ), cov AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_windows,
-    CAST(sum(CASE WHEN delta IS NULL THEN {SPAN_WINDOW}
-                  ELSE LEAST(delta, {SPAN_WINDOW}) END) AS BIGINT) AS dup_tokens
+    CAST(sum(CASE WHEN delta IS NULL THEN {SPAN_ROW_WINDOW}
+                  ELSE LEAST(delta, {SPAN_ROW_WINDOW}) END) AS BIGINT) AS dup_tokens
   FROM deltas GROUP BY doc_id
 )
 SELECT t.doc_id,
   CAST(len(w) AS BIGINT) AS n_tokens,
-  CAST(len(w) - {SPAN_WINDOW - 1} AS BIGINT) AS n_windows,
+  CAST(len(w) - {SPAN_ROW_WINDOW - 1} AS BIGINT) AS n_windows,
   cov.n_dup_windows,
-  cov.n_dup_windows / CAST(len(w) - {SPAN_WINDOW - 1} AS DOUBLE) AS dup_window_frac,
+  cov.n_dup_windows / CAST(len(w) - {SPAN_ROW_WINDOW - 1} AS DOUBLE) AS dup_window_frac,
   cov.dup_tokens,
   cov.dup_tokens / CAST(len(w) AS DOUBLE) AS dup_token_frac
 FROM toks t JOIN cov USING (doc_id)
@@ -143,7 +127,7 @@ FROM toks t JOIN cov USING (doc_id)
 def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplicate-span stats (the ExactSubstr dedup
     family — Lee et al. 2021 — as a hashed-window re-expression,
-    `operators/span_dedup.py`): every SPAN_WINDOW-token rolling
+    `operators/span_dedup.py`): every SPAN_ROW_WINDOW-token rolling
     window is md5-keyed; windows occurring in >= 2 distinct docs mark
     duplicated spans; per doc the row reports dup-window counts and
     the MERGED-interval token coverage (sorted positions, each window
@@ -157,7 +141,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc lag() window — plus a winnowing-style `sample_mod` knob
     for corpora where even O(tokens) shuffle needs sampling."""
     docs = load_table(spark, sf_dir, "documents")
-    return duplicated_span_stats(docs, window=SPAN_WINDOW)
+    return duplicated_span_stats(docs, window=SPAN_ROW_WINDOW)
 
 
 def _simhash_bits_sql() -> str:
@@ -208,7 +192,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_clusters",
     "WITH RECURSIVE "
-    + _jaccard_pair_ctes(None)
+    + _jaccard_pair_ctes()
     + """
 , edges AS (
   SELECT doc_a AS u, doc_b AS v FROM jpairs

@@ -222,11 +222,9 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, bucketing is one shuffle on (table, signature),
     exact scoring touches only bucket-mates.  Recall at this WEAK
     0.4 threshold decays as planes deepen (the closed-form-predicted
-    price of linear candidates — ``lsh_params`` docstring); near-dup
-    recall at cos≥0.95 holds ≥0.9 at every N by the tables law, and
-    production tuning beyond the law goes through the persistent
-    vector index family (operators/dedup_index.py), whose 1M
-    autotune replay landed 62×17 (STRESS_sf1_r11)."""
+    price of linear candidates — ``oracle_geometry`` docstring);
+    near-dup recall at cos≥0.95 holds ≥0.9 at every N by the tables
+    law."""
     from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
         lsh_similarity_pairs,
         oracle_geometry,

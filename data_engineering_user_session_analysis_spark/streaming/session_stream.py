@@ -140,7 +140,6 @@ def foreach_batch_upsert_parquet(
         from pyspark.sql.utils import AnalysisException
 
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         merged = batch_df
         try:
             existing = spark.read.parquet(out_dir)
@@ -161,6 +160,12 @@ def foreach_batch_upsert_parquet(
                 .select(*batch_df.columns)
             )
             merged = batch_df.unionByName(keep).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(out_dir)
+        # dynamic overwrite as a writer option: it replaces only the
+        # partitions this batch touches, and leaves the session's
+        # partitionOverwriteMode (which every later overwrite in the
+        # session obeys) as it was
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_col).parquet(out_dir)
 
     return _write

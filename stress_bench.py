@@ -6,11 +6,11 @@ the pair-generating queries and log their CANDIDATE counts alongside
 wall time.  The scaling curve of candidates — not wall-clock alone —
 is what predicts 100 TB behavior.
 
-Embedding LSH applies the documented sizing rule (vector_lsh.py
-``lsh_params``): planes from an explicit candidates-per-vector
-budget (keeps the candidate set LINEAR in N — r04's fixed
-bucket-size-125 rule kept it quadratic and produced a 66× verify
-overhead at 20k vectors), tables raised to hold near-dup recall.
+Embedding LSH applies the registry row's sizing law (vector_lsh.py
+``oracle_geometry``): planes from the bit-length of N (keeps the
+candidate set LINEAR in N — r04's fixed bucket-size-125 rule kept it
+quadratic and produced a 66× verify overhead at 20k vectors), tables
+raised to hold near-dup recall.
 Measured clone-pair recall (exact clones sit at cosine 1.0) is
 recorded next to the candidate counts.
 
@@ -163,22 +163,18 @@ def measure_vectors(spark, emb, replicas: int | None = None) -> dict:
 
     from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
         lsh_candidate_pairs,
-        lsh_params,
         lsh_similarity_pairs,
+        oracle_geometry,
     )
 
     res: dict = {}
     n_vec = emb.count()
     res["n_vectors"] = n_vec
-    # scale-aware sizing: planes from the candidate budget, tables
-    # from the near-dup recall target (vector_lsh.lsh_params)
-    params = lsh_params(n_vec, threshold=0.4)
-    planes, tables = params["planes"], params["tables"]
+    # scale-aware sizing: planes from the bit-length of N, tables
+    # from the near-dup recall target (the registry row's law)
+    tables, planes = oracle_geometry(n_vec)
     res["lsh_planes"] = planes
     res["lsh_tables"] = tables
-    res["lsh_sizing"] = {
-        k: round(v, 4) if isinstance(v, float) else v for k, v in params.items()
-    }
     res["lsh_candidates"], res["lsh_candidates_sec"] = timed(
         lambda: lsh_candidate_pairs(emb, planes=planes, tables=tables).count()
     )
@@ -203,17 +199,6 @@ def measure_vectors(spark, emb, replicas: int | None = None) -> dict:
         res["clone_true_pairs"] = expected
         res["clone_pair_recall"] = round(caught / expected, 4) if expected else None
     pairs_df.unpersist()
-    # The star-edge dedup graph (exact-clone stars + rep-only LSH
-    # pairs) — linear where the all-pairs output above is quadratic
-    # in clone-group size; identical components (pinned in tests).
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import lsh_dedup_edges
-
-    res["dedup_edges"], res["dedup_edges_sec"] = timed(
-        lambda: lsh_dedup_edges(emb, planes=planes, tables=tables).count()
-    )
-    res["dedup_edges_per_vector"] = (
-        round(res["dedup_edges"] / n_vec, 3) if n_vec else None
-    )
     return res
 
 
@@ -451,17 +436,12 @@ def measure_docs_star(spark, docs, label: str, base_docs: int) -> dict:
     from data_engineering_user_session_analysis_spark.operators.dedup import (
         connected_components,
         minhash_dedup_edges,
-        simhash_dedup_edges,
     )
 
     _quiesce(spark)
     res: dict = {"label": label}
     n = docs.count()
     res["n_docs"] = n
-    # SimHash modality first (independent measurement, no cache overlap)
-    res["simhash_edges"], res["simhash_edges_sec"] = timed(
-        lambda: simhash_dedup_edges(docs, max_hamming=2).count()
-    )
     edges = minhash_dedup_edges(docs, threshold=0.5).cache()
     res["dedup_edges"], res["dedup_edges_sec"] = timed(lambda: edges.count())
     by_type = {
@@ -537,182 +517,6 @@ def measure_embeddings_100x(spark, replicas: int = 100) -> dict:
     return res
 
 
-def measure_vector_recall_sensor(spark, n_centers: int = 1000, sigma: float = 0.2) -> dict:
-    """`vector_index_recall_sample` at production scale — the first
-    MEASURED check of the banding model's
-    ``predicted_recall_at_threshold`` on a real geometry (every prior
-    recall evidence was clone-structural or fixture-scale): 1M
-    clustered vectors, index built with its honest growth target, the
-    sensor run at the sibling cosine (~0.82 for this corpus's noise
-    model) and just above it.  The point is calibration-grade
-    prediction-vs-measurement rows for the hyperplane index family."""
-    import shutil
-    import tempfile
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        vector_index_recall_sample,
-        write_vector_index,
-    )
-
-    _quiesce(spark)
-    emb, _ = _clustered_embeddings(spark, n_centers, sigma)
-    n = emb.count()
-    idx = tempfile.mkdtemp(prefix="stress_vecrecall_")
-    try:
-        _, build_sec = timed(
-            lambda: write_vector_index(emb, idx, target_n=n)
-        )
-        res: dict = {
-            "label": f"vector index recall sensor ({n_centers} skewed clusters)",
-            "n_vectors": n,
-            "index_build_sec": build_sec,
-            "thresholds": [],
-        }
-        for thr in (0.85, 0.8):
-            r, sec = timed(
-                lambda thr=thr: vector_index_recall_sample(
-                    spark, idx, threshold=thr, sample_q=15
-                )
-            )
-            r["total_sec"] = sec
-            res["thresholds"].append(r)
-        return res
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def measure_minhash_recall_sensor(spark, variants_per_doc: int = 40) -> dict:
-    """`minhash_index_recall_sample` at scale on a corpus with GENUINE
-    partial overlaps — the text twin of the vector sensor's 1M
-    calibration.  Clone-grown corpora are uninformative here (clones
-    share every band structurally), so this tier builds a
-    PREFIX-VARIANT corpus: each sf0.1 document spawns
-    ``variants_per_doc - 1`` truncated variants at length fractions
-    0.5 + k/(2·variants_per_doc) (plus the original), giving
-    shingle-Jaccard pairs spread across exactly the banding s-curve's
-    operating range — nested prefixes of one base pair at ≈
-    shorter/longer fraction.  The sensor then measures the
-    1-(1-J^4)^16 prediction against exact truth at two thresholds.
-    ``variants_per_doc=40`` is the round-9 200k calibration;
-    ``variants_per_doc=200`` is the round-10 1M point (so both text
-    and vector families have a 1M measured row, VERDICT r09 next
-    #4)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        minhash_index_recall_sample,
-        write_minhash_index,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    v = variants_per_doc
-    variants = (
-        base.select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(0), F.lit(v - 1))).alias("k"),
-        )
-        .select(
-            (F.col("doc_id") * v + F.col("k")).alias("doc_id"),
-            F.when(F.col("k") == 0, F.col("text"))
-            .otherwise(
-                F.substring(
-                    "text",
-                    1,
-                    F.ceil(
-                        F.length("text")
-                        * (F.lit(0.5) + F.col("k") / F.lit(2.0 * v))
-                    ).cast("int"),
-                )
-            )
-            .alias("text"),
-        )
-    )
-    n = variants.count()
-    idx = tempfile.mkdtemp(prefix="stress_minhashrecall_")
-    try:
-        _, build_sec = timed(lambda: write_minhash_index(variants, idx))
-        res: dict = {
-            "label": "minhash index recall sensor (prefix-variant corpus)"
-            + (f", {v} variants/doc" if v != 40 else ""),
-            "n_docs": n,
-            "index_build_sec": build_sec,
-            "thresholds": [],
-        }
-        for thr in (0.8, 0.6):
-            r, sec = timed(
-                lambda thr=thr: minhash_index_recall_sample(
-                    spark, idx, threshold=thr, sample_q=15
-                )
-            )
-            r["total_sec"] = sec
-            res["thresholds"].append(r)
-        return res
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def measure_vector_recall_autotune(
-    spark, n_centers: int = 1000, sigma: float = 0.2
-) -> dict:
-    """The round-10 actuator replay: a 1M clustered vector index whose
-    honest-growth geometry measures LOW near-dup recall (the round-9
-    sensor read 0.28–0.36 at thresholds 0.8/0.85 with prediction ≈
-    measurement — the GEOMETRY, not the banding model, is the limit)
-    is brought to a MEASURED target by
-    ``vector_index_recall_autotune``: inverse banding solve →
-    rebuild → re-measure → escalate.  The trail is the family's
-    width-economics evidence: what recall at a weak threshold costs
-    in tables/planes (and therefore candidate load) when the corpus
-    is clustered rather than clone-structured."""
-    import shutil
-    import tempfile
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        vector_index_recall_autotune,
-        write_vector_index,
-    )
-
-    _quiesce(spark)
-    emb, _ = _clustered_embeddings(spark, n_centers, sigma)
-    n = emb.count()
-    idx = tempfile.mkdtemp(prefix="stress_vecautotune_")
-    try:
-        _, build_sec = timed(lambda: write_vector_index(emb, idx, target_n=n))
-        tune, tune_sec = timed(
-            lambda: vector_index_recall_autotune(
-                spark, idx, threshold=0.85, recall_target=0.9, sample_q=15
-            )
-        )
-        return {
-            "label": f"vector index recall autotune ({n_centers} skewed clusters)",
-            "n_vectors": n,
-            "index_build_sec": build_sec,
-            "tune_sec": tune_sec,
-            "threshold": tune["threshold"],
-            "recall_target": tune["recall_target"],
-            "met": tune["met"],
-            "exhausted": tune["exhausted"],
-            "final": {
-                "tables": tune["tables"],
-                "planes": tune["planes"],
-                "recall_at_threshold": tune["recall_at_threshold"],
-            },
-            "steps": tune["steps"],
-            # why an exhausted walk stopped — without this the
-            # artifact can't distinguish ladder-out-of-moves from a
-            # ceiling refusal (r11: the 0.97 text replay stopped here)
-            "stopped_on_candidate_load": tune.get("stopped_on_candidate_load"),
-        }
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
 def _cpu_speed_probe() -> dict:
     """Fixed-size numpy workload timed at tier start: the box's
     EFFECTIVE speed at run time.  This environment is a microVM —
@@ -731,98 +535,6 @@ def _cpu_speed_probe() -> dict:
     for _ in range(6):
         a @ a
     return {"cpu_probe_sec": round(time.monotonic() - t0, 3)}
-
-
-def measure_minhash_recall_autotune(
-    spark, variants_per_doc: int = 200, recall_target: float = 0.9,
-    max_candidate_load: "float | None" = 1024.0,
-) -> dict:
-    """The text actuator replay at 1M (round-10 symmetry with
-    ``measure_vector_recall_autotune``): the 1M prefix-variant corpus
-    whose pair mass spans the banding s-curve, tuned to a measured
-    Jaccard-recall target at the weak threshold (0.5) the default
-    16×4 geometry cannot hold (per-pair hit ~0.73–0.8 in the
-    J 0.53–0.64 band) — inverse banding solve → full re-banding
-    rebuild → re-measure.
-
-    ``max_candidate_load`` is threaded through so the tier can show
-    BOTH ceiling behaviors on this corpus: at the default ceiling the
-    0.97 walk stops honestly (this replay corpus is all near-dup
-    clusters by construction, so the collision-rate-derived J_bg —
-    deliberately a measured upper bound, it cannot tell true-pair
-    mass from noise — prices the solve's wider banding (55×4,
-    ~4.5k candidates/doc) above the ceiling), and with the ceiling
-    lifted the same walk re-bands to 55×4 and measures 1.0, the
-    round-10 trail."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        minhash_index_recall_autotune,
-        write_minhash_index,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    v = variants_per_doc
-    variants = (
-        base.select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(0), F.lit(v - 1))).alias("k"),
-        )
-        .select(
-            (F.col("doc_id") * v + F.col("k")).alias("doc_id"),
-            F.when(F.col("k") == 0, F.col("text"))
-            .otherwise(
-                F.substring(
-                    "text", 1,
-                    F.ceil(
-                        F.length("text")
-                        * (F.lit(0.5) + F.col("k") / F.lit(2.0 * v))
-                    ).cast("int"),
-                )
-            )
-            .alias("text"),
-        )
-    )
-    n = variants.count()
-    idx = tempfile.mkdtemp(prefix="stress_minhashtune_")
-    try:
-        _, build_sec = timed(lambda: write_minhash_index(variants, idx))
-        tune, tune_sec = timed(
-            lambda: minhash_index_recall_autotune(
-                spark, idx, threshold=0.5, recall_target=recall_target,
-                sample_q=15, max_candidate_load=max_candidate_load,
-            )
-        )
-        return {
-            # target + ceiling in the label: the tier runs multiple
-            # configurations and label-keyed artifact comparison must
-            # tell them apart
-            "label": "minhash index recall autotune (prefix-variant corpus, "
-            f"{v} variants/doc, target={recall_target}, "
-            f"load_ceiling={max_candidate_load})",
-            "n_docs": n,
-            "index_build_sec": build_sec,
-            "tune_sec": tune_sec,
-            "threshold": tune["threshold"],
-            "recall_target": tune["recall_target"],
-            "met": tune["met"],
-            "exhausted": tune["exhausted"],
-            "final": {
-                "bands": tune["bands"],
-                "rows_per_band": tune["rows_per_band"],
-                "recall_at_threshold": tune["recall_at_threshold"],
-            },
-            "steps": tune["steps"],
-            "stopped_on_candidate_load": tune.get("stopped_on_candidate_load"),
-        }
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
 
 def measure_events_100x(spark, replicas: int = 100) -> dict:
@@ -867,526 +579,6 @@ def measure_events_100x(spark, replicas: int = 100) -> dict:
     res["session_rollup_rows"] = rows
     res["session_events_per_sec"] = round(n / best, 1)
     return res
-
-
-def measure_docs_index(spark, n_days: int = 12, planted: int = 250) -> dict:
-    """Daily-shard replay through the PERSISTENT MinHash index
-    (`operators/dedup_index.py` — the `run_docs_index_step` pattern):
-    day r probes all prior days for near-dups, drops the hits, and
-    indexes the survivors under its own ds partition.  The metric
-    that matters is PROBE SECONDS PER DAY staying ~flat while the
-    indexed corpus grows to n_days × the shard — the documented
-    O(shard + candidates) claim, measured instead of asserted.
-
-    Shard construction: day 0 is the real sf0.1 documents corpus;
-    each later day carries the same id-space (shifted) with per-doc
-    SYNTHETIC text (shingle-disjoint from everything — the
-    mostly-new-content daily reality) plus `planted` EXACT copies of
-    day-0 docs, so every day's probe has a known true-dup load that
-    does not compound across days."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        append_shard_to_minhash_index,
-        incremental_neardup_pairs,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    n_base = base.count()
-    shift = SHIFTS["documents"]["doc_id"]
-    # per-doc synthetic text: 40 tokens unique to (day, doc) — zero
-    # shingle overlap with any other doc, any day
-    def synth_text(r: int):
-        return F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(40)),
-                lambda j: F.concat(
-                    F.lit(f"d{r}x"), F.col("doc_id").cast("string"), F.lit("x"), j.cast("string")
-                ),
-            ),
-            " ",
-        )
-
-    idx = tempfile.mkdtemp(prefix="stress_docindex_")
-    days = []
-    indexed_total = 0
-    try:
-        for r in range(n_days):
-            ds = f"2024-02-{r + 1:02d}"
-            if r == 0:
-                shard = base
-            else:
-                synth = base.withColumn(
-                    "doc_id", F.col("doc_id") + r * shift
-                ).withColumn("text", synth_text(r))
-                copies = (
-                    base.orderBy("doc_id")
-                    .limit(planted)
-                    .withColumn("doc_id", F.col("doc_id") + r * shift + 500_000)
-                )
-                shard = synth.unionByName(copies)
-            shard = shard.localCheckpoint(eager=True)
-            rec = {"day": r, "ds": ds, "index_docs_before": indexed_total}
-            if r == 0:
-                hits_ids = None
-                rec["probe_sec"] = None
-                rec["dup_hits"] = None
-            else:
-                (pairs, rec["probe_sec"]) = timed(
-                    lambda: incremental_neardup_pairs(
-                        spark, shard, idx, threshold=0.5, before_ds=ds
-                    )
-                    .select(F.col("doc_b").alias("doc_id"))
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-                hits_ids = pairs
-                rec["dup_hits"] = pairs.count()
-            clean = (
-                shard
-                if hits_ids is None
-                else shard.join(hits_ids, "doc_id", "left_anti")
-            )
-            _, rec["index_sec"] = timed(
-                lambda: append_shard_to_minhash_index(clean, idx, ds)
-            )
-            rec["indexed_rows"] = clean.count()
-            indexed_total += rec["indexed_rows"]
-            days.append(rec)
-        probe_secs = [d["probe_sec"] for d in days if d["probe_sec"] is not None]
-        return {
-            "label": f"docs index replay ({n_days} days, shard={n_base})",
-            "n_days": n_days,
-            "shard_docs": n_base,
-            "planted_copies": planted,
-            "final_index_docs": indexed_total,
-            "days": days,
-            "probe_sec_per_day": probe_secs,
-            # flatness: late-day probe cost vs the first probed day,
-            # while the probed corpus grew ~(n_days-1)x
-            "probe_flatness_last_over_first": (
-                round(probe_secs[-1] / probe_secs[0], 2) if probe_secs else None
-            ),
-        }
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def measure_vectors_index(spark, n_days: int = 12, planted: int = 250) -> dict:
-    """Daily-shard replay through the PERSISTENT hyperplane-LSH
-    vector index (`operators/dedup_index.py` — the
-    `run_vectors_index_step` pattern, new in r7 with fixture-scale
-    tests only): day r probes all prior days for cosine near-dups,
-    drops the hits, and indexes the survivors under its own ds
-    partition.  The vector twin of ``measure_docs_index``: the claim
-    under test is PROBE SECONDS PER DAY staying ~flat while the
-    indexed corpus grows to n_days × the shard, plus exact recovery
-    of the planted clone load.
-
-    Shard construction: day 0 is the real sf0.1 embeddings; each
-    later day carries shifted ids with per-(day, vector) SYNTHETIC
-    md5-derived embeddings (pairwise ~orthogonal — no cosine-0.9
-    match with anything, any day) plus ``planted`` EXACT copies of
-    day-0 vectors, so every day's probe has a known true-dup load
-    that does not compound across days."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        append_shard_to_vector_index,
-        incremental_vector_neardup,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "embeddings.parquet")).select(
-        "vec_id", "embedding"
-    )
-    n_base = base.count()
-    dim = len(base.select("embedding").first()["embedding"])
-    shift = SHIFTS["embeddings"]["vec_id"]
-
-    def synth_vec(r: int):
-        # deterministic pseudo-random unit-ish vector per (day, vec):
-        # 4 md5 hex chars per element -> [-0.5, 0.5).  Two independent
-        # such vectors have |cos| ~ 1/sqrt(dim) — never near 0.9.
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda j: (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit(f"d{r}x"),
-                                F.col("vec_id").cast("string"),
-                                F.lit("x"),
-                                j.cast("string"),
-                            )
-                        ),
-                        1,
-                        4,
-                    ),
-                    16,
-                    10,
-                ).cast("double")
-                / F.lit(65536.0)
-                - F.lit(0.5)
-            ).cast("float"),
-        )
-
-    idx = tempfile.mkdtemp(prefix="stress_vecindex_")
-    days = []
-    indexed_total = 0
-    try:
-        for r in range(n_days):
-            ds = f"2024-02-{r + 1:02d}"
-            if r == 0:
-                shard = base
-            else:
-                synth = base.withColumn(
-                    "vec_id", F.col("vec_id") + r * shift
-                ).withColumn("embedding", synth_vec(r))
-                copies = (
-                    base.orderBy("vec_id")
-                    .limit(planted)
-                    .withColumn("vec_id", F.col("vec_id") + r * shift + 500_000)
-                )
-                shard = synth.unionByName(copies)
-            shard = shard.localCheckpoint(eager=True)
-            rec = {"day": r, "ds": ds, "index_vectors_before": indexed_total}
-            if r == 0:
-                hits_ids = None
-                rec["probe_sec"] = None
-                rec["dup_hits"] = None
-            else:
-                (pairs, rec["probe_sec"]) = timed(
-                    lambda: incremental_vector_neardup(
-                        spark, shard, idx, threshold=0.9, before_ds=ds
-                    )
-                    .select(F.col("vec_b").alias("vec_id"))
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-                hits_ids = pairs
-                rec["dup_hits"] = pairs.count()
-            clean = (
-                shard
-                if hits_ids is None
-                else shard.join(hits_ids, "vec_id", "left_anti")
-            )
-            _, rec["index_sec"] = timed(
-                lambda: append_shard_to_vector_index(
-                    # the daily verb's production sizing: geometry for a
-                    # year of shards, frozen by the first day (stored
-                    # params win afterwards)
-                    clean, idx, ds, target_n=n_base * 365
-                )
-            )
-            rec["indexed_rows"] = clean.count()
-            indexed_total += rec["indexed_rows"]
-            days.append(rec)
-        probe_secs = [d["probe_sec"] for d in days if d["probe_sec"] is not None]
-        from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-            _read_vector_params,
-        )
-
-        return {
-            "label": f"vector index replay ({n_days} days, shard={n_base})",
-            "geometry": _read_vector_params(spark, idx),
-            "n_days": n_days,
-            "shard_vectors": n_base,
-            "planted_copies": planted,
-            "final_index_vectors": indexed_total,
-            "days": days,
-            "probe_sec_per_day": probe_secs,
-            "planted_recovery_exact": all(
-                d["dup_hits"] == planted for d in days if d["day"] > 0
-            ),
-            "probe_flatness_last_over_first": (
-                round(probe_secs[-1] / probe_secs[0], 2) if probe_secs else None
-            ),
-        }
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def measure_vector_index_auto_rebuild(
-    spark, n_days: int = 12, target_days: int = 3, planted: int = 250
-) -> dict:
-    """The auto-rebuild consumer under replay (VERDICT r08 next #5's
-    measured half): drive ``run_vectors_index_step(auto_rebuild=True)``
-    with a deliberately short design horizon (``target_days=3``) so
-    the corpus outgrows its geometry mid-replay, and record per-day
-    step seconds plus which days rebuilt.  The claim under test:
-    probe+append cost GROWS while the geometry is outgrown-pending
-    (pre-rebuild days run on a too-small plane budget) and the
-    rebuild resets it — the operational difference between an alarm
-    with a consumer and an alarm in a report nobody reads.
-
-    Shards are the replay tier's construction (day 0 real, later
-    days orthogonal synthetics + ``planted`` exact day-0 copies), so
-    the dup load is known and constant per day."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_vectors_index_step,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "embeddings.parquet")).select(
-        "vec_id", "embedding"
-    )
-    n_base = base.count()
-    dim = len(base.select("embedding").first()["embedding"])
-    shift = SHIFTS["embeddings"]["vec_id"]
-
-    def synth_vec(r: int):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda j: (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit(f"a{r}x"),
-                                F.col("vec_id").cast("string"),
-                                F.lit("x"),
-                                j.cast("string"),
-                            )
-                        ),
-                        1,
-                        4,
-                    ),
-                    16,
-                    10,
-                ).cast("double")
-                / F.lit(65536.0)
-                - F.lit(0.5)
-            ).cast("float"),
-        )
-
-    out = tempfile.mkdtemp(prefix="stress_vecautorb_")
-    days = []
-    try:
-        for r in range(n_days):
-            ds = f"2024-03-{r + 1:02d}"
-            if r == 0:
-                shard = base
-            else:
-                synth = base.withColumn(
-                    "vec_id", F.col("vec_id") + r * shift
-                ).withColumn("embedding", synth_vec(r))
-                copies = (
-                    base.orderBy("vec_id")
-                    .limit(planted)
-                    .withColumn("vec_id", F.col("vec_id") + r * shift + 500_000)
-                )
-                shard = synth.unionByName(copies)
-            p = os.path.join(out, f"shard{r}")
-            shard.write.mode("overwrite").parquet(p)
-            rep, sec = timed(
-                lambda p=p, ds=ds: run_vectors_index_step(
-                    spark,
-                    p,
-                    out,
-                    ds,
-                    target_days=target_days,
-                    auto_rebuild=True,
-                )
-            )
-            days.append(
-                {
-                    "day": r,
-                    "ds": ds,
-                    "step_sec": sec,
-                    "dup_hits": rep["dup_hits"],
-                    "rebuilt": rep["index_rebuilt"] is not None,
-                    "geometry_after": (
-                        rep["index_rebuilt"]["geometry"]
-                        if rep["index_rebuilt"]
-                        else None
-                    ),
-                    "indexed_n": rep["index_outgrown"]["indexed_n"],
-                    "target_n": rep["index_outgrown"]["target_n"],
-                }
-            )
-        rebuild_days = [d["day"] for d in days if d["rebuilt"]]
-        return {
-            "label": f"vector index auto-rebuild replay ({n_days} days, horizon {target_days})",
-            "n_days": n_days,
-            "shard_vectors": n_base,
-            "planted_copies": planted,
-            "target_days": target_days,
-            "rebuild_days": rebuild_days,
-            "days": days,
-            "planted_recovery_exact": all(
-                d["dup_hits"] == planted for d in days if d["day"] > 0
-            ),
-        }
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def _clustered_embeddings(spark, n_centers: int, sigma: float):
-    """A CLUSTERED non-clone corpus with real neighbor structure:
-    ``n_centers`` sf0.1 embeddings (unit vectors) act as cluster
-    centers with SKEWED sizes (``250 + (id·2503 mod 1500)``
-    md5-noise-perturbed points each, mean ~1000/center): element-wise
-    ``± sigma/2`` uniform noise at sigma=0.2 gives within-cluster
-    cosine ≈ 0.9 to the center / ≈ 0.8 between siblings vs ≈ 0
-    cross-cluster.  Returns ``(emb, q)`` — the corpus plus 10
-    in-corpus query points (one per first-10 center)."""
-    from pyspark.sql import functions as F
-
-    base = spark.read.parquet(os.path.join(BASE, "embeddings.parquet")).select(
-        "vec_id", "embedding"
-    )
-    shift = SHIFTS["embeddings"]["vec_id"]
-
-    def perturbed():
-        # deterministic per-(vec, dim) noise: 4 md5 hex chars →
-        # [-sigma/2, sigma/2), added element-wise — same family as the
-        # replay tier's synth_vec, but anchored at the center
-        return F.transform(
-            F.col("embedding"),
-            lambda e, j: (
-                e
-                + (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col("vec_id").cast("string"),
-                                    F.lit("n"),
-                                    j.cast("string"),
-                                )
-                            ),
-                            1,
-                            4,
-                        ),
-                        16,
-                        10,
-                    ).cast("double")
-                    / F.lit(65536.0)
-                    - F.lit(0.5)
-                )
-                * F.lit(sigma)
-            ).cast("float"),
-        )
-
-    centers = base.orderBy("vec_id").limit(n_centers)
-    emb = (
-        centers.withColumn(
-            "_copies", F.lit(250) + F.pmod(F.col("vec_id") * F.lit(2503), F.lit(1500))
-        )
-        .withColumn("_r", F.explode(F.sequence(F.lit(1), F.col("_copies"))))
-        .withColumn("vec_id", F.col("vec_id") + F.col("_r") * F.lit(shift))
-        .withColumn("embedding", perturbed())
-        .drop("_copies", "_r")
-        .repartition(max(spark.sparkContext.defaultParallelism, 32))
-        .localCheckpoint(eager=True)
-    )
-    q_ids = [
-        r.vec_id + shift
-        for r in centers.select("vec_id").orderBy("vec_id").limit(10).collect()
-    ]
-    q = emb.filter(F.col("vec_id").isin(*q_ids)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    return emb, q
-
-
-def measure_truth_cache_1m(spark, variants_per_doc: int = 200) -> dict:
-    """1M-scale evidence for the content-keyed truth cache (VERDICT
-    r10 next #5): the sensor's exact-Jaccard truth pass is the bulk
-    of a 1M tune's cost (r10 measured 204 s tune vs 7 s probe), so
-    the second sensor call on an UNCHANGED index must skip it.  One
-    index build, two identical sensor calls: call 1 records
-    truth_cache=miss with the full truth_sec; call 2 records
-    truth_cache=hit with truth_sec near zero and byte-identical
-    recall numbers."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        minhash_index_recall_sample,
-        write_minhash_index,
-    )
-
-    _quiesce(spark)
-    base = spark.read.parquet(os.path.join(BASE, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    v = variants_per_doc
-    variants = (
-        base.select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(0), F.lit(v - 1))).alias("k"),
-        )
-        .select(
-            (F.col("doc_id") * v + F.col("k")).alias("doc_id"),
-            F.when(F.col("k") == 0, F.col("text"))
-            .otherwise(
-                F.substring(
-                    "text", 1,
-                    F.ceil(
-                        F.length("text")
-                        * (F.lit(0.5) + F.col("k") / F.lit(2.0 * v))
-                    ).cast("int"),
-                )
-            )
-            .alias("text"),
-        )
-    )
-    n = variants.count()
-    idx = tempfile.mkdtemp(prefix="stress_truthcache_")
-    try:
-        _, build_sec = timed(lambda: write_minhash_index(variants, idx))
-        r1, call1_sec = timed(
-            lambda: minhash_index_recall_sample(
-                spark, idx, threshold=0.5, sample_q=15
-            )
-        )
-        r2, call2_sec = timed(
-            lambda: minhash_index_recall_sample(
-                spark, idx, threshold=0.5, sample_q=15
-            )
-        )
-        return {
-            "label": f"truth cache at 1M ({v} variants/doc, two sensor calls)",
-            "n_docs": n,
-            "index_build_sec": build_sec,
-            "call1": {
-                "sec": call1_sec,
-                "truth_sec": r1["truth_sec"],
-                "truth_cache": r1["truth_cache"],
-                "recall_at_threshold": r1["recall_at_threshold"],
-                "true_pairs": r1["true_pairs"],
-            },
-            "call2": {
-                "sec": call2_sec,
-                "truth_sec": r2["truth_sec"],
-                "truth_cache": r2["truth_cache"],
-                "recall_at_threshold": r2["recall_at_threshold"],
-                "true_pairs": r2["true_pairs"],
-            },
-            "recall_identical": r1["recall_at_threshold"] == r2["recall_at_threshold"]
-            and r1["true_pairs"] == r2["true_pairs"],
-        }
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
 
 def _distinct_doc_corpus(spark, replicas: int):
@@ -1473,335 +665,6 @@ def measure_span_dedup(spark, window: int = 15) -> dict:
             }
     d100k, d1m = res["detect_100k"], res["detect_1m"]
     res["detect_scaling_10x"] = round(d1m["sec"] / d100k["sec"], 2)
-    return res
-
-
-def measure_span_index(spark, window: int = 15, n_days: int = 10) -> dict:
-    """Persistent span-hash index (operators/span_index.py) economics
-    at 1M docs, VERDICT r12 #1: replay the 1M clone-shard corpus as
-    ``n_days`` daily shards of 100k docs through append → probe, and
-    measure per-day probe cost against the full-rescan baseline (the
-    one-shot batch operator re-run over the CUMULATIVE corpus — what
-    a daily pipeline without the index pays).  The claim under test:
-    probe cost stays ~flat as stored days accumulate (the day's Arrow
-    kernel + O(day) shuffle dominate; the stored side is a bucketed
-    columnar scan with no exchange), while the rescan baseline grows
-    linearly with the corpus."""
-    import shutil as _sh
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.index_lifecycle import (
-        marker_complete_days,
-    )
-    from data_engineering_user_session_analysis_spark.operators.span_dedup import (
-        duplicated_span_stats,
-    )
-    from data_engineering_user_session_analysis_spark.operators.span_index import (
-        append_shard_to_span_index,
-        incremental_span_occurrences,
-        incremental_span_stats,
-    )
-
-    _quiesce(spark)
-    docs = _distinct_doc_corpus(spark, 20 * n_days)
-    # day = base doc id mod n_days (NOT replica mod n_days): replicas
-    # are token-suffixed and pairwise window-disjoint, so replica-keyed
-    # days would share zero hashes and the probe's new-vs-STORED match
-    # path would never fire at scale; base-id-keyed days spread each
-    # replica's organic dup pairs across days — ~90% of duplicated
-    # hashes are cross-day, exercising the stored-occurrence join the
-    # index exists for
-    day_col = F.pmod(F.col("doc_id"), n_days).cast("int")
-    docs = docs.withColumn("_day", day_col)
-    idx = os.path.join(OUT, "span_index")
-    _sh.rmtree(idx, ignore_errors=True)
-    res: dict = {
-        "label": f"span index daily replay ({n_days}x100k docs, window={window})",
-        "days": [],
-    }
-    # date-like day labels spanning two "months" (5+5) so the rolling
-    # compaction coda below has real month groups to fold
-    ds_list = [f"2026-{1 + d // 5:02d}-{(d % 5) + 1:02d}" for d in range(n_days)]
-    rescan_days = {0, n_days // 2, n_days - 1}
-    for d in range(n_days):
-        ds = ds_list[d]
-        day_docs = docs.filter(F.col("_day") == d).drop("_day")
-        n = day_docs.count()
-        t0 = time.monotonic()
-        append_shard_to_span_index(day_docs, idx, ds, window=window)
-        append_sec = time.monotonic() - t0
-        t0 = time.monotonic()
-        occ = incremental_span_occurrences(
-            day_docs,
-            idx,
-            before_ds=ds,
-            only_ds=marker_complete_days(idx),
-        )
-        flagged = occ.count()
-        probe_sec = time.monotonic() - t0
-        # the STATS probe (summary-sidecar path, VERDICT r13 #2): its
-        # stored side is one row per (day, hash), so its cost and
-        # output must stay decoupled from flagged_occurrences growth
-        # (72k->677k over this replay) — the per-day stats_sec series
-        # is the evidence
-        t0 = time.monotonic()
-        stats_rows = incremental_span_stats(
-            day_docs,
-            idx,
-            before_ds=ds,
-            only_ds=marker_complete_days(idx),
-        ).count()
-        stats_sec = time.monotonic() - t0
-        row = {
-            "ds": ds,
-            "n_docs": n,
-            "append_sec": round(append_sec, 2),
-            "probe_sec": round(probe_sec, 2),
-            "flagged_occurrences": flagged,
-            "stats_sec": round(stats_sec, 2),
-            "stats_rows": stats_rows,
-        }
-        if d in rescan_days:
-            cum = docs.filter(F.col("_day") <= d).drop("_day")
-            t0 = time.monotonic()
-            stats = duplicated_span_stats(cum, window=window)
-            row["rescan_flagged_docs"] = stats.count()
-            row["rescan_sec"] = round(time.monotonic() - t0, 2)
-            row["rescan_n_docs"] = cum.count()
-        res["days"].append(row)
-        _quiesce(spark)
-    first, last = res["days"][0], res["days"][-1]
-    res["probe_flatness_day1_to_dayN"] = round(
-        last["probe_sec"] / first["probe_sec"], 2
-    )
-    res["rescan_growth_day1_to_dayN"] = round(
-        last["rescan_sec"] / first["rescan_sec"], 2
-    )
-    res["probe_vs_rescan_at_dayN"] = round(
-        last["rescan_sec"] / last["probe_sec"], 2
-    )
-    # denominator guarded like stats_sec_growth (ADVICE r14: the
-    # stored value is round(...,2) and a sub-5ms day-1 summary probe
-    # would otherwise crash the whole run after all the expensive work)
-    res["stats_flatness_day1_to_dayN"] = round(
-        last["stats_sec"] / max(first["stats_sec"], 0.01), 2
-    )
-    # interior flatness (VERDICT r14 #4): the endpoint ratio above is
-    # the right headline but hides mid-series spikes (r14 had an
-    # unannotated 21.95 s day-2 stats probe vs 4.9-10.5 s neighbors) —
-    # publish the median and max of the whole series so a recurring
-    # interior cost is visible in the artifact
-    _stats_series = sorted(r["stats_sec"] for r in res["days"])
-    res["stats_sec_median"] = _stats_series[len(_stats_series) // 2]
-    res["stats_sec_max"] = _stats_series[-1]
-    _probe_series = sorted(r["probe_sec"] for r in res["days"])
-    res["probe_sec_median"] = _probe_series[len(_probe_series) // 2]
-    res["probe_sec_max"] = _probe_series[-1]
-    res["flagged_growth_day1_to_dayN"] = round(
-        last["flagged_occurrences"] / max(first["flagged_occurrences"], 1), 2
-    )
-
-    # positions coda (round 15): the rewrite record
-    # (incremental_span_positions — anchor positions + corpus-wide
-    # canonical pick) measured at the replay's deepest state: last
-    # 100k-doc day against 9 stored days.  Its plan is the occurrence
-    # probe plus a same-key window and a day-id semi-join, so its
-    # cost should sit near probe_sec, not rescan_sec.
-    from data_engineering_user_session_analysis_spark.operators.span_index import (
-        incremental_span_positions,
-    )
-
-    _quiesce(spark)
-    last_ds = ds_list[-1]
-    last_day_docs = docs.filter(F.col("_day") == n_days - 1).drop("_day")
-    t0 = time.monotonic()
-    pos_df = incremental_span_positions(
-        last_day_docs, idx, before_ds=last_ds,
-        only_ds=marker_complete_days(idx),
-    )
-    pos_agg = pos_df.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-    ).first()
-    res["positions_last_day"] = {
-        "rows": pos_agg["n"],
-        "kept_canonical": int(pos_agg["kept"] or 0),
-        "sec": round(time.monotonic() - t0, 2),
-        "probe_sec_same_day": res["days"][-1]["probe_sec"],
-    }
-    _quiesce(spark)
-
-    # compaction coda: fold and re-probe the last day's docs as a
-    # hypothetical next day — the flagged count must be identical
-    # (parity across the fold) and the file count drops from
-    # ~n_days×buckets to ~buckets.  Runs in TWO rolling monthly folds
-    # first (VERDICT r13 #6 economics: each fold reads one month, and
-    # the second fold carries the already-folded first month by
-    # hardlink — rows_folded in each report is the bound), then the
-    # full fold.
-    from data_engineering_user_session_analysis_spark.operators.span_index import (
-        compact_span_index,
-    )
-
-    # probe as a hypothetical NEXT day (before_ds past every stored
-    # partition): compaction folds into the max folded ds, so a
-    # before_ds at the fold target would scope the fold out — the
-    # operational loop always probes ds strictly beyond it
-    next_ds = "2027-01-01"
-    last_docs = docs.filter(F.col("_day") == n_days - 1).drop("_day")
-
-    # warm-paired probe (VERDICT r14 #1): the r14 artifact showed the
-    # post-fold probe 3-4x slower on identical output and couldn't say
-    # whether that was the fold's ~40M-row rewrite evicting the page
-    # cache (measurement bias) or a layout that lost bucket alignment
-    # (real regression).  Run every pre/post probe TWICE back-to-back:
-    # the first trial carries the cold-cache cost of whatever ran
-    # before it, the min is the layout's own cost — the r13 sweep
-    # protocol.  If warm-post ~ warm-pre the layout is fine and the
-    # r14 number was cache bias; a warm-post that stays high is a real
-    # plan/layout problem.
-    # Each trial is bracketed by its own CPU probe (r15: the final-tree
-    # battery read warm-post/pre 2.84 where the inherited run read 0.98
-    # on the identical code path with exact parity and the bucket plan
-    # pin green — the tier-level start/end probes could not say whether
-    # a steal spike sat inside the probe pair.  With per-trial units in
-    # the artifact, that adjudication needs no re-run.)
-    def _warm_probe() -> "tuple[int, float, float, list[float]]":
-        trials: list[float] = []
-        units: list[float] = []
-        cnt = 0
-        for _ in range(2):
-            _quiesce(spark)
-            units.append(_cpu_speed_probe()["cpu_probe_sec"])
-            t0 = time.monotonic()
-            cnt = incremental_span_occurrences(
-                last_docs, idx, before_ds=next_ds,
-                only_ds=marker_complete_days(idx),
-            ).count()
-            trials.append(time.monotonic() - t0)
-        return cnt, trials[0], min(trials), units
-
-    pre, pre_sec, pre_sec_warm, pre_units = _warm_probe()
-    # rolling monthly folds: month 1 alone, then month 2 (month 1's
-    # fold is carried by hardlink — its rows are NOT re-read)
-    rolling = []
-    for cutoff in ("2026-02-01", "2026-03-01"):
-        t0 = time.monotonic()
-        rrep = compact_span_index(
-            spark, idx, before_ds=cutoff, granularity="month"
-        )
-        rolling.append(
-            {
-                "before_ds": cutoff,
-                "fold_sec": round(time.monotonic() - t0, 2),
-                "rows_folded": sum(fd["rows"] for fd in rrep.get("folds", [])),
-                "folds": [
-                    {"into_ds": fd["into_ds"], "n_days": len(fd["days"])}
-                    for fd in rrep.get("folds", [])
-                ],
-                "files_after": rrep.get("files_after"),
-            }
-        )
-        _quiesce(spark)
-    res["rolling_compaction"] = rolling
-    # rolling parity: the two monthly folds must not change the probe
-    mid, mid_sec, mid_sec_warm, mid_units = _warm_probe()
-    res["rolling_probe_parity"] = {
-        "flagged_pre": pre,
-        "flagged_post_rolling": mid,
-        "parity": pre == mid,
-        "probe_sec_post_rolling": round(mid_sec, 2),
-        "probe_sec_post_rolling_warm": round(mid_sec_warm, 2),
-        "probe_trial_cpu_units": mid_units,
-    }
-    _quiesce(spark)
-    t0 = time.monotonic()
-    creport = compact_span_index(spark, idx)
-    compact_sec = time.monotonic() - t0
-    # the fold's O(corpus) localCheckpoint blocks release on GC —
-    # quiesce so the post probe measures the layout, not the fold's
-    # residue
-    post, post_sec, post_sec_warm, post_units = _warm_probe()
-    res["compaction"] = {
-        "files_before": creport["files_before"],
-        "files_after": creport["files_after"],
-        "partitions_folded": creport["partitions_before"],
-        "compact_sec": round(compact_sec, 2),
-        "probe_flagged_pre": pre,
-        "probe_flagged_post": post,
-        "probe_parity": pre == post,
-        "probe_sec_pre": round(pre_sec, 2),
-        "probe_sec_pre_warm": round(pre_sec_warm, 2),
-        "probe_sec_post": round(post_sec, 2),
-        "probe_sec_post_warm": round(post_sec_warm, 2),
-        # the adjudication field: warm-post vs warm-pre is the fold's
-        # REAL effect on probe cost, cold-trial dispersion removed
-        "probe_warm_post_over_pre": round(
-            post_sec_warm / max(pre_sec_warm, 0.01), 2
-        ),
-        "probe_trial_cpu_units_pre": pre_units,
-        "probe_trial_cpu_units_post": post_units,
-    }
-
-    # hot-hash coda (VERDICT r13 #2 "Done"): a boilerplate window
-    # stored in N documents (the "header in 1% of the corpus" case).
-    # The occurrence probe's output re-materializes all N stored
-    # occurrences every day the hash recurs; the stats probe reads the
-    # summary sidecar — ONE row per stored day — so its cost and
-    # output must be independent of N.  Two decades of N pin the
-    # claim: occ output grows ~10x, stats output and time do not.
-    hot = " ".join(f"h{i}" for i in range(window))
-    res["hot_hash"] = []
-    for mult in (20_000, 200_000):
-        hidx = os.path.join(OUT, f"span_hot_{mult}")
-        _sh.rmtree(hidx, ignore_errors=True)
-        day1 = spark.range(mult).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit(hot + " u"), F.col("id").cast("string")).alias(
-                "text"
-            ),
-        )
-        append_shard_to_span_index(day1, hidx, "2026-01-01", window=window)
-        probe_docs = spark.range(100).select(
-            (F.col("id") + 10_000_000).alias("doc_id"),
-            F.concat(F.lit(hot + " z"), F.col("id").cast("string")).alias(
-                "text"
-            ),
-        )
-        _quiesce(spark)
-        t0 = time.monotonic()
-        occ_rows = incremental_span_occurrences(
-            probe_docs, hidx, before_ds="2026-01-02"
-        ).count()
-        occ_sec = time.monotonic() - t0
-        t0 = time.monotonic()
-        stats_rows = incremental_span_stats(
-            probe_docs, hidx, before_ds="2026-01-02"
-        ).count()
-        stats_sec = time.monotonic() - t0
-        res["hot_hash"].append(
-            {
-                "stored_multiplicity": mult,
-                "occurrence_probe_rows": occ_rows,
-                "occurrence_probe_sec": round(occ_sec, 2),
-                "stats_probe_rows": stats_rows,
-                "stats_probe_sec": round(stats_sec, 2),
-            }
-        )
-        _sh.rmtree(hidx, ignore_errors=True)
-    a, b = res["hot_hash"]
-    res["hot_hash_decoupling"] = {
-        "occ_rows_growth": round(
-            b["occurrence_probe_rows"] / max(a["occurrence_probe_rows"], 1), 2
-        ),
-        "stats_rows_growth": round(
-            b["stats_probe_rows"] / max(a["stats_probe_rows"], 1), 2
-        ),
-        "stats_sec_growth": round(
-            b["stats_probe_sec"] / max(a["stats_probe_sec"], 0.01), 2
-        ),
-    }
     return res
 
 
@@ -2111,90 +974,6 @@ def measure_corpus_prep_ngram_gate(spark, replicas: int = 200) -> dict:
     return res
 
 
-def measure_corpus_prep_indexed(spark, replicas: int = 200) -> dict:
-    """VERDICT r11 #4 closer: the same 1M corpus-prep replay with the
-    near-dup stage fed from a PERSISTENT MinHash index
-    (``CorpusPrepConfig.minhash_index_path``) instead of the inline
-    shingle→64-hash-signature→set passes.  The index is built by the
-    SEPARATE ``corpusprep1mindexbuild`` tier (own JVM — building it
-    in-session contaminated the first measurement: every prep stage,
-    including pre-neardup stages the index never touches, inflated
-    25-150% from the build's heap/shuffle residue even after
-    ``_quiesce``): in production the daily pipeline pays the build
-    incrementally as shards arrive (``append_shard_to_minhash_
-    index``), so prep-time reuse is the amortization this measures —
-    the honest comparison is ``stage_sec.neardup_deduped`` here vs
-    the same-day inline replay's.  The corpus is deterministic, so
-    the builder JVM and this one derive identical docs."""
-    from data_engineering_user_session_analysis_spark.pipelines.corpus_prep import (
-        CorpusPrepConfig,
-        prepare_corpus,
-    )
-
-    idx = os.environ.get(
-        "SPARK_GRAFT_MH_INDEX_DIR", "/tmp/stress_mh_idx_shared/idx"
-    )
-    if not os.path.isdir(idx):
-        raise SystemExit(
-            f"no prebuilt index at {idx}: run --tier corpusprep1mindexbuild "
-            "first (separate JVM by design)"
-        )
-    _quiesce(spark)
-    docs = _distinct_doc_corpus(spark, replicas)
-    n_docs = docs.count()
-    res: dict = {
-        "label": f"corpus prep 1M, index-fed neardup ({replicas} clone shards)"
-    }
-    res["n_docs"] = n_docs
-    res["index_dir"] = idx
-    stage_timings: dict[str, float] = {}
-    t0 = time.monotonic()
-    result, report = prepare_corpus(
-        docs,
-        config=CorpusPrepConfig(pack_budget=2048, minhash_index_path=idx),
-        stage_timings=stage_timings,
-    )
-    result.write.format("noop").mode("overwrite").save()
-    total = time.monotonic() - t0
-    cores = spark.sparkContext.defaultParallelism
-    res["report"] = report
-    res["stage_sec"] = stage_timings
-    res["dominant_stage"] = max(stage_timings, key=stage_timings.get)
-    res["total_sec"] = round(total, 2)
-    res["docs_per_sec"] = round(n_docs / total, 1)
-    res["docs_per_sec_per_core"] = round(n_docs / total / cores, 2)
-    return res
-
-
-def measure_corpus_prep_index_build(spark, replicas: int = 200) -> dict:
-    """Builder half of the r11 #4 measurement: one batch
-    ``write_minhash_index`` over the post-scrub 1M corpus at the
-    shared env path — its cost is the figure the daily pipeline
-    amortizes across ``append_shard_to_minhash_index`` increments."""
-    import shutil
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        write_minhash_index,
-    )
-    from data_engineering_user_session_analysis_spark.operators.scrubbing import scrub_pii
-
-    idx = os.environ.get(
-        "SPARK_GRAFT_MH_INDEX_DIR", "/tmp/stress_mh_idx_shared/idx"
-    )
-    shutil.rmtree(os.path.dirname(idx), ignore_errors=True)
-    _quiesce(spark)
-    docs = _distinct_doc_corpus(spark, replicas)
-    n_docs = docs.count()
-    t0 = time.monotonic()
-    write_minhash_index(scrub_pii(docs, "text"), idx)
-    return {
-        "label": f"minhash index batch build over post-scrub 1M ({replicas} shards)",
-        "n_docs": n_docs,
-        "index_dir": idx,
-        "index_build_sec": round(time.monotonic() - t0, 2),
-    }
-
-
 def run_tier(tier: str) -> list[dict]:
     """One measurement tier in THIS process.  Tiers are designed to
     run in separate JVMs: a single long-lived session accumulates
@@ -2263,57 +1042,6 @@ def _run_tier_inner(tier: str) -> list[dict]:
         ]
     if tier == "events100":
         return [measure_events_100x(spark)]
-    if tier == "docsindex":
-        return [measure_docs_index(spark)]
-    if tier == "minhashrecall":
-        # round-9: measured banding-model calibration for the text
-        # index on a genuine partial-overlap corpus at 200k docs
-        return [measure_minhash_recall_sensor(spark)]
-    if tier == "minhashrecall1m":
-        # round-10: the text sensor one decade up (1M prefix-variant
-        # docs) so both text and vector families have a 1M measured
-        # calibration point (VERDICT r09 next #4)
-        return [measure_minhash_recall_sensor(spark, variants_per_doc=200)]
-    if tier == "minhashautotune":
-        # round-10 symmetry closer: the text actuator replay at 1M.
-        # target 0.9 demonstrates the honest fast-path (the corpus's
-        # pair mass at threshold 0.5 is mostly high-J, measured 0.96
-        # at the default geometry -> zero rebuilds); target 0.97 sits
-        # above that measurement and forces the breach.  Round 11:
-        # with the ADVICE-r10 candidate-load ceiling in place the
-        # breach path forks — at the default ceiling the walk REFUSES
-        # the solve's wider banding (55x4 priced ~4.5k candidates/doc:
-        # this corpus is all near-dup clusters, so the measured-
-        # collision-rate J_bg prices band-widening steeply) and stops
-        # exhausted with the refusal record; with the ceiling lifted
-        # the same walk re-bands to 55x4 and measures recall 1.0 (the
-        # round-10 trail).  Both runs recorded.
-        return [
-            measure_minhash_recall_autotune(spark),
-            measure_minhash_recall_autotune(spark, recall_target=0.97),
-            measure_minhash_recall_autotune(
-                spark, recall_target=0.97, max_candidate_load=None
-            ),
-        ]
-    if tier == "vecautotune":
-        # round-10: the hyperplane actuator replay — a low-recall 1M
-        # clustered index brought to a measured target via inverse
-        # banding solve + rebuild ladder (VERDICT r09 next #1)
-        return [measure_vector_recall_autotune(spark)]
-    if tier == "vecrecall":
-        # round-9: measured prediction-vs-recall rows for the vector
-        # index's banding model at 1M (the sensor's scale debut)
-        return [measure_vector_recall_sensor(spark)]
-    if tier == "vecindex":
-        return [measure_vectors_index(spark)]
-    if tier == "vecautorebuild":
-        return [measure_vector_index_auto_rebuild(spark)]
-    if tier == "truthcache1m":
-        # round-11: the content-keyed truth cache demonstrated at 1M
-        # (two sensor calls on one unchanged index)
-        return [measure_truth_cache_1m(spark)]
-    if tier == "spanindex1m":
-        return [measure_span_index(spark)]
     if tier == "spanrecall1m":
         return [measure_span_recall(spark)]
     if tier == "spandedup1m":
@@ -2334,15 +1062,6 @@ def _run_tier_inner(tier: str) -> list[dict]:
         # round-12: marginal cost of the opt-in bigram-repetition
         # gate at 1M (pair with a same-round gate-off corpusprep1m)
         return [measure_corpus_prep_ngram_gate(spark)]
-    if tier == "corpusprep1mindexbuild":
-        # round-12 (VERDICT r11 #4): batch-build the shared MinHash
-        # index in ITS OWN JVM so the build's heap/shuffle residue
-        # cannot contaminate the indexed prep measurement
-        return [measure_corpus_prep_index_build(spark)]
-    if tier == "corpusprep1mindexed":
-        # round-12: the same replay with the near-dup stage fed from
-        # the prebuilt persistent MinHash index (VERDICT r11 #4)
-        return [measure_corpus_prep_indexed(spark)]
     if tier == "docs1m":
         # round-9: one more doubling for the docs star tier (500k →
         # 1M docs) — edges/doc + wall-time linearity evidence
@@ -2387,10 +1106,6 @@ def main() -> None:
         tiers.append("docs100")
     if "--events-100x" in sys.argv or os.environ.get("SPARK_GRAFT_EVENTS_100X"):
         tiers.append("events100")
-    if "--docs-index" in sys.argv or os.environ.get("SPARK_GRAFT_DOCSINDEX"):
-        tiers.append("docsindex")
-    if "--vec-index" in sys.argv or os.environ.get("SPARK_GRAFT_VECINDEX"):
-        tiers.append("vecindex")
 
     me = os.path.abspath(__file__)
     results: dict[str, list[dict]] = {}
@@ -2471,7 +1186,7 @@ def main() -> None:
         # (total candidates minus the true clone-pair mass, which
         # grows quadratically in clone-group size BY CORRECTNESS —
         # every clone pair is a true near-dup) should stay ~flat at
-        # the lsh_params budget from 2k -> 20k -> 200k vectors.
+        # the sizing law's budget from 2k -> 20k -> 200k vectors.
         def _rand_per_vec(r: dict) -> float:
             rand = r["lsh_candidates"] - r.get("clone_true_pairs", 0)
             return round(rand / r["n_vectors"], 2)
@@ -2484,9 +1199,6 @@ def main() -> None:
             },
             "candidate_to_pair_ratio_100x": emb100["lsh_candidate_to_pair_ratio"],
             "clone_pair_recall_100x": emb100["clone_pair_recall"],
-            # star-edge graph vs the quadratic all-pairs output
-            "dedup_edges_100x": emb100.get("dedup_edges"),
-            "dedup_edges_sec_100x": emb100.get("dedup_edges_sec"),
             "allpairs_100x": emb100.get("embedding_neardup_pairs"),
             "allpairs_sec_100x": emb100.get("embedding_neardup_sec"),
         }
@@ -2554,16 +1266,6 @@ def main() -> None:
             "n_events": ev100["n_events"],
             "session_rollup_sec": ev100["session_rollup_sec"],
             "session_events_per_sec": ev100["session_events_per_sec"],
-        }
-    di = _tier("docsindex")[0]
-    if di is not None:
-        summary["docs_index"] = {
-            "n_days": di["n_days"],
-            "final_index_docs": di["final_index_docs"],
-            "probe_sec_per_day": di["probe_sec_per_day"],
-            "probe_flatness_last_over_first": di[
-                "probe_flatness_last_over_first"
-            ],
         }
     print(json.dumps(summary))
 

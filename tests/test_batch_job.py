@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.jobs.batch_job import build_lake, run_daily_job
@@ -105,25 +106,56 @@ def test_compact_verb_after_daily_job(spark, sf_small, tmp_path):
     assert after == before
 
 
-def test_unknown_verb_fails_before_spark(tmp_path, monkeypatch):
-    """An unrecognized verb is not a date: ``main`` must refuse it
-    before it starts a session or writes serving tables under
-    ``ds=<verb>``."""
-    import pytest
+#: command lines ``main`` must refuse by name, with the message
+#: pattern each one exits with
+BAD_COMMAND_LINES = [
+    (["span-index", "2024-01-05", "{tmp}/idx"], "'span-index'.*daily"),
+    (["reindex", "{tmp}/idx"], "'reindex'.*daily"),
+    (["20240105", "{tmp}/lake"], "'20240105'.*daily"),
+    (["sessions", "2024-1-5", "{tmp}/lake"], "sessions: '2024-1-5'"),
+    (["backfill", "2024-01-01", "2024-W01-1", "{tmp}/lake"], "'2024-W01-1'"),
+    (["compact", "2024-01-05T00:00", "{tmp}/lake"], "compact: '2024-01-05T00:00'"),
+    (["daily"], "daily: missing date"),
+    (["daily", "2024-01-05", "--recall-check"], "'--recall-check'"),
+    (["daily", "2024-01-05", "--span-index", "{tmp}/lake"], "'--span-index'"),
+]
 
+
+def test_unknown_verb_fails_before_spark(tmp_path, monkeypatch):
+    """An unrecognized verb, an option, or a date that is not
+    canonical YYYY-MM-DD: ``main`` must refuse each by name before it
+    starts a session or writes anything (``job 20240105`` once wrote
+    serving tables under ``ds=20240105``; ``job sessions 2024-1-5``
+    wrote a state partition that string order sorts after
+    ``2024-09-30``)."""
     import data_engineering_user_session_analysis_spark as pkg
     from data_engineering_user_session_analysis_spark.jobs.batch_job import main
 
     def no_spark(*_a, **_k):
-        raise AssertionError("get_spark called for an unknown verb")
+        raise AssertionError("get_spark called for a bad command line")
 
     monkeypatch.setattr(pkg, "get_spark", no_spark)
-    serving = tmp_path / "serving"
-    monkeypatch.setenv("SERVING_PATH", str(serving))
-    with pytest.raises(SystemExit, match="'reindex'.*daily"):
-        main(["job", "reindex", str(tmp_path / "idx")])
-    assert not serving.exists()
-    assert not (tmp_path / "idx").exists()
+    for k, (args, message) in enumerate(BAD_COMMAND_LINES):
+        case = tmp_path / f"case{k}"
+        case.mkdir()
+        monkeypatch.setenv("LAKE_PATH", str(case / "lake"))
+        monkeypatch.setenv("SERVING_PATH", str(case / "serving"))
+        with pytest.raises(SystemExit, match=message):
+            main(["job", *(a.format(tmp=case) for a in args)])
+        assert list(case.iterdir()) == [], args
+
+
+def test_daily_pipeline_rejects_bad_ds_before_writing(spark, sf_small, tmp_path):
+    """The pipeline parses ``ds`` before its first write: a malformed
+    date leaves no quarantine, session or serving partition behind."""
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
+
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    out = tmp_path / "serving"
+    with pytest.raises(ValueError, match="YYYY-MM-DD"):
+        run_daily_pipeline(spark, lake, "20240105", str(out))
+    assert not out.exists()
 
 
 def test_backfill_range_matches_daily_runs(spark, sf_small, tmp_path):
@@ -326,46 +358,6 @@ def test_daily_pipeline_on_stream_written_lake(spark, sf_small, tmp_path):
     assert spark.read.parquet(lake).count() == lake_rows
 
 
-def test_docs_index_step_probes_and_is_idempotent(spark, sf_small, tmp_path):
-    """The daily doc-shard index step: day 1 self-dedups and builds
-    the ds-partitioned index; day 2 probes ONLY prior days, drops its
-    planted exact copies, and a day-2 re-run reproduces the identical
-    report (the probe cannot see its own rows)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_docs_index_step
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    copies = even.orderBy("doc_id").limit(5).withColumn(
-        "doc_id", F.col("doc_id") + 1_000_000
-    )
-    day2_docs = docs.filter(F.col("doc_id") % 2 == 1).unionByName(copies)
-    p1, p2 = str(tmp_path / "shard1"), str(tmp_path / "shard2")
-    even.write.parquet(p1)
-    day2_docs.write.parquet(p2)
-    out = str(tmp_path / "serving")
-
-    r1 = run_docs_index_step(spark, p1, out, "2024-01-01")
-    assert r1["dup_hits"] is None  # first day: no prior index
-    assert 0 < r1["indexed_rows"] <= r1["shard_rows"]
-
-    r2 = run_docs_index_step(spark, p2, out, "2024-01-02")
-    # the 5 planted exact copies of indexed day-1 docs must hit
-    # (exact copies of day-1 docs that SURVIVED day-1 self-dedup
-    # still hit via their canonical near-dup)
-    assert r2["dup_hits"] >= 4
-    assert r2["indexed_rows"] < r2["shard_rows"]
-
-    r2_rerun = run_docs_index_step(spark, p2, out, "2024-01-02")
-    assert r2_rerun == r2
-    import os
-
-    ds_parts = sorted(os.listdir(os.path.join(out, "doc_index", "buckets")))
-    assert ds_parts == ["ds=2024-01-01", "ds=2024-01-02"]
-
-
 def test_daily_pipeline_quarantines_and_excludes_bad_rows(spark, sf_small, tmp_path):
     """A poison row (null user_id) must land in the quarantine sink
     AND be excluded from sessionization and serving — dead-lettered
@@ -436,414 +428,3 @@ def test_quarantine_rerun_clears_stale_rows(spark, sf_small, tmp_path):
     assert spark.read.parquet(qdir).count() == 0
 
 
-def test_docs_index_step_skips_incomplete_day(spark, sf_small, tmp_path):
-    """A crashed prior-day index write (no bucket _SUCCESS) must be
-    EXCLUDED from the probe — its partial files must not generate
-    candidates — while complete sibling days still hit."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_docs_index_step
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    # synthetic shingle-disjoint docs: every word carries its doc
-    # index, so the ONLY possible near-dup hits are the planted exact
-    # copies — the counts below are exact, not fixture-dependent
-    def mk(ids):
-        return spark.createDataFrame(
-            [(i, " ".join(f"w{i}x{j}" for j in range(12))) for i in ids],
-            "doc_id long, text string",
-        )
-
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    mk(range(0, 10)).write.parquet(p1)
-    mk(range(10, 20)).write.parquet(p2)
-    out = str(tmp_path / "serving")
-    run_docs_index_step(spark, p1, out, "2024-01-01")
-    run_docs_index_step(spark, p2, out, "2024-01-02")
-
-    # simulate a crashed day-2 write: bucket _SUCCESS never landed
-    os.remove(
-        os.path.join(out, "doc_index", "buckets", "ds=2024-01-02", "_SUCCESS")
-    )
-
-    # day 3 = exact copies of 3 day-1 docs AND 3 day-2 docs
-    copies1 = mk(range(0, 3)).withColumn("doc_id", F.col("doc_id") + 2_000_000)
-    copies2 = mk(range(10, 13)).withColumn("doc_id", F.col("doc_id") + 3_000_000)
-    p3 = str(tmp_path / "s3")
-    copies1.unionByName(copies2).write.parquet(p3)
-    r3 = run_docs_index_step(spark, p3, out, "2024-01-03")
-    # exactly the day-1 copies hit; the incomplete day-2 partition
-    # contributed no candidates, so its copies survive (dup'd rows
-    # that a complete day 2 WOULD have caught — re-running day 2
-    # rebuilds its partition and restores them to the probe surface)
-    assert r3["dup_hits"] == 3
-    assert r3["indexed_rows"] == 3
-
-
-def test_vectors_index_step_probes_and_is_idempotent(spark, sf_small, tmp_path):
-    """The daily embedding-shard index step: day 1 self-dedups and
-    builds the ds-partitioned vector index; day 2 probes ONLY prior
-    days, drops its planted exact clones (cosine 1.0 >= 0.9), and a
-    day-2 re-run reproduces the identical report."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_vectors_index_step
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
-    even = emb.filter(F.col("vec_id") % 2 == 0)
-    clones = even.orderBy("vec_id").limit(5).withColumn(
-        "vec_id", F.col("vec_id") + 1_000_000
-    )
-    day2 = emb.filter(F.col("vec_id") % 2 == 1).unionByName(clones)
-    p1, p2 = str(tmp_path / "shard1"), str(tmp_path / "shard2")
-    even.write.parquet(p1)
-    day2.write.parquet(p2)
-    out = str(tmp_path / "serving")
-
-    r1 = run_vectors_index_step(spark, p1, out, "2024-01-01")
-    assert r1["dup_hits"] is None
-    assert 0 < r1["indexed_rows"] <= r1["shard_rows"]
-
-    r2 = run_vectors_index_step(spark, p2, out, "2024-01-02")
-    # clones of day-1 vectors that survived day-1 self-dedup hit at
-    # cosine 1.0 (a clone of a dropped vector still hits via the
-    # canonical representative)
-    assert r2["dup_hits"] >= 4
-    assert r2["indexed_rows"] < r2["shard_rows"]
-
-    r2_rerun = run_vectors_index_step(spark, p2, out, "2024-01-02")
-    assert r2_rerun == r2
-    ds_parts = sorted(os.listdir(os.path.join(out, "vector_index", "buckets")))
-    assert ds_parts == ["ds=2024-01-01", "ds=2024-01-02"]
-
-
-def test_vectors_index_step_auto_rebuilds_outgrown_geometry(spark, sf_small, tmp_path):
-    """The outgrown alarm's consumer (VERDICT r08 #5): a 4-day replay
-    with a deliberately small design horizon (target_days=2) trips
-    the geometry-outgrown check on day 3 — with ``auto_rebuild=True``
-    the step rebuilds in-line sized from the observed daily rate,
-    clears the alarm, and day 4 still catches planted clones of
-    day-1 vectors ACROSS the rebuild (the re-bucketed signature
-    space stays probe-correct)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_vectors_index_step
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        _read_vector_params,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
-    shards = [emb.filter(F.col("vec_id") % 4 == i) for i in range(3)]
-    clones = shards[0].orderBy("vec_id").limit(5).withColumn(
-        "vec_id", F.col("vec_id") + 2_000_000
-    )
-    shards.append(emb.filter(F.col("vec_id") % 4 == 3).unionByName(clones))
-    paths = []
-    for i, s in enumerate(shards):
-        p = str(tmp_path / f"shard{i}")
-        s.write.parquet(p)
-        paths.append(p)
-    out = str(tmp_path / "serving")
-    idx = os.path.join(out, "vector_index")
-    days = [f"2024-01-0{i + 1}" for i in range(4)]
-
-    r1 = run_vectors_index_step(
-        spark, paths[0], out, days[0], target_days=2, auto_rebuild=True
-    )
-    # day 1 freezes the design point at shard_rows · target_days
-    assert _read_vector_params(spark, idx)["target_n"] == r1["shard_rows"] * 2
-
-    r2 = run_vectors_index_step(
-        spark, paths[1], out, days[1], target_days=2, auto_rebuild=True
-    )
-    # at (not past) the design point: the alarm must NOT trip early
-    assert r2["index_rebuilt"] is None
-
-    r3 = run_vectors_index_step(
-        spark, paths[2], out, days[2], target_days=2, auto_rebuild=True
-    )
-    assert r3["index_rebuilt"] is not None, "day 3 exceeds the 2-day horizon"
-    assert r3["index_outgrown"]["outgrown"] is False, "rebuild must clear the alarm"
-    new = _read_vector_params(spark, idx)
-    assert new["target_n"] >= 2 * r3["index_outgrown"]["indexed_n"]
-    assert new["target_n"] > r1["shard_rows"] * 2
-
-    r4 = run_vectors_index_step(
-        spark, paths[3], out, days[3], target_days=2, auto_rebuild=True
-    )
-    # clones of day-1 vectors hit through the REBUILT signature space
-    assert r4["dup_hits"] >= 4
-    # per-day completeness markers survived the rebuild for all
-    # pre-rebuild-complete days (probe surface stayed whole)
-    ds_parts = sorted(
-        p for p in os.listdir(os.path.join(idx, "buckets")) if p.startswith("ds=")
-    )
-    assert ds_parts == [f"ds={d}" for d in days]
-
-
-def test_index_steps_attach_recall_sensors(spark, sf_small, tmp_path):
-    """`recall_sample_q` wires the measured-recall sensors into the
-    daily index-step reports (CLI: `job daily --recall-check`): both
-    steps must attach a `recall_check` dict carrying prediction next
-    to measurement at the step's own threshold — and the planted
-    exact clones indexed on day 1 must be RETRIEVED truth for day 2's
-    sensor (clone pairs are structural recall 1.0 in both families).
-    Without the knob the reports are unchanged (no sensor cost on the
-    default path)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_docs_index_step,
-        run_vectors_index_step,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    emb = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
-    pd_, pe = str(tmp_path / "docs"), str(tmp_path / "emb")
-    docs.write.parquet(pd_)
-    emb.write.parquet(pe)
-    out = str(tmp_path / "serving")
-
-    rd = run_docs_index_step(spark, pd_, out, "2024-01-01", recall_sample_q=6)
-    rv = run_vectors_index_step(spark, pe, out, "2024-01-01", recall_sample_q=6)
-    for r, fam in ((rd, "minhash"), (rv, "vector")):
-        rc = r["recall_check"]
-        assert rc["sample_q"] == 6, (fam, rc)
-        assert "predicted_recall_at_threshold" in rc
-        assert rc["recall_at_threshold"] is None or 0.0 <= rc["recall_at_threshold"] <= 1.0
-
-    plain = run_docs_index_step(spark, pd_, out, "2024-01-02")
-    assert "recall_check" not in plain
-
-
-def test_vectors_index_step_recall_floor_consumer(spark, tmp_path):
-    """Round-10 symmetry: geometry growth has outgrown->rebuild, and
-    recall now has breached->tune.  A day-1 index frozen with a
-    deliberately weak geometry (1 table, 16 planes) measures
-    near-zero recall at the step's threshold once day 2 lands its
-    ~0.94-cosine variants; with recall_floor + auto_tune_recall the
-    step trips `recall_breached`, runs the geometry autotune in-line,
-    and the stored params end at the tuner's met geometry.  Without
-    the floor the report shape is unchanged (no breach keys)."""
-    import numpy as np
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_vectors_index_step,
-    )
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        _read_vector_params,
-        append_shard_to_vector_index,
-    )
-
-    rng = np.random.RandomState(31)
-    dim = 16
-    base = rng.randn(240, dim)
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    day1 = spark.createDataFrame(
-        [(i, [float(x) for x in base[i]]) for i in range(240)],
-        "vec_id long, embedding array<float>",
-    )
-    out = str(tmp_path / "serving")
-    idx = os.path.join(out, "vector_index")
-    # day 1 freezes a starved geometry (outside the step, as a
-    # legacy/misconfigured deployment would have)
-    append_shard_to_vector_index(
-        day1, idx, "2024-01-01", dim=dim, tables=1, planes=16
-    )
-
-    rows = []
-    for i in range(120):  # ~0.94-cosine variants of day-1 vectors
-        u = rng.randn(dim)
-        u /= np.linalg.norm(u)
-        v = base[i] + 0.35 * u
-        rows.append((10_000 + i, [float(x) for x in v]))
-    p2 = str(tmp_path / "day2_shard")
-    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(p2)
-
-    rep = run_vectors_index_step(
-        spark, p2, out, "2024-01-02", threshold=0.9,
-        recall_sample_q=20, recall_floor=0.9, auto_tune_recall=True,
-    )
-    # the sensor catches the breach the weak geometry causes...
-    assert rep["recall_check"]["recall_at_threshold"] is not None
-    assert rep["recall_check"]["recall_at_threshold"] < 0.9, rep["recall_check"]
-    assert rep["recall_breached"] is True
-    # ...and the in-line tuner brings it to the measured floor
-    tuned = rep["recall_tuned"]
-    assert tuned is not None and tuned["met"], tuned
-    assert tuned["recall_at_threshold"] >= 0.9
-    stored = _read_vector_params(spark, idx)
-    assert (stored["tables"], stored["planes"]) == (
-        tuned["tables"], tuned["planes"],
-    )
-    assert stored["dim"] == dim
-
-    # re-run of the day without a floor: sensor only, no breach keys
-    rep2 = run_vectors_index_step(
-        spark, p2, out, "2024-01-02", threshold=0.9, recall_sample_q=5
-    )
-    assert "recall_breached" not in rep2 and "recall_tuned" not in rep2
-
-
-def test_docs_index_step_recall_floor_consumer(spark, tmp_path):
-    """The docs-step twin of the vectors-step breached->tune pair: a
-    day-2 shard of ~0.55-Jaccard prefix variants measures below a
-    0.9 floor at the default 16x4 banding; with auto_tune_recall the
-    step re-bands in-line (minhash_index_recall_autotune) and the
-    stored params end at the tuner's met geometry."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_docs_index_step,
-    )
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        _read_minhash_params,
-        append_shard_to_minhash_index,
-    )
-
-    base_rows, day2_rows = [], []
-    for i in range(150):
-        toks = [f"d{i}w{j}" for j in range(42)]
-        base_rows.append((i, " ".join(toks)))
-        keep = 22 + (i * 7) % 6  # prefix fractions ~0.52-0.64
-        day2_rows.append((10_000 + i, " ".join(toks[:keep])))
-    out = str(tmp_path / "serving")
-    idx = os.path.join(out, "doc_index")
-    append_shard_to_minhash_index(
-        spark.createDataFrame(base_rows, "doc_id long, text string"),
-        idx, "2024-01-01",
-    )
-    p2 = str(tmp_path / "day2_docs")
-    spark.createDataFrame(day2_rows, "doc_id long, text string").write.parquet(p2)
-
-    rep = run_docs_index_step(
-        spark, p2, out, "2024-01-02", threshold=0.5,
-        recall_sample_q=25, recall_floor=0.9, auto_tune_recall=True,
-    )
-    assert rep["recall_check"]["recall_at_threshold"] is not None
-    assert rep["recall_check"]["recall_at_threshold"] < 0.9, rep["recall_check"]
-    assert rep["recall_breached"] is True
-    tuned = rep["recall_tuned"]
-    assert tuned is not None and tuned["met"], tuned
-    assert tuned["recall_at_threshold"] >= 0.9
-    stored = _read_minhash_params(spark, idx)
-    assert (stored["bands"], stored["rows_per_band"]) == (
-        tuned["bands"], tuned["rows_per_band"],
-    )
-
-    # floorless re-run keeps the old report shape
-    rep2 = run_docs_index_step(
-        spark, p2, out, "2024-01-02", threshold=0.5, recall_sample_q=5
-    )
-    assert "recall_breached" not in rep2 and "recall_tuned" not in rep2
-
-
-def test_recall_floor_without_sample_q_raises(spark, tmp_path):
-    """ADVICE r10 (medium): a recall_floor with no recall_sample_q
-    used to be silently inert — the breach check lives inside the
-    sensor branch, so the caller's alarm never armed and the report
-    carried no recall_breached key.  Both index steps must refuse the
-    configuration up front, before touching any data."""
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_docs_index_step,
-        run_vectors_index_step,
-    )
-
-    for fn, path in (
-        (run_docs_index_step, str(tmp_path / "nonexistent_docs")),
-        (run_vectors_index_step, str(tmp_path / "nonexistent_emb")),
-    ):
-        with pytest.raises(ValueError, match="recall_sample_q"):
-            fn(spark, path, str(tmp_path / "out"), "2024-01-01",
-               recall_floor=0.8)
-        with pytest.raises(ValueError, match="recall_sample_q"):
-            fn(spark, path, str(tmp_path / "out"), "2024-01-01",
-               recall_floor=0.8, recall_sample_q=0)
-        # a tune consumer with no floor to breach is equally inert
-        with pytest.raises(ValueError, match="recall_floor"):
-            fn(spark, path, str(tmp_path / "out"), "2024-01-01",
-               recall_sample_q=20, auto_tune_recall=True)
-
-
-def test_daily_pipeline_span_step_with_positions(spark, sf_small, tmp_path):
-    """run_daily_pipeline step 7 wiring (previously only the step
-    function was tested directly): with docs_path + span_window the
-    composed verb runs the span-index step; with max_dup_span_frac +
-    persist_span_positions it lands both the flag record and the
-    rewrite-positions record (VERDICT r14 #2) in the serving layout,
-    and the report carries their counts."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    lake = str(tmp_path / "lake")
-    out = str(tmp_path / "serving")
-    build_lake(spark, sf_small, lake)
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    src = (
-        docs.withColumn("_n", F.size(F.split("text", " ")))
-        .filter(F.col("_n") >= 80)
-        .orderBy("doc_id")
-        .first()
-    )
-    d1_path = str(tmp_path / "shard1")
-    docs.write.parquet(d1_path)
-    # day 2: one paste-heavy doc (25/30 pasted > 0.6), one clean
-    day2 = spark.createDataFrame(
-        [
-            (990040, " ".join(src.text.split(" ")[:25] + [f"qa{i}" for i in range(5)])),
-            (990041, " ".join(f"qb{i}" for i in range(30))),
-        ],
-        "doc_id long, text string",
-    )
-    d2_path = str(tmp_path / "shard2")
-    day2.write.parquet(d2_path)
-    r1 = run_daily_pipeline(
-        spark, lake, "2024-01-01", out,
-        docs_path=d1_path, span_window=15,
-        max_dup_span_frac=0.6, persist_span_positions=True,
-    )
-    # the sf0.001 documents fixture contains organically paste-heavy
-    # docs, so day 1 flags a real handful — the wiring assertion is
-    # that the step ran and recorded them
-    assert r1["span_index"]["flagged_over_threshold"] > 0
-    assert r1["span_index"]["complete_days"] == 1
-    r2 = run_daily_pipeline(
-        spark, lake, "2024-01-02", out,
-        docs_path=d2_path, span_window=15,
-        max_dup_span_frac=0.6, persist_span_positions=True,
-    )
-    assert r2["span_index"]["flagged_over_threshold"] == 1
-    assert r2["span_index"]["flagged_span_positions"] > 0
-    flags_dir = os.path.join(out, "span_flags", "ds=2024-01-02")
-    pos_dir = os.path.join(out, "span_positions", "ds=2024-01-02")
-    assert {r.doc_id for r in spark.read.parquet(flags_dir).collect()} == {990040}
-    pos = spark.read.parquet(pos_dir)
-    assert {r.doc_id for r in pos.collect()} == {990040}
-    assert set(pos.columns) == {"doc_id", "pos", "wh", "keep"}
-    assert os.path.exists(os.path.join(pos_dir, "_write_meta.json"))
-    # the positions record drives the prep rewrite end-to-end
-    from data_engineering_user_session_analysis_spark.pipelines.corpus_prep import (
-        CorpusPrepConfig,
-        prepare_corpus,
-    )
-
-    surv, rep = prepare_corpus(
-        day2,
-        config=CorpusPrepConfig(
-            min_tokens=5, max_dup_line_frac=1.0,
-            span_action="rewrite", span_positions_path=pos_dir,
-        ),
-    )
-    assert "span_rewritten" in rep
-    texts = {r.doc_id: r.text for r in surv.collect()}
-    # the pasted 25-token prefix is excised (canonical lives in day 1)
-    assert texts[990040] == " ".join(f"qa{i}" for i in range(5))
-    assert texts[990041] == " ".join(f"qb{i}" for i in range(30))

@@ -210,64 +210,6 @@ def test_prepare_corpus_split_stage(spark, sf_small):
     assert {t for t in kept if t[0] in old_ids} <= assignments
 
 
-def test_prepare_corpus_reuses_minhash_index(spark, sf_small, tmp_path):
-    """VERDICT r11 #4: with a persistent MinHash index built over the
-    post-scrub corpus, the near-dup stage derives pairs from the
-    stored buckets/sets (no shingle/signature pass) and the survivor
-    set is IDENTICAL to the inline computation."""
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        write_minhash_index,
-    )
-    from data_engineering_user_session_analysis_spark.operators.scrubbing import scrub_pii
-
-    corpus, _ = _corpus_with_junk(spark, sf_small)
-    cfg = CorpusPrepConfig(min_tokens=5, max_dup_line_frac=0.9)
-    inline_result, inline_report = prepare_corpus(corpus, config=cfg)
-    inline_ids = {r.doc_id for r in inline_result.select("doc_id").collect()}
-
-    # the index covers the text the near-dup stage sees: post-scrub
-    idx = str(tmp_path / "mh_idx")
-    write_minhash_index(scrub_pii(corpus, "text"), idx)
-
-    cfg_idx = CorpusPrepConfig(
-        min_tokens=5, max_dup_line_frac=0.9, minhash_index_path=idx
-    )
-    idx_result, idx_report = prepare_corpus(corpus, config=cfg_idx)
-    idx_ids = {r.doc_id for r in idx_result.select("doc_id").collect()}
-    assert idx_ids == inline_ids
-    assert idx_report == inline_report
-
-
-def test_prepare_corpus_index_content_mismatch_raises(spark, sf_small, tmp_path):
-    """An index built over DIFFERENT text (here: the raw, un-scrubbed
-    corpus while the pipeline dedups scrubbed text... simulated more
-    strongly by corrupting the text) must be rejected loudly by the
-    sampled content-parity check, never silently mis-dedup."""
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.operators.dedup_index import (
-        write_minhash_index,
-    )
-
-    corpus, _ = _corpus_with_junk(spark, sf_small)
-    idx = str(tmp_path / "mh_idx_stale")
-    # stale index: built over text with every token suffixed (disjoint
-    # shingle space from what the pipeline will see)
-    stale = corpus.withColumn(
-        "text",
-        F.array_join(
-            F.transform(F.split("text", " "), lambda t: F.concat(t, F.lit("_x"))),
-            " ",
-        ),
-    )
-    write_minhash_index(stale, idx)
-    cfg = CorpusPrepConfig(
-        min_tokens=5, max_dup_line_frac=0.9, minhash_index_path=idx
-    )
-    with pytest.raises(ValueError, match="content parity"):
-        prepare_corpus(corpus, config=cfg)
-
-
 def test_prepare_corpus_dup_ngram_gate(spark, sf_small):
     """The optional Gopher bigram-repetition gate kills boilerplate
     ('spam spam ...' has dup_2gram_frac ~ 1.0) that the word-grain
@@ -396,110 +338,6 @@ def test_prepare_corpus_span_action_validated(spark, sf_small):
         )
 
 
-def test_prepare_corpus_consumes_span_flags(spark, sf_small, tmp_path):
-    """The daily loop, closed (VERDICT r13 #1): day 1 and day 2 run
-    through the span-index step (which writes over-threshold ids to
-    span_flags/ds=<ds>); day-2 prep then consumes the flag record via
-    span_flags_path and must produce EXACTLY the survivors of running
-    the batch span gate directly over the full two-day corpus — the
-    flag path is a cheaper route to the same gate, not a different
-    gate."""
-    import os
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_span_index_step,
-    )
-    from data_engineering_user_session_analysis_spark.operators.span_dedup import (
-        duplicated_span_stats,
-    )
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    src = (
-        docs.withColumn("_n", F.size(F.split("text", " ")))
-        .filter(F.col("_n") >= 80)
-        .orderBy("doc_id")
-        .first()
-    )
-    day1 = docs  # includes the source doc
-    # day 2: a paste-heavy doc (25 pasted / 30 tokens = 0.83 > 0.6),
-    # a doc sharing only a sub-threshold slice (15/40 = 0.375), and a
-    # clean doc — the flag record must kill exactly the first
-    day2 = spark.createDataFrame(
-        [
-            (990030, " ".join(src.text.split(" ")[:25] + [f"zq{i}" for i in range(5)])),
-            (990031, " ".join(src.text.split(" ")[:15] + [f"zr{i}" for i in range(25)])),
-            (990032, " ".join(f"zs{i}" for i in range(30))),
-        ],
-        "doc_id long, text string",
-    )
-    out = str(tmp_path / "serving")
-    for ds, shard in (("2026-02-01", day1), ("2026-02-02", day2)):
-        p = str(tmp_path / f"shard_{ds}")
-        shard.write.parquet(p)
-        run_span_index_step(
-            spark, p, out, ds, window=15, max_dup_span_frac=0.6
-        )
-    base = dict(min_tokens=5, max_dup_line_frac=1.0)
-    surv_flags, rep = prepare_corpus(
-        day2,
-        config=CorpusPrepConfig(
-            **base, span_flags_path=os.path.join(out, "span_flags")
-        ),
-    )
-    ids_flags = {r.doc_id for r in surv_flags.select("doc_id").collect()}
-    # the batch gate, directly: over-threshold docs of the FULL
-    # two-day corpus removed from the no-span-stage prep survivors
-    surv_plain, _ = prepare_corpus(day2, config=CorpusPrepConfig(**base))
-    ids_plain = {r.doc_id for r in surv_plain.select("doc_id").collect()}
-    over = {
-        r.doc_id
-        for r in duplicated_span_stats(day1.unionByName(day2), window=15)
-        .filter(F.col("dup_token_frac") > 0.6)
-        .collect()
-    }
-    assert ids_flags == ids_plain - over
-    assert 990030 not in ids_flags  # paste-heavy: flagged and dropped
-    assert 990031 in ids_flags  # sub-threshold slice survives
-    assert 990032 in ids_flags  # clean survives
-    assert rep["span_gated"] == len(ids_flags)
-    # flags + rewrite is a contract violation, loudly
-    import pytest
-
-    with pytest.raises(ValueError, match="span_flags_path"):
-        prepare_corpus(
-            day2,
-            config=CorpusPrepConfig(
-                **base,
-                span_flags_path=os.path.join(out, "span_flags"),
-                span_action="rewrite",
-            ),
-        )
-    # ADVICE r14: the record was written at 0.6 — a consumer asking
-    # for a LOOSER (lower) threshold would silently gate at 0.6 (docs
-    # with coverage in (0.3, 0.6] were never recorded), so it raises
-    # against the persisted write threshold
-    with pytest.raises(ValueError, match="write threshold"):
-        prepare_corpus(
-            day2,
-            config=CorpusPrepConfig(
-                **base,
-                span_flags_path=os.path.join(out, "span_flags"),
-                max_dup_span_frac=0.3,
-            ),
-        )
-    # tighter (higher) is fine: the record is a superset of what the
-    # consumer keeps — 0.9 keeps even the 0.83-coverage doc
-    surv_tight, _ = prepare_corpus(
-        day2,
-        config=CorpusPrepConfig(
-            **base,
-            span_flags_path=os.path.join(out, "span_flags"),
-            max_dup_span_frac=0.9,
-        ),
-    )
-    assert {r.doc_id for r in surv_tight.select("doc_id").collect()} == ids_plain
-
-
 def test_prepare_corpus_rewrite_without_threshold(spark, sf_small):
     """ADVICE r13: span_action='rewrite' alone enables the stage —
     rewrite ignores the threshold, so requiring max_dup_span_frac made
@@ -529,117 +367,3 @@ def test_prepare_corpus_rewrite_without_threshold(spark, sf_small):
     }
     assert rows[990020].startswith("zsp0 zsp1")
     assert "zsp0" not in rows[990021]
-
-
-def test_prepare_corpus_rewrites_from_span_positions(spark, tmp_path):
-    """The REWRITE half of the daily span loop (VERDICT r14 #2):
-    the index step persists the flagged docs' duplicated-span anchor
-    positions with the corpus-wide canonical pick
-    (persist_span_positions=True); day-2 prep consuming them via
-    span_positions_path must rewrite the flagged docs EXACTLY as
-    inline remove_duplicated_spans over the full two-day corpus would
-    — with no inline corpus-wide detection — and leave unflagged docs
-    untouched (the record is bounded to the flagged set)."""
-    import os
-
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
-        run_span_index_step,
-    )
-    from data_engineering_user_session_analysis_spark.operators.span_dedup import (
-        remove_duplicated_spans,
-    )
-
-    span25 = [f"sp{i}" for i in range(25)]
-    day1 = spark.createDataFrame(
-        [
-            (1, " ".join(span25 + [f"d1x{i}" for i in range(15)])),
-            (2, " ".join(f"d2y{i}" for i in range(30))),
-        ],
-        "doc_id long, text string",
-    )
-    # 990030: 25/30 tokens pasted from doc 1 (coverage 0.83 > 0.6 ->
-    # flagged); 990031: 15/40 pasted (0.375 — dup spans but UNDER the
-    # threshold, so outside the record); 990032: clean
-    day2 = spark.createDataFrame(
-        [
-            (990030, " ".join(span25 + [f"zq{i}" for i in range(5)])),
-            (990031, " ".join(span25[:15] + [f"zr{i}" for i in range(25)])),
-            (990032, " ".join(f"zs{i}" for i in range(30))),
-        ],
-        "doc_id long, text string",
-    )
-    out = str(tmp_path / "serving")
-    for ds, shard in (("2026-02-01", day1), ("2026-02-02", day2)):
-        p = str(tmp_path / f"shard_{ds}")
-        shard.write.parquet(p)
-        rep = run_span_index_step(
-            spark, p, out, ds, window=15, max_dup_span_frac=0.6,
-            persist_span_positions=True,
-        )
-    assert rep["flagged_over_threshold"] == 1
-    assert rep["flagged_span_positions"] > 0
-    pos_path = os.path.join(out, "span_positions", "ds=2026-02-02")
-
-    base = dict(min_tokens=5, max_dup_line_frac=1.0)
-    surv, rep2 = prepare_corpus(
-        day2,
-        config=CorpusPrepConfig(
-            **base, span_action="rewrite", span_positions_path=pos_path
-        ),
-    )
-    assert "span_rewritten" in rep2
-    got = {r.doc_id: r.text for r in surv.collect()}
-    # inline protocol over the FULL two-day corpus, the expensive way
-    inline = {
-        r.doc_id: r.text
-        for r in remove_duplicated_spans(
-            day1.unionByName(day2), window=15
-        ).collect()
-    }
-    # flagged doc: bit-identical to the inline rewrite (canonical is
-    # day-1's doc 1, so the pasted span is excised)
-    assert got[990030] == inline[990030]
-    assert "sp0" not in got[990030] and "zq0" in got[990030]
-    # unflagged docs: pass through UNCHANGED (inline would also have
-    # rewritten 990031 — the record is bounded to the flagged set by
-    # design, so prep must not touch it)
-    day2_texts = {r.doc_id: r.text for r in day2.collect()}
-    assert got[990031] == day2_texts[990031]
-    assert got[990032] == day2_texts[990032]
-
-    # contract violations, loudly
-    with pytest.raises(ValueError, match="span_action='rewrite'"):
-        prepare_corpus(
-            day2,
-            config=CorpusPrepConfig(**base, span_positions_path=pos_path),
-        )
-    with pytest.raises(ValueError, match="mutually"):
-        prepare_corpus(
-            day2,
-            config=CorpusPrepConfig(
-                **base,
-                span_action="rewrite",
-                span_positions_path=pos_path,
-                span_flags_path=os.path.join(out, "span_flags"),
-            ),
-        )
-    with pytest.raises(ValueError, match="max_dup_span_frac"):
-        run_span_index_step(
-            spark, str(tmp_path / "shard_2026-02-02"), out, "2026-02-03",
-            window=15, persist_span_positions=True,
-        )
-    # content parity: the record's token offsets are meaningless over
-    # different text — a shifted doc must be refused, not mis-excised
-    day2_shifted = spark.createDataFrame(
-        [(990030, "SHIFT " + day2_texts[990030])],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="does not match"):
-        prepare_corpus(
-            day2_shifted,
-            config=CorpusPrepConfig(
-                **base, span_action="rewrite", span_positions_path=pos_path
-            ),
-        )

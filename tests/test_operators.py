@@ -190,10 +190,10 @@ def test_ngram_df_cap_binding_and_nonbinding(spark, sf_small):
 
 def test_verify_jaccard_equals_inverted_index(spark, sf_small):
     """The candidate-bounded set-intersection verify must emit exactly
-    the inverted-index result for the same candidate set (round-3
-    swap: the old semi-join-after-self-join still paid O(Σ DF²))."""
+    the exact Jaccard of every candidate pair — the intersection and
+    Jaccard a full inverted-index join would give, computed here by
+    brute force over the collected shingle sets."""
     from data_engineering_user_session_analysis_spark.operators.dedup import (
-        _pair_jaccard,
         _verify_jaccard,
         minhash_candidate_pairs,
         shingle_docs,
@@ -207,13 +207,16 @@ def test_verify_jaccard_equals_inverted_index(spark, sf_small):
         (r.doc_a, r.doc_b, r.intersection, r.jaccard)
         for r in _verify_jaccard(sh, cand, "doc_id").collect()
     }
-    via_index = {
-        (r.doc_a, r.doc_b, r.intersection, r.jaccard)
-        for r in _pair_jaccard(sh, "doc_id")
-        .join(cand, ["doc_a", "doc_b"], "left_semi")
-        .collect()
-    }
-    assert via_sets == via_index
+    sets: dict[int, set[str]] = {}
+    for r in sh.collect():
+        sets.setdefault(r.doc_id, set()).add(r.shingle)
+    brute = set()
+    for r in cand.collect():
+        a, b = sets[r.doc_a], sets[r.doc_b]
+        inter = len(a & b)
+        brute.add((r.doc_a, r.doc_b, inter, inter / float(len(a) + len(b) - inter)))
+    sh.unpersist()
+    assert via_sets == brute
     assert via_sets, "no candidate pairs — test is vacuous"
 
 

@@ -186,14 +186,15 @@ def test_lsh_auto_entry_point(spark, sf_small):
 
 
 def test_lsh_exact_clone_recall_at_depth(spark, sf_small):
-    """Exact clones have identical signatures, so deep (scale-sized)
-    planes must still catch every clone pair — the recall that matters
-    for near-dup dedup, pinned end-to-end."""
+    """Exact clones have identical signatures, so deep planes (the
+    geometry the sizing law gives a million-vector corpus) must still
+    catch every clone pair — the recall that matters for near-dup
+    dedup, pinned end-to-end."""
     from pyspark.sql import functions as F
 
     from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        lsh_params,
         lsh_similarity_pairs,
+        oracle_geometry,
     )
     from data_engineering_user_session_analysis_spark.sources.tables import load_table
 
@@ -203,13 +204,9 @@ def test_lsh_exact_clone_recall_at_depth(spark, sf_small):
     clones = base.unionByName(
         base.withColumn("vec_id", F.col("vec_id") + shift)
     ).unionByName(base.withColumn("vec_id", F.col("vec_id") + 2 * shift))
-    n = clones.count()
-    params = lsh_params(n, threshold=0.4)
+    tables, planes = oracle_geometry(10**6)
     pairs = lsh_similarity_pairs(
-        clones,
-        threshold=0.4,
-        planes=params["planes"],
-        tables=params["tables"],
+        clones, threshold=0.4, planes=planes, tables=tables
     )
     caught = pairs.filter(
         (F.col("vec_a") % shift) == (F.col("vec_b") % shift)
@@ -384,6 +381,7 @@ def test_oracle_geometry_law():
     from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
         NEARDUP_COS,
         oracle_geometry,
+        oracle_tables_for_planes,
     )
     import math
 
@@ -396,6 +394,7 @@ def test_oracle_geometry_law():
     p_dup = 1.0 - math.acos(NEARDUP_COS) / math.pi
     for n in (500, 2000, 20000, 10**6, 10**9):
         tables, planes = oracle_geometry(n)
+        assert tables == oracle_tables_for_planes(planes), n
         # linear candidate mass: bounded random candidates per vector
         # (rises toward the planes clamp at 10^9 but stays O(1))
         assert n * tables / 2**planes <= 200, n

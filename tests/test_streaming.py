@@ -184,11 +184,14 @@ def test_streaming_drop_duplicates(spark, tmp_path):
 
 def test_foreach_batch_upsert_idempotent(spark, sf_small, tmp_path):
     """Replaying the same micro-batch through the upsert sink leaves
-    the output unchanged (key-level MERGE semantics)."""
+    the output unchanged (key-level MERGE semantics), and the sink
+    leaves the session's partitionOverwriteMode as it found it."""
     from data_engineering_user_session_analysis_spark.streaming.session_stream import (
         foreach_batch_upsert_parquet,
     )
 
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     out = str(tmp_path / "upsert")
     batch = enrich_events(load_events(spark, sf_small)).withColumn(
         "date", F.date_format("ts", "yyyy-MM-dd")
@@ -202,6 +205,7 @@ def test_foreach_batch_upsert_idempotent(spark, sf_small, tmp_path):
     one_day = batch.filter(F.col("date") == batch.select("date").first().date)
     write(one_day, 1)
     assert spark.read.parquet(out).count() == first
+    assert spark.conf.get(mode_key) == mode_before
 
 
 def test_foreach_batch_upsert_partial_partition_no_data_loss(

@@ -40,7 +40,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, ".testdata", "sf1")
-DEFAULT_STRESS_TIERS = ["corpusprep1m", "spanindex1m", "spanrecall1m"]
+DEFAULT_STRESS_TIERS = ["corpusprep1m", "spanrecall1m"]
 
 
 def _cpu_probe() -> float:
