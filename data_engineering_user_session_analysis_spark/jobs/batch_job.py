@@ -37,9 +37,8 @@ def parse_ds(ds: str) -> datetime.date:
     """The execution date ``ds`` as a date, accepting only the
     canonical ``YYYY-MM-DD`` form.  ``date.fromisoformat`` alone also
     takes ``20240105`` and ``2024-W01-1``; a non-canonical string
-    would name a second partition for the same day (``ds=20240105``)
-    and break the string order that prior-state selection relies
-    on."""
+    would name a second partition for the same day (``ds=20240105``),
+    which prior-state selection then refuses to read past."""
     try:
         day = datetime.date.fromisoformat(ds)
     except (TypeError, ValueError):
@@ -206,16 +205,26 @@ def run_incremental_sessions(
         advance_sessions,
     )
 
-    parse_ds(ds)  # prior-state selection below compares ds strings
+    day_ds = parse_ds(ds)
     state_root = os.path.join(out_dir, "session_state")
     prev = None
     if os.path.isdir(state_root):
-        priors = sorted(
-            p.split("=", 1)[1]
-            for p in os.listdir(state_root)
-            if p.startswith("ds=") and p.split("=", 1)[1] < ds
-        )
-        prev = priors[-1] if priors else None
+        priors = []
+        for name in os.listdir(state_root):
+            if not name.startswith("ds="):
+                continue
+            # a partition name that is not a canonical date would sort
+            # among the dates as a string and could become the carry
+            try:
+                part_ds = parse_ds(name.split("=", 1)[1])
+            except ValueError:
+                raise ValueError(
+                    f"session state partition {os.path.join(state_root, name)!r}"
+                    " is not a YYYY-MM-DD date; remove or rename it"
+                ) from None
+            if part_ds < day_ds:
+                priors.append(part_ds)
+        prev = max(priors).isoformat() if priors else None
     state = (
         spark.read.format(fmt).load(os.path.join(state_root, f"ds={prev}"))
         if prev

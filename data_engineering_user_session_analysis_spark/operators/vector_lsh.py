@@ -35,15 +35,17 @@ Scale shape: signatures are a map-only projection; bucketing is a
 groupBy on (table, signature); only bucket-mates are exact-scored.
 Candidates drop from N² to Σ bucket².
 
-Sizing rule (``lsh_params``): random near-orthogonal pairs collide
-with probability ≈ tables/2^planes, so expected random candidates
-per vector ≈ N·tables/2^planes — planes must grow with log2(N) to
-keep the candidate set linear in N (a FIXED bucket-size target keeps
-Σ bucket² quadratic: bucket size B means B·tables candidates per
-vector, and r04's B=125 rule produced a 66× verify overhead at 20k
-vectors).  ``lsh_params`` derives planes from an explicit
-candidates-per-vector budget, then raises tables to hold recall at
-NEAR-DUP cosine (≥0.95); the closed forms are in its docstring.
+Sizing rule (``oracle_geometry``): random near-orthogonal pairs
+collide with probability ≈ tables/2^planes, so expected random
+candidates per vector ≈ N·tables/2^planes — planes must grow with
+log2(N) to keep the candidate set linear in N (a FIXED bucket-size
+target keeps Σ bucket² quadratic: bucket size B means B·tables
+candidates per vector, and r04's B=125 rule produced a 66× verify
+overhead at 20k vectors).  ``oracle_geometry`` takes
+``planes = clamp(bit_length(N) - 2, 4, 30)`` — ⌈log2(N·16/32)⌉ in
+integer arithmetic — and then the tables that hold 0.9 recall at
+NEAR-DUP cosine (``NEARDUP_COS``, ≥0.95) at that depth
+(``oracle_tables_for_planes``).
 What deep planes give up is the weak-similarity tail (cos 0.4-0.7,
 θ≈50-66°, per-table p^planes collapses) — the production near-dup
 posture, stated rather than hidden: exact clones (cos 1.0) are
@@ -51,8 +53,7 @@ caught at ANY depth (identical signatures), and the stress bench
 records measured clone-pair recall alongside the candidate counts.
 The 4-plane/8-table default is tuned for the tiny test corpus's
 weak 0.4-cosine threshold (the registered query pins it so its
-DuckDB oracle replays a fixed construction); scale-sensitive
-callers derive both knobs from ``lsh_params``.
+DuckDB oracle replays a fixed construction).
 """
 
 from __future__ import annotations
@@ -67,172 +68,9 @@ from pyspark.sql import functions as F
 
 QUANT_SCALE = 1_000_000  # signature quantization: floor(x * 1e6)
 
-#: Cosine at which `lsh_params` holds its recall target: true
+#: Cosine at which `oracle_geometry` holds its recall target: true
 #: near-duplicates (re-crawls, boilerplate copies) sit at ≥0.95.
 NEARDUP_COS = 0.95
-
-
-def lsh_params(
-    n_vectors: int,
-    threshold: float = 0.4,
-    candidates_per_vector: float = 32.0,
-    recall_target: float = 0.9,
-    min_planes: int = 4,
-    max_planes: int = 24,
-    min_tables: int = 8,
-    max_tables: int = 64,
-) -> dict:
-    """Scale-aware (planes, tables) for the hyperplane LSH.
-
-    Closed forms (p = 1 - θ/π is the per-plane agreement probability
-    at angle θ):
-
-    - **planes from the candidate budget**: random pairs collide per
-      table with probability ≈ 2^-planes, so expected random
-      candidates per vector ≈ N·tables/2^planes; solving for the
-      budget gives ``planes = ceil(log2(N·tables / budget))``.
-      This is what keeps the candidate set LINEAR in N — any fixed
-      bucket-size target keeps it quadratic.
-    - **tables from near-dup recall**: a pair at cosine c matches one
-      table with probability p(c)^planes, so
-      ``tables = ceil(ln(1-recall) / ln(1-p^planes))`` holds the
-      recall target at ``NEARDUP_COS``.  (Holding recall at a WEAK
-      threshold like 0.4 is provably unaffordable: recall/selectivity
-      scales as (2p)^planes, and p(66°)=0.63 needs thousands of
-      tables — the returned ``predicted_recall_at_threshold`` states
-      the achieved number instead of pretending otherwise.  Exact
-      clones, cos 1.0, have identical signatures and recall 1.0 at
-      any setting.)
-
-    The two interact only through log2(tables), so one fixpoint pass
-    suffices.  Returns the params plus the predictions a caller
-    should log next to measured counts."""
-    n = max(int(n_vectors), 2)
-
-    def _p(cos: float) -> float:
-        return 1.0 - math.acos(min(max(cos, -1.0), 1.0)) / math.pi
-
-    p_dup = _p(NEARDUP_COS)
-    tables = min_tables
-    planes = min_planes
-    for _ in range(4):  # fixpoint: planes↔tables couple via log2
-        planes = math.ceil(
-            math.log2(max(n * tables / max(candidates_per_vector, 1e-9), 2.0))
-        )
-        planes = min(max(planes, min_planes), max_planes)
-        miss = 1.0 - p_dup**planes
-        want = (
-            math.ceil(math.log(1.0 - recall_target) / math.log(miss))
-            if miss < 1.0
-            else max_tables
-        )
-        new_tables = min(max(want, min_tables), max_tables)
-        if new_tables == tables:
-            break
-        tables = new_tables
-    p_thr = _p(threshold)
-    return {
-        "planes": planes,
-        "tables": tables,
-        "expected_random_candidates_per_vector": n * tables / 2.0**planes,
-        "predicted_recall_at_threshold": 1.0 - (1.0 - p_thr**planes) ** tables,
-        "predicted_neardup_recall": 1.0 - (1.0 - p_dup**planes) ** tables,
-    }
-
-
-def vector_geometry_for_recall(
-    n_vectors: int,
-    threshold: float,
-    recall_target: float = 0.9,
-    candidates_per_vector: float = 32.0,
-    min_planes: int = 1,
-    max_planes: int = 24,
-    min_tables: int = 8,
-    max_tables: int = 64,
-) -> dict:
-    """INVERSE banding model: the (planes, tables) a hyperplane index
-    needs to hold ``recall_target`` at the CALLER'S ``threshold`` —
-    the solve ``lsh_params`` deliberately does not do (it holds recall
-    at ``NEARDUP_COS`` and only reports the achieved number at weak
-    thresholds).  This is the actuator-side math for the persistent
-    vector index (``dedup_index.vector_index_recall_autotune``): its
-    sensor measures recall at an operator-chosen threshold, and a
-    breach needs a geometry sized for THAT threshold, not for clones.
-
-    Solve (p = 1 - θ/π at the threshold): start planes at the
-    candidate-budget fixpoint (identical math to ``lsh_params`` —
-    planes = ⌈log2(N·tables/budget)⌉, what keeps random candidates
-    linear in N), then compute the tables the target needs there,
-    ``tables = ⌈ln(1-target) / ln(1-p^planes)⌉``.  When that exceeds
-    ``max_tables``, shed planes one at a time: each plane removed
-    multiplies the per-table match probability by 1/p (slashing the
-    tables bill) at the price of DOUBLING random candidates per
-    vector — the honest cost of holding recall at a weak threshold,
-    reported in ``expected_random_candidates_per_vector`` rather than
-    hidden.  ``feasible=False`` (with the widest geometry and its
-    achieved prediction) when even ``min_planes``/``max_tables``
-    cannot reach the target — the caller decides whether the achieved
-    number is acceptable.
-
-    There is NO structurally exact endpoint in this family (a frozen
-    geometry cannot widen to brute force), so the prediction here is
-    a banding closed form, not a guarantee — the autotune verb pairs it with
-    the measured sensor."""
-    if not 0.0 < recall_target < 1.0:
-        raise ValueError(f"recall_target must be in (0, 1), got {recall_target}")
-    if not -1.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (-1, 1), got {threshold}")
-    n = max(int(n_vectors), 2)
-    p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-
-    def _tables_needed(planes: int) -> float:
-        match = p**planes
-        if match >= 1.0:
-            return 1.0
-        if match <= 0.0:
-            return math.inf
-        return math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - match))
-
-    # planes ↔ tables fixpoint (the lsh_params alternation, with the
-    # recall solve at the caller's threshold): planes from the
-    # candidate budget at the CURRENT tables, shed until the tables
-    # bill fits, tables from the recall target at those planes.  A
-    # single budget pass at min_tables would stop too shallow — the
-    # recall solve raises tables, which affords deeper planes, which
-    # cuts random candidates (measured example at 1M/threshold 0.9/
-    # target 0.9: one-shot (18 planes, 37 tables) carries 141 random
-    # candidates/vector; the fixpoint's (21, 59) carries 28, back at
-    # the budget, for the same predicted recall).  At a converged
-    # fixpoint with no shedding, candidates ≤ budget by construction;
-    # when shedding binds (weak thresholds), candidates exceed the
-    # budget and the overshoot is reported, never hidden.
-    tables = min_tables
-    planes = min_planes
-    for _ in range(6):
-        planes = math.ceil(
-            math.log2(max(n * tables / max(candidates_per_vector, 1e-9), 2.0))
-        )
-        planes = min(max(planes, min_planes), max_planes)
-        while planes > min_planes and _tables_needed(planes) > max_tables:
-            planes -= 1
-        need = _tables_needed(planes)
-        new_tables = int(min(max(need, min_tables), max_tables))
-        if new_tables == tables:
-            break
-        tables = new_tables
-    need = _tables_needed(planes)
-    feasible = need <= max_tables
-    tables = int(min(max(need if feasible else max_tables, min_tables), max_tables))
-    return {
-        "planes": planes,
-        "tables": tables,
-        "feasible": feasible,
-        "threshold": threshold,
-        "recall_target": recall_target,
-        "predicted_recall_at_threshold": 1.0 - (1.0 - p**planes) ** tables,
-        "expected_random_candidates_per_vector": n * tables / 2.0**planes,
-    }
-
 
 #: Clamps for :func:`oracle_geometry` — the SQL-replayable demo law.
 ORACLE_MIN_PLANES, ORACLE_MAX_PLANES = 4, 30
@@ -241,7 +79,8 @@ ORACLE_MIN_TABLES, ORACLE_MAX_TABLES = 8, 64
 
 def oracle_tables_for_planes(planes: int) -> int:
     """Tables holding 0.9 near-dup recall (at ``NEARDUP_COS``) for a
-    given plane count — the ``lsh_params`` recall solve, broken out
+    given plane count, ``tables = ⌈ln(0.1) / ln(1 - p^planes)⌉`` with
+    ``p = 1 - θ/π`` the per-plane agreement probability, computed here
     so a static SQL CASE over the bounded planes range can replay it
     (the transcendentals run HERE, in Python, once per plane value;
     the SQL only looks the result up, so no cross-engine libm drift
@@ -259,9 +98,9 @@ def oracle_tables_for_planes(planes: int) -> int:
 def oracle_geometry(n_vectors: int) -> tuple[int, int]:
     """(tables, planes) for the SQL-replayable N-scaled LSH demo row.
 
-    The full ``lsh_params`` solve is a float fixpoint a SQL engine
-    cannot be trusted to reproduce bit-for-bit, so the registry row
-    uses this integer-exact restriction of the same two laws:
+    A float planes↔tables fixpoint cannot be trusted to replay
+    bit-for-bit in SQL, so the registry row uses two integer-exact
+    laws:
 
     - ``planes = clamp(bit_length(N) - 2, 4, 30)`` — i.e.
       ⌈log2(N·16/32)⌉ with a nominal 16 tables, computed via integer
@@ -278,7 +117,7 @@ def oracle_geometry(n_vectors: int) -> tuple[int, int]:
     ≥0.9 from n=500 through n=10⁹ (planes clamp binds past ~5·10⁸).
     Recall at WEAK thresholds (the registry row's 0.4) decays with
     planes — the documented, closed-form-predicted price of linear
-    candidate mass; see ``lsh_params``."""
+    candidate mass (recall at cosine c is 1 - (1 - p(c)^planes)^tables)."""
     flog2 = max(int(n_vectors).bit_length() - 1, 1)
     planes = min(max(flog2 - 1, ORACLE_MIN_PLANES), ORACLE_MAX_PLANES)
     return oracle_tables_for_planes(planes), planes
@@ -357,68 +196,6 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_similarity_pairs_auto(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    candidates_per_vector: float = 32.0,
-) -> DataFrame:
-    """Scale-aware near-dup pairs: (planes, tables) derived from the
-    MEASURED corpus size via ``lsh_params`` (one count() job — the
-    same measured-sizing pattern as ``connected_components``), then
-    the standard bucket→verify pipeline.
-    This is the entry point a growing corpus should use; the
-    registered query's fixed 4/8 knobs are an oracle-parity fixture.
-    Validated at 20k and 200k vectors in STRESS_sf1_r05: random
-    candidates per vector flat at the budget, exact-clone recall
-    1.0."""
-    p = lsh_params(
-        emb.count(), threshold=threshold, candidates_per_vector=candidates_per_vector
-    )
-    return lsh_similarity_pairs(
-        emb,
-        threshold=threshold,
-        dim=dim,
-        tables=p["tables"],
-        planes=p["planes"],
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-
-
-def lsh_dedup_edges_auto(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    candidates_per_vector: float = 32.0,
-) -> DataFrame:
-    """Scale-aware star-edge dedup graph: sizing derived from the
-    measured REPRESENTATIVE count (the post-exact-dedup corpus is
-    what the LSH actually runs on — sizing from the raw count would
-    overshoot planes on clone-heavy corpora), then
-    ``lsh_dedup_edges`` with those knobs.  The growing-corpus entry
-    point, symmetric with ``lsh_similarity_pairs_auto``."""
-    _, reps = exact_vector_star_edges(emb, id_col, vec_col)
-    p = lsh_params(
-        reps.count(),
-        threshold=threshold,
-        candidates_per_vector=candidates_per_vector,
-    )
-    return lsh_dedup_edges(
-        emb,
-        threshold=threshold,
-        dim=dim,
-        tables=p["tables"],
-        planes=p["planes"],
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-
-
 def foldl_dot_column(a_col: str, b_col: str) -> F.Column:
     """Exact-fold dot product as an Arrow-batched numpy kernel.
 
@@ -447,70 +224,6 @@ def foldl_dot_column(a_col: str, b_col: str) -> F.Column:
         return pd.Series(acc)
 
     return dots(F.col(a_col), F.col(b_col))
-
-
-def exact_vector_star_edges(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate vector groups as STAR edges: ``(vec_a=rep,
-    vec_b=member)`` with rep = min id per bitwise-identical embedding
-    — g-1 edges per clone group instead of the g²/2 all-pairs the
-    similarity join emits (the 100× stress spent 127 s emitting 9.97M
-    such pairs).  Returns ``(edges, representatives)``.
-
-    Grouping is on the raw array column (Spark hashes/compares arrays
-    element-wise), so \"exact\" means bit-identical floats — precisely
-    the re-crawl clone case.  Star edges carry ``cosine = 1.0``
-    literally: identical vectors are definitionally at cosine 1, and
-    emitting the literal avoids a spurious float divide."""
-    from data_engineering_user_session_analysis_spark.operators.dedup import min_id_star_edges
-
-    edges_raw, reps = min_id_star_edges(emb, [vec_col], id_col)
-    edges = edges_raw.select(
-        F.col("_rep").alias("vec_a"),
-        F.col(id_col).alias("vec_b"),
-        F.lit(1.0).alias("cosine"),
-    )
-    return edges, reps.select(F.col("_rep").alias(id_col))
-
-
-def lsh_dedup_edges(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    dim: int = 64,
-    tables: int = 8,
-    planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Linear-output embedding near-dup edge set: exact-clone star
-    edges UNION LSH-verified cosine pairs over the distinct-vector
-    REPRESENTATIVES only.
-
-    Connected components equal ``lsh_similarity_pairs`` over the full
-    corpus: clone-group members reach their rep via star edges, and a
-    rep's candidate/verify behavior is identical to any member's
-    (identical vectors → identical signatures → same buckets), so
-    cross-group connectivity is preserved with the same recall
-    (within-group recall improves to 1.0 — the digest groupBy is
-    deterministic where bucketing is probabilistic).  Pinned against
-    the all-pairs form in tests/test_similarity.py.  Output:
-    ``vec_a, vec_b, cosine`` — the same shape ``lsh_similarity_pairs``
-    emits, so cluster consumers swap in unchanged."""
-    star, reps = exact_vector_star_edges(emb, id_col, vec_col)
-    rep_emb = emb.join(reps, id_col, "left_semi")
-    near = lsh_similarity_pairs(
-        rep_emb,
-        threshold=threshold,
-        dim=dim,
-        tables=tables,
-        planes=planes,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    return near.unionByName(star)
 
 
 def lsh_similarity_pairs(

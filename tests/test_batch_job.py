@@ -158,6 +158,30 @@ def test_daily_pipeline_rejects_bad_ds_before_writing(spark, sf_small, tmp_path)
     assert not out.exists()
 
 
+def test_prior_carry_refuses_non_canonical_state_partition(spark, sf_small, tmp_path):
+    """A leftover ``session_state/ds=2024-1-5`` sorts after
+    ``2024-09-30`` as a string; the step must refuse it by name
+    instead of taking it as 2024-10-01's carry, and write nothing."""
+    import shutil
+
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
+        run_incremental_sessions,
+    )
+
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    lake_df = spark.read.parquet(lake)
+    out = tmp_path / "serving"
+    run_incremental_sessions(spark, lake_df, "2024-01-05", str(out))
+    state_root = out / "session_state"
+    os.rename(state_root / "ds=2024-01-05", state_root / "ds=2024-09-30")
+    shutil.copytree(state_root / "ds=2024-09-30", state_root / "ds=2024-1-5")
+    with pytest.raises(ValueError, match="ds=2024-1-5"):
+        run_incremental_sessions(spark, lake_df, "2024-10-01", str(out))
+    assert not (out / "session_closed" / "ds=2024-10-01").exists()
+    assert not (state_root / "ds=2024-10-01").exists()
+
+
 def test_backfill_range_matches_daily_runs(spark, sf_small, tmp_path):
     """backfill(ds1..ds2) == the per-day jobs run individually, and
     re-running a subrange is idempotent (per-day overwrite)."""

@@ -148,43 +148,6 @@ def test_vector_lsh_planted_neardup_recall(spark, sf_small):
     assert dup_recall >= 0.9, f"planted near-dup recall {dup_recall:.2f} < 0.9"
 
 
-def test_lsh_params_scale_aware_sizing():
-    """The sizing math that keeps candidates linear in N: planes grow
-    with log2(N) under a fixed per-vector budget, tables rise to hold
-    near-dup recall, and the weak-threshold recall loss is REPORTED
-    rather than hidden."""
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import lsh_params
-
-    small = lsh_params(2_000, threshold=0.4)
-    big = lsh_params(20_000, threshold=0.4)
-    huge = lsh_params(1_000_000_000, threshold=0.4)
-    # planes grow with log2(N); the budget bounds candidates per vector
-    assert small["planes"] < big["planes"] < huge["planes"] <= 24
-    for p in (small, big):
-        assert p["expected_random_candidates_per_vector"] <= 32.0
-    # near-dup recall held at the target wherever planes aren't clamped
-    assert big["predicted_neardup_recall"] >= 0.9
-    assert small["predicted_neardup_recall"] >= 0.9
-    # honesty: weak-threshold recall at depth is LOW and said so
-    assert big["predicted_recall_at_threshold"] < big["predicted_neardup_recall"]
-
-
-def test_lsh_auto_entry_point(spark, sf_small):
-    """lsh_similarity_pairs_auto derives its knobs from the measured
-    count and still emits a subset of the exact ground truth."""
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        lsh_similarity_pairs_auto,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_small, "embeddings")
-    exact = _exact_cosine_pairs(spark, sf_small, threshold=0.4)
-    auto = {
-        (r.vec_a, r.vec_b) for r in lsh_similarity_pairs_auto(emb).collect()
-    }
-    assert auto <= exact  # precision 1.0 (exact verify tier)
-
-
 def test_lsh_exact_clone_recall_at_depth(spark, sf_small):
     """Exact clones have identical signatures, so deep planes (the
     geometry the sizing law gives a million-vector corpus) must still
@@ -243,132 +206,6 @@ def test_foldl_dot_udf_bit_exact_vs_aggregate_fold(spark):
             r.fold,
             r.kernel,
         )
-
-
-def test_lsh_dedup_edges_same_clusters_linear_output(spark, sf_small):
-    """Embedding star-edge dedup graph (exact-clone stars + rep-only
-    LSH pairs): identical components to the all-pairs similarity
-    join, with linear edge output on a clone-heavy corpus — the
-    construction the 100× stress tier measures."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        lsh_dedup_edges,
-        lsh_similarity_pairs,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    def _uf(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n: find(n) for n in parent}
-
-    shift = 1_000_000
-    base = load_table(spark, sf_small, "embeddings").limit(50)
-    emb = base
-    for r in (1, 2, 3):
-        emb = emb.unionByName(
-            base.withColumn("vec_id", F.col("vec_id") + r * shift)
-        )
-    emb = emb.cache()
-    n = emb.count()
-
-    all_pairs = [
-        (r.vec_a, r.vec_b)
-        for r in lsh_similarity_pairs(emb, threshold=0.4)
-        .select("vec_a", "vec_b")
-        .collect()
-    ]
-    edge_rows = lsh_dedup_edges(emb, threshold=0.4).collect()
-    edges = [(r.vec_a, r.vec_b) for r in edge_rows]
-    assert _uf(edges) == _uf(all_pairs)
-    # star edges: exactly g-1 per exact-clone group, cosine literal 1.0
-    stars = [r for r in edge_rows if r.vec_a % shift == r.vec_b % shift]
-    assert len(edges) < len(all_pairs)
-    assert all(r.cosine == 1.0 for r in stars)
-    assert len(stars) >= n - base.count()  # at least the clone stars
-    emb.unpersist()
-
-
-def test_lsh_dedup_edges_auto_clone_recall(spark, sf_small):
-    """The scale-aware star-edge entry point sizes from the
-    REPRESENTATIVE count: on a 3x clone corpus it must still connect
-    every clone to its origin (star edges are deterministic at any
-    LSH depth)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        lsh_dedup_edges_auto,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    shift = 1_000_000
-    base = load_table(spark, sf_small, "embeddings").limit(40)
-    emb = base.unionByName(
-        base.withColumn("vec_id", F.col("vec_id") + shift)
-    ).unionByName(base.withColumn("vec_id", F.col("vec_id") + 2 * shift))
-    edges = lsh_dedup_edges_auto(emb).collect()
-    stars = {(r.vec_a, r.vec_b) for r in edges if r.vec_a % shift == r.vec_b % shift}
-    # every clone reaches its min-id origin: 2 star edges per base vec
-    assert len(stars) == 40 * 2
-
-
-def test_vector_geometry_for_recall_inverse_model():
-    """The inverse banding solve (`vector_geometry_for_recall`):
-    prediction honors the target when feasible, stricter targets never
-    get narrower geometry, weak thresholds shed planes (paying
-    candidates) instead of silently failing, and infeasibility is
-    reported rather than papered over."""
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
-        vector_geometry_for_recall,
-    )
-
-    g = vector_geometry_for_recall(1_000_000, 0.9, recall_target=0.9)
-    assert g["feasible"]
-    assert g["predicted_recall_at_threshold"] >= 0.9
-    # at a converged fixpoint with no plane-shedding the candidate
-    # budget is honored by construction (one-shot budget solves at
-    # min_tables stopped too shallow: 141 candidates/vector here vs
-    # the fixpoint's <= 32)
-    assert g["expected_random_candidates_per_vector"] <= 32.0
-    # stricter target -> more tables or fewer planes, never narrower
-    g2 = vector_geometry_for_recall(1_000_000, 0.9, recall_target=0.99)
-    assert g2["predicted_recall_at_threshold"] >= 0.99
-    assert g2["tables"] >= g["tables"] or g2["planes"] < g["planes"]
-    # weaker threshold at the same target: the budget-solve planes are
-    # unaffordable within max_tables, so the solve sheds planes and
-    # reports the candidate price honestly
-    w = vector_geometry_for_recall(1_000_000, 0.85, recall_target=0.9)
-    assert w["feasible"] and w["planes"] < g["planes"]
-    assert (
-        w["expected_random_candidates_per_vector"]
-        > g["expected_random_candidates_per_vector"]
-    )
-    # an unaffordable (threshold, target) with a planes floor is
-    # reported infeasible with the widest geometry it tried
-    bad = vector_geometry_for_recall(
-        1_000_000, 0.2, recall_target=0.99, min_planes=8
-    )
-    assert not bad["feasible"]
-    assert bad["planes"] == 8 and bad["tables"] == 64
-    assert bad["predicted_recall_at_threshold"] < 0.99
-    with pytest.raises(ValueError):
-        vector_geometry_for_recall(1000, 0.9, recall_target=1.5)
-    with pytest.raises(ValueError):
-        vector_geometry_for_recall(1000, 1.0)
 
 
 def test_oracle_geometry_law():
