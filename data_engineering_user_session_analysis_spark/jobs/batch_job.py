@@ -57,15 +57,8 @@ def build_lake(
     ORC — both keep pushdown + partition pruning; see
     sources/formats.py).  Row formats are rejected: an analytics
     lake must be columnar."""
-    from data_engineering_user_session_analysis_spark.sources.formats import (
-        COLUMNAR_FORMATS,
-        write_lake_table,
-    )
+    from data_engineering_user_session_analysis_spark.sources.formats import write_lake_table
 
-    if fmt not in COLUMNAR_FORMATS:
-        raise ValueError(
-            f"lake format must be columnar {COLUMNAR_FORMATS}, got {fmt!r}"
-        )
     ev = load_events(spark, sf_dir).withColumn(
         "date", F.date_format("ts", "yyyy-MM-dd")
     )
@@ -254,19 +247,22 @@ def compact_closed_partition(
     lake_path: str,
     ds: str,
     target_file_bytes: int = 128 * 1024 * 1024,
+    fmt: str = "parquet",
 ) -> dict:
     """Maintenance step for the daily cadence: once ``ds`` is closed
     (the stream's watermark has passed it), merge its micro-batch
-    small files (sources/compaction.py).  Runs naturally right after
-    ``run_daily_job`` for the same ds — the day's partition has just
-    been read for the last time hot, and every later backfill scan
-    pays file-count costs forever if it stays shattered."""
+    small files (sources/compaction.py), rewritten in the lake's
+    ``fmt``.  Runs naturally right after ``run_daily_job`` for the
+    same ds — the day's partition has just been read for the last
+    time hot, and every later backfill scan pays file-count costs
+    forever if it stays shattered."""
     from data_engineering_user_session_analysis_spark.sources.compaction import compact_partition
 
     return compact_partition(
         spark,
         os.path.join(lake_path, f"date={ds}"),
         target_file_bytes=target_file_bytes,
+        fmt=fmt,
     )
 
 
@@ -356,7 +352,7 @@ def run_daily_pipeline(
             report["compacted_previous"] = (
                 {"skipped": sink_log}
                 if sink_log is not None
-                else compact_closed_partition(spark, lake_path, prev)
+                else compact_closed_partition(spark, lake_path, prev, fmt=fmt)
             )
     return report
 

@@ -4,10 +4,11 @@ Three tiers, ordered by cost/scale trade-off:
 
 * **exact** — hash-groupBy on content digest (`queries/text_queries.py
   :dedup_exact`): one shuffle on a 16-byte key; the baseline.
-* **n-gram Jaccard (exact near-dup)** — shingle → inverted-index
-  self-join → pair intersection counts.  Exact but quadratic in
-  per-shingle document frequency; the ground truth the approximate
-  tiers are validated against.
+* **n-gram Jaccard (exact near-dup)** — the DuckDB inverted-index
+  SQL in `queries/dedup_queries.py`: shingle → self-join → pair
+  intersection counts.  Exact but quadratic in per-shingle document
+  frequency; the ground truth the approximate tiers are checked
+  against.
 * **MinHash + LSH (approximate near-dup)** — the 100 TB path:
   signature = min of k hash families over shingles, banded into
   buckets; only bucket-mates become candidate pairs, then candidates
@@ -73,63 +74,16 @@ def shingle_docs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Distinct word n-gram shingles, one row per (doc, shingle).
 
     Docs with fewer than n tokens produce no shingles (dropped from
     near-dup consideration, matching the oracle's `range` semantics).
-
-    ``max_shingle_df`` is the stop-shingle ceiling: shingles whose
-    document frequency exceeds it are dropped from the representation
-    (sizes AND intersections, so Jaccard stays internally consistent).
-    The inverted-index pair join is quadratic in per-shingle DF — one
-    boilerplate shingle shared by 10^6 docs at 100 TB would emit 10^12
-    candidate pairs; the ceiling bounds that to DF² ≤ cap².  Recall
-    impact (standard stop-shingle trade): a pair whose ONLY shared
-    shingles are above-cap boilerplate is missed, and borderline
-    Jaccard values are computed over the capped shingle universe —
-    pinned by tests/test_operators.py against a brute-force oracle.
     """
     toks = F.split(F.col(text_col), " ")
-    sh = (
-        docs.filter(F.size(toks) >= n)
-        .select(
-            F.col(id_col),
-            F.explode(_shingle_array_column(text_col, n)).alias("shingle"),
-        )
-    )
-    if max_shingle_df is not None:
-        keep = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(keep, "shingle", "left_semi")
-    return sh
-
-
-def _pair_jaccard(shingles: DataFrame, id_col: str) -> DataFrame:
-    """Exact Jaccard for ALL doc pairs sharing >=1 shingle — the
-    inverted-index self-join (O(Σ per-shingle DF²); bound it with the
-    stop-shingle cap).  For candidate-restricted verification use
-    ``_verify_jaccard`` instead, whose cost is O(|candidates|)."""
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    a = shingles.select(F.col(id_col).alias("doc_a"), F.col("shingle"))
-    b = shingles.select(F.col(id_col).alias("doc_b"), F.col("shingle"))
-    pairs = a.join(b, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
-    inter = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("intersection"))
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("intersection")
-            / (F.col("na") + F.col("nb") - F.col("intersection")).cast("double"),
-        )
+    return docs.filter(F.size(toks) >= n).select(
+        F.col(id_col),
+        F.explode(_shingle_array_column(text_col, n)).alias("shingle"),
     )
 
 
@@ -205,34 +159,6 @@ def _verify_jaccard(
             F.col("intersection")
             / (F.col("na") + F.col("nb") - F.col("intersection")).cast("double"),
         )
-    )
-
-
-DEFAULT_MAX_SHINGLE_DF = 10_000
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Exact near-duplicate pairs with n-gram Jaccard >= threshold
-    over the DF-capped shingle universe (see ``shingle_docs``: the
-    cap bounds the quadratic inverted-index join at corpus scale)."""
-    # shingles feed the pair join twice (both sides) + the size agg:
-    # cache once instead of re-shingling per branch.  Lifecycle: the
-    # consuming action is the CALLER's, so the entry must outlive this
-    # function; it is plan-keyed (repeat calls share ONE entry per
-    # input), MEMORY_AND_DISK, LRU-evictable — at true corpus scale
-    # prefer recomputation (uncached shingling is map-only).
-    sh = shingle_docs(docs, text_col, id_col, n, max_shingle_df).cache()
-    return (
-        _pair_jaccard(sh, id_col)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "intersection", "jaccard")
     )
 
 
@@ -329,27 +255,6 @@ def minhash_lsh_pairs(
     )
 
 
-def min_id_star_edges(
-    df: DataFrame, group_cols: list[str], id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared star-edge construction: per identical ``group_cols``
-    group, rep = min id, edges = (rep → every other member), g-1 per
-    group.  Returns ``(edges(_rep, id_col), reps(group_cols, _rep))``
-    — callers rename/augment for their modality (exact text, SimHash
-    value, exact vector).  Null-key semantics (deliberate): the
-    equi-join back is NOT null-safe, so null-content rows get no star
-    edges and stay singletons — exactly what the all-pairs near-dup
-    forms do with them (null text shingles to nothing, null vectors
-    bucket nowhere), preserving the pinned component equivalence."""
-    reps = df.groupBy(*group_cols).agg(F.min(id_col).alias("_rep"))
-    edges = (
-        df.join(reps, group_cols)
-        .filter(F.col(id_col) != F.col("_rep"))
-        .select("_rep", id_col)
-    )
-    return edges, reps
-
-
 def exact_dup_star_edges(
     docs: DataFrame,
     text_col: str = "text",
@@ -376,13 +281,17 @@ def exact_dup_star_edges(
     digests = docs.select(
         F.col(id_col), F.md5(F.col(text_col)).alias("_digest")
     )
-    edges, reps = min_id_star_edges(digests, ["_digest"], id_col)
-    return (
-        edges.select(
-            F.col("_rep").alias("doc_a"), F.col(id_col).alias("doc_b")
-        ),
-        reps.select(F.col("_rep").alias(id_col)),
+    reps = digests.groupBy("_digest").agg(F.min(id_col).alias("_rep"))
+    # the equi-join back is NOT null-safe (deliberate): null-text rows
+    # get no star edges and stay singletons — exactly what the
+    # all-pairs near-dup forms do with them (null text shingles to
+    # nothing), preserving the pinned component equivalence
+    edges = (
+        digests.join(reps, "_digest")
+        .filter(F.col(id_col) != F.col("_rep"))
+        .select(F.col("_rep").alias("doc_a"), F.col(id_col).alias("doc_b"))
     )
+    return edges, reps.select(F.col("_rep").alias(id_col))
 
 
 def minhash_dedup_edges(
@@ -852,54 +761,3 @@ def simhash_pairs_from_fingerprints(
         )
     )
     return cross.unionByName(same)
-
-
-def simhash_dedup_edges(
-    docs: DataFrame,
-    max_hamming: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Linear-output SimHash dedup edge set — the star-edge twin of
-    ``simhash_pairs`` for cluster/canonical consumption.
-
-    ``simhash_pairs`` is clone-robust in its CANDIDATE enumeration
-    (distinct-value blocks) but its OUTPUT is still every true pair:
-    g²/2 rows per identical-fingerprint group and |A|·|B| rows per
-    verified cross-value group pair.  For dedup clustering only
-    connectivity matters, so this form emits, per distinct
-    fingerprint value, g-1 star edges to the min-id member, and one
-    rep-to-rep edge per verified value pair — O(N + distinct-value
-    pairs) total.  Components equal the all-pairs form's (every
-    member reaches its value rep; value reps carry the cross edges) —
-    pinned in tests/test_operators.py on a clone-heavy corpus.
-
-    Output: ``doc_a, doc_b, edge_type`` (``exact`` = same
-    fingerprint, ``neardup`` = Hamming 1..max_hamming value pair).
-    """
-    # same fan-out shape as simhash_pairs (fp feeds the star edges,
-    # the value blocks, and both rep-expansion sides): one eager
-    # materialization of the O(docs) fingerprint table = one corpus
-    # pass, see the simhash_pairs comment
-    fp = materialize(simhash_fingerprints(docs, text_col, id_col), eager=True)
-    star_raw, reps = min_id_star_edges(fp, ["fingerprint"], id_col)
-    star = star_raw.select(
-        F.col("_rep").alias("doc_a"),
-        F.col(id_col).alias("doc_b"),
-        F.lit("exact").alias("edge_type"),
-    )
-    vver = simhash_value_candidate_pairs(fp, max_hamming).withColumn(
-        "hamming", F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
-    ).filter(F.col("hamming") <= max_hamming)
-    ra = reps.select(F.col("fingerprint").alias("fa"), F.col("_rep").alias("_ra"))
-    rb = reps.select(F.col("fingerprint").alias("fb"), F.col("_rep").alias("_rb"))
-    cross = (
-        vver.join(ra, "fa")
-        .join(rb, "fb")
-        .select(
-            F.least("_ra", "_rb").alias("doc_a"),
-            F.greatest("_ra", "_rb").alias("doc_b"),
-            F.lit("neardup").alias("edge_type"),
-        )
-    )
-    return cross.unionByName(star)

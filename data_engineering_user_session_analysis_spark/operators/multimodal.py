@@ -7,36 +7,18 @@ in plain typed columns so Catalyst can prune/filter without touching
 payloads.  Per-batch Python work happens once per Arrow batch, not
 per row; batch size is governed by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.
-
-Decode support (round 3): the two uncompressed formats that need no
-codec library — binary **PPM (P6)** and **24-bit uncompressed BMP**
-— are decoded for real in pure Python/numpy (``decode_image`` →
-pixel array → ``extract_image_features``); anything else falls back
-to PIL when importable and otherwise raises the documented
-``NotImplementedError`` (this container ships no codecs).  The
-registered oracle queries keep the DETERMINISTIC FAKE features
-(md5-derived pseudo-dimensions) because the fixture payloads are
-text bytes, not images — the REAL decode path is pinned by fixture
-round-trip tests (tests/test_multimodal.py) through the same
-mapInPandas pipeline shape.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FRAME_SCHEMA = "doc_id long, frame_index int, frame_md5 string"
-IMAGE_FEATURE_SCHEMA = (
-    "doc_id long, width int, height int, n_pixels long, "
-    "mean_r double, mean_g double, mean_b double"
-)
 
 
 def attach_payload(
@@ -52,86 +34,6 @@ def attach_payload(
             "modality": F.lit(modality),
         }
     )
-
-
-def _decode_ppm(data: bytes) -> np.ndarray:
-    """Binary PPM (P6) → (h, w, 3) uint8 RGB.  Pure Python header
-    parse (whitespace/comment tokens per the netpbm spec), numpy
-    raster view — no codec library."""
-    if not data.startswith(b"P6"):
-        raise ValueError("not a binary PPM (P6) payload")
-    pos, vals = 2, []
-    while len(vals) < 3:
-        while pos < len(data) and data[pos : pos + 1].isspace():
-            pos += 1
-        if data[pos : pos + 1] == b"#":  # comment to end of line
-            while pos < len(data) and data[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(data) and not data[pos : pos + 1].isspace():
-            pos += 1
-        vals.append(int(data[start:pos]))
-    width, height, maxval = vals
-    if maxval > 255:
-        raise NotImplementedError("16-bit PPM rasters not supported")
-    pos += 1  # exactly one whitespace byte after maxval
-    n = width * height * 3
-    raster = data[pos : pos + n]
-    if len(raster) < n:
-        raise ValueError("truncated PPM raster")
-    return np.frombuffer(raster, dtype=np.uint8).reshape(height, width, 3)
-
-
-def _decode_bmp(data: bytes) -> np.ndarray:
-    """24-bit uncompressed BMP → (h, w, 3) uint8 RGB.  Handles the
-    BITMAPINFOHEADER family, 4-byte row padding, bottom-up and
-    top-down row order, BGR→RGB."""
-    if not data.startswith(b"BM"):
-        raise ValueError("not a BMP payload")
-    (pixel_offset,) = struct.unpack_from("<I", data, 10)
-    (header_size,) = struct.unpack_from("<I", data, 14)
-    if header_size < 40:
-        raise NotImplementedError("BITMAPCOREHEADER BMPs not supported")
-    width, height = struct.unpack_from("<ii", data, 18)
-    _planes, bpp = struct.unpack_from("<HH", data, 26)
-    (compression,) = struct.unpack_from("<I", data, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(f"only 24bpp uncompressed BMP (got {bpp}bpp, compression={compression})")
-    top_down, height = height < 0, abs(height)
-    row_bytes = (width * 3 + 3) & ~3
-    out = np.empty((height, width, 3), dtype=np.uint8)
-    for r in range(height):
-        off = pixel_offset + r * row_bytes
-        row = np.frombuffer(data[off : off + width * 3], dtype=np.uint8)
-        if len(row) < width * 3:
-            raise ValueError("truncated BMP raster")
-        y = r if top_down else height - 1 - r
-        out[y] = row.reshape(width, 3)[:, ::-1]  # BGR -> RGB
-    return out
-
-
-def decode_image(payload: bytes) -> np.ndarray:
-    """REAL decode to an (h, w, 3) uint8 RGB array.  PPM (P6) and
-    24-bit BMP are parsed in pure Python/numpy (no codec deps);
-    other formats go through PIL when importable, else the
-    documented ``NotImplementedError`` (this container ships no
-    codec libraries)."""
-    data = bytes(payload)
-    if data.startswith(b"P6"):
-        return _decode_ppm(data)
-    if data.startswith(b"BM"):
-        return _decode_bmp(data)
-    try:
-        from PIL import Image
-        import io
-
-        return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
-    except ImportError as exc:  # pragma: no cover - no PIL in container
-        raise NotImplementedError(
-            "decode beyond PPM/BMP requires PIL; container has no codec "
-            "libs — deterministic fake features are used instead"
-        ) from exc
 
 
 def _fake_dims(digest_hex: str) -> tuple[int, int]:
@@ -189,65 +91,6 @@ def extract_media_features(
 
     return df.select(id_col, *passthrough, payload_col).mapInPandas(
         feats, schema=out_schema
-    )
-
-
-def extract_image_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """REAL decoded features via mapInPandas: parse each payload with
-    ``decode_image`` (PPM/BMP pure-Python path) and emit dimensions +
-    per-channel means — the same Arrow-batched pipeline shape as the
-    fake-feature extractor, but over actual pixel data.  Channel
-    means are exact-integer channel sums divided once (uint8 sums are
-    exact in int64), so the outputs are deterministic."""
-
-    from data_engineering_user_session_analysis_spark.runtime import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = decode_image(bytes(payload))
-                h, w = img.shape[0], img.shape[1]
-                sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = h * w
-                cols["doc_id"].append(doc_id)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["n_pixels"].append(n)
-                cols["mean_r"].append(sums[0] / n)
-                cols["mean_g"].append(sums[1] / n)
-                cols["mean_b"].append(sums[2] / n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                    "width": pd.Series(cols["width"], dtype="int32"),
-                    "height": pd.Series(cols["height"], dtype="int32"),
-                    "n_pixels": pd.Series(cols["n_pixels"], dtype="int64"),
-                    "mean_r": pd.Series(cols["mean_r"], dtype="float64"),
-                    "mean_g": pd.Series(cols["mean_g"], dtype="float64"),
-                    "mean_b": pd.Series(cols["mean_b"], dtype="float64"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        feats, schema=IMAGE_FEATURE_SCHEMA
     )
 
 

@@ -10,19 +10,8 @@ cluster sizes — the property a 100 TB corpus pipeline needs for
 auditable data mixes, and for re-running a failed day without
 resampling the world.
 
-Quota/weight samplers (k-shaped output):
+Weight sampler (k-shaped output):
 
-* ``hash_bernoulli_sample`` — keep a deterministic ~p fraction of
-  rows by key-hash bucket (pure filter: pushes to the scan, no
-  shuffle).  The same idiom backs the registry queries
-  ``scalar_doc_functions`` (row filter) and ``dedup_exact``
-  (re-crawl shard selection).
-* ``stratified_sample`` — exactly ``k`` rows per stratum (or all
-  rows of smaller strata), chosen by md5 order within the stratum:
-  the per-group quota sampler used to balance a training mixture
-  (e.g. k documents per language).  One shuffle on the strata
-  columns; the rank is a WindowGroupLimit at execution, so only the
-  top-k per stratum survive the sort buffer.
 * ``weighted_sample`` — k rows without replacement with inclusion
   probability proportional to a weight column (quality-weighted
   training mixes), via the Efraimidis–Spirtakis exponential-keys
@@ -58,7 +47,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -66,46 +55,6 @@ def _key_hash(col: Column) -> Column:
     """First 8 md5 hex chars of the key as a non-negative long —
     reproducible in any engine (unlike murmur/xxhash/rand)."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-
-
-def hash_bernoulli_sample(
-    df: DataFrame,
-    key_col: str,
-    rate: float,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Deterministic ~``rate`` sample: keep rows whose key-hash bucket
-    falls below ``rate * buckets``.  A pure filter — no shuffle, and
-    the same rows are kept on every run and every engine."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    threshold = int(rate * buckets)
-    return df.filter(_key_hash(F.col(key_col)) % buckets < threshold)
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_cols: list[str],
-    k: int,
-    key_col: str,
-) -> DataFrame:
-    """Exactly ``min(k, |stratum|)`` rows per stratum, deterministic.
-
-    Rows rank within their stratum by (md5(key), key) — a stable
-    pseudo-random order — and the top ``k`` survive.  Adding rows to
-    OTHER strata never changes a stratum's sample; adding rows to the
-    same stratum changes it only where the new keys hash into the
-    top-k (the minimal possible disturbance for a quota sampler)."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    w = Window.partitionBy(*strata_cols).orderBy(
-        _key_hash(F.col(key_col)).asc(), F.col(key_col).asc()
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
 
 
 #: hash-bucket denominator for the uniform variate: md5's first 8 hex
@@ -171,9 +120,8 @@ def sample_fraction(
     df: DataFrame, fraction: float, id_col: str = "doc_id", salt: str = "sample"
 ) -> DataFrame:
     """Keep a deterministic ``fraction`` of rows by salted id hash —
-    ``hash_bernoulli_sample`` with a salt, for pipelines that sample
-    the same corpus more than once and need the draws independent.
-    Map-side filter."""
+    the salt keeps draws independent for pipelines that sample the
+    same corpus more than once.  Map-side filter."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     return df.filter(uniform_hash_unit(id_col, salt) < F.lit(fraction))
@@ -221,8 +169,7 @@ def stratified_sample_by_rates(
     """Per-stratum deterministic downsampling: keep ``rates[stratum]``
     of each stratum's rows (``default_rate`` for unlisted strata).
     The rate table is a literal CASE expression — bounded config-sized
-    dicts (domains, languages, sources), never a join.  The
-    rate-shaped complement of the quota-shaped ``stratified_sample``."""
+    dicts (domains, languages, sources), never a join."""
     if any(not 0.0 <= r <= 1.0 for r in rates.values()):
         raise ValueError(f"rates must be in [0, 1]: {rates}")
     if not 0.0 <= default_rate <= 1.0:

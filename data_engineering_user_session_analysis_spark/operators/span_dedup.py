@@ -64,55 +64,6 @@ from pyspark.sql import functions as F
 EXACTSUBSTR_WINDOW = 50
 
 
-def sample_mod_for_recall(
-    target_recall: float,
-    min_span_tokens: int,
-    window: int = EXACTSUBSTR_WINDOW,
-) -> int:
-    """Largest ``sample_mod`` whose predicted detection recall for
-    duplicated spans of >= ``min_span_tokens`` tokens meets
-    ``target_recall`` — the actionable inverse of the winnowing
-    knob, mirroring how the LSH families derive geometry from a
-    recall target instead of asking the caller to guess.
-
-    A span of L tokens carries ``a = L - window + 1`` anchor windows,
-    each kept with probability 1/p under hash-value sampling, so
-    predicted recall is ``1 - (1 - 1/p)^a``; solving for the largest
-    integer p:  ``p <= 1 / (1 - (1 - t)^(1/a))``.  The prediction is
-    MEASURED, not just derived: the 1M planted-span tier
-    (STRESS_sf1_r13 ``spanrecall1m``) tracks it within ~3 points at
-    every (p, L) on the {2,4,8} x {16..64} grid — e.g. target 0.9 at
-    L=32/window=15 solves to p=8, whose measured recall was 0.897.
-
-    Returns >= 1; 1 means no sampling meets the target (``x % 1 == 0``
-    keeps every window, so the return value is always safe to pass as
-    ``sample_mod``).  Recall for spans LONGER than ``min_span_tokens``
-    is strictly higher; shorter spans are the documented casualties.
-    """
-    if not 0.0 < target_recall < 1.0:
-        raise ValueError(f"target_recall must be in (0, 1), got {target_recall}")
-    anchors = min_span_tokens - window + 1
-    if anchors < 1:
-        raise ValueError(
-            f"min_span_tokens={min_span_tokens} carries no {window}-token "
-            "anchor windows — spans shorter than the window are invisible "
-            "at any sampling rate"
-        )
-    miss = (1.0 - target_recall) ** (1.0 / anchors)
-    if miss >= 1.0:
-        return 1
-    p = int(1.0 / (1.0 - miss))
-    # float error guard: the closed form can land one off either way
-    def _recall(q: int) -> float:
-        return 1.0 - (1.0 - 1.0 / q) ** anchors
-
-    while p > 1 and _recall(p) < target_recall:
-        p -= 1
-    while _recall(p + 1) >= target_recall:
-        p += 1
-    return max(p, 1)
-
-
 def positional_window_hashes(
     docs: DataFrame,
     text_col: str = "text",

@@ -1,6 +1,6 @@
 """Near-duplicate detection queries over `documents` — exact n-gram
-Jaccard (ground truth, DF-capped shingles), MinHash+LSH (the 100 TB
-path, verified so its output matches the exact oracle), SimHash
+Jaccard (ground truth), MinHash+LSH (the 100 TB path, verified so
+its output matches the exact oracle), SimHash
 near-pairs (md5-derived bits, pigeonhole-blocked candidates), and
 cluster-level dedup (pairs → connected components → canonical ids —
 the step that turns pairwise output into actual deduplication).

@@ -6,7 +6,6 @@ the whole mapInPandas plumbing end-to-end."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.operators.multimodal import (
     attach_payload,
@@ -32,8 +31,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload → Arrow-batched mapInPandas feature extraction
     (byte length, checksum, fake-decoded dimensions) with the typed
     metadata (``lang``) riding the Arrow batch — the metadata-next-
-    to-features shape of round 1's separate ``media_size_by_lang``
-    entry, folded in here (COVERAGE.md).  Zero shuffle: metadata
+    to-features shape.  Zero shuffle: metadata
     passes THROUGH the extractor instead of being joined back on
     doc_id afterwards — the 100 TB discipline for multimodal tables
     (plan pinned shuffle-free in tests/test_plans.py)."""
@@ -63,23 +61,3 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprinted — rows-out > rows-in mapInPandas shape."""
     docs = load_table(spark, sf_dir, "documents")
     return sample_frames(attach_payload(docs))
-
-
-def media_size_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only aggregation over the media table: runs off the
-    typed columns (payload untouched — the 100 TB win of keeping
-    metadata out of the blob).
-
-    Not registry-listed since the 50-row consolidation (COVERAGE.md):
-    the metadata-passthrough shape keeps its green row inside
-    ``media_features`` (lang column); this aggregate stays as the
-    operator API, exercised by tests."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = extract_media_features(
-        attach_payload(docs), passthrough=("modality", "lang")
-    )
-    return feats.groupBy("lang").agg(
-        F.count("*").alias("n_media"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.max("fake_width").alias("max_width"),
-    )

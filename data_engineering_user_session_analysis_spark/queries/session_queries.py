@@ -245,26 +245,6 @@ def funnel_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hourly_traffic_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Traffic by weekday/hour — exercises the reference's F3/F4
-    time derivations (``spark_jobs/spark_stream.py:68-69``).
-
-    Registry row retired in round 6 (50-row driver cap) to register
-    ``session_rollup_incremental``: its F3/F4 derivations are
-    row-level-checked by Q:`event_enrichment` (same ``dayname``/
-    ``hour`` expressions, hash-checked per event) and its grouped
-    count/countDistinct shape by Q:`daily_activity`.  The function
-    stays part of the query surface (COVERAGE.md round-6 table)."""
-    ev = load_events(spark, sf_dir)
-    return ev.groupBy(
-        F.date_format("ts", "EEEE").alias("date_of_week"),
-        F.hour("ts").alias("hour_of_day"),
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
 @register(
     "session_rollup_incremental",
     # oracle: batch gap-sessionization over the FULL events table —

@@ -19,9 +19,6 @@ from pyspark.sql import functions as F
 from data_engineering_user_session_analysis_spark.queries import register
 from data_engineering_user_session_analysis_spark.sources.tables import load_table
 
-_BPE_REGEX = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
-
-
 @register(
     "doc_token_stats",
     """

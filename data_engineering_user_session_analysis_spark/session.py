@@ -41,7 +41,7 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.ui.enabled": "false",
-    # keep catalog artifacts (bucketed tables) out of the repo/cwd
+    # keep catalog artifacts out of the repo/cwd
     "spark.sql.warehouse.dir": os.path.join(
         tempfile.gettempdir(), "data_engineering_user_session_analysis_spark_warehouse"
     ),

@@ -19,12 +19,8 @@ Design:
   catalogs with millions of partitions would push this into a
   manifest table instead).
 * ``compact_partition`` — rewrite ONE partition's files into
-  ``ceil(bytes / target_file_bytes)`` outputs.  ``coalesce`` (narrow,
-  no shuffle) when only reducing file count; optional ``cluster_by``
-  columns switch to ``repartitionByRange + sortWithinPartitions`` —
-  one shuffle that buys min/max row-group locality on the cluster
-  keys, so later scans filtering on them skip whole files (the
-  Z-order-lite that covers the single-key case).
+  ``ceil(bytes / target_file_bytes)`` outputs with ``coalesce``
+  (narrow, no shuffle, no re-sort).
 * Swap is write-to-temp then two renames (old → trash, new → live,
   then trash delete).  Each HDFS/posix rename is atomic but the pair
   is not one transaction: a reader listing the table in the gap can
@@ -45,16 +41,11 @@ reads of the root treat that log as the AUTHORITATIVE file list —
 not the directory listing.  Compaction renames files, so after a
 swap a log-backed read either fails (FileNotFoundException) or, with
 ``ignoreMissingFiles``, silently drops the whole compacted partition
-while never seeing the new files.  Both entry points therefore probe
-for ``_spark_metadata`` (at the partition dir and its parents) and
-refuse to run by default.  Passing ``retire_sink_log=True`` deletes
-the log first, demoting the lake to plain-listing reads — correct
-for a lake the stream has finished with, but the streaming query
-must NOT keep appending afterwards: its sink would recreate the log
-containing only post-retirement batches, hiding everything older
-from log-backed reads again.  A live streaming lake that needs
-per-partition compaction is the cue to move to a table format with
-a real metadata pointer (Iceberg/Delta-class).
+while never seeing the new files.  ``compact_partition`` therefore
+probes for ``_spark_metadata`` (at the partition dir and its parents)
+and refuses to run.  A streaming lake that needs per-partition
+compaction is the cue to move to a table format with a real metadata
+pointer (Iceberg/Delta-class).
 """
 
 from __future__ import annotations
@@ -62,7 +53,7 @@ from __future__ import annotations
 import math
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def _fs(spark: SparkSession, path: str):
@@ -101,37 +92,14 @@ def find_sink_log(spark: SparkSession, path: str, max_levels: int = 3) -> str | 
     return None
 
 
-def _check_sink_log(
-    spark: SparkSession, path: str, retire_sink_log: bool
-) -> None:
-    log = find_sink_log(spark, path)
-    if log is None:
-        return
-    if not retire_sink_log:
-        raise RuntimeError(
-            f"refusing to compact {path}: a FileStreamSink log at {log} "
-            "is the authoritative file list for batch reads of this "
-            "lake, and compaction's renames would make those reads "
-            "fail or silently drop the partition. Stop the streaming "
-            "query and pass retire_sink_log=True to delete the log "
-            "and fall back to plain directory-listing reads (the "
-            "stream must not resume appending to this path), or move "
-            "the lake to a table format before compacting."
-        )
-    fs, _ = _fs(spark, path)
-    fs.delete(spark._jvm.org.apache.hadoop.fs.Path(log), True)
-    # log-backed reads may be cached as empty/stale relations
-    spark.catalog.refreshByPath(log.rsplit("/_spark_metadata", 1)[0])
-
-
 def partition_file_stats(
     spark: SparkSession, table_path: str
 ) -> list[dict]:
     """File count / byte totals per leaf partition directory of a
     Hive-layout table (one level of ``col=value`` dirs, or the table
     root itself when unpartitioned).  The output feeds the compaction
-    decision: ``needs_compaction`` flags partitions whose MEAN file
-    size sits under half the target — the standard trigger."""
+    decision: a partition whose MEAN file size sits under half the
+    target is fragmented — the standard trigger."""
     fs, root = _fs(spark, table_path)
     leaves = [
         st.getPath().toString()
@@ -152,75 +120,36 @@ def partition_file_stats(
     return stats
 
 
-def compact_table(
-    spark: SparkSession,
-    table_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
-    cluster_by: tuple[str, ...] = (),
-    retire_sink_log: bool = False,
-) -> list[dict]:
-    """Sweep every leaf partition whose MEAN data-file size sits under
-    half the target (the standard fragmentation trigger) and compact
-    each; returns the per-partition reports.  Partitions already at
-    healthy file sizes are left byte-identical — re-running the sweep
-    is a no-op, so it can sit on a daily maintenance cadence without
-    churning the lake.  Sequential on purpose: each partition rewrite
-    is its own job using every executor; see ``compact_partition``
-    for the swap contract and the module docstring for the
-    ``retire_sink_log`` / FileStreamSink contract."""
-    _check_sink_log(spark, table_path, retire_sink_log)
-    reports = []
-    for s in partition_file_stats(spark, table_path):
-        if s["n_files"] <= 1:
-            continue
-        if s["bytes"] / s["n_files"] >= target_file_bytes / 2:
-            continue
-        reports.append(
-            compact_partition(
-                spark,
-                s["path"],
-                target_file_bytes=target_file_bytes,
-                fmt=fmt,
-                cluster_by=cluster_by,
-            )
-        )
-    return reports
-
-
 def compact_partition(
     spark: SparkSession,
     partition_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     fmt: str = "parquet",
-    cluster_by: tuple[str, ...] = (),
-    retire_sink_log: bool = False,
 ) -> dict:
     """Rewrite one partition directory's files into
-    ``ceil(bytes / target_file_bytes)`` files (at least 1), optionally
-    range-clustered on ``cluster_by``.  Returns a before/after report.
+    ``ceil(bytes / target_file_bytes)`` files (at least 1).  Returns a
+    before/after report.
 
     Reads the leaf directory directly (partition values live in the
     directory name, not the files, so the rewrite reproduces the file
-    contents byte-for-byte up to row order — row order is only
-    changed when ``cluster_by`` asks for it).  Refuses to run under a
-    FileStreamSink ``_spark_metadata`` log unless ``retire_sink_log``
-    — see the module docstring."""
-    _check_sink_log(spark, partition_path, retire_sink_log)
+    contents byte-for-byte up to row order).  Refuses to run under a
+    FileStreamSink ``_spark_metadata`` log — see the module
+    docstring."""
+    log = find_sink_log(spark, partition_path)
+    if log is not None:
+        raise RuntimeError(
+            f"refusing to compact {partition_path}: a FileStreamSink log "
+            f"at {log} is the authoritative file list for batch reads of "
+            "this lake, and compaction's renames would make those reads "
+            "fail or silently drop the partition. Move the lake to a "
+            "table format before compacting it."
+        )
     before = _list_data_files(spark, partition_path)
     bytes_before = sum(b for _, b in before)
     n_out = max(1, math.ceil(bytes_before / target_file_bytes))
 
-    df = spark.read.format(fmt).load(partition_path)
-    if cluster_by:
-        # one shuffle, bought deliberately: range partitioning makes
-        # per-file min/max on the cluster keys near-disjoint, so
-        # later key-filtered scans skip whole files via footer stats.
-        cols = [df[c] for c in cluster_by]
-        df = df.repartitionByRange(n_out, *cols).sortWithinPartitions(*cols)
-    else:
-        # narrow merge — no shuffle, no re-sort, just fewer files.
-        df = df.coalesce(n_out)
+    # narrow merge — no shuffle, no re-sort, just fewer files.
+    df = spark.read.format(fmt).load(partition_path).coalesce(n_out)
 
     fs, live = _fs(spark, partition_path)
     parent = live.getParent()
@@ -252,5 +181,4 @@ def compact_partition(
         "bytes_before": bytes_before,
         "files_after": len(after),
         "bytes_after": sum(b for _, b in after),
-        "clustered_by": list(cluster_by),
     }

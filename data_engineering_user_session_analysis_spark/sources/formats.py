@@ -1,33 +1,26 @@
-"""Format-agnostic lake I/O: one write/read API over the columnar and
-row formats Spark ships built-in (parquet, ORC, JSON-lines, CSV).
+"""Columnar lake writes: one write API over the two columnar formats
+Spark ships built-in (parquet, ORC).
 
 The reference's lake is parquet-only (``spark_jobs/spark_stream.py:
 170-176``); a production pipeline also meets ORC lakes (Hive
-ecosystems), JSONL drops (API exports, LLM training corpora are
-usually JSONL), and CSV (the reference's own ingest side,
-``dags/kafka_stream.py:61``).  All four go through the same
-DataFrameReader/Writer surface, so partitioned layout, Hive-style
-partition pruning, and (for the columnar pair) predicate pushdown +
-column pruning come for free — pinned in tests/test_formats.py.
+ecosystems).  Both go through the same DataFrameWriter surface, so
+partitioned layout, Hive-style partition pruning, predicate pushdown
+and column pruning come for free — pinned in tests/test_formats.py.
+Reads need no wrapper: ``spark.read.format(fmt).load(path)`` is the
+same for both.
 
-Scale notes: parquet and ORC are the only formats to use at volume —
-columnar, compressed, splittable, with pushdown into the scan (the
-ORC reader is vectorized like parquet's).  JSON/CSV scans are
-schema-explicit here (never inferred: inference is an extra full
-pass and a schema drift hazard); they exist as ingest/egress
-boundaries, not analytics storage.
+Scale notes: parquet and ORC are columnar, compressed, splittable,
+with pushdown into the scan (the ORC reader is vectorized like
+parquet's).  Row formats (JSON, CSV) are not analytics storage and
+are rejected.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
 #: formats safe for analytics storage (columnar, pushdown-capable)
 COLUMNAR_FORMATS = ("parquet", "orc")
-#: row formats for ingest/egress boundaries (schema must be explicit)
-ROW_FORMATS = ("json", "csv")
-SUPPORTED_FORMATS = COLUMNAR_FORMATS + ROW_FORMATS
 
 
 def write_lake_table(
@@ -37,40 +30,14 @@ def write_lake_table(
     partition_by: tuple[str, ...] = (),
     mode: str = "overwrite",
 ) -> None:
-    """Write a table in any supported format with optional Hive-style
+    """Write a table in a columnar format with optional Hive-style
     partitioning (directory layout identical across formats, so the
     partition-pruning story carries over)."""
-    if fmt not in SUPPORTED_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; pick from {SUPPORTED_FORMATS}")
+    if fmt not in COLUMNAR_FORMATS:
+        raise ValueError(
+            f"lake format must be columnar {COLUMNAR_FORMATS}, got {fmt!r}"
+        )
     writer = df.write.mode(mode).format(fmt)
-    if fmt == "csv":
-        writer = writer.option("header", "true")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
-
-
-def read_lake_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema: T.StructType | str | None = None,
-) -> DataFrame:
-    """Read a table in any supported format.  Columnar formats carry
-    their own schema; row formats REQUIRE an explicit one (schema
-    inference would add a full extra pass and silently drift)."""
-    if fmt not in SUPPORTED_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; pick from {SUPPORTED_FORMATS}")
-    reader = spark.read.format(fmt)
-    if fmt in ROW_FORMATS:
-        if schema is None:
-            raise ValueError(
-                f"{fmt} reads need an explicit schema (inference is an "
-                "extra full pass and a drift hazard)"
-            )
-        reader = reader.schema(schema)
-        if fmt == "csv":
-            reader = reader.option("header", "true")
-    elif schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)

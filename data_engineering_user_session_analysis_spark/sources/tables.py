@@ -26,9 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Parquet scan → vectorized reader, pushdown-able."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

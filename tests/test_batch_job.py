@@ -49,7 +49,11 @@ def test_daily_job_end_to_end(spark, sf_small, tmp_path):
 
 def test_daily_job_runs_on_orc_lake(spark, sf_small, tmp_path):
     """The job's format knob: same pipeline over an ORC lake — day
-    results must match the parquet run row-for-row."""
+    results must match the parquet run row-for-row, and the composed
+    daily pipeline must compact the previous day's partition as ORC
+    (compaction reading it as parquet fails on day 2)."""
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
+
     lake_pq, out_pq = str(tmp_path / "lake_pq"), str(tmp_path / "out_pq")
     lake_orc, out_orc = str(tmp_path / "lake_orc"), str(tmp_path / "out_orc")
     build_lake(spark, sf_small, lake_pq)
@@ -64,6 +68,20 @@ def test_daily_job_runs_on_orc_lake(spark, sf_small, tmp_path):
         assert a, f"{name} empty — vacuous"
     written = spark.read.orc(os.path.join(out_orc, "user_level"))
     assert written.count() > 0
+
+    pipe_out = str(tmp_path / "out_orc_pipeline")
+    day1 = os.path.join(lake_orc, "date=2024-01-01")
+    before = sorted(map(tuple, spark.read.orc(day1).collect()))
+    assert before, "day 1 empty — vacuous"
+    reports = [
+        run_daily_pipeline(spark, lake_orc, d, pipe_out, fmt="orc")
+        for d in ("2024-01-01", "2024-01-02")
+    ]
+    assert "compacted_previous" not in reports[0]
+    compacted = reports[1]["compacted_previous"]
+    assert compacted["path"].endswith("date=2024-01-01")
+    assert compacted["files_after"] == 1
+    assert sorted(map(tuple, spark.read.orc(day1).collect())) == before
 
 
 def test_day_read_prunes_partitions(spark, sf_small, tmp_path):

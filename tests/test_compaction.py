@@ -49,36 +49,6 @@ def test_stats_and_compact_roundtrip(spark, sf_small, tmp_path):
     assert {p for p, _ in _list(spark, other["path"])} == other_files_before
 
 
-def test_compact_clustered_file_skipping(spark, sf_small, tmp_path):
-    """cluster_by produces near-disjoint per-file key ranges: each
-    output file's [min,max] user_id span must cover a fraction of the
-    global span, which is what lets footer stats skip files."""
-    lake = _fragmented_lake(spark, sf_small, tmp_path)
-    stats = partition_file_stats(spark, lake)
-    target = max(stats, key=lambda s: s["bytes"])
-    report = compact_partition(
-        spark,
-        target["path"],
-        target_file_bytes=max(1, target["bytes"] // 4),
-        cluster_by=("user_id",),
-    )
-    assert report["files_after"] >= 3
-    spans = []
-    for p, _ in _list(spark, target["path"]):
-        mm = (
-            spark.read.parquet(p)
-            .agg(F.min("user_id"), F.max("user_id"))
-            .collect()[0]
-        )
-        spans.append((mm[0], mm[1]))
-    spans.sort()
-    # range partitioning => files overlap at most at boundaries
-    overlaps = sum(
-        1 for (a, b) in zip(spans, spans[1:]) if b[0] < a[1]
-    )
-    assert overlaps == 0, spans
-
-
 def test_needs_compaction_signal(spark, sf_small, tmp_path):
     lake = _fragmented_lake(spark, sf_small, tmp_path)
     stats = partition_file_stats(spark, lake)
@@ -100,12 +70,12 @@ def _list(spark, path):
 def test_compact_refuses_then_retires_filestream_sink_log(spark, sf_small, tmp_path):
     """A lake built by writeStream carries a _spark_metadata log that
     batch root-reads treat as the authoritative file list; compaction
-    must refuse by default (its renames would orphan the log) and,
-    after retire_sink_log=True, the root re-read must see every row
-    via plain listing — the ADVICE-flagged silent-loss scenario."""
+    must refuse (its renames would orphan the log), whether pointed at
+    a partition under the log or at the table root that holds it —
+    the silent-loss scenario."""
     import pytest
 
-    from data_engineering_user_session_analysis_spark.sources.compaction import compact_table, find_sink_log
+    from data_engineering_user_session_analysis_spark.sources.compaction import find_sink_log
     from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
         enrich_events,
         read_file_stream,
@@ -126,35 +96,9 @@ def test_compact_refuses_then_retires_filestream_sink_log(spark, sf_small, tmp_p
     )
     q.awaitTermination(120)
     assert find_sink_log(spark, lake) is not None
-    src_count = spark.read.parquet(lake).count()
     target = max(partition_file_stats(spark, lake), key=lambda s: s["n_files"])
 
     with pytest.raises(RuntimeError, match="_spark_metadata"):
         compact_partition(spark, target["path"], target_file_bytes=1 << 30)
     with pytest.raises(RuntimeError, match="_spark_metadata"):
-        compact_table(spark, lake, target_file_bytes=1 << 30)
-
-    reports = compact_table(
-        spark, lake, target_file_bytes=1 << 30, retire_sink_log=True
-    )
-    assert find_sink_log(spark, lake) is None
-    assert any(r["files_after"] < r["files_before"] for r in reports)
-    # the failure mode this guards: a stale sink log would make this
-    # root read miss the compacted partitions entirely
-    assert spark.read.parquet(lake).count() == src_count
-
-
-def test_compact_table_sweeps_then_noops(spark, sf_small, tmp_path):
-    """The table sweep compacts every fragmented partition once and is
-    a no-op on the second pass (healthy partitions untouched)."""
-    from data_engineering_user_session_analysis_spark.sources.compaction import compact_table
-
-    lake = _fragmented_lake(spark, sf_small, tmp_path)
-    n_parts = len(partition_file_stats(spark, lake))
-    reports = compact_table(spark, lake, target_file_bytes=1 << 30)
-    assert len(reports) == n_parts  # everything was fragmented
-    assert all(r["files_after"] == 1 for r in reports)
-    # content preserved across the whole table
-    assert spark.read.parquet(lake).count() == 1000
-    # second sweep: nothing left to do
-    assert compact_table(spark, lake, target_file_bytes=1 << 30) == []
+        compact_partition(spark, lake, target_file_bytes=1 << 30)

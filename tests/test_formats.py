@@ -1,6 +1,6 @@
-"""Format-agnostic lake I/O: round-trips for every supported format,
-plus the scan-shape pins that matter at scale — ORC gets predicate
-pushdown + column pruning and partition pruning exactly like parquet."""
+"""Columnar lake I/O: round-trips for both columnar formats, plus the
+scan-shape pins that matter at scale — ORC gets predicate pushdown +
+column pruning and partition pruning exactly like parquet."""
 
 from __future__ import annotations
 
@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 from data_engineering_user_session_analysis_spark.sources.formats import (
-    SUPPORTED_FORMATS,
-    read_lake_table,
+    COLUMNAR_FORMATS,
     write_lake_table,
 )
 
@@ -30,23 +29,15 @@ def _sample(spark, sf_small):
     return ev.limit(500)
 
 
-@pytest.mark.parametrize("fmt", SUPPORTED_FORMATS)
+@pytest.mark.parametrize("fmt", COLUMNAR_FORMATS)
 def test_lake_roundtrip_all_formats(spark, sf_small, tmp_path, fmt):
     df = _sample(spark, sf_small)
     path = str(tmp_path / fmt)
     write_lake_table(df, path, fmt=fmt)
-    back = read_lake_table(spark, path, fmt=fmt, schema=EVENT_SCHEMA)
+    back = spark.read.format(fmt).schema(EVENT_SCHEMA).load(path)
     want = {tuple(r) for r in df.collect()}
     got = {tuple(r) for r in back.collect()}
     assert got == want, f"{fmt} roundtrip diverged"
-
-
-def test_row_formats_require_schema(spark, sf_small, tmp_path):
-    df = _sample(spark, sf_small)
-    path = str(tmp_path / "jsonl")
-    write_lake_table(df, path, fmt="json")
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_lake_table(spark, path, fmt="json")
 
 
 def test_orc_pushdown_and_column_pruning(spark, sf_small, tmp_path):
@@ -56,7 +47,7 @@ def test_orc_pushdown_and_column_pruning(spark, sf_small, tmp_path):
     path = str(tmp_path / "orc")
     write_lake_table(df, path, fmt="orc")
     q = (
-        read_lake_table(spark, path, fmt="orc")
+        spark.read.format("orc").load(path)
         .filter(F.col("value") > 100)
         .select("event_id", "value")
     )
@@ -74,7 +65,7 @@ def test_partition_pruning_carries_across_formats(spark, sf_small, tmp_path, fmt
     path = str(tmp_path / f"{fmt}_part")
     write_lake_table(df, path, fmt=fmt, partition_by=("date",))
     one_day = df.select("date").distinct().limit(1).collect()[0].date
-    q = read_lake_table(spark, path, fmt=fmt).filter(F.col("date") == one_day)
+    q = spark.read.format(fmt).load(path).filter(F.col("date") == one_day)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(date" in plan, plan
     assert f"= {one_day})" in plan, plan

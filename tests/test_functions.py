@@ -1,6 +1,5 @@
-"""Unit pins for the scalar-function helpers, including the reference
-bug fixes (SURVEY.md §2.7 F6, §2.4 A8) and sessionization invariants
-(SURVEY.md §5.4)."""
+"""Unit pins for the event-time derivations, the session rollup and
+sessionization invariants (SURVEY.md §5.4)."""
 
 from __future__ import annotations
 
@@ -9,32 +8,17 @@ import json
 
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.functions import split_category, time_derivations
 from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
 from data_engineering_user_session_analysis_spark.operators.sessionize import epoch_seconds, sessionize
 from data_engineering_user_session_analysis_spark.sources.events import load_events
+from data_engineering_user_session_analysis_spark.streaming.ingest_stream import enrich_events
 
 
-def test_split_category_literal_dot(spark):
-    """Reference bug pin: split on literal '.', not regex any-char
-    (the reference's pattern '.' yields empty strings)."""
-    df = spark.createDataFrame(
-        [("electronics.smartphone",), ("apparel",), (None,)], ["category_code"]
-    )
-    out = {
-        r.category_code: (r.main_category, r.sub_category)
-        for r in split_category(df).collect()
-    }
-    assert out["electronics.smartphone"] == ("electronics", "smartphone")
-    assert out["apparel"] == ("apparel", "unknown")
-    assert out[None] == ("unknown", "unknown")
-
-
-def test_time_derivations(spark):
+def test_enrich_events_derived_columns(spark):
     df = spark.createDataFrame(
         [(datetime.datetime(2024, 1, 1, 13, 45, 0),)], ["ts"]
     )
-    row = time_derivations(df).collect()[0]
+    row = enrich_events(df).collect()[0]
     assert row.date == datetime.date(2024, 1, 1)
     assert row.date_of_week == "Monday"
     assert row.hour_of_day == 13

@@ -161,33 +161,6 @@ def test_simhash_blocking_equals_all_pairs(spark, sf_small):
     assert brute, "fixture produced no near pairs — test is vacuous"
 
 
-def test_ngram_df_cap_binding_and_nonbinding(spark, sf_small):
-    """Default stop-shingle cap must not change the result on the test
-    corpus (non-binding); with a tiny binding cap the query must still
-    run and keep the near-dup pairs that share low-DF shingles."""
-    from data_engineering_user_session_analysis_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-    uncapped = {
-        (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, max_shingle_df=None).collect()
-    }
-    default_cap = {
-        (r.doc_a, r.doc_b) for r in ngram_jaccard_pairs(docs).collect()
-    }
-    assert default_cap == uncapped  # 10k cap cannot bind on 500 docs
-    tiny_cap = {
-        (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, max_shingle_df=2).collect()
-    }
-    # capped universe can only shrink intersections for shared-boilerplate
-    # pairs; near-dup pairs share many LOW-df shingles and survive
-    assert tiny_cap, "DF cap destroyed all near-dup pairs"
-
-
 def test_verify_jaccard_equals_inverted_index(spark, sf_small):
     """The candidate-bounded set-intersection verify must emit exactly
     the exact Jaccard of every candidate pair — the intersection and
@@ -330,44 +303,6 @@ def test_connected_components_long_chain_converges(spark):
     ).collect()
     assert len(comp) == n
     assert {r.component for r in comp} == {0}
-
-
-def test_stratified_sample_quota_and_determinism(spark, sf_small):
-    """Exactly k per stratum, stable under repartitioning, and
-    strata-independent (removing one stratum leaves others' samples
-    untouched)."""
-    from data_engineering_user_session_analysis_spark.operators.sampling import stratified_sample
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-    s1 = stratified_sample(docs, ["lang"], 10, "doc_id")
-    per_lang = {r.lang: r.n for r in s1.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    sizes = {r.lang: r.n for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert per_lang == {lang: min(10, n) for lang, n in sizes.items()}
-    # deterministic under a different partitioning
-    s2 = stratified_sample(docs.repartition(13), ["lang"], 10, "doc_id")
-    assert {r.doc_id for r in s1.collect()} == {r.doc_id for r in s2.collect()}
-    # dropping one stratum leaves the others' picks unchanged
-    langs = sorted(sizes)
-    rest = stratified_sample(docs.filter(F.col("lang") != langs[0]), ["lang"], 10, "doc_id")
-    s1_rest = {r.doc_id for r in s1.filter(F.col("lang") != langs[0]).collect()}
-    assert {r.doc_id for r in rest.collect()} == s1_rest
-
-
-def test_hash_bernoulli_sample_rate_and_stability(spark, sf_small):
-    """~rate fraction kept, identical rows on every invocation and
-    partition layout, filter-only plan (no shuffle)."""
-    from data_engineering_user_session_analysis_spark.operators.sampling import hash_bernoulli_sample
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-    s = hash_bernoulli_sample(docs, "doc_id", 0.2)
-    n, total = s.count(), docs.count()
-    assert 0.1 * total < n < 0.3 * total, (n, total)
-    again = hash_bernoulli_sample(docs.repartition(7), "doc_id", 0.2)
-    assert {r.doc_id for r in s.collect()} == {r.doc_id for r in again.collect()}
-    plan = s._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_range_join_equals_naive_and_is_equi(spark, sf_small):
@@ -734,37 +669,6 @@ def test_minhash_dedup_edges_same_clusters_linear_output(spark, sf_small):
     # so n_docs - base.count() would under-count groups)
     n_distinct_texts = docs.select("text").distinct().count()
     assert star_edges == n_docs - n_distinct_texts
-    docs.unpersist()
-
-
-def test_simhash_dedup_edges_same_clusters(spark, sf_small):
-    """SimHash star-edge dedup graph: components must equal the
-    all-pairs simhash_pairs components on a clone-heavy corpus."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.operators.dedup import (
-        simhash_dedup_edges,
-        simhash_pairs,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    shift = 1_000_000
-    base = load_table(spark, sf_small, "documents").limit(60)
-    docs = base.unionByName(
-        base.withColumn("doc_id", F.col("doc_id") + shift)
-    ).unionByName(base.withColumn("doc_id", F.col("doc_id") + 2 * shift))
-    docs = docs.cache()
-
-    all_pairs = [
-        (r.doc_a, r.doc_b)
-        for r in simhash_pairs(docs, max_hamming=2)
-        .select("doc_a", "doc_b")
-        .collect()
-    ]
-    edge_rows = simhash_dedup_edges(docs, max_hamming=2).collect()
-    edges = [(r.doc_a, r.doc_b) for r in edge_rows]
-    assert _uf_components(edges) == _uf_components(all_pairs)
-    assert len(edges) < len(all_pairs)
     docs.unpersist()
 
 

@@ -260,43 +260,6 @@ def test_remove_preserves_other_columns(spark):
     assert {r.doc_id: r.lang for r in rows} == {1: "en", 2: "de"}
 
 
-def test_sample_mod_for_recall_closed_form():
-    """The recall-target inverse matches a brute-force scan over p,
-    pins the measured-curve example (target 0.9 at L=32/window=15 →
-    p=8, whose 1M measured recall was 0.897), and rejects
-    sub-window spans."""
-    import pytest
-
-    from data_engineering_user_session_analysis_spark.operators.span_dedup import (
-        sample_mod_for_recall,
-    )
-
-    def brute(t, L, w):
-        a = L - w + 1
-        best = 1
-        for p in range(1, 4096):
-            if 1.0 - (1.0 - 1.0 / p) ** a >= t:
-                best = p
-            else:
-                break
-        return best
-
-    for t in (0.5, 0.8, 0.9, 0.95, 0.99):
-        for L in (16, 20, 32, 50, 64, 200):
-            assert sample_mod_for_recall(t, L, window=15) == brute(t, L, 15), (t, L)
-    assert sample_mod_for_recall(0.9, 32, window=15) == 8
-    # longer floor -> larger permissible p (monotone)
-    assert sample_mod_for_recall(0.9, 64, window=15) >= sample_mod_for_recall(
-        0.9, 32, window=15
-    )
-    # an unreachable target degrades to 1 (no sampling)
-    assert sample_mod_for_recall(0.9999999, 16, window=15) == 1
-    with pytest.raises(ValueError):
-        sample_mod_for_recall(0.9, 10, window=15)
-    with pytest.raises(ValueError):
-        sample_mod_for_recall(1.0, 32, window=15)
-
-
 def test_min_docs_three_uses_distinct_count(spark):
     # min_docs > 2 takes the exact count-distinct path: a span shared
     # by exactly 2 docs no longer qualifies.
