@@ -10,10 +10,17 @@
 * **One lake read, counts without jobs**: the reference rescans the
   day's data for every one of its 5 actions (no ``.cache()``,
   ``spark_jobs/spark_batch_job.py:27-164``); here the daily pipeline
-  reads the lake relation once and hands it to every step, the
-  serving step caches the day at its fan-out root so its aggregates
-  share one scan, and the report's row counts are ``Observation``s
-  on writes that run anyway, not ``count()`` jobs of their own.
+  reads the lake relation once and hands it to every step, and the
+  report's row counts are ``Observation``s on writes that run anyway,
+  not ``count()`` jobs of their own.
+* **Independent writes overlap**: each write action is its own Spark
+  query, and at paper size a day's jobs are a few tasks each, so run
+  one after another they leave most cores idle between launches.  A
+  step whose writes do not read each other's output submits them
+  together (``_concurrently``) and the scheduler fills the cores.
+  The serving step re-scans the day's few partition-pruned files per
+  table instead of caching it: concurrent writers would each launch
+  their own job to build one cache.
 * **Serving sink**: parquet directories stand in for the reference's
   Postgres tables (same ``overwrite`` semantics); `jdbc_url` switches
   to real JDBC when a database is reachable.
@@ -22,11 +29,15 @@
 from __future__ import annotations
 
 import datetime
+import functools
 import os
 import sys
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
 from data_engineering_user_session_analysis_spark.operators.sessionize import session_rollup, sessionize
@@ -46,6 +57,19 @@ def parse_ds(ds: str) -> datetime.date:
     if day is None or day.isoformat() != ds:
         raise ValueError(f"ds must be a YYYY-MM-DD date, got {ds!r}")
     return day
+
+
+def _concurrently(spark: SparkSession, *calls: Callable[[], object]) -> list:
+    """Run the zero-argument ``calls`` at once, one thread each, and
+    return their results in call order.  Each thread inherits the
+    caller's Spark job group, description and tags, so its jobs are
+    attributed as if the caller had launched them.  Every call is
+    joined before the first failure, in call order, is re-raised: no
+    write is still running when the error reaches the caller."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    # leaving the block joined every thread
+    return [f.result() for f in futures]
 
 
 def build_lake(
@@ -89,7 +113,8 @@ def run_daily_job(
     to ``date = ds`` itself, so a caller running several steps or
     days reads (and lists) the lake once.  Returns the result
     DataFrames keyed by table name (also written to ``out_dir`` in
-    the lake format, or to JDBC when ``jdbc_url`` given).  ``fmt`` is
+    the lake format, or to JDBC when ``jdbc_url`` given; the three
+    writes run concurrently).  ``fmt`` is
     the serving format and should match the lake's (partition
     pruning behaves identically for parquet and ORC — plan-pinned in
     tests/test_formats.py); only columnar formats are accepted.
@@ -121,7 +146,6 @@ def run_daily_job(
         # to a user — excluded here (the daily pipeline's hygiene step
         # records them in the quarantine sink)
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .cache()
     )
 
     sessionized = sessionize(day, order_cols=("event_id",))
@@ -148,21 +172,23 @@ def run_daily_job(
         "session_full": session_full,
         "user_level": user_level,
     }
-    try:
-        for name, df in results.items():
-            if jdbc_url is not None:
-                df.write.jdbc(
-                    url=jdbc_url,
-                    table=name,
-                    mode="overwrite",
-                    properties=jdbc_properties or {},
-                )
-            else:
-                df.write.mode("overwrite").format(fmt).save(
-                    os.path.join(out_dir, name, f"ds={ds}")
-                )
-    finally:
-        day.unpersist()
+
+    def write(name: str, df: DataFrame) -> None:
+        if jdbc_url is not None:
+            df.write.jdbc(
+                url=jdbc_url,
+                table=name,
+                mode="overwrite",
+                properties=jdbc_properties or {},
+            )
+        else:
+            df.write.mode("overwrite").format(fmt).save(
+                os.path.join(out_dir, name, f"ds={ds}")
+            )
+
+    _concurrently(
+        spark, *(functools.partial(write, name, df) for name, df in results.items())
+    )
     return results
 
 
@@ -191,8 +217,9 @@ def run_incremental_sessions(
       in order.  (Partition discovery is a local listing here; a
       cluster deployment lists via the Hadoop FileSystem API.)
 
-    Returns closed/open row counts for observability, observed on
-    the two writes.
+    Both writes read ``advance_sessions``' one checkpointed fold and
+    run concurrently.  Returns closed/open row counts for
+    observability, observed on the two writes.
     """
     from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
         advance_sessions,
@@ -233,12 +260,19 @@ def run_incremental_sessions(
     # the counts are Observations on the writes themselves: the rows
     # are counted as they are written, with no job of their own
     n_closed, n_open = Observation(), Observation()
-    closed.observe(n_closed, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).format(fmt).save(os.path.join(out_dir, "session_closed", f"ds={ds}"))
-    new_state.observe(n_open, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).format(fmt).save(os.path.join(state_root, f"ds={ds}"))
+    closed_write = closed.observe(n_closed, F.count(F.lit(1)).alias("n")).write
+    state_write = new_state.observe(n_open, F.count(F.lit(1)).alias("n")).write
+    _concurrently(
+        spark,
+        functools.partial(
+            closed_write.mode("overwrite").format(fmt).save,
+            os.path.join(out_dir, "session_closed", f"ds={ds}"),
+        ),
+        functools.partial(
+            state_write.mode("overwrite").format(fmt).save,
+            os.path.join(state_root, f"ds={ds}"),
+        ),
+    )
     return {"closed": n_closed.get["n"], "open": n_open.get["n"]}
 
 
@@ -303,6 +337,15 @@ def run_daily_pipeline(
     The lake is read once per call and that one relation feeds the
     hygiene, stitch and serving steps.  Returns a per-step report
     dict for observability.
+
+    Steps 1-3 overlap: the quarantine write reads only the lake, so it
+    runs beside the stitch step followed by the serving step (those
+    two stay in order, in one thread), and both are joined before
+    step 4.  Compaction must not overlap a reader of the lake: it
+    swaps the previous day's directory by rename and refreshes the
+    file listing of every relation under the lake root, the one the
+    other steps share included, and a scan running through that
+    refresh can come back without the day's rows.
     """
     day = parse_ds(ds)
     report: dict = {"ds": ds}
@@ -317,7 +360,7 @@ def run_daily_pipeline(
     # data was fixed clears the previous run's stale dead-letter rows
     # (the "re-running any day replaces exactly its own outputs"
     # invariant applies to the quarantine sink too).
-    (
+    quarantine = (
         lake.filter(F.col("date") == ds)  # partition-pruned
         .observe(
             stats,
@@ -327,19 +370,27 @@ def run_daily_pipeline(
         .filter(is_bad)
         .write.mode("overwrite")
         .format(fmt)
-        .save(os.path.join(out_dir, "quarantine", f"ds={ds}"))
     )
-    report["hygiene"] = stats.get  # {"rows": …, "quarantined": …}
     # the exclusion itself is enforced by the downstream steps' reads
     # (run_incremental_sessions / run_daily_job drop null-key rows),
     # so the quarantine sink is the RECORD of what they excluded —
     # a dead-lettered row is never also sessionized or served
 
-    report["sessions"] = run_incremental_sessions(
-        spark, lake, ds, out_dir, fmt=fmt
-    )
+    # the stitch and serving steps stay in one thread, in order:
+    # perfbench's Tracer spans them with a single span stack
+    def stitch_then_serve() -> tuple[dict, dict]:
+        sessions = run_incremental_sessions(spark, lake, ds, out_dir, fmt=fmt)
+        return sessions, run_daily_job(spark, lake, ds, out_dir, fmt=fmt)
 
-    serving = run_daily_job(spark, lake, ds, out_dir, fmt=fmt)
+    _, (sessions, serving) = _concurrently(
+        spark,
+        functools.partial(
+            quarantine.save, os.path.join(out_dir, "quarantine", f"ds={ds}")
+        ),
+        stitch_then_serve,
+    )
+    report["hygiene"] = stats.get  # {"rows": …, "quarantined": …}
+    report["sessions"] = sessions
     report["serving_tables"] = sorted(serving)
 
     if compact_previous:
@@ -363,29 +414,32 @@ def run_backfill(
     ds_start: str,
     ds_end: str,
     out_dir: str,
+    fmt: str = "parquet",
 ) -> dict[str, dict[str, DataFrame]]:
     """Re-run the daily job over a closed date range (inclusive) —
     the recovery path after a logic fix or late-landing data.  Days
-    run sequentially ON PURPOSE: each day's read is partition-pruned
-    and cached independently, so concurrency would only contend for
-    the same executors, and sequential days give monotonic,
-    resumable progress (re-running a subrange is idempotent because
-    every serving write is a per-day overwrite).
+    run sequentially ON PURPOSE: each day's writes already run
+    concurrently over that day's partition-pruned read, so
+    overlapping days would only contend for the same executors, and
+    sequential days give monotonic, resumable progress (re-running a
+    subrange is idempotent because every serving write is a per-day
+    overwrite).
 
     Writes the SAME ``out_dir/<table>/ds=<ds>`` locations the daily
     job writes — a backfill replaces the live serving output for the
     range, which is the whole point of running one.  The lake is read
-    once for the whole range."""
+    once for the whole range, in its format ``fmt``, which is also
+    the serving format."""
     start = parse_ds(ds_start)
     end = parse_ds(ds_end)
     if end < start:
         raise ValueError(f"backfill range is empty: {ds_start}..{ds_end}")
-    lake = spark.read.parquet(lake_path)
+    lake = spark.read.format(fmt).load(lake_path)
     out: dict[str, dict[str, DataFrame]] = {}
     day = start
     while day <= end:
         ds = day.isoformat()
-        out[ds] = run_daily_job(spark, lake, ds, out_dir)
+        out[ds] = run_daily_job(spark, lake, ds, out_dir, fmt=fmt)
         day += datetime.timedelta(days=1)
     return out
 

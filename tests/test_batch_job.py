@@ -1,9 +1,12 @@
 """End-to-end daily batch job: lake build → partition-pruned day read
-→ cached fan-out → serving outputs (SURVEY.md §3.2 lifecycle)."""
+→ concurrent serving writes → serving outputs (SURVEY.md §3.2
+lifecycle)."""
 
 from __future__ import annotations
 
 import os
+import time
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -225,6 +228,25 @@ def test_backfill_range_matches_daily_runs(spark, sf_small, tmp_path):
     assert c == b
 
 
+def test_backfill_runs_on_orc_lake(spark, sf_small, tmp_path):
+    """A backfill over an ORC lake reads it as ORC and writes every
+    serving table of every day in the range as ORC."""
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_backfill
+
+    lake = str(tmp_path / "lake_orc")
+    out = str(tmp_path / "bf")
+    build_lake(spark, sf_small, lake, fmt="orc")
+    days = ("2024-01-05", "2024-01-06")
+    results = run_backfill(spark, lake, *days, out, fmt="orc")
+    assert set(results) == set(days)
+    for ds in days:
+        for name, df in results[ds].items():
+            written = spark.read.orc(os.path.join(out, name, f"ds={ds}"))
+            assert written.count() > 0, f"{name} {ds} empty — vacuous"
+            assert written.exceptAll(df).count() == 0, (name, ds)
+            assert df.exceptAll(written).count() == 0, (name, ds)
+
+
 def test_backfill_overwrites_daily_serving_location(spark, sf_small, tmp_path):
     """Daily job and backfill must write the SAME per-(table, ds)
     serving locations: a backfill that lands somewhere else leaves
@@ -310,27 +332,99 @@ def test_daily_pipeline_three_day_replay_idempotent(spark, sf_small, tmp_path):
     assert all(len(s) > 0 for s in d3)
 
 
+def _settled_status(spark):
+    """The status tracker once every event posted so far is applied:
+    it is fed asynchronously, so a job that just ended can still show
+    as active and one just launched can be missing."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark.sparkContext.statusTracker()
+
+
+@contextmanager
+def _jobs_of(spark, group):
+    """Run the block under job group ``group``; on exit the yielded
+    list holds the ids of its jobs.  Fails when the block launched a
+    job without a group, one that would escape the count."""
+    sc = spark.sparkContext
+    ungrouped = set(_settled_status(spark).getJobIdsForGroup(None))
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    status = _settled_status(spark)
+    assert set(status.getJobIdsForGroup(None)) == ungrouped, "a job lost its group"
+    jobs.extend(status.getJobIdsForGroup(group))
+
+
 def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     """One pipeline day with a prior day present (a carry state to
-    read, a partition to compact) launches at most 16 Spark jobs: the
+    read, a partition to compact) launches at most 15 Spark jobs: the
     steps share one lake read, the hygiene and session counts are
-    observed on their writes, and the hot-key cap and ``user_level``
-    are one aggregate each."""
+    observed on their writes, the hot-key cap and ``user_level`` are
+    one aggregate each, and the serving step does not cache the day.
+    Every job carries the caller's group, also those launched from the
+    threads that run the writes concurrently: a job that lost the
+    group would escape the budget, so none may appear ungrouped."""
     from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
 
     lake = str(tmp_path / "lake")
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)
     run_daily_pipeline(spark, lake, "2024-01-01", out)
-    sc = spark.sparkContext
-    group = "test_daily_pipeline_job_budget"
-    sc.setJobGroup(group, group)
-    try:
+    with _jobs_of(spark, "test_daily_pipeline_job_budget") as jobs:
         report = run_daily_pipeline(spark, lake, "2024-01-02", out)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert "compacted_previous" in report
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+    assert len(jobs) <= 15
+
+
+def test_daily_job_budget_and_no_day_cache(spark, sf_small, tmp_path):
+    """The serving step alone launches at most 6 jobs and caches
+    nothing: its three writes run concurrently, and a cached day would
+    make each writer launch its own job to build the one cache."""
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    # listing and schema inference of the lake are the caller's jobs
+    events = spark.read.parquet(lake)
+    with _jobs_of(spark, "test_daily_job_budget_and_no_day_cache") as jobs:
+        results = run_daily_job(spark, events, "2024-01-05", str(tmp_path / "serving"))
+    assert len(jobs) <= 6
+    for name, df in results.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan, (name, plan)
+
+
+def test_concurrently_joins_every_call_then_raises_the_first_failure(spark):
+    """``_concurrently`` hands each call the caller's job group,
+    returns results in call order, and on failure re-raises the first
+    failing call's error in CALL order (not the first to fail in time)
+    only once every call has ended."""
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import _concurrently
+
+    sc = spark.sparkContext
+    ended = []
+
+    def slow_failure():
+        time.sleep(0.2)
+        raise ValueError("first in call order")
+
+    def fast_failure():
+        raise KeyError("first in time")
+
+    def slowest():
+        time.sleep(0.5)
+        ended.append("slowest")
+
+    group = "test_concurrently"
+    with _jobs_of(spark, group):
+        got = _concurrently(
+            spark, lambda: sc.getLocalProperty("spark.jobGroup.id"), lambda: 2
+        )
+        with pytest.raises(ValueError, match="first in call order"):
+            _concurrently(spark, slow_failure, fast_failure, slowest)
+    assert got == [group, 2]
+    assert ended == ["slowest"]
 
 
 def test_user_level_one_exchange(spark, sf_small, tmp_path):
@@ -347,8 +441,8 @@ def test_user_level_one_exchange(spark, sf_small, tmp_path):
 
 def test_daily_job_releases_cache_when_a_write_fails(spark, sf_small, tmp_path):
     """A failing serving write must not leave the day cached for the
-    rest of the session."""
-    import pytest
+    rest of the session, nor a sibling write still running once the
+    error reaches the caller."""
     from py4j.protocol import Py4JJavaError
 
     lake = str(tmp_path / "lake")
@@ -359,6 +453,28 @@ def test_daily_job_releases_cache_when_a_write_fails(spark, sf_small, tmp_path):
     with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
         run_daily_job(spark, spark.read.parquet(lake), "2024-01-05", str(not_a_dir))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _settled_status(spark).getActiveJobsIds() == []
+
+
+def test_daily_pipeline_joins_quarantine_when_serving_fails(spark, sf_small, tmp_path):
+    """When the serving step fails, the quarantine write running beside
+    it has ended, and succeeded, before the error reaches the caller:
+    no job is left running and the day's quarantine partition is
+    complete."""
+    from py4j.protocol import Py4JJavaError
+
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
+
+    lake = str(tmp_path / "lake")
+    out = tmp_path / "serving"
+    build_lake(spark, sf_small, lake)
+    out.mkdir()
+    (out / "user_level").write_text("")
+    ds = "2024-01-05"
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        run_daily_pipeline(spark, lake, ds, str(out))
+    assert _settled_status(spark).getActiveJobsIds() == []
+    assert (out / "quarantine" / f"ds={ds}" / "_SUCCESS").exists()
 
 
 def test_daily_pipeline_on_stream_written_lake(spark, sf_small, tmp_path):
