@@ -676,9 +676,9 @@ def simhash_pairs(
 
     Fingerprint width: 32 bits (11-bit blocks) starts saturating its
     block space around ~10^5 docs on a small-vocabulary corpus
-    (STRESS_sf1_r03.json: candidates grow as replicas² on the 10×
-    clone stress) — production corpora use 64-bit fingerprints
-    (21-bit blocks, 2^21 buckets).  A 60-bit variant (15 md5 hex
+    (candidates grow as replicas² on a 10× clone-inflated corpus)
+    — production corpora use 64-bit fingerprints (21-bit blocks,
+    2^21 buckets).  A 60-bit variant (15 md5 hex
     chars, still a signed long in both engines) was measured on this
     fixture corpus and NOT adopted: its pairwise Hamming histogram
     has no separation cliff (counts rise smoothly 1,5,2,5,11,32,85…

@@ -239,9 +239,9 @@ def remove_duplicated_spans(
     PARTIAL (lower-bound) removal, and the remove-then-redetect-clean
     property holds only at the same ``sample_mod`` (a full redetect
     can still find duplicated spans whose anchors the sample missed).
-    Measured at 1M docs (STRESS_sf1_r13 ``spanrecall1m``, planted
-    spans, window=15): detection recall under sampling matches the
-    predicted ``1-(1-1/p)^(L-window+1)`` anchor curve within ~3
+    Measured at 1M docs (planted spans, window=15): detection recall
+    under sampling matches the predicted ``1-(1-1/p)^(L-window+1)``
+    anchor curve within ~3
     points at every (p, L) — e.g. p=8: L=16 tokens 0.26 measured vs
     0.23 predicted, L=32 0.90 vs 0.91, L=48+ ≈1.0; token-coverage
     under sampling is a strict underestimate (p=8, L=64: 0.74 of

@@ -22,8 +22,7 @@ layout.  A ``report`` dict carries per-stage survivor counts (one
 cheap count per stage, the operational visibility every data
 pipeline needs).
 
-Measured stage budget at 1M distinct docs (STRESS_sf1_r11,
-``stress_bench.py --tier corpusprep1m``, local[32], probe-paired):
+Measured stage budget at 1M distinct docs (local[32]):
 192.8 s end-to-end = 5,186 docs/s, 162 docs/s/core.  Per stage:
 quality+scrub 14.1 s, exact dedup 28.1 s, near-dup cluster dedup
 69.7 s (the dominant stage — MinHash pairs + connected components,

@@ -39,33 +39,6 @@ def _predict_sql() -> str:
     return "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
 
 
-# Round-12 consolidation: the `lang_id` registry row folded into
-# `doc_quality_scores` below (freeing the 50-cap slot for
-# `dedup_exact_substring` in dedup_queries.py): same table, same doc
-# grain, same scan — the merged row runs predict_lang's per-language
-# scores AND the argmax priority chain next to the quality features,
-# so a defect in any scoring expression still fails a driver row.
-# The function stays callable (bench.py's shared-r02 yardstick times
-# it directly, like `late_shipment_orders` since round 10), and the
-# lang-grain aggregate view remains `doc_token_stats`.
-
-
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-profile language ID (n-gram-free heuristic baseline):
-    per-language hit scores + argmax with a fixed priority chain.
-    Registry coverage carried by ``doc_quality_scores``."""
-    docs = load_table(spark, sf_dir, "documents")
-    return predict_lang(docs).select(
-        "doc_id",
-        F.col("lang").alias("declared_lang"),
-        "predicted_lang",
-        "score_en",
-        "score_de",
-        "score_es",
-        "score_fr",
-    )
-
-
 @register(
     "doc_quality_scores",
     f"""

@@ -167,34 +167,6 @@ def nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def late_shipment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-SEMI join (EXISTS): orders with any lineitem shipped >60
-    days after the order date, counted by priority (TPC-H Q4 shape).
-
-    Registry row retired in round 10 (see COVERAGE.md): its mechanics
-    are each double-carried by still-registered rows — the LeftSemi
-    PLAN by ``user_segments`` (intersect → LeftSemi, plan-pinned in
-    tests/test_tpch.py::test_user_segments_plans_left_anti_and_semi),
-    date-arithmetic range predicates by ``q6``/``q12``/
-    ``purchase_asof_view``, and the groupBy count everywhere — while
-    its distinctive bit, the NON-EQUI correlated-EXISTS condition, is
-    pinned non-vacuously against an independent join+distinct witness
-    in tests/test_tpch.py::test_late_shipment_semi_join_non_vacuous.
-    Its registry slot funds ``ann_cos_route`` (the cosine routing
-    kernel's DuckDB row — a whole operator-family kernel that had no
-    driver check vs a 4th semi-join variant that had three)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cond = (li.l_orderkey == orders.o_orderkey) & (
-        li.l_shipdate > F.date_add(orders.o_orderdate, 60)
-    )
-    return (
-        orders.join(li, cond, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
 def customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-ANTI join (NOT EXISTS): customers that never ordered.
 

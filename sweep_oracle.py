@@ -1,13 +1,11 @@
 #!/usr/bin/env python
 """Registry-wide DuckDB-oracle sweep at an arbitrary scale factor.
 
-The driver's correctness gate runs at sf0.01 and the per-round closing
-sweep re-runs it at sf0.1 (COVERAGE.md).  This script extends the
-"right answer, not just runs" claim one decade further (VERDICT r10
-item 2): it runs every registry query on Spark AND its oracle SQL on
-DuckDB over the same parquet decade (default the generated
-``.testdata/sf1`` — see tools/gen_testdata.py) and records a per-query
-status artifact.
+The driver's correctness gate runs at sf0.01.  This script carries
+the "right answer, not just runs" check to any decade: it runs every
+registry query on Spark AND its oracle SQL on DuckDB over the same
+parquet directory (e.g. one generated by tools/gen_testdata.py) and
+records a per-query status artifact.
 
 Per query:
 - ``pass``            spark vs oracle: rows + schema + exact values
@@ -19,25 +17,12 @@ Per query:
                       row count + schema recorded, note says why
 - ``spark_error``     the engine itself failed (failure)
 
-Probe-paired PER ROW (VERDICT r11 #6): a fixed-size CPU probe runs
-every PROBE_EVERY queries (plus start/end), so per-row timings — and
-the cross-decade scaling table below — are attributable under host
-steal without hand arithmetic.
+``spark_sec`` is the wall time of the one Spark collection that is
+compared.  The script writes the artifact, then exits 1 when any row
+is a failure.
 
-Cross-decade scaling (VERDICT r11 #3): pass a lower-SF sweep artifact
-via ``SWEEP_COMPARE_TO`` (or it defaults to the committed sf0.1 sweep
-when sweeping sf1) and the artifact gains ``scaling_vs_compare`` — a
-per-row map of nominal warm-min spark_sec ratios with both sides'
-seconds and raw probe units in the row.  At 10x rows a healthy row
-lands <=~15x; a quadratic one shows ~100x (the r11 sweep pair
-measured embedding_neardup at 82.8x, the defect that motivated this
-table).  The derived probe-NORMALIZED ratio column was retired in r14
-(VERDICT r13 #4: probe noise multiplies into the ratio and the column
-over-corrected even under same-box warm pairing); the raw units stay
-so a reader can still attribute box drift.
-
-Usage: python sweep_oracle.py [SF_DIR] [OUT_JSON]
-Env:   SWEEP_ORACLE_TIMEOUT_S (default 600), SWEEP_COMPARE_TO
+Usage: python sweep_oracle.py SF_DIR OUT_JSON
+Env:   SWEEP_ORACLE_TIMEOUT_S (default 600)
 """
 
 from __future__ import annotations
@@ -50,22 +35,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-PROBE_EVERY = 10
-
-
-def _cpu_probe() -> float:
-    import numpy as np
-
-    a = np.random.RandomState(0).randn(1500, 1500)
-    t0 = time.perf_counter()
-    for _ in range(6):
-        a @ a
-    return round(time.perf_counter() - t0, 3)
-
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else ".testdata/sf1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "SWEEP_sf1_r12.json"
+    if len(sys.argv) != 3:
+        sys.exit("usage: python sweep_oracle.py SF_DIR OUT_JSON")
+    sf_dir, out_path = sys.argv[1:]
     timeout_s = float(os.environ.get("SWEEP_ORACLE_TIMEOUT_S", "600"))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
@@ -74,34 +48,21 @@ def main() -> None:
 
     import duckdb
 
-    from bench import probe_series_unit
     from data_engineering_user_session_analysis_spark import get_spark
     from data_engineering_user_session_analysis_spark.queries import ORACLE, QUERIES
     from tests.oracle_harness import compare_pandas, duckdb_conn
 
-    _cpu_probe()  # warmup, discarded
-    probe_series: list[dict] = []
-    rows_done = 0
-
-    def _probe_mark() -> None:
-        probe_series.append({"at_row": rows_done, "sec": _cpu_probe()})
-
-    _probe_mark()
-
     spark = get_spark("sweep")
     con = duckdb_conn(sf_dir)
-    con.execute("SET threads TO 16")
-    con.execute("SET memory_limit = '48GB'")
 
     def run_oracle(sql: str):
         """fetchdf with an interrupt watchdog: DuckDB has no statement
         timeout, so a quadratic oracle at this decade is bounded by
         con.interrupt() from a timer thread.  The timer can fire
-        AFTER fetchdf returns but before cancel() lands (ADVICE r11):
-        when that race hits, the stale interrupt sits on the shared
-        connection and would abort the NEXT query — so if the timer
-        ran, drain the connection with a throwaway statement before
-        returning."""
+        AFTER fetchdf returns but before cancel() lands: when that
+        race hits, the stale interrupt sits on the shared connection
+        and would abort the NEXT query — so if the timer ran, drain
+        the connection with a throwaway statement before returning."""
         fired = threading.Event()
 
         def _interrupt() -> None:
@@ -124,58 +85,16 @@ def main() -> None:
     results: dict[str, dict] = {}
     for name in sorted(QUERIES):
         entry: dict = {"status": None, "spark_sec": None, "oracle_sec": None}
+        results[name] = entry
         t0 = time.perf_counter()
         try:
-            spark_df = QUERIES[name](spark, sf_dir)
-            spdf = spark_df.toPandas()
+            spdf = QUERIES[name](spark, sf_dir).toPandas()
             entry["spark_sec"] = round(time.perf_counter() - t0, 3)
             entry["spark_rows"] = len(spdf)
             entry["columns"] = sorted(spdf.columns)
-            # Extra timed trials (results discarded — the COMPARED
-            # frame stays the first collection): one for every row,
-            # two more for sub-2s rows.  Two separate biases make the
-            # single-trial number unusable for cross-decade ratios:
-            # sub-2s rows on this microVM carry +-2-3x host-steal
-            # dispersion, and EVERY row's first trial includes the
-            # cold page-cache read of its tables — at sf1 that is
-            # ~20 s of I/O on a 10x parquet scan (top_customers
-            # measured 21.7 s cold / 1.5 s warm across three
-            # independent sweeps), which reads as fake superlinearity.
-            # Trials must be symmetric across the compared runs or the
-            # bias just flips sign (a warm min-3 base under a cold
-            # single-trial numerator re-inflated event_enrichment to
-            # 16.6x), hence at least one warm trial for ALL rows.
-            # spark_sec keeps the single-trial protocol for cross-
-            # round comparability; the scaling table prefers the min.
-            best = entry["spark_sec"]
-            n_extra = 2 if entry["spark_sec"] < 2.0 else 1
-            for _ in range(n_extra):
-                t1 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t1)
-            # r15: adjacent trials can share ONE slow box window —
-            # user_segments recorded 9.24 s across two back-to-back
-            # trials while a post-sweep min-of-3 read 1.22 s, putting
-            # a fake 27x in the scaling table.  A still-slow min after
-            # the standard trials earns up to two more, so a
-            # transient window must span four trials to survive into
-            # the artifact.
-            retries = 0
-            while best > 5.0 and retries < 2:
-                t1 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t1)
-                retries += 1
-            entry["spark_sec_min"] = round(best, 3)
         except Exception as exc:
             entry["status"] = "spark_error"
             entry["error"] = repr(exc)[:500]
-            results[name] = entry
-            rows_done += 1
             print(json.dumps({name: entry}), flush=True)
             continue
         if name not in ORACLE:
@@ -187,9 +106,8 @@ def main() -> None:
                 oracle_pdf = run_oracle(ORACLE[name])
                 entry["oracle_sec"] = round(time.perf_counter() - t1, 3)
                 entry["oracle_rows"] = len(oracle_pdf)
-                # compare the ALREADY-collected frame: the timed
-                # collection IS the compared collection, and the
-                # Spark query runs once, not twice (ADVICE r11)
+                # compare the already-collected frame: the timed
+                # collection is the compared one, and Spark runs once
                 problems = compare_pandas(name, spdf, oracle_pdf)
                 entry["status"] = "pass" if not problems else "mismatch"
                 if problems:
@@ -205,110 +123,15 @@ def main() -> None:
             except Exception as exc:
                 entry["status"] = "oracle_skipped"
                 entry["note"] = f"oracle error at sf{sf}: {repr(exc)[:300]}; spark rows+schema recorded"
-        results[name] = entry
-        rows_done += 1
-        if rows_done % PROBE_EVERY == 0:
-            _probe_mark()
-        print(json.dumps({name: {k: entry[k] for k in ('status', 'spark_sec', 'oracle_sec') if k in entry}}), flush=True)
+        print(json.dumps({name: {k: entry[k] for k in ('status', 'spark_sec', 'oracle_sec')}}), flush=True)
         spark.catalog.clearCache()
-
-    if probe_series[-1]["at_row"] != rows_done:
-        _probe_mark()
-
-    # ---- cross-decade scaling table (VERDICT r11 #3 + #6): per-row
-    # spark_sec vs a lower-SF sweep, nominal AND probe-normalized
-    # (each row divided by the box-speed ratio at its position in its
-    # own run, so a sweep sharing the box with a pytest run — the r11
-    # sf0.1 sweep ran 2.6x slow per probe-unit — still yields
-    # trustworthy ratios).
-    compare_to = os.environ.get("SWEEP_COMPARE_TO")
-    if compare_to is None and sf >= 1.0:
-        default_cmp = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "SWEEP_sf0.1_r12.json"
-        )
-        compare_to = default_cmp if os.path.exists(default_cmp) else None
-    scaling: dict[str, dict] = {}
-    scaling_meta = None
-    if compare_to and os.path.exists(compare_to):
-        try:
-            with open(compare_to) as f:
-                base = json.load(f)
-            base_rows = base.get("queries", {})
-            base_order = list(base_rows)
-            base_series = base.get("cpu_probe_series") or [
-                {"at_row": 0, "sec": base.get("cpu_probe_sec_start", 1.0)},
-                {"at_row": len(base_order), "sec": base.get("cpu_probe_sec_end", 1.0)},
-            ]
-            order_now = list(results)
-            for name, entry in results.items():
-                b = base_rows.get(name)
-                if (
-                    not b
-                    or b.get("spark_sec") is None
-                    or entry.get("spark_sec") is None
-                ):
-                    continue
-                # prefer the warm min-of-trials timing — but only when
-                # BOTH sides have one (ADVICE r13): a warm-min
-                # numerator over an old single-trial (cold) base
-                # artifact reintroduces the asymmetric cold/warm bias
-                # the trial protocol exists to kill, so an old base
-                # without spark_sec_min drops the row to single-trial
-                # on BOTH sides.  Explicit None checks: a legitimate
-                # 0.0 min is a measurement, not a missing field.
-                base_min = b.get("spark_sec_min")
-                if base_min is None:
-                    base_min = b.get("spark_sec_min3")
-                now_min = entry.get("spark_sec_min")
-                if base_min is not None and now_min is not None:
-                    base_eff, now_eff = base_min, now_min
-                else:
-                    base_eff, now_eff = b["spark_sec"], entry["spark_sec"]
-                if base_eff <= 0:
-                    continue
-                nominal = now_eff / base_eff
-                unit_now = probe_series_unit(probe_series, order_now.index(name))
-                unit_base = probe_series_unit(base_series, base_order.index(name))
-                scaling[name] = {
-                    # NOMINAL is the published signal.  The derived
-                    # probe_normalized_ratio column was RETIRED in r14
-                    # (VERDICT r13 #4): even under same-box warm
-                    # pairing it over-corrected (session_rollup_keyed
-                    # read 16.1x normalized vs 5.7x nominal in
-                    # SWEEP_sf1_r13) because the probe itself samples
-                    # a drifting box and its noise multiplies into the
-                    # ratio.  The RAW per-row probe units stay in the
-                    # row as context — a reader can divide, but the
-                    # artifact no longer publishes a number known to
-                    # mislead.
-                    "spark_sec_ratio": round(nominal, 2),
-                    # both sides of the ratio, in the row, so a large
-                    # ratio over a small base is readable as such
-                    # without opening the compare artifact
-                    "base_sec": base_eff,
-                    "now_sec": now_eff,
-                    "probe_unit_now": round(unit_now, 3),
-                    "probe_unit_base": round(unit_base, 3),
-                }
-            scaling_meta = {
-                "compare_to": compare_to,
-                "compare_sf": base.get("sf"),
-                "rows_factor": "see per-table counts; documents/embeddings 10x at sf0.1->sf1",
-                "signal": (
-                    "nominal warm-min ratio (spark_sec_ratio); "
-                    "probe-normalized column retired r14 — raw probe "
-                    "units recorded per row instead"
-                ),
-            }
-        except (OSError, ValueError) as exc:
-            scaling_meta = {"compare_to": compare_to, "error": repr(exc)[:200]}
 
     statuses = [e["status"] for e in results.values()]
     data_provenance = (
         "tools/gen_testdata.py seed=42 (driver ships sf<=0.1; schema "
         "byte-identical, distributions measured from sf0.1)"
         if ".testdata" in sf_dir
-        else "driver-shipped tables (/root/testdata)"
+        else "driver-shipped tables"
     )
     payload = {
         "sf": sf,
@@ -321,32 +144,24 @@ def main() -> None:
         "n_oracle_skipped": statuses.count("oracle_skipped"),
         "n_spark_error": statuses.count("spark_error"),
         "oracle_timeout_s": timeout_s,
-        "cpu_probe_sec_start": probe_series[0]["sec"],
-        "cpu_probe_sec_end": probe_series[-1]["sec"],
-        "cpu_probe_series": probe_series,
         "total_spark_sec": round(
             sum(e["spark_sec"] or 0.0 for e in results.values()), 2
         ),
         "total_oracle_sec": round(
             sum(e["oracle_sec"] or 0.0 for e in results.values()), 2
         ),
-        "scaling_vs_compare": scaling or None,
-        "scaling_meta": scaling_meta,
         "queries": results,
     }
     with open(out_path, "w") as f:
         json.dump(payload, f, indent=1)
         f.write("\n")
-    compact = {k: v for k, v in payload.items() if k not in ("queries", "scaling_vs_compare", "cpu_probe_series")}
-    compact["mismatches"] = sorted(
+    compact = {k: v for k, v in payload.items() if k != "queries"}
+    compact["failures"] = sorted(
         n for n, e in results.items() if e["status"] in ("mismatch", "spark_error")
     )
-    if scaling:
-        # nominal warm-min ratio (the normalized column was retired r14)
-        compact["max_nominal_scaling"] = max(
-            (v["spark_sec_ratio"], k) for k, v in scaling.items()
-        )
     print(json.dumps(compact))
+    if compact["failures"]:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -6,12 +6,12 @@ from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.jobs.batch_job import build_lake, run_daily_job
+from data_engineering_user_session_analysis_spark.plans.audit import jobs_of
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 
 
@@ -340,24 +340,6 @@ def _settled_status(spark):
     return spark.sparkContext.statusTracker()
 
 
-@contextmanager
-def _jobs_of(spark, group):
-    """Run the block under job group ``group``; on exit the yielded
-    list holds the ids of its jobs.  Fails when the block launched a
-    job without a group, one that would escape the count."""
-    sc = spark.sparkContext
-    ungrouped = set(_settled_status(spark).getJobIdsForGroup(None))
-    jobs: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    status = _settled_status(spark)
-    assert set(status.getJobIdsForGroup(None)) == ungrouped, "a job lost its group"
-    jobs.extend(status.getJobIdsForGroup(group))
-
-
 def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     """One pipeline day with a prior day present (a carry state to
     read, a partition to compact) launches at most 15 Spark jobs: the
@@ -373,7 +355,7 @@ def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)
     run_daily_pipeline(spark, lake, "2024-01-01", out)
-    with _jobs_of(spark, "test_daily_pipeline_job_budget") as jobs:
+    with jobs_of(spark, "test_daily_pipeline_job_budget") as jobs:
         report = run_daily_pipeline(spark, lake, "2024-01-02", out)
     assert "compacted_previous" in report
     assert len(jobs) <= 15
@@ -387,7 +369,7 @@ def test_daily_job_budget_and_no_day_cache(spark, sf_small, tmp_path):
     build_lake(spark, sf_small, lake)
     # listing and schema inference of the lake are the caller's jobs
     events = spark.read.parquet(lake)
-    with _jobs_of(spark, "test_daily_job_budget_and_no_day_cache") as jobs:
+    with jobs_of(spark, "test_daily_job_budget_and_no_day_cache") as jobs:
         results = run_daily_job(spark, events, "2024-01-05", str(tmp_path / "serving"))
     assert len(jobs) <= 6
     for name, df in results.items():
@@ -417,7 +399,7 @@ def test_concurrently_joins_every_call_then_raises_the_first_failure(spark):
         ended.append("slowest")
 
     group = "test_concurrently"
-    with _jobs_of(spark, group):
+    with jobs_of(spark, group):
         got = _concurrently(
             spark, lambda: sc.getLocalProperty("spark.jobGroup.id"), lambda: 2
         )

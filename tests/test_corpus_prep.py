@@ -62,8 +62,7 @@ def test_prepare_corpus_stages(spark, sf_small):
 
 def test_prepare_corpus_stage_timings(spark, sf_small):
     # the optional caller-owned timing dict gets one entry per report
-    # barrier, same keys/order, positive seconds (the stress tier's
-    # 1M-doc budget rides this hook — stress_bench.measure_corpus_prep)
+    # barrier, same keys/order, positive seconds
     corpus, _ = _corpus_with_junk(spark, sf_small)
     timings: dict[str, float] = {}
     _, report = prepare_corpus(

@@ -9,11 +9,16 @@ A use is an identifier reference: a ``Name``, an ``Attribute`` or an
 import alias.  A mention in a string or docstring is not a use, and
 neither is a re-export import in a package ``__init__.py``.  The check
 is name-level (a name used anywhere counts), not a transitive closure.
+
+Every top-level module those files import must also resolve, so a
+deleted script cannot leave a dangling import behind.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.machinery
+import importlib.util
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -23,8 +28,6 @@ PACKAGE = REPO / "data_engineering_user_session_analysis_spark"
 USE_SITES = (
     PACKAGE,
     REPO / "__spark_entry__.py",
-    REPO / "stress_bench.py",
-    REPO / "bench.py",
     REPO / "sweep_oracle.py",
     REPO / "tools",
     REPO / "perfbench",
@@ -44,12 +47,9 @@ ROOT_NAMES = {"main", "build_lake", "prepare_corpus"}
 
 #: test-only names kept on purpose, each with the reason
 ALLOWLIST = {
-    ("plans/audit.py", "count_exchanges"): "plan-pin probe, until a plan-feature ledger replaces it",
-    ("plans/audit.py", "count_scans"): "plan-pin probe, until a plan-feature ledger replaces it",
-    ("plans/audit.py", "has_pushed_filter"): "plan-pin probe, until a plan-feature ledger replaces it",
-    ("plans/audit.py", "has_partition_filter"): "plan-pin probe, until a plan-feature ledger replaces it",
-    ("plans/audit.py", "is_equi_join_only"): "plan-pin probe, until a plan-feature ledger replaces it",
-    ("plans/audit.py", "whole_stage_codegen_spans"): "plan-pin probe, until a plan-feature ledger replaces it",
+    ("plans/audit.py", "has_pushed_filter"): "plan-audit API for a job's own plan pins; a property the ledger's counts do not carry",
+    ("plans/audit.py", "is_equi_join_only"): "plan-audit API for a job's own plan pins; a property the ledger's counts do not carry",
+    ("plans/audit.py", "whole_stage_codegen_spans"): "plan-audit API for a job's own plan pins; a property the ledger's counts do not carry",
     ("sources/compaction.py", "partition_file_stats"): "the compaction tests measure compact_partition with it",
     ("streaming/session_stream.py", "foreach_batch_upsert_parquet"): "the paper's sessionized-table sink surface",
     ("streaming/session_stream.py", "foreach_batch_jdbc"): "the paper's sessionized-Postgres sink surface",
@@ -163,3 +163,49 @@ def test_allowlist_names_exist_and_are_still_unreached():
         if (rel, name) not in definitions or name in uses
     )
     assert not stale, f"stale allowlist entries: {stale}"
+
+
+def _resolves(module: str, importer: Path) -> bool:
+    """True when ``module`` is found beside ``importer``, at the repo
+    root or on ``sys.path``; finding a top-level spec imports nothing."""
+    local = importlib.machinery.PathFinder.find_spec(
+        module, [str(importer.parent), str(REPO)]
+    )
+    return local is not None or importlib.util.find_spec(module) is not None
+
+
+def _guarded_imports(tree: ast.AST) -> set[int]:
+    """ids of the import nodes inside a ``try`` that catches
+    ``ImportError``: optional dependencies, absent by design."""
+    guarded = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Try) and any(
+            isinstance(h.type, ast.Name)
+            and h.type.id in ("ImportError", "ModuleNotFoundError")
+            for h in node.handlers
+        ):
+            guarded.update(id(n) for stmt in node.body for n in ast.walk(stmt))
+    return guarded
+
+
+def test_every_imported_module_resolves():
+    dangling = set()
+    for site in USE_SITES:
+        for path in _py_files(site):
+            tree = ast.parse(path.read_text(), filename=str(path))
+            guarded = _guarded_imports(tree)
+            for node in ast.walk(tree):
+                if id(node) in guarded:
+                    continue
+                if isinstance(node, ast.Import):
+                    tops = [a.name.split(".")[0] for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                    tops = [node.module.split(".")[0]]
+                else:
+                    continue
+                dangling.update(
+                    f"{path.relative_to(REPO)}: {top}"
+                    for top in tops
+                    if not _resolves(top, path)
+                )
+    assert not dangling, f"imports of modules that do not exist: {sorted(dangling)}"

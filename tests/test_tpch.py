@@ -66,45 +66,3 @@ def test_user_segments_plans_left_anti_and_semi(spark, sf_small):
     )
     assert "LeftAnti" in plan, "subtract must plan as a LeftAnti join"
     assert "LeftSemi" in plan, "intersect must plan as a LeftSemi join"
-
-
-def test_late_shipment_semi_join_non_vacuous(spark, sf_small):
-    """The retired `late_shipment_orders` registry row's semantics,
-    pinned non-vacuously (round-10 consolidation, COVERAGE.md): the
-    NON-EQUI correlated-EXISTS (left-semi with a range condition)
-    must equal an independent witness — inner join on the same
-    condition followed by a distinct on the order key — and must
-    discriminate: some orders qualify, some do not."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_user_session_analysis_spark.queries.tpch_queries import (
-        late_shipment_orders,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    got = {
-        (r.o_orderpriority, r.n_orders)
-        for r in late_shipment_orders(spark, sf_small).collect()
-    }
-
-    orders = load_table(spark, sf_small, "orders")
-    li = load_table(spark, sf_small, "lineitem")
-    cond = (li.l_orderkey == orders.o_orderkey) & (
-        li.l_shipdate > F.date_add(orders.o_orderdate, 60)
-    )
-    witness = {
-        (r.o_orderpriority, r.n_orders)
-        for r in orders.join(li, cond)
-        .select("o_orderkey", "o_orderpriority")
-        .distinct()
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"))
-        .collect()
-    }
-    assert got == witness
-    # non-vacuous both ways: qualifying orders exist AND the predicate
-    # excludes some orders (a semi-join that keeps everything or
-    # nothing would pass any equality check vacuously)
-    n_qualifying = sum(n for _, n in got)
-    assert n_qualifying > 0
-    assert n_qualifying < orders.count()

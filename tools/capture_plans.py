@@ -1,47 +1,40 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for registry queries into plans/$SPARK_GRAFT_PLANS_DIR (default r16)/.
+"""Write PLANFEATURES.json: the plan-feature ledger of the registry.
 
-Usage: python tools/capture_plans.py <suffix> [name ...]
+Usage: python tools/capture_plans.py
 
-Writes plans/r15/<query>_<suffix>.txt for each requested query (all 50
-when no names are given).  Uses the same tuned session as bench.py so
-the captured plan is the one the bench actually executes.
+For every ``QUERIES`` row, on the sf0.001 fixture the tests use, it
+records ``plans.audit.plan_features``: ``{jobs, exchanges, windows,
+joins, scans}``.  ``tests/test_plan_features.py`` recomputes each
+vector and fails when any count exceeds its entry, so a change that
+lowers a count commits the lower ledger as its proof.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
     from data_engineering_user_session_analysis_spark import get_spark
+    from data_engineering_user_session_analysis_spark.plans.audit import plan_features
     from data_engineering_user_session_analysis_spark.queries import QUERIES
-
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r16")
-    )
-    os.makedirs(out_dir, exist_ok=True)
+    from tests.conftest import SF_SMALL
 
     spark = get_spark("capture_plans")
-    todo = names or sorted(QUERIES)
-    for name in todo:
-        try:
-            df = QUERIES[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception as exc:  # capture the failure, keep going
-            plan = f"EXPLAIN FAILED: {exc!r}\n"
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(plan)
-        print(name, "written", flush=True)
+    rows = {}
+    for name in sorted(QUERIES):
+        rows[name] = plan_features(spark, lambda: QUERIES[name](spark, SF_SMALL))
+        print(name, rows[name], flush=True)
+    ledger = {"scale": os.path.basename(SF_SMALL), "rows": rows}
+    with open(os.path.join(REPO, "PLANFEATURES.json"), "w") as f:
+        json.dump(ledger, f, indent=1)
+        f.write("\n")
 
 
 if __name__ == "__main__":
