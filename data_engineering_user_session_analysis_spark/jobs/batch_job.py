@@ -37,6 +37,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
@@ -223,6 +224,7 @@ def run_incremental_sessions(
     """
     from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
         advance_sessions,
+        empty_state,
     )
 
     day_ds = parse_ds(ds)
@@ -245,17 +247,24 @@ def run_incremental_sessions(
             if part_ds < day_ds:
                 priors.append(part_ds)
         prev = max(priors).isoformat() if priors else None
-    state = (
-        spark.read.format(fmt).load(os.path.join(state_root, f"ds={prev}"))
-        if prev
-        else None
-    )
     day = (
         lake.filter(F.col("date") == ds)  # partition-pruned day read
         # null-key rows cannot be stitched; quarantined by the daily
         # pipeline's hygiene step, excluded here for any entry point
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
     )
+    state = None
+    if prev:
+        carry = spark.read.format(fmt)
+        if fmt == "parquet":
+            # the fold's own state schema, so no inference job; a
+            # carry of the other timestamp flavor reads value for value
+            # in a UTC session.  ORC infers from one footer on the
+            # driver (no job) and refuses to convert between the
+            # flavors, so it keeps its own schema and the fold's union
+            # widens the two.
+            carry = carry.schema(empty_state(day).schema)
+        state = carry.load(os.path.join(state_root, f"ds={prev}"))
     closed, new_state = advance_sessions(day, state)
     # the counts are Observations on the writes themselves: the rows
     # are counted as they are written, with no job of their own
@@ -282,6 +291,7 @@ def compact_closed_partition(
     ds: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     fmt: str = "parquet",
+    schema: StructType | None = None,
 ) -> dict:
     """Maintenance step for the daily cadence: once ``ds`` is closed
     (the stream's watermark has passed it), merge its micro-batch
@@ -289,7 +299,13 @@ def compact_closed_partition(
     ``fmt``.  Runs naturally right after ``run_daily_job`` for the
     same ds — the day's partition has just been read for the last
     time hot, and every later backfill scan pays file-count costs
-    forever if it stays shattered."""
+    forever if it stays shattered.
+
+    ``schema`` is the lake's data columns (no ``date``): the daily
+    pipeline passes the one its lake relation already holds, so the
+    partition is read without a schema-inference job.  ``job
+    compact`` has no relation and passes none: the partition's schema
+    is then inferred from its files."""
     from data_engineering_user_session_analysis_spark.sources.compaction import compact_partition
 
     return compact_partition(
@@ -297,6 +313,7 @@ def compact_closed_partition(
         os.path.join(lake_path, f"date={ds}"),
         target_file_bytes=target_file_bytes,
         fmt=fmt,
+        schema=schema,
     )
 
 
@@ -337,6 +354,16 @@ def run_daily_pipeline(
     The lake is read once per call and that one relation feeds the
     hygiene, stitch and serving steps.  Returns a per-step report
     dict for observability.
+
+    Schemas: the lake root is the one read whose schema is inferred,
+    which on parquet is one Spark job a day.  The repo's lake writers
+    do not agree on one schema yet (``build_lake`` writes six columns
+    with a TIMESTAMP_NTZ ``ts``, the ingest stream nine with a
+    TIMESTAMP ``ts``), so no declared schema fits every lake.  Every
+    other read of the day declares its schema and so launches no job:
+    the carry state is read with the fold's state schema for the day
+    (``run_incremental_sessions``), and the partition compacted in
+    step 4 with the data columns the lake relation already holds.
 
     Steps 1-3 overlap: the quarantine write reads only the lake, so it
     runs beside the stitch step followed by the serving step (those
@@ -403,7 +430,13 @@ def run_daily_pipeline(
             report["compacted_previous"] = (
                 {"skipped": sink_log}
                 if sink_log is not None
-                else compact_closed_partition(spark, lake_path, prev, fmt=fmt)
+                else compact_closed_partition(
+                    spark,
+                    lake_path,
+                    prev,
+                    fmt=fmt,
+                    schema=StructType([f for f in lake.schema if f.name != "date"]),
+                )
             )
     return report
 

@@ -202,7 +202,7 @@ def advance_sessions(
     """
     spark = day.sparkSession
     if state is None:
-        state = spark.sql(_EMPTY_STATE_SQL, day=day)
+        state = empty_state(day)
     combined = spark.sql(
         _STEP_SQL,
         args={"gap_us": int(gap_seconds) * 1_000_000},
@@ -217,6 +217,14 @@ def advance_sessions(
     closed = _to_rollup(combined.filter(~F.col("_is_open")))
     new_state = combined.filter(F.col("_is_open")).select("user_id", *_STATE_COLS)
     return closed, new_state
+
+
+def empty_state(day: DataFrame) -> DataFrame:
+    """A carry with no rows, in the state table schema that folding
+    ``day`` reads and writes: its timestamps have the type of the
+    day's ``ts``.  Its ``schema`` is what a stored carry is read with,
+    so reading one needs no schema-inference job."""
+    return day.sparkSession.sql(_EMPTY_STATE_SQL, day=day)
 
 
 def _to_rollup(partials: DataFrame) -> DataFrame:

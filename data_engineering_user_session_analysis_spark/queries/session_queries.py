@@ -321,7 +321,8 @@ def session_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="session_incr_")
     lake_dir = os.path.join(tmp, "lake")
     ev.repartition("_d").write.partitionBy("_d").parquet(lake_dir)
-    lake = spark.read.parquet(lake_dir)
+    # read back with the schema just written: no inference job
+    lake = spark.read.schema(ev.schema).parquet(lake_dir)
     state, closed = None, []
     for i, d in enumerate(days):
         day_closed, state = advance_sessions(

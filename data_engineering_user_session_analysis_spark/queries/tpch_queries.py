@@ -404,26 +404,25 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushes to the scan; no shuffle except the final 2-stage
     reduce.
 
-    Expressed through ``spark.sql`` over registered views: this is
-    the engine's SQL API surface (round 1's separate
+    Expressed through ``spark.sql`` with the table as a DataFrame
+    argument (no temp view is left in the session): this is the
+    engine's SQL API surface (round 1's separate
     ``sql_surface_region_revenue`` entry — see COVERAGE.md).
     Catalyst produces the identical plan for the SQL text and the
     DataFrame composition, so one registry row proves both layers."""
-    from data_engineering_user_session_analysis_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT
           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
                    * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue,
           count(*) AS n_lineitems
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= '1996-01-01'
           AND l_shipdate <  '1997-01-01'
           AND CAST(l_discount AS DECIMAL(12,2)) BETWEEN 0.02 AND 0.06
           AND l_quantity < 10
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -54,6 +54,7 @@ import math
 import uuid
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 
 def _fs(spark: SparkSession, path: str):
@@ -125,6 +126,7 @@ def compact_partition(
     partition_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     fmt: str = "parquet",
+    schema: StructType | None = None,
 ) -> dict:
     """Rewrite one partition directory's files into
     ``ceil(bytes / target_file_bytes)`` files (at least 1).  Returns a
@@ -132,7 +134,12 @@ def compact_partition(
 
     Reads the leaf directory directly (partition values live in the
     directory name, not the files, so the rewrite reproduces the file
-    contents byte-for-byte up to row order).  Refuses to run under a
+    contents byte-for-byte up to row order).  With ``schema`` (the
+    files' data columns, as the caller's relation over the same lake
+    already holds them) the read declares it; without, the schema is
+    inferred from a footer, which on parquet is a Spark job of its
+    own.  A declared schema must be the one the partition was written
+    with: a column it lacks is not rewritten.  Refuses to run under a
     FileStreamSink ``_spark_metadata`` log — see the module
     docstring."""
     log = find_sink_log(spark, partition_path)
@@ -149,7 +156,10 @@ def compact_partition(
     n_out = max(1, math.ceil(bytes_before / target_file_bytes))
 
     # narrow merge — no shuffle, no re-sort, just fewer files.
-    df = spark.read.format(fmt).load(partition_path).coalesce(n_out)
+    reader = spark.read.format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.load(partition_path).coalesce(n_out)
 
     fs, live = _fs(spark, partition_path)
     parent = live.getParent()

@@ -5,49 +5,44 @@ a time by hand-built path (``spark_jobs/spark_batch_job.py:17-21``).
 Here: read the base path declaratively and let Catalyst prune
 partitions/files from pushed-down filters (SURVEY.md §4 row 1) —
 identical I/O, plus schema stability across days.
+
+Each fixture table is one local parquet file, and it is read with the
+schema its own footer declares (``footer_schema``): the footer is read
+on the driver in under a millisecond, where ``spark.read.parquet``
+with no schema launches a Spark job to read it.  The schema comes
+from the file, so it cannot drift from it.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer for the
+    local parquet file ``path``, taken from its footer on the driver.
+
+    A timestamp without a time zone maps to TIMESTAMP_NTZ when
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on, as Spark's
+    own inference does.  A TIMESTAMP(NANOS) column maps to its raw
+    nanosecond ``bigint`` (Spark's ``nanosAsLong`` reading; Spark has
+    no nanosecond timestamp), which the caller converts."""
+    arrow = pq.read_schema(path)
+    for i, field in enumerate(arrow):
+        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+            arrow = arrow.set(i, field.with_type(pa.int64()))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table. Parquet scan → vectorized reader, pushdown-able."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL surface).
-
-    Events go through ``load_events`` (nanos-timestamp normalization
-    + UTC session conf) — registering the raw file would fail on a
-    fresh session before any loader has set the legacy-nanos conf."""
-    from data_engineering_user_session_analysis_spark.sources.events import load_events
-
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = (
-                load_events(spark, sf_dir)
-                if name == "events"
-                else spark.read.parquet(path)
-            )
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
+    """Load one table with its footer schema: no Spark job until the
+    frame runs.  Parquet scan → vectorized reader, pushdown-able."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return spark.read.schema(footer_schema(spark, path)).parquet(path)

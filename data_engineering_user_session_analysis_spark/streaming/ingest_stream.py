@@ -179,7 +179,16 @@ def read_file_stream(
     microsecond TIMESTAMP/TIMESTAMP_NTZ, and assuming either corrupts
     the other (a nanos ``div 1000`` applied to micros collapses a
     7-day span into minutes).  Whatever the physical type, downstream
-    sees a true TimestampType ``ts``."""
+    sees a true TimestampType ``ts``.
+
+    The footer read stays a Spark job (unlike the fixture loaders'
+    driver-side ``sources/tables.footer_schema``): ``path`` may be a
+    directory written by either of the repo's two lake writers, whose
+    schemas differ (six columns with TIMESTAMP_NTZ ``ts`` from
+    ``build_lake``, nine with TIMESTAMP ``ts`` from the ingest
+    stream), and Spark-written parquet stores TIMESTAMP as INT96,
+    which a pyarrow footer reports as nanoseconds.  A declared lake
+    schema needs one writer schema first."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # No-op for micro/milli TIMESTAMP columns; lets TIMESTAMP(NANOS)
     # fixtures surface as INT64 instead of failing the footer read.

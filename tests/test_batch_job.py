@@ -342,8 +342,10 @@ def _settled_status(spark):
 
 def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     """One pipeline day with a prior day present (a carry state to
-    read, a partition to compact) launches at most 15 Spark jobs: the
-    steps share one lake read, the hygiene and session counts are
+    read, a partition to compact) launches at most 13 Spark jobs: the
+    steps share one lake read, the carry and the compacted partition
+    are read with declared schemas (no inference job), the hygiene
+    and session counts are
     observed on their writes, the hot-key cap and ``user_level`` are
     one aggregate each, and the serving step does not cache the day.
     Every job carries the caller's group, also those launched from the
@@ -358,7 +360,7 @@ def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     with jobs_of(spark, "test_daily_pipeline_job_budget") as jobs:
         report = run_daily_pipeline(spark, lake, "2024-01-02", out)
     assert "compacted_previous" in report
-    assert len(jobs) <= 15
+    assert len(jobs) <= 13
 
 
 def test_daily_job_budget_and_no_day_cache(spark, sf_small, tmp_path):

@@ -1,7 +1,8 @@
 """Every registry query must be self-sufficient on a fresh session:
 no query may depend on a runtime conf that some *other* query's
-loader happened to set earlier (the bug class: register_views read
-raw nanos parquet and only worked if load_events had run first).
+loader happened to set earlier (the bug class: a loader that read
+raw nanos parquet and only worked if ``load_events`` had set
+``nanosAsLong`` first).
 
 Simulated here by unsetting the legacy-nanos conf before each
 invocation — the conf-sensitive part of a cold session."""

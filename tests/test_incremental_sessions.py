@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
@@ -567,3 +568,66 @@ def test_replay_day_scan_is_partition_pruned(spark, tmp_path):
     # the pruned scan must read exactly the one day's rows
     assert one_day.count() == 1
     assert one_day.select("event_id").collect()[0][0] == 2
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+@pytest.mark.parametrize(
+    "carry_ts,day_ts", [("timestamp", "timestamp_ntz"), ("timestamp_ntz", "timestamp")]
+)
+def test_carry_of_the_other_timestamp_flavor_still_folds(
+    spark, tmp_path, fmt, carry_ts, day_ts
+):
+    """A carry partition folded from a lake whose ``ts`` had the other
+    timestamp flavor (TIMESTAMP vs TIMESTAMP_NTZ) still folds into the
+    next day to exactly the batch sessions, in either direction and
+    format: parquet reads it with the day's state schema, ORC keeps
+    the carry's own."""
+    import os
+
+    from data_engineering_user_session_analysis_spark.jobs.batch_job import (
+        run_incremental_sessions,
+    )
+
+    ev = _mk_events(
+        spark,
+        [
+            (1, "2024-03-01 23:50:00", 1, "view", 1.0),
+            (1, "2024-03-02 00:10:00", 2, "purchase", 2.5),  # stitches
+            (2, "2024-03-01 10:00:00", 3, "view", 1.0),
+            (2, "2024-03-02 09:00:00", 4, "click", 0.0),  # closes the carry
+            (3, "2024-03-01 01:00:00", 5, "view", 1.0),  # closed on day 1
+            (3, "2024-03-01 05:00:00", 6, "view", 3.0),
+        ],
+    )
+    lake = str(tmp_path / "lake")
+    out = str(tmp_path / "serving")
+    ev.withColumn("date", F.date_format("ts", "yyyy-MM-dd")).write.partitionBy(
+        "date"
+    ).format(fmt).save(lake)
+    relation = spark.read.format(fmt).load(lake)
+    days = (("2024-03-01", carry_ts), ("2024-03-02", day_ts))
+    for ds, flavor in days:
+        run_incremental_sessions(
+            spark, relation.withColumn("ts", F.col("ts").cast(flavor)), ds, out, fmt=fmt
+        )
+
+    def as_text(df):
+        text = df.select([F.col(c).cast("string") for c in df.columns])
+        return [tuple(r) for r in text.collect()]
+
+    got = as_text(
+        finalize_sessions(
+            spark.read.format(fmt).load(os.path.join(out, "session_state", "ds=2024-03-02"))
+        )
+    )
+    for ds, _ in days:
+        got += as_text(
+            spark.read.format(fmt).load(os.path.join(out, "session_closed", f"ds={ds}"))
+        )
+    want = as_text(
+        session_rollup(
+            sessionize(ev.withColumn("ts", F.col("ts").cast(day_ts)), order_cols=("event_id",))
+        )
+    )
+    assert len(want) == 5
+    assert sorted(got) == sorted(want)
