@@ -75,20 +75,3 @@ def contaminated_docs(
         .agg(F.count("*").alias("n_hits"))
         .filter(F.col("n_hits") >= min_hits)
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = DEFAULT_NGRAM,
-    min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-) -> DataFrame:
-    """The corpus minus contaminated docs (left-anti on the flag
-    set) — the pipeline-tail convenience wrapper."""
-    flagged = contaminated_docs(
-        corpus, benchmark, n, min_hits, text_col, id_col, bench_text_col
-    ).select(id_col)
-    return corpus.join(flagged, id_col, "left_anti")

@@ -269,7 +269,7 @@ def exact_dup_star_edges(
     This is the linearizing pre-pass for every near-dup pipeline on a
     re-crawl corpus: run the (approximate) near-dup stage on the
     representatives only, union its pairs with these star edges, and
-    feed ``connected_components`` / ``dedup_canonical`` unchanged.
+    feed ``connected_components`` unchanged.
     Connectivity — and therefore clusters and canonical ids — is
     IDENTICAL to the all-pairs form: members of an exact group are
     connected through their rep, and a rep's near-dup relations equal
@@ -540,25 +540,6 @@ def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
             if changed == 0:
                 break
     return labels
-
-
-def dedup_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
-    """Keep ONE document per near-duplicate cluster: the full dedup
-    pipeline tail (pairs → components → canonical filter).  The
-    canonical doc is the min-id member; docs that appear in no pair
-    survive untouched (left-anti against clustered non-canonicals —
-    the big side is never collected or recomputed per cluster)."""
-    comp = connected_components(pairs, src, dst)
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return docs.join(losers, id_col, "left_anti")
 
 
 def _md5_token_hash(col) -> F.Column:

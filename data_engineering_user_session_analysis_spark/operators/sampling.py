@@ -10,15 +10,6 @@ cluster sizes — the property a 100 TB corpus pipeline needs for
 auditable data mixes, and for re-running a failed day without
 resampling the world.
 
-Weight sampler (k-shaped output):
-
-* ``weighted_sample`` — k rows without replacement with inclusion
-  probability proportional to a weight column (quality-weighted
-  training mixes), via the Efraimidis–Spirtakis exponential-keys
-  scheme with the content-hash as the uniform variate — the one
-  weighted sampler that is both single-pass distributed AND
-  deterministic.
-
 Rate/split samplers (rate-shaped output, all map-side — pinned with
 a no-Exchange plan check in tests/test_sampling.py):
 
@@ -55,48 +46,6 @@ def _key_hash(col: Column) -> Column:
     """First 8 md5 hex chars of the key as a non-negative long —
     reproducible in any engine (unlike murmur/xxhash/rand)."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-
-
-#: hash-bucket denominator for the uniform variate: md5's first 8 hex
-#: chars span [0, 2^32), so (h + 1) / (2^32 + 1) lies strictly in
-#: (0, 1) — pow(u, 1/w) stays finite for every weight.
-_U_DENOM = float((1 << 32) + 1)
-
-
-def weighted_sample(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    k: int,
-) -> DataFrame:
-    """``k`` rows without replacement, inclusion probability
-    proportional to ``weight_col`` — deterministic.
-
-    Efraimidis–Spirtakis A-ES: each row scores ``u ** (1 / w)`` with
-    ``u`` uniform in (0, 1); the k largest scores are a weighted
-    sample without replacement.  Here ``u`` comes from the row's
-    content hash instead of ``rand()``, so the sample is reproducible
-    across runs, engines, and partition layouts — and retry-safe
-    (re-executed tasks recompute identical scores, the SPARK-23207
-    hazard class that seed-based sampling has on shuffle retry).
-
-    Scale shape: scores are a map-only projection; the top-k is
-    ``orderBy(...).limit(k)`` = TakeOrderedAndProject — per-partition
-    partial top-k, one driver merge of partitions·k rows, NO global
-    sort shuffle.  Rows with non-positive weight are excluded (their
-    inclusion probability is 0).
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    u = (_key_hash(F.col(key_col)) + 1) / F.lit(_U_DENOM)
-    score = F.pow(u, 1.0 / F.col(weight_col).cast("double"))
-    return (
-        df.filter(F.col(weight_col) > 0)
-        .withColumn("_es_score", score)
-        .orderBy(F.col("_es_score").desc(), F.col(key_col).asc())
-        .limit(k)
-        .drop("_es_score")
-    )
 
 
 # ----------------------------------------------------------------- #

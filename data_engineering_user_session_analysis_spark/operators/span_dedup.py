@@ -4,8 +4,8 @@ Language Models Better"): find spans of >= `window` consecutive
 tokens that occur verbatim in more than one document, and score each
 document by how much of it is covered by such spans.
 
-The reference corpus pipelines in this repo already carry DOCUMENT-
-level dedup (exact digest groups, MinHash/LSH, SimHash); this is the
+The dedup operators in this repo already carry DOCUMENT-level
+dedup (exact digest groups, MinHash/LSH, SimHash); this is the
 finer grain — a press-release paragraph pasted into thousands of
 otherwise-distinct pages is invisible to document-level Jaccard but
 is exactly what substring dedup removes.  The public algorithm uses
@@ -172,8 +172,7 @@ def duplicated_span_stats(
 
     Fractions are one IEEE division of exact integers, so a SQL
     oracle replays them bit-for-bit.  The removal/flag consumer is a
-    trivial filter on ``dup_token_frac`` (corpus-prep wires it as an
-    opt-in gate).
+    trivial filter on ``dup_token_frac``.
     """
     wh = positional_window_hashes(
         docs, text_col, id_col, window=window, sample_mod=sample_mod
@@ -214,110 +213,3 @@ def duplicated_span_stats(
             "dup_token_frac"
         ),
     )
-
-
-def remove_duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = EXACTSUBSTR_WINDOW,
-    min_docs: int = 2,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """The full ExactSubstr protocol step: REWRITE each document,
-    dropping the tokens covered by cross-doc duplicated windows while
-    keeping exactly one canonical occurrence of every duplicated
-    window corpus-wide (the lexicographically smallest
-    ``(doc_id, pos)`` occurrence keeps its copy — deterministic, no
-    tie to break twice).  A token survives if it is outside every
-    duplicated window of its doc, or inside a canonical one
-    (canonical coverage overrides removal, so the kept occurrence is
-    never chewed up by its own overlapping non-canonical windows).
-
-    ``sample_mod`` caveat: with sampling active the rewrite removes
-    only spans whose ANCHOR windows were sampled — removal becomes a
-    PARTIAL (lower-bound) removal, and the remove-then-redetect-clean
-    property holds only at the same ``sample_mod`` (a full redetect
-    can still find duplicated spans whose anchors the sample missed).
-    Measured at 1M docs (planted spans, window=15): detection recall
-    under sampling matches the predicted ``1-(1-1/p)^(L-window+1)``
-    anchor curve within ~3
-    points at every (p, L) — e.g. p=8: L=16 tokens 0.26 measured vs
-    0.23 predicted, L=32 0.90 vs 0.91, L=48+ ≈1.0; token-coverage
-    under sampling is a strict underestimate (p=8, L=64: 0.74 of
-    full).  Long spans survive sampling, short ones are the
-    casualties — so reserve ``sample_mod`` for the stats/gating
-    path, or accept the bounded residual in the rewrite.
-
-    Returns ``docs`` with ``text_col`` rewritten plus
-    ``n_removed_tokens``; docs without duplicated windows pass
-    through unchanged (removed = 0).  Column passthrough is
-    preserved via a left join on ``id_col``.
-
-    Scale: the detection plan is `duplicated_span_stats`' (one Arrow
-    pass, one O(tokens) hash shuffle, semi-join back); the canonical
-    pick is one more groupBy on the window hash (min over a packed
-    struct — map-side combinable); the rewrite collects each doc's
-    OWN dup-window list (bounded by its token count) and rebuilds in
-    one Arrow kernel — per-doc state, never corpus-wide.
-    """
-    wh = positional_window_hashes(
-        docs, text_col, id_col, window=window, sample_mod=sample_mod
-    )
-    occ = _flagged_occurrences(wh, id_col, min_docs)
-    # the canonical pick rides the same hash-partitioned window the
-    # min_docs=2 flag used (same key -> no extra exchange or sort)
-    w_h = Window.partitionBy("wh")
-    flagged = occ.withColumn(
-        "_c", F.min(F.struct(F.col(id_col), F.col("pos"))).over(w_h)
-    ).select(
-        id_col,
-        "pos",
-        (
-            (F.col(id_col) == F.col(f"_c.{id_col}"))
-            & (F.col("pos") == F.col("_c.pos"))
-        ).alias("keep"),
-    )
-    # rewrite: each doc collects its OWN flagged occurrences (bounded
-    # by its token count) and is rebuilt in one Arrow kernel pass
-    per_doc = flagged.groupBy(id_col).agg(
-        F.collect_list(F.struct("pos", "keep")).alias("_spans")
-    )
-
-    @F.pandas_udf("struct<text: string, n_removed_tokens: long>")
-    def _rewrite(texts: pd.Series, spans_col: pd.Series) -> pd.DataFrame:
-        out_text, out_removed = [], []
-        for t, sp in zip(texts, spans_col):
-            if sp is None or len(sp) == 0:
-                out_text.append(t)
-                out_removed.append(0)
-                continue
-            toks = t.split(" ")
-            drop = [False] * len(toks)
-            for s in sp:
-                if not s["keep"]:
-                    for i in range(s["pos"], s["pos"] + window):
-                        drop[i] = True
-            for s in sp:
-                if s["keep"]:
-                    for i in range(s["pos"], s["pos"] + window):
-                        drop[i] = False
-            out_text.append(
-                " ".join(tok for tok, d in zip(toks, drop) if not d)
-            )
-            out_removed.append(sum(drop))
-        return pd.DataFrame(
-            {"text": out_text, "n_removed_tokens": out_removed}
-        )
-
-    rewritten = (
-        docs.join(per_doc, id_col, "left")
-        .withColumn("_rw", _rewrite(F.col(text_col), F.col("_spans")))
-        .drop("_spans")
-    )
-    return rewritten.withColumns(
-        {
-            text_col: F.col("_rw.text"),
-            "n_removed_tokens": F.col("_rw.n_removed_tokens"),
-        }
-    ).drop("_rw")

@@ -148,8 +148,8 @@ def ngram_repetition_features(
     df: DataFrame, text_col: str = "text", ns: tuple[int, ...] = (2, 3)
 ) -> DataFrame:
     """Token-level duplicate-n-gram fractions — the n-gram half of the
-    Gopher repetition-filter family (``scrubbing.repetition_signals``
-    carries the line half, which is vacuous on single-line documents).
+    Gopher repetition-filter family (the line half is vacuous on
+    single-line documents).
 
     For each ``n``: ``n_{n}grams`` = token n-gram occurrences and
     ``dup_{n}gram_frac`` = fraction of those occurrences that repeat

@@ -234,9 +234,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence.  Min-label components are deterministic, so this is
     a full hash-checked row, not rows-only.  Scale shape: O(log n)
     rounds of plain label-table joins; no driver-side graph state.
-    The keep-one filter (`dedup_canonical`) is the trivial left-anti
-    consumer of this output, pinned end-to-end in
-    tests/test_operators.py."""
+    Keeping one doc per cluster is a left-anti join of the docs
+    against this output's non-canonical members."""
     from data_engineering_user_session_analysis_spark.operators.dedup import minhash_dedup_edges
 
     docs = load_table(spark, sf_dir, "documents")

@@ -1,6 +1,6 @@
 """Driver-checked row for the deterministic sampling/split tier
-(``operators/sampling.py``) — the corpus-prep family whose
-correctness previously rested on pytest alone (round-7 review).
+(``operators/sampling.py``), whose correctness previously rested on
+pytest alone (round-7 review).
 
 The md5-threshold math is engine-portable by construction (DuckDB's
 ``md5`` + hex-slice reproduces ``uniform_hash_unit`` byte for byte —

@@ -139,55 +139,6 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snowflake join (fact → 3 dims): bounded dims (nation, region)
-    carry explicit broadcast hints; customer is SF-proportional so AQE
-    decides — at test SF the whole join tree is still map-side with
-    one shuffle for the final agg (plan-pinned).
-
-    Not registry-listed (driver caps correctness rows at 50; see
-    COVERAGE.md): the snowflake-join + countDistinct shape keeps a
-    green row through q5_local_supplier_volume (deeper join tree) —
-    this function stays as the operator API and is plan-pinned in
-    tests/test_plans.py."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    joined = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return joined.groupBy(
-        F.col("n_name").alias("nation"), F.col("r_name").alias("region")
-    ).agg(
-        F.countDistinct("o_orderkey").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast(_DEC)).cast("double").alias("revenue"),
-    )
-
-
-def customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-ANTI join (NOT EXISTS): customers that never ordered.
-
-    Registry row retired in round 9 (see COVERAGE.md): the testdata
-    generator gives every customer at least one order, so the driver
-    row was permanently 0-row — a vacuous pass that checked nothing
-    beyond "both engines return empty".  The LeftAnti plan shape
-    stays driver-checked through ``user_segments`` (EXCEPT compiles
-    to LeftAnti) and NON-vacuously pinned against an independent
-    left-join/null-filter witness in
-    tests/test_tpch.py::test_anti_join_non_vacuous; its registry
-    slot funds ``mixture_realization_counts``."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
 @register(
     "supplier_part_share",
     """

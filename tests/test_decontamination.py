@@ -1,14 +1,11 @@
 """Decontamination: planted overlaps are flagged with exact hit
-counts, clean docs survive, sub-n docs are skipped, and the corpus
-side joins without shuffling (broadcast plan pin)."""
+counts, sub-n docs are skipped, and the corpus side joins without
+shuffling (broadcast plan pin)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from data_engineering_user_session_analysis_spark.operators.decontamination import (
     contaminated_docs,
-    decontaminate,
 )
 from data_engineering_user_session_analysis_spark.sources.tables import load_table
 
@@ -62,15 +59,6 @@ def test_planted_contamination_flagged_exactly(spark, sf_small):
             assert flagged[r.doc_id] == hits > 0
         else:
             assert hits == 0
-
-
-def test_decontaminate_drops_only_flagged(spark, sf_small):
-    corpus = load_table(spark, sf_small, "documents")
-    bench, doc0, _ = _benchmark(spark, sf_small)
-    clean = decontaminate(corpus, bench, n=N)
-    flagged = contaminated_docs(corpus, bench, n=N)
-    assert clean.count() == corpus.count() - flagged.count()
-    assert clean.filter(F.col("doc_id") == doc0).count() == 0
 
 
 def test_short_docs_never_flagged(spark):

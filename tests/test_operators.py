@@ -238,35 +238,12 @@ def test_connected_components_vs_union_find(spark):
     assert got_dist == expected
 
 
-def test_dedup_canonical_end_to_end(spark, sf_small):
-    """Full dedup tail on the real corpus: minhash pairs -> clusters
-    -> one survivor per cluster; untouched docs all survive."""
-    from data_engineering_user_session_analysis_spark.operators.dedup import (
-        dedup_canonical,
-        minhash_lsh_pairs,
-    )
-    from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5)
-    kept = dedup_canonical(docs, pairs)
-    pair_rows = pairs.select("doc_a", "doc_b").collect()
-    comp = _uf_components([(r.doc_a, r.doc_b) for r in pair_rows])
-    n_docs = docs.count()
-    n_losers = sum(1 for n, c in comp.items() if n != c)
-    assert kept.count() == n_docs - n_losers
-    assert n_losers > 0, "corpus has near-dups; dedup must remove some"
-    # every cluster's min-id member survives
-    kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
-    for n, c in comp.items():
-        assert (n in kept_ids) == (n == c)
-
-
 def test_embedding_cluster_dedup_end_to_end(spark, sf_small):
-    """The cluster-dedup tail composes across modalities: embedding
-    near-dup pairs (hyperplane LSH) → connected components →
-    keep-one-per-cluster, mirroring the text pipeline exactly."""
-    from data_engineering_user_session_analysis_spark.operators.dedup import dedup_canonical
+    """The cluster tail composes across modalities: embedding
+    near-dup pairs (hyperplane LSH) → connected components must match
+    python union-find over the same pairs, on a fixture with
+    near-dup vectors."""
+    from data_engineering_user_session_analysis_spark.operators.dedup import connected_components
     from data_engineering_user_session_analysis_spark.operators.vector_lsh import (
         lsh_similarity_pairs,
     )
@@ -274,18 +251,17 @@ def test_embedding_cluster_dedup_end_to_end(spark, sf_small):
 
     emb = load_table(spark, sf_small, "embeddings")
     pairs = lsh_similarity_pairs(emb, threshold=0.4)
-    kept = dedup_canonical(
-        emb, pairs, id_col="vec_id", src="vec_a", dst="vec_b"
-    )
-    comp = _uf_components(
+    expected = _uf_components(
         [(r.vec_a, r.vec_b) for r in pairs.select("vec_a", "vec_b").collect()]
     )
-    n_losers = sum(1 for n, c in comp.items() if n != c)
-    assert n_losers > 0, "fixture has near-dup vectors; dedup must drop some"
-    assert kept.count() == emb.count() - n_losers
-    kept_ids = {r.vec_id for r in kept.select("vec_id").collect()}
-    for n, c in comp.items():
-        assert (n in kept_ids) == (n == c)
+    assert any(n != c for n, c in expected.items()), (
+        "fixture has near-dup vectors; some must cluster"
+    )
+    got = {
+        r.node: r.component
+        for r in connected_components(pairs, "vec_a", "vec_b").collect()
+    }
+    assert got == expected
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -611,13 +587,13 @@ def test_simhash_value_level_pairs_property(spark, rows):
 
 def test_minhash_dedup_edges_same_clusters_linear_output(spark, sf_small):
     """Star-edge near-dup edges (exact-dup stars + rep-only LSH
-    pairs) must produce the IDENTICAL clusters and canonical ids as
-    the all-pairs form on a clone-heavy corpus, with edge count
-    linear in clone mass where all-pairs is quadratic."""
+    pairs) must produce the IDENTICAL clusters (so the same min-id
+    canonical survivors) as the all-pairs form on a clone-heavy
+    corpus, with edge count linear in clone mass where all-pairs is
+    quadratic."""
     from pyspark.sql import functions as F
 
     from data_engineering_user_session_analysis_spark.operators.dedup import (
-        dedup_canonical,
         minhash_dedup_edges,
         minhash_lsh_pairs,
     )
@@ -644,20 +620,6 @@ def test_minhash_dedup_edges_same_clusters_linear_output(spark, sf_small):
 
     # identical connectivity -> identical min-id components
     assert _uf_components(edges) == _uf_components(all_pairs)
-    # identical canonical survivor set through the real operator tail
-    kept_star = {
-        r.doc_id
-        for r in dedup_canonical(
-            docs, minhash_dedup_edges(docs, threshold=0.5)
-        ).select("doc_id").collect()
-    }
-    kept_all = {
-        r.doc_id
-        for r in dedup_canonical(
-            docs, minhash_lsh_pairs(docs, threshold=0.5)
-        ).select("doc_id").collect()
-    }
-    assert kept_star == kept_all
     # linear output: every clone group contributes g-1 star edges,
     # while the all-pairs form carries >= g(g-1)/2 per group (4 clones
     # -> 6 pairs vs 3 edges), so the edge set must be strictly and

@@ -34,17 +34,10 @@ def test_session_rollup_single_shuffle(spark, sf_small):
 
 
 def test_dim_joins_broadcast(spark, sf_small):
-    # nation_revenue stays as an operator (not registry-listed; see
-    # COVERAGE.md) — its snowflake-join plan shape is pinned here.
-    from data_engineering_user_session_analysis_spark.queries.tpch_queries import nation_revenue
-
-    plan = (
-        nation_revenue(spark, sf_small)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("BroadcastHashJoin") >= 3  # all three dims
+    # snowflake join: the bounded dims (nation, region) by hint and
+    # customer/supplier by AQE statistics at this SF, all broadcast
+    plan = _plan(spark, sf_small, "q5_local_supplier_volume")
+    assert plan.count("BroadcastHashJoin") >= 4  # customer, supplier, nation, region
     assert "SortMergeJoin" not in plan
 
 

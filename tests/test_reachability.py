@@ -1,14 +1,20 @@
 """Guard against regrowth of code that only tests call.
 
 Pure AST, no Spark.  Every top-level def, class and constant of the
-package must be used somewhere outside its own definition and outside
-``tests/``, unless it is a root (an entry point the program is driven
-through) or sits on the explicit allowlist below with its reason.
+package must be reachable from the program's entry points, unless it
+sits on the explicit allowlist below with its reason.
 
-A use is an identifier reference: a ``Name``, an ``Attribute`` or an
-import alias.  A mention in a string or docstring is not a use, and
-neither is a re-export import in a package ``__init__.py``.  The check
-is name-level (a name used anywhere counts), not a transitive closure.
+Reachability is a transitive closure over names.  It is seeded from
+the roots (``ROOT_NAMES``, ``@register``-ed queries, the public names
+of ``ROOT_MODULES``), the allowlist, every reference in the use sites
+outside the package, and every reference in package code that runs
+on import (a top-level statement that is neither a definition nor an
+import).  From there it follows the references of reached definitions
+only, so a name used only by another unreached name is unreached too.
+A reference is a ``Name``, an ``Attribute`` or an import alias; a
+mention in a string or docstring is not one, and a package module's
+top-level ``import`` is not a use.  Names are not resolved to modules:
+a reached name reaches every definition that bears it.
 
 Every top-level module those files import must also resolve, so a
 deleted script cannot leave a dangling import behind.
@@ -24,7 +30,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "data_engineering_user_session_analysis_spark"
 
-#: files and directories whose references count as uses
+#: files and directories whose references seed the closure
 USE_SITES = (
     PACKAGE,
     REPO / "__spark_entry__.py",
@@ -43,7 +49,7 @@ ROOT_MODULES = (
 )
 
 #: single names that are roots wherever they are defined
-ROOT_NAMES = {"main", "build_lake", "prepare_corpus"}
+ROOT_NAMES = {"main", "build_lake"}
 
 #: test-only names kept on purpose, each with the reason
 ALLOWLIST = {
@@ -53,8 +59,6 @@ ALLOWLIST = {
     ("sources/compaction.py", "partition_file_stats"): "the compaction tests measure compact_partition with it",
     ("streaming/session_stream.py", "foreach_batch_upsert_parquet"): "the paper's sessionized-table sink surface",
     ("streaming/session_stream.py", "foreach_batch_jdbc"): "the paper's sessionized-Postgres sink surface",
-    ("queries/tpch_queries.py", "nation_revenue"): "TPC-H query kept beside the registry rows as an operator example",
-    ("queries/tpch_queries.py", "customers_no_orders"): "test_anti_join_non_vacuous shows with it why its registry row was retired",
     ("operators/sampling.py", "upsample_by_rate"): "the branch-form reference that apply_mixture's single pass must equal",
 }
 
@@ -104,29 +108,27 @@ def _references(node: ast.AST) -> set[str]:
 
 
 def _scan():
-    """(definitions, uses): definitions maps (module, name) to its
-    top-level statement; uses is every name referenced outside the
-    statement that defines it."""
+    """(definitions, seeds): definitions maps (module, name) to its
+    top-level statement; seeds is every name referenced outside the
+    package or by package code that runs on import."""
     definitions = {}
-    uses = set()
+    seeds = set()
     for site in USE_SITES:
         for path in _py_files(site):
             tree = ast.parse(path.read_text(), filename=str(path))
-            in_package = PACKAGE in path.parents
-            rel = path.relative_to(PACKAGE).as_posix() if in_package else None
+            if PACKAGE not in path.parents:
+                seeds |= _references(tree)
+                continue
+            rel = path.relative_to(PACKAGE).as_posix()
             for node in tree.body:
-                if (
-                    in_package
-                    and path.name == "__init__.py"
-                    and isinstance(node, ast.ImportFrom)
-                ):
-                    continue  # re-export, not a use
-                own = set(_defined_names(node))
-                if in_package:
-                    for name in own:
-                        definitions[(rel, name)] = node
-                uses |= _references(node) - own
-    return definitions, uses
+                if isinstance(node, (ast.Import, ast.ImportFrom)):
+                    continue  # an import is not a use
+                own = _defined_names(node)
+                for name in own:
+                    definitions[(rel, name)] = node
+                if not own:
+                    seeds |= _references(node)
+    return definitions, seeds
 
 
 def _is_root(rel: str, name: str, node: ast.stmt) -> bool:
@@ -137,30 +139,47 @@ def _is_root(rel: str, name: str, node: ast.stmt) -> bool:
     return rel in ROOT_MODULES and not name.startswith("_")
 
 
+def _reached(allowlisted: bool) -> tuple[dict, set[str]]:
+    """(definitions, reached): every name the closure reaches from the
+    seeds, the roots and, when ``allowlisted``, the allowlist."""
+    definitions, seeds = _scan()
+    definitions_of = {}
+    for (_, name), node in definitions.items():
+        definitions_of.setdefault(name, []).append(node)
+    todo = list(seeds)
+    todo += [n for (rel, n), node in definitions.items() if _is_root(rel, n, node)]
+    if allowlisted:
+        todo += [name for _, name in ALLOWLIST]
+    reached = set()
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for node in definitions_of.get(name, ()):
+                todo.extend(_references(node))
+    return definitions, reached
+
+
 def test_every_package_name_has_a_non_test_caller():
-    definitions, uses = _scan()
+    definitions, reached = _reached(allowlisted=True)
     assert definitions, "no package definitions found"
     unreached = sorted(
-        f"{rel}:{name}"
-        for (rel, name), node in definitions.items()
-        if name not in uses
-        and not _is_root(rel, name, node)
-        and (rel, name) not in ALLOWLIST
+        f"{rel}:{name}" for rel, name in definitions if name not in reached
     )
     assert not unreached, (
-        "names with no caller outside tests/ (delete them, or allowlist "
-        f"one with its reason): {unreached}"
+        "names no entry point reaches (delete them, or allowlist one "
+        f"with its reason): {unreached}"
     )
 
 
 def test_allowlist_names_exist_and_are_still_unreached():
-    """An allowlisted name that was deleted, or that gained a real
-    caller, must leave the allowlist."""
-    definitions, uses = _scan()
+    """An allowlisted name that was deleted, or that an entry point
+    now reaches, must leave the allowlist."""
+    definitions, reached = _reached(allowlisted=False)
     stale = sorted(
         f"{rel}:{name}"
         for rel, name in ALLOWLIST
-        if (rel, name) not in definitions or name in uses
+        if (rel, name) not in definitions or name in reached
     )
     assert not stale, f"stale allowlist entries: {stale}"
 

@@ -1,101 +1,9 @@
-"""PII scrubbing and repetition signals: exact redaction on
-adversarial fixtures, idempotence, corpus survival, and hand-computed
-repetition ratios."""
+"""N-gram repetition features: hand-computed fractions, short-document
+edges, and non-vacuous signal on the fixture corpus."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from data_engineering_user_session_analysis_spark.operators.scrubbing import (
-    repetition_signals,
-    scrub_pii,
-)
 from data_engineering_user_session_analysis_spark.sources.tables import load_table
-
-
-def _scrub_one(spark, text):
-    df = spark.createDataFrame([(text,)], "text string")
-    return scrub_pii(df).first().text
-
-
-def test_scrub_pii_fixtures(spark):
-    cases = {
-        "mail bob.smith+x@corp.example.co now": "mail <EMAIL> now",
-        "server at 192.168.0.1 down": "server at <IP> down",
-        "call +1 (415) 555-0199 today": "call <PHONE> today",
-        "acct 12345678901234 closed": "acct <NUMBER> closed",
-        "no pii here at all": "no pii here at all",
-        # email digits must not leak into the number rule
-        "x12345678@example.com": "<EMAIL>",
-        # short numbers survive (dates, quantities)
-        "year 2024 qty 1500": "year 2024 qty 1500",
-    }
-    for raw, want in cases.items():
-        assert _scrub_one(spark, raw) == want, raw
-
-
-def test_scrub_pii_idempotent_and_lossless_on_corpus(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents")
-    once = scrub_pii(docs)
-    twice = scrub_pii(once)
-    assert once.count() == docs.count()
-    assert once.exceptAll(twice).count() == 0
-    # the fixture corpus is plain prose: scrubbing must not mangle it
-    changed = (
-        once.alias("a")
-        .join(docs.alias("b"), "doc_id")
-        .filter(F.col("a.text") != F.col("b.text"))
-        .count()
-    )
-    assert changed == 0
-
-
-def test_repetition_signals_hand_computed(spark):
-    text = "aaa\nbbb\naaa\nccc"  # 4 lines, 'aaa' twice
-    row = repetition_signals(
-        spark.createDataFrame([(text,)], "text string")
-    ).first()
-    assert row.n_lines == 4
-    assert row.dup_line_frac == (4 - 3) / 4
-    # chars in duplicated lines: both 'aaa' occurrences = 6 of 12
-    assert row.dup_line_char_frac == 6 / 12
-
-
-def test_repetition_signals_adjacency_edge_cases(spark):
-    """Sorted-adjacency must handle: all-unique, all-same, dups at
-    the sorted array's edges, and shared-prefix lines that sort
-    adjacent but differ."""
-    cases = {
-        "a\nb\nc": (3, 0.0, 0.0),
-        "a\na\na": (3, 2 / 3, 1.0),
-        # sorted: [a, a, b] — dup pair at the left edge
-        "b\na\na": (3, 1 / 3, 2 / 3),
-        # sorted: [a, b, b] — dup pair at the right edge
-        "b\na\nb": (3, 1 / 3, 2 / 3),
-        # shared prefixes, all distinct
-        "ab\nabc\nabcd": (3, 0.0, 0.0),
-    }
-    for text, (n, frac, charfrac) in cases.items():
-        row = repetition_signals(
-            spark.createDataFrame([(text,)], "text string")
-        ).first()
-        assert (row.n_lines, row.dup_line_frac, row.dup_line_char_frac) == (
-            n,
-            frac,
-            charfrac,
-        ), text
-
-
-def test_repetition_signals_bounds_on_corpus(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents")
-    sig = repetition_signals(docs, line_sep=" ")  # word-grain repeats
-    rows = sig.collect()
-    assert len(rows) == docs.count()
-    for r in rows:
-        assert 0.0 <= r.dup_line_frac <= 1.0
-        assert 0.0 <= r.dup_line_char_frac <= 1.0
-    # the small-vocab fixture corpus definitely repeats words
-    assert any(r.dup_line_frac > 0 for r in rows)
 
 
 def test_ngram_repetition_hand_computed(spark):

@@ -189,77 +189,6 @@ def test_fixture_non_vacuous(spark, sf_small):
     assert any(r.dup_token_frac == 1.0 for r in rows)
 
 
-# ---- remove_duplicated_spans (the full ExactSubstr rewrite step)
-
-from data_engineering_user_session_analysis_spark.operators.span_dedup import (  # noqa: E402
-    remove_duplicated_spans,
-)
-
-
-def _rewrite(spark, texts, **kw):
-    rows = remove_duplicated_spans(_docs(spark, texts), window=W, **kw).collect()
-    return {r.doc_id: (r.text, r.n_removed_tokens) for r in rows}
-
-
-def test_remove_exact_clone_keeps_lowest_id(spark):
-    t = "a b c d e f g h"
-    got = _rewrite(spark, {1: t, 2: t})
-    assert got[1] == (t, 0)  # canonical occurrence survives intact
-    assert got[2] == ("", 8)  # the clone is fully covered -> emptied
-
-
-def test_remove_shared_span_and_passthrough(spark):
-    got = _rewrite(
-        spark,
-        {
-            1: "a b c d e f g x1 y1 z1",
-            2: "p q a b c d e f g r s",
-            3: "totally unrelated filler words here",
-        },
-    )
-    assert got[1] == ("a b c d e f g x1 y1 z1", 0)
-    assert got[2] == ("p q r s", 7)
-    assert got[3] == ("totally unrelated filler words here", 0)
-
-
-def test_remove_canonical_overrides_overlapping_removal(spark):
-    # doc2 holds two overlapping dup spans: "a b c d e" (canonical in
-    # doc1 -> removed here) and "d e f g h" (doc2 IS the canonical ->
-    # protected).  The overlap (tokens d,e at 3..4) must survive.
-    got = _rewrite(
-        spark,
-        {
-            1: "a b c d e z1 z2 z3",
-            2: "a b c d e f g h q1 q2",
-            3: "k1 d e f g h k2",
-        },
-    )
-    assert got[1] == ("a b c d e z1 z2 z3", 0)
-    assert got[2] == ("d e f g h q1 q2", 3)
-    assert got[3] == ("k1 k2", 5)
-
-
-def test_remove_then_redetect_is_clean(spark):
-    texts = {
-        1: "the quick brown fox jumps over the lazy dog today",
-        2: "a quick brown fox jumps over the lazy dog tomorrow",
-        3: "the quick brown fox jumps over the lazy dog today",
-        4: "unrelated words that share nothing with the others here",
-    }
-    rewritten = remove_duplicated_spans(_docs(spark, texts), window=W)
-    again = duplicated_span_stats(rewritten, window=W).collect()
-    assert again == []
-
-
-def test_remove_preserves_other_columns(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f", "en"), (2, "a b c d e f", "de")],
-        "doc_id long, text string, lang string",
-    )
-    rows = remove_duplicated_spans(df, window=W).collect()
-    assert {r.doc_id: r.lang for r in rows} == {1: "en", 2: "de"}
-
-
 def test_min_docs_three_uses_distinct_count(spark):
     # min_docs > 2 takes the exact count-distinct path: a span shared
     # by exactly 2 docs no longer qualifies.

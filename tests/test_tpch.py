@@ -21,19 +21,20 @@ from pyspark.sql import functions as F
 from data_engineering_user_session_analysis_spark.queries.relational_queries import (
     user_segments,
 )
-from data_engineering_user_session_analysis_spark.queries.tpch_queries import (
-    customers_no_orders,
-)
 from data_engineering_user_session_analysis_spark.sources.tables import load_table
 
 
 def test_anti_join_non_vacuous(spark, sf_small):
-    # documents why the registry row was retired: on this generator
-    # the unrestricted NOT EXISTS is empty at every SF
-    assert customers_no_orders(spark, sf_small).count() == 0
-
     customer = load_table(spark, sf_small, "customer")
     orders = load_table(spark, sf_small, "orders")
+    # documents why the registry row was retired: on this generator
+    # the unrestricted NOT EXISTS is empty at every SF
+    assert (
+        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
+        .count()
+        == 0
+    )
+
     o95 = orders.filter(F.year("o_orderdate") == 1995)
 
     anti = customer.join(
