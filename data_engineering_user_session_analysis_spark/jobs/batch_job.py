@@ -6,7 +6,9 @@
   the partition directory string by hand
   (``spark_jobs/spark_batch_job.py:17``); here the job reads the lake
   base path and filters ``date = <ds>`` — Catalyst prunes to the same
-  files, with schema stability across days (SURVEY.md §4 row 1).
+  files, with schema stability across days (SURVEY.md §4 row 1).  The
+  base path is read with the one declared lake schema
+  (``streaming/ingest_stream.read_lake``), so no job infers it.
 * **One lake read, counts without jobs**: the reference rescans the
   day's data for every one of its 5 actions (no ``.cache()``,
   ``spark_jobs/spark_batch_job.py:27-164``); here the daily pipeline
@@ -21,9 +23,9 @@
   The serving step re-scans the day's few partition-pruned files per
   table instead of caching it: concurrent writers would each launch
   their own job to build one cache.
-* **Serving sink**: parquet directories stand in for the reference's
-  Postgres tables (same ``overwrite`` semantics); `jdbc_url` switches
-  to real JDBC when a database is reachable.
+* **Serving sink**: parquet (or ORC) directories stand in for the
+  reference's Postgres tables, with the same per-table ``overwrite``
+  semantics; ``sources/jdbc.write_jdbc`` is the JDBC sink.
 """
 
 from __future__ import annotations
@@ -43,6 +45,13 @@ from pyspark.util import inheritable_thread_target
 from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
 from data_engineering_user_session_analysis_spark.operators.sessionize import session_rollup, sessionize
 from data_engineering_user_session_analysis_spark.sources.events import load_events
+from data_engineering_user_session_analysis_spark.sources.formats import write_lake_table
+from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
+    LAKE_SCHEMA,
+    check_lake,
+    enrich_events,
+    read_lake,
+)
 
 
 def parse_ds(ds: str) -> datetime.date:
@@ -76,18 +85,14 @@ def _concurrently(spark: SparkSession, *calls: Callable[[], object]) -> list:
 def build_lake(
     spark: SparkSession, sf_dir: str, lake_path: str, fmt: str = "parquet"
 ) -> None:
-    """Materialize the events lake, Hive-partitioned by event date
-    (the streaming job's sink layout, reference S4/ST7 — batch twin
-    for tests/backfill).  ``fmt`` picks the lake format (parquet or
-    ORC — both keep pushdown + partition pruning; see
-    sources/formats.py).  Row formats are rejected: an analytics
-    lake must be columnar."""
-    from data_engineering_user_session_analysis_spark.sources.formats import write_lake_table
-
-    ev = load_events(spark, sf_dir).withColumn(
-        "date", F.date_format("ts", "yyyy-MM-dd")
-    )
-    write_lake_table(ev, lake_path, fmt=fmt, partition_by=("date",))
+    """Materialize the events lake, Hive-partitioned by event date: the
+    batch twin of the ingest stream's sink (reference S4/ST7).  The
+    events go through the stream's ``enrich_events`` with ``ts`` cast
+    to TIMESTAMP (the identity under the UTC session), so the files
+    hold ``LAKE_SCHEMA`` as the stream writes it.  ``fmt`` is parquet
+    or ORC (sources/formats.py); row formats are rejected."""
+    ev = load_events(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
+    write_lake_table(enrich_events(ev), lake_path, fmt=fmt, partition_by=("date",))
 
 
 def run_daily_job(
@@ -95,8 +100,6 @@ def run_daily_job(
     lake: DataFrame,
     ds: str,
     out_dir: str,
-    jdbc_url: str | None = None,
-    jdbc_properties: dict[str, str] | None = None,
     fmt: str = "parquet",
 ) -> dict[str, DataFrame]:
     """Compute and persist the day's serving tables.
@@ -109,13 +112,11 @@ def run_daily_job(
     it stitches boundary sessions through an O(active users) carry
     and is pinned equal to batch sessionization of the full history.
 
-    ``lake`` is the whole lake relation
-    (``spark.read.format(fmt).load(lake_path)``); the job filters it
-    to ``date = ds`` itself, so a caller running several steps or
-    days reads (and lists) the lake once.  Returns the result
+    ``lake`` is the whole lake relation (``read_lake``); the job
+    filters it to ``date = ds`` itself, so a caller running several
+    steps or days reads (and lists) the lake once.  Returns the result
     DataFrames keyed by table name (also written to ``out_dir`` in
-    the lake format, or to JDBC when ``jdbc_url`` given; the three
-    writes run concurrently).  ``fmt`` is
+    the lake format; the three writes run concurrently).  ``fmt`` is
     the serving format and should match the lake's (partition
     pruning behaves identically for parquet and ORC — plan-pinned in
     tests/test_formats.py); only columnar formats are accepted.
@@ -130,17 +131,8 @@ def run_daily_job(
     exactly its own day (idempotent re-runs, history preserved), the
     table root reads as one ds-partitioned table, and ``run_backfill``
     writes the SAME locations, so a backfill genuinely replaces what
-    the daily runs produced.  The JDBC path keeps the reference's
-    whole-table overwrite (``spark_jobs/spark_batch_job.py`` writes
-    each Postgres table in overwrite mode): a serving database holds
-    the latest state, the lake holds history.
+    the daily runs produced.
     """
-    from data_engineering_user_session_analysis_spark.sources.formats import COLUMNAR_FORMATS
-
-    if fmt not in COLUMNAR_FORMATS:
-        raise ValueError(
-            f"lake format must be columnar {COLUMNAR_FORMATS}, got {fmt!r}"
-        )
     day = (
         lake.filter(F.col("date") == ds)  # -> PartitionFilters, file pruning
         # rows with no session key cannot be sessionized or attributed
@@ -175,17 +167,7 @@ def run_daily_job(
     }
 
     def write(name: str, df: DataFrame) -> None:
-        if jdbc_url is not None:
-            df.write.jdbc(
-                url=jdbc_url,
-                table=name,
-                mode="overwrite",
-                properties=jdbc_properties or {},
-            )
-        else:
-            df.write.mode("overwrite").format(fmt).save(
-                os.path.join(out_dir, name, f"ds={ds}")
-            )
+        write_lake_table(df, os.path.join(out_dir, name, f"ds={ds}"), fmt=fmt)
 
     _concurrently(
         spark, *(functools.partial(write, name, df) for name, df in results.items())
@@ -203,8 +185,8 @@ def run_incremental_sessions(
     """Daily incremental sessionization step (the 100 TB-shaped
     alternative to ``run_daily_job``'s within-day sessionize, which
     splits sessions crossing midnight): fold day ``ds`` of the lake
-    relation ``lake`` (``spark.read.format(fmt).load(lake_path)``)
-    into the session carry state (``operators/incremental_sessions.py``).
+    relation ``lake`` (``read_lake``) into the session carry state
+    (``operators/incremental_sessions.py``).
 
     Layout under ``out_dir``:
 
@@ -286,12 +268,7 @@ def run_incremental_sessions(
 
 
 def compact_closed_partition(
-    spark: SparkSession,
-    lake_path: str,
-    ds: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
-    schema: StructType | None = None,
+    spark: SparkSession, lake_path: str, ds: str, fmt: str = "parquet"
 ) -> dict:
     """Maintenance step for the daily cadence: once ``ds`` is closed
     (the stream's watermark has passed it), merge its micro-batch
@@ -301,19 +278,16 @@ def compact_closed_partition(
     time hot, and every later backfill scan pays file-count costs
     forever if it stays shattered.
 
-    ``schema`` is the lake's data columns (no ``date``): the daily
-    pipeline passes the one its lake relation already holds, so the
-    partition is read without a schema-inference job.  ``job
-    compact`` has no relation and passes none: the partition's schema
-    is then inferred from its files."""
+    The partition is checked against the lake schema (``check_lake``)
+    and read with its data columns, so no job infers them."""
     from data_engineering_user_session_analysis_spark.sources.compaction import compact_partition
 
+    check_lake(spark, lake_path, fmt, [ds])
     return compact_partition(
         spark,
         os.path.join(lake_path, f"date={ds}"),
-        target_file_bytes=target_file_bytes,
+        StructType(LAKE_SCHEMA.fields[:-1]),  # all but ``date``
         fmt=fmt,
-        schema=schema,
     )
 
 
@@ -323,7 +297,6 @@ def run_daily_pipeline(
     ds: str,
     out_dir: str,
     fmt: str = "parquet",
-    compact_previous: bool = True,
 ) -> dict:
     """The composed daily operational verb (``job daily <ds>``) — the
     sequence a real deployment runs once per day, chaining the
@@ -346,24 +319,16 @@ def run_daily_pipeline(
        that compaction must not rename under; there the step is
        skipped and the report records the log's path.
 
-    ``ds`` is parsed (``parse_ds``) before anything is written, so a
-    malformed date fails with no partition created under it.  Every
-    step is an idempotent per-day overwrite, so re-running any day
-    replaces exactly that day's outputs (pinned by
-    ``tests/test_batch_job.py`` with a 3-day replay + day-2 re-run).
-    The lake is read once per call and that one relation feeds the
-    hygiene, stitch and serving steps.  Returns a per-step report
-    dict for observability.
-
-    Schemas: the lake root is the one read whose schema is inferred,
-    which on parquet is one Spark job a day.  The repo's lake writers
-    do not agree on one schema yet (``build_lake`` writes six columns
-    with a TIMESTAMP_NTZ ``ts``, the ingest stream nine with a
-    TIMESTAMP ``ts``), so no declared schema fits every lake.  Every
-    other read of the day declares its schema and so launches no job:
-    the carry state is read with the fold's state schema for the day
-    (``run_incremental_sessions``), and the partition compacted in
-    step 4 with the data columns the lake relation already holds.
+    ``ds`` is parsed (``parse_ds``), and the lake partitions of ds and
+    ds-1 are checked against the lake schema (``read_lake``), before
+    anything is written: a malformed date or a lake that disagrees
+    fails with no partition created under ``out_dir``.  Every step is
+    an idempotent per-day overwrite, so re-running any day replaces
+    exactly that day's outputs (pinned by ``tests/test_batch_job.py``
+    with a 3-day replay + day-2 re-run).  The lake is read once per
+    call, with the declared schema both lake writers produce, and that
+    one relation feeds the hygiene, stitch and serving steps.  Returns
+    a per-step report dict for observability.
 
     Steps 1-3 overlap: the quarantine write reads only the lake, so it
     runs beside the stitch step followed by the serving step (those
@@ -374,9 +339,9 @@ def run_daily_pipeline(
     other steps share included, and a scan running through that
     refresh can come back without the day's rows.
     """
-    day = parse_ds(ds)
+    prev = (parse_ds(ds) - datetime.timedelta(days=1)).isoformat()
     report: dict = {"ds": ds}
-    lake = spark.read.format(fmt).load(lake_path)
+    lake = read_lake(spark, lake_path, fmt, [ds, prev])
 
     is_bad = F.col("user_id").isNull() | F.col("ts").isNull()
     stats = Observation()
@@ -420,24 +385,16 @@ def run_daily_pipeline(
     report["sessions"] = sessions
     report["serving_tables"] = sorted(serving)
 
-    if compact_previous:
-        from data_engineering_user_session_analysis_spark.sources.compaction import find_sink_log
+    from data_engineering_user_session_analysis_spark.sources.compaction import find_sink_log
 
-        prev = (day - datetime.timedelta(days=1)).isoformat()
-        prev_dir = os.path.join(lake_path, f"date={prev}")
-        if os.path.isdir(prev_dir):
-            sink_log = find_sink_log(spark, prev_dir)
-            report["compacted_previous"] = (
-                {"skipped": sink_log}
-                if sink_log is not None
-                else compact_closed_partition(
-                    spark,
-                    lake_path,
-                    prev,
-                    fmt=fmt,
-                    schema=StructType([f for f in lake.schema if f.name != "date"]),
-                )
-            )
+    prev_dir = os.path.join(lake_path, f"date={prev}")
+    if os.path.isdir(prev_dir):
+        sink_log = find_sink_log(spark, prev_dir)
+        report["compacted_previous"] = (
+            {"skipped": sink_log}
+            if sink_log is not None
+            else compact_closed_partition(spark, lake_path, prev, fmt=fmt)
+        )
     return report
 
 
@@ -462,53 +419,53 @@ def run_backfill(
     job writes — a backfill replaces the live serving output for the
     range, which is the whole point of running one.  The lake is read
     once for the whole range, in its format ``fmt``, which is also
-    the serving format."""
+    the serving format; every day's partition is checked against the
+    lake schema before the first write."""
     start = parse_ds(ds_start)
     end = parse_ds(ds_end)
     if end < start:
         raise ValueError(f"backfill range is empty: {ds_start}..{ds_end}")
-    lake = spark.read.format(fmt).load(lake_path)
-    out: dict[str, dict[str, DataFrame]] = {}
-    day = start
-    while day <= end:
-        ds = day.isoformat()
-        out[ds] = run_daily_job(spark, lake, ds, out_dir, fmt=fmt)
-        day += datetime.timedelta(days=1)
-    return out
+    days = [
+        (start + datetime.timedelta(days=i)).isoformat()
+        for i in range((end - start).days + 1)
+    ]
+    lake = read_lake(spark, lake_path, fmt, days)
+    return {ds: run_daily_job(spark, lake, ds, out_dir, fmt=fmt) for ds in days}
 
 
 JOB_VERBS = ("daily", "sessions", "backfill", "compact")
 
 
-def _check_args(argv: list[str]) -> None:
-    """Refuse a command line ``main`` would misread, before any Spark
-    session starts: an option (no verb takes one, so ``--x`` would
-    otherwise be read as the lake path), an unknown verb, or a date
-    that is not canonical ``YYYY-MM-DD``."""
+def _parse_args(argv: list[str]) -> tuple[str, list[str], str, str]:
+    """``(verb, dates, lake, serving)`` of a ``main`` command line, the
+    verb ``""`` for a bare date.  Refuses, before any Spark session
+    starts, what ``main`` would misread: an option (no verb takes one,
+    so ``--x`` would otherwise be read as the lake path), an unknown
+    verb, or a date that is not canonical ``YYYY-MM-DD``."""
     for a in argv[1:]:
         if a.startswith("--"):
             raise SystemExit(f"job: unknown option {a!r}; no verb takes options")
     if len(argv) < 2:
         raise SystemExit(f"job: missing <ds> or verb; verbs: {', '.join(JOB_VERBS)}")
-    verb = argv[1]
-    if verb not in JOB_VERBS:
-        try:
-            parse_ds(verb)
-        except ValueError:
-            raise SystemExit(
-                f"job: {verb!r} is neither a verb nor a YYYY-MM-DD date; "
-                f"verbs: {', '.join(JOB_VERBS)}"
-            ) from None
-        return
+    verb = argv[1] if argv[1] in JOB_VERBS else ""
+    args = argv[2:] if verb else argv[1:]
     n_dates = 2 if verb == "backfill" else 1
-    dates = argv[2 : 2 + n_dates]
+    dates, roots = args[:n_dates], args[n_dates:]
     if len(dates) < n_dates:
         raise SystemExit(f"job {verb}: missing date argument")
     for d in dates:
         try:
             parse_ds(d)
         except ValueError:
+            if not verb:
+                raise SystemExit(
+                    f"job: {d!r} is neither a verb nor a YYYY-MM-DD date; "
+                    f"verbs: {', '.join(JOB_VERBS)}"
+                ) from None
             raise SystemExit(f"job {verb}: {d!r} is not a YYYY-MM-DD date") from None
+    lake = roots[0] if roots else os.environ.get("LAKE_PATH", "/tmp/events_lake")
+    serving = roots[1] if len(roots) > 1 else os.environ.get("SERVING_PATH", "/tmp/serving")
+    return verb, dates, lake, serving
 
 
 def main(argv: list[str]) -> None:
@@ -518,41 +475,22 @@ def main(argv: list[str]) -> None:
     sessions <ds>`` (the incremental sessionization step), ``job
     backfill <ds_start> <ds_end>`` and ``job compact <ds>``.  Dates
     are ``YYYY-MM-DD``; the lake and serving roots come from the
-    trailing arguments or ``LAKE_PATH`` / ``SERVING_PATH``."""
+    trailing arguments or ``LAKE_PATH`` / ``SERVING_PATH``.  The lake
+    is parquet."""
     from data_engineering_user_session_analysis_spark import get_spark
 
-    _check_args(argv)
-    if argv[1] == "daily":
-        ds = argv[2]
-        lake = argv[3] if len(argv) > 3 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
-        out = argv[4] if len(argv) > 4 else os.environ.get("SERVING_PATH", "/tmp/serving")
-        print(run_daily_pipeline(get_spark("daily_pipeline"), lake, ds, out))
-        return
-    if argv[1] == "sessions":
-        ds = argv[2]
-        lake = argv[3] if len(argv) > 3 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
-        out = argv[4] if len(argv) > 4 else os.environ.get("SERVING_PATH", "/tmp/serving")
-        spark = get_spark("incremental_sessions_job")
-        report = run_incremental_sessions(spark, spark.read.parquet(lake), ds, out)
-        print(report)
-        return
-    if argv[1] == "backfill":
-        ds_start, ds_end = argv[2], argv[3]
-        lake = argv[4] if len(argv) > 4 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
-        out = argv[5] if len(argv) > 5 else os.environ.get("SERVING_PATH", "/tmp/serving")
-        run_backfill(get_spark("backfill_job"), lake, ds_start, ds_end, out)
-        return
-    if argv[1] == "compact":
-        ds = argv[2]
-        lake = argv[3] if len(argv) > 3 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
-        report = compact_closed_partition(get_spark("lake_compaction"), lake, ds)
-        print(report)
-        return
-    ds = argv[1]
-    lake = argv[2] if len(argv) > 2 else os.environ.get("LAKE_PATH", "/tmp/events_lake")
-    out = argv[3] if len(argv) > 3 else os.environ.get("SERVING_PATH", "/tmp/serving")
-    spark = get_spark("daily_batch_job")
-    run_daily_job(spark, spark.read.parquet(lake), ds, out)
+    verb, dates, lake, out = _parse_args(argv)
+    spark = get_spark(f"job_{verb or 'serving'}")
+    if verb == "daily":
+        print(run_daily_pipeline(spark, lake, dates[0], out))
+    elif verb == "sessions":
+        print(run_incremental_sessions(spark, read_lake(spark, lake, "parquet", dates), dates[0], out))
+    elif verb == "backfill":
+        run_backfill(spark, lake, *dates, out)
+    elif verb == "compact":
+        print(compact_closed_partition(spark, lake, dates[0]))
+    else:
+        run_daily_job(spark, read_lake(spark, lake, "parquet", dates), dates[0], out)
 
 
 if __name__ == "__main__":

@@ -34,6 +34,23 @@ _PARTIAL = {
 }
 
 
+def _salt(buckets: int, row_key: str | None) -> Column:
+    """The salt bucket ``salted_agg`` gives each row."""
+    if row_key is not None:
+        # Deterministic per-row salt: unique row ids spread a hot key
+        # of IDENTICAL payload rows across buckets AND re-salt
+        # identically on retry.
+        return F.pmod(F.hash(F.col(row_key)), F.lit(buckets))
+    # Salt from a per-ROW source, not row content: a hot key of many
+    # IDENTICAL rows (the realistic skew case) must still spread, and a
+    # content hash would put them all in one bucket.  Phase 2 merges
+    # any assignment exactly; see ``salted_agg`` for the retry hazard.
+    return F.pmod(
+        F.hash(F.monotonically_increasing_id(), F.spark_partition_id()),
+        F.lit(buckets),
+    )
+
+
 def salted_agg(
     df: DataFrame,
     keys: list[str],
@@ -51,7 +68,7 @@ def salted_agg(
     ``row_key`` names a per-row UNIQUE column (event id, line id);
     when given, the salt is ``pmod(hash(row_key), buckets)`` —
     deterministic under task retry.  Prefer it whenever the data has
-    one: the fallback salt below is derived from
+    one: the fallback salt (``_salt``) is derived from
     ``monotonically_increasing_id()/spark_partition_id()``, which are
     nondeterministic across map-task re-execution — after a
     shuffle-fetch failure, rerun tasks can re-salt rows into reduce
@@ -64,25 +81,8 @@ def salted_agg(
     unknown = {fn for fn, _ in aggs.values()} - set(_PARTIAL)
     if unknown:
         raise ValueError(f"non-algebraic aggregate(s) not salt-safe: {unknown}")
-    if row_key is not None:
-        # Deterministic per-row salt: unique row ids spread a hot key
-        # of IDENTICAL payload rows across buckets AND re-salt
-        # identically on retry.
-        salt = F.pmod(F.hash(F.col(row_key)), F.lit(buckets))
-    else:
-        # Salt from a per-ROW source, not row content: a hot key made
-        # of many IDENTICAL rows (the realistic skew case) must still
-        # spread across buckets, and content-hash salting would put
-        # them all in one.  Merge correctness never depends on the
-        # assignment (phase 2 re-aggregates per key) — but see the
-        # retry hazard in the docstring; pass ``row_key`` when the
-        # data has a unique column.
-        salt = F.pmod(
-            F.hash(F.monotonically_increasing_id(), F.spark_partition_id()),
-            F.lit(buckets),
-        )
     partial = (
-        df.withColumn("_salt", salt)
+        df.withColumn("_salt", _salt(buckets, row_key))
         .groupBy(*keys, "_salt")
         .agg(
             *[

@@ -124,9 +124,9 @@ def partition_file_stats(
 def compact_partition(
     spark: SparkSession,
     partition_path: str,
+    schema: StructType,
     target_file_bytes: int = 128 * 1024 * 1024,
     fmt: str = "parquet",
-    schema: StructType | None = None,
 ) -> dict:
     """Rewrite one partition directory's files into
     ``ceil(bytes / target_file_bytes)`` files (at least 1).  Returns a
@@ -134,14 +134,13 @@ def compact_partition(
 
     Reads the leaf directory directly (partition values live in the
     directory name, not the files, so the rewrite reproduces the file
-    contents byte-for-byte up to row order).  With ``schema`` (the
-    files' data columns, as the caller's relation over the same lake
-    already holds them) the read declares it; without, the schema is
-    inferred from a footer, which on parquet is a Spark job of its
-    own.  A declared schema must be the one the partition was written
-    with: a column it lacks is not rewritten.  Refuses to run under a
-    FileStreamSink ``_spark_metadata`` log — see the module
-    docstring."""
+    contents byte-for-byte up to row order) with ``schema``, the
+    files' data columns, so no job infers them.  ``schema`` must be
+    the one the partition was written with: a column it lacks is not
+    rewritten, and one the files lack is rewritten as nulls; the lake's
+    caller checks its files first (``ingest_stream.check_lake``).
+    Refuses to run under a FileStreamSink ``_spark_metadata`` log —
+    see the module docstring."""
     log = find_sink_log(spark, partition_path)
     if log is not None:
         raise RuntimeError(
@@ -156,10 +155,7 @@ def compact_partition(
     n_out = max(1, math.ceil(bytes_before / target_file_bytes))
 
     # narrow merge — no shuffle, no re-sort, just fewer files.
-    reader = spark.read.format(fmt)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.load(partition_path).coalesce(n_out)
+    df = spark.read.format(fmt).schema(schema).load(partition_path).coalesce(n_out)
 
     fs, live = _fs(spark, partition_path)
     parent = live.getParent()

@@ -33,10 +33,10 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     session, whatever its ``nanosAsLong`` conf.  Nanos -> micros
     truncates, which is exactly what DuckDB's TIMESTAMP (micros) does
     on the same file — keeping the oracle comparison bit-identical.
+    It writes no session conf: the UTC event time the oracle expects
+    comes from the session's time zone, UTC in ``get_spark``'s
+    defaults.
     """
-    # Event-time semantics are UTC end-to-end (matches the lake's
-    # naive timestamps and the DuckDB oracle) regardless of host tz.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     raw = load_table(spark, sf_dir, "events")
     if dict(raw.dtypes).get("ts") in ("bigint", "long"):
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -6,8 +6,7 @@ The reference's lake is parquet-only (``spark_jobs/spark_stream.py:
 ecosystems).  Both go through the same DataFrameWriter surface, so
 partitioned layout, Hive-style partition pruning, predicate pushdown
 and column pruning come for free — pinned in tests/test_formats.py.
-Reads need no wrapper: ``spark.read.format(fmt).load(path)`` is the
-same for both.
+Lake reads go through ``streaming/ingest_stream.read_lake``.
 
 Scale notes: parquet and ORC are columnar, compressed, splittable,
 with pushdown into the scan (the ORC reader is vectorized like

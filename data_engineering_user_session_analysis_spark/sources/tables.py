@@ -24,18 +24,38 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
 
+def first_data_file(path: str) -> str:
+    """``path`` if it is a file, else the first file by name directly
+    under the directory ``path``, skipping ``_``/``.`` metadata files."""
+    if os.path.isfile(path):
+        return path
+    names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    if not names:
+        raise ValueError(f"no data file under {path}")
+    return os.path.join(path, names[0])
+
+
 def footer_schema(spark: SparkSession, path: str) -> T.StructType:
     """The schema ``spark.read.parquet(path)`` would infer for the
-    local parquet file ``path``, taken from its footer on the driver.
+    local parquet file ``path``, or for a directory's first data file,
+    taken from that file's footer on the driver.
 
     A timestamp without a time zone maps to TIMESTAMP_NTZ when
     ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on, as Spark's
-    own inference does.  A TIMESTAMP(NANOS) column maps to its raw
-    nanosecond ``bigint`` (Spark's ``nanosAsLong`` reading; Spark has
-    no nanosecond timestamp), which the caller converts."""
-    arrow = pq.read_schema(path)
+    own inference does.  An INT96 column, the physical type Spark's
+    own parquet writer gives a TIMESTAMP by default, maps to TIMESTAMP.
+    A TIMESTAMP(NANOS) column maps to its raw nanosecond ``bigint``
+    (Spark's ``nanosAsLong`` reading; Spark has no nanosecond
+    timestamp), which the caller converts."""
+    # INT96 is read as microseconds, so a column still in nanoseconds
+    # is a true TIMESTAMP(NANOS)
+    footer = pq.ParquetFile(first_data_file(path), coerce_int96_timestamp_unit="us")
+    int96 = {c.path for c in footer.schema if c.physical_type == "INT96"}
+    arrow = footer.schema_arrow
     for i, field in enumerate(arrow):
-        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+        if field.name in int96:
+            arrow = arrow.set(i, field.with_type(pa.timestamp("us", tz="UTC")))
+        elif pa.types.is_timestamp(field.type) and field.type.unit == "ns":
             arrow = arrow.set(i, field.with_type(pa.int64()))
     ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
     return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)

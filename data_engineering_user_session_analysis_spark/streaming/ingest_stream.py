@@ -12,14 +12,26 @@ or a batch frame — same logical plan, so batch tests pin streaming
 semantics.  The whole ingest path is map-only (no shuffle): at 100 TB
 it scales linearly with executors and the parquet sink's
 ``partitionBy`` keeps the lake partition-pruned for the batch jobs.
+
+The lake's format is decided here, once: both lake writers
+(``write_lake_stream``, the batch ``build_lake``) write ``LAKE_SCHEMA``,
+and every lake-root read declares it through ``read_lake``.
 """
 
 from __future__ import annotations
+
+import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+from data_engineering_user_session_analysis_spark.sources.tables import (
+    first_data_file,
+    footer_schema,
+)
 
 # Boundary schema for JSON event messages (explicit — no inference on
 # the hot path; reference declares its 9-field StructType the same way
@@ -33,6 +45,18 @@ EVENT_MESSAGE_SCHEMA = T.StructType(
         T.StructField("event_type", T.StringType(), True),
         T.StructField("value", T.DoubleType(), True),
         T.StructField("props", T.StringType(), True),
+    ]
+)
+
+# The nine data columns ``enrich_events`` yields over decoded messages,
+# then the ``date`` partition column.
+LAKE_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in EVENT_MESSAGE_SCHEMA]
+    + [
+        T.StructField("extracted_date", T.DateType()),
+        T.StructField("date_of_week", T.StringType()),
+        T.StructField("hour_of_day", T.IntegerType()),
+        T.StructField("date", T.DateType()),
     ]
 )
 
@@ -167,40 +191,60 @@ def write_lake_stream(
     return writer.start()
 
 
+def check_lake(
+    spark: SparkSession, lake_path: str, fmt: str, days: Iterable[str]
+) -> None:
+    """Raise ``ValueError``, naming the file and the columns, unless the
+    first data file of each ``date=<day>`` partition among ``days``
+    holds exactly ``LAKE_SCHEMA``'s data columns, with a ``ts`` a
+    declared read turns into TIMESTAMP.  The footer is read on the
+    driver (no Spark job): parquet's through ``footer_schema``, ORC's
+    by ORC's own inference.  A declared read alone would return a
+    column the files lack as nulls."""
+    data = LAKE_SCHEMA.fieldNames()[:-1]  # all but ``date``
+    # parquet reads TIMESTAMP_NTZ as TIMESTAMP; ORC refuses to
+    ts_types = ("timestamp", "timestamp_ntz") if fmt == "parquet" else ("timestamp",)
+    for day in days:
+        part = os.path.join(lake_path, f"date={day}")
+        if not os.path.isdir(part):
+            continue
+        path = first_data_file(part)
+        schema = footer_schema(spark, path) if fmt == "parquet" else spark.read.orc(path).schema
+        found = {f.name: f.dataType.simpleString() for f in schema}
+        missing = [c for c in data if c not in found]
+        extra = [c for c in found if c not in data]
+        if missing or extra:
+            raise ValueError(f"lake file {path} lacks columns {missing}, has extra {extra}")
+        if found["ts"] not in ts_types:
+            raise ValueError(f"lake file {path} stores 'ts' as {found['ts']}, not {ts_types}")
+
+
+def read_lake(
+    spark: SparkSession, lake_path: str, fmt: str, days: Iterable[str]
+) -> DataFrame:
+    """The lake relation at ``lake_path``, read with ``LAKE_SCHEMA`` (no
+    inference job) once ``check_lake`` passes for ``days``, the
+    ``YYYY-MM-DD`` partitions the caller will process."""
+    check_lake(spark, lake_path, fmt, days)
+    return spark.read.format(fmt).schema(LAKE_SCHEMA).load(lake_path)
+
+
 def read_file_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source twin of the Kafka source for tests/backfill: same
-    downstream plan, parquet directory in, stream out.
+    downstream plan, parquet file or directory in, stream out.
 
-    The stream schema is inferred from the parquet footer of the input
-    (one batch-read of metadata, no data scan) rather than hardcoded:
+    The stream schema is the input's own parquet footer
+    (``footer_schema``, read on the driver from the file or the
+    directory's first data file, no Spark job) rather than hardcoded:
     fixtures have shipped both nanos-as-long (INT64 ``ts``) and native
     microsecond TIMESTAMP/TIMESTAMP_NTZ, and assuming either corrupts
     the other (a nanos ``div 1000`` applied to micros collapses a
     7-day span into minutes).  Whatever the physical type, downstream
-    sees a true TimestampType ``ts``.
-
-    The footer read stays a Spark job (unlike the fixture loaders'
-    driver-side ``sources/tables.footer_schema``): ``path`` may be a
-    directory written by either of the repo's two lake writers, whose
-    schemas differ (six columns with TIMESTAMP_NTZ ``ts`` from
-    ``build_lake``, nine with TIMESTAMP ``ts`` from the ingest
-    stream), and Spark-written parquet stores TIMESTAMP as INT96,
-    which a pyarrow footer reports as nanoseconds.  A declared lake
-    schema needs one writer schema first."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # No-op for micro/milli TIMESTAMP columns; lets TIMESTAMP(NANOS)
-    # fixtures surface as INT64 instead of failing the footer read.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
-
-    # Footer-derived schema (required for file streams; also tells us
-    # which timestamp flavor the fixture uses).
-    batch_schema = spark.read.parquet(path).schema
-    ts_field = next((f for f in batch_schema.fields if f.name == "ts"), None)
-    ts_is_long = ts_field is not None and isinstance(ts_field.dataType, T.LongType)
-
+    sees a true TimestampType ``ts``.  No session conf is written."""
+    schema = footer_schema(spark, path)
+    ts = schema["ts"].dataType if "ts" in schema.fieldNames() else None
     if os.path.isfile(path):
         # FileStreamSource wants a directory or glob; bracket-glob the
         # last char so exactly this one file matches.
@@ -208,11 +252,11 @@ def read_file_stream(
     reader = spark.readStream.format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.schema(batch_schema).load(path)
-    if ts_is_long:
-        # Legacy nanos-as-long fixtures (spark.sql.legacy.parquet.nanosAsLong)
+    raw = reader.schema(schema).load(path)
+    if isinstance(ts, T.LongType):
+        # nanos-as-long: exact integer nanos -> micros
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_field is not None and isinstance(ts_field.dataType, T.TimestampNTZType):
+    elif isinstance(ts, T.TimestampNTZType):
         # Normalize NTZ to the session-tz TimestampType the downstream
         # plan (session_window, watermarks) expects; identity under UTC.
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -5,14 +5,91 @@ lifecycle)."""
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.jobs.batch_job import build_lake, run_daily_job
+from data_engineering_user_session_analysis_spark.jobs.batch_job import (
+    build_lake,
+    run_daily_job,
+    run_daily_pipeline,
+)
 from data_engineering_user_session_analysis_spark.plans.audit import jobs_of
 from data_engineering_user_session_analysis_spark.sources.events import load_events
+from data_engineering_user_session_analysis_spark.sources.tables import first_data_file
+from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
+    LAKE_SCHEMA,
+    check_lake,
+    decode_json_messages,
+    enrich_events,
+)
+
+#: two consecutive days of the fixture: day 2 reads day 1's carry and
+#: compacts day 1's partition
+DAYS = ("2024-01-01", "2024-01-02")
+SERVING = ("session_level", "session_full", "user_level")
+
+
+def _frozen(x):
+    """``x`` as a hashable value: rows and arrays become tuples."""
+    return tuple(map(_frozen, x)) if isinstance(x, (list, tuple)) else x
+
+
+def _serving_rows(spark, out: str) -> dict:
+    """Every serving table of ``DAYS`` under ``out``, as row sets."""
+    return {
+        (name, ds): {
+            _frozen(r) for r in spark.read.parquet(os.path.join(out, name, f"ds={ds}")).collect()
+        }
+        for name in SERVING
+        for ds in DAYS
+    }
+
+
+@pytest.fixture(scope="module")
+def build_lake_serving(spark, sf_small, tmp_path_factory) -> dict:
+    """``_serving_rows`` of the daily pipeline over ``DAYS`` of a
+    ``build_lake`` lake: the reference the other lake flavors must
+    reproduce."""
+    root = tmp_path_factory.mktemp("build_lake_serving")
+    lake, out = str(root / "lake"), str(root / "serving")
+    build_lake(spark, sf_small, lake)
+    for ds in DAYS:
+        run_daily_pipeline(spark, lake, ds, out)
+    rows = _serving_rows(spark, out)
+    assert all(rows.values()), "a serving table is empty — vacuous"
+    return rows
+
+
+def _rewrite_with_pyarrow(lake: str, ds: str, change) -> None:
+    """Replace partition ``date=<ds>`` of a Spark-written parquet lake by
+    one pyarrow-written file holding ``change(table)``."""
+    part = os.path.join(lake, f"date={ds}")
+    table = pq.read_table(part, coerce_int96_timestamp_unit="us")
+    shutil.rmtree(part)
+    os.makedirs(part)
+    pq.write_table(change(table), os.path.join(part, "part-00000.parquet"))
+
+
+def _set_ts(table: pa.Table, ts_type: pa.DataType) -> pa.Table:
+    i = table.schema.get_field_index("ts")
+    return table.set_column(i, "ts", table.column("ts").cast(ts_type))
+
+
+def test_both_lake_writers_write_lake_schema(spark, sf_small, tmp_path):
+    """``LAKE_SCHEMA`` is what the ingest stream's projection yields,
+    and what a ``build_lake`` lake's files infer as."""
+    raw = spark.createDataFrame([], "value binary")
+    types = {f.name: f.dataType for f in LAKE_SCHEMA}
+    streamed = enrich_events(decode_json_messages(raw))
+    assert {f.name: f.dataType for f in streamed.schema} == types
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    assert {f.name: f.dataType for f in spark.read.parquet(lake).schema} == types
 
 
 def test_daily_job_end_to_end(spark, sf_small, tmp_path):
@@ -55,8 +132,6 @@ def test_daily_job_runs_on_orc_lake(spark, sf_small, tmp_path):
     results must match the parquet run row-for-row, and the composed
     daily pipeline must compact the previous day's partition as ORC
     (compaction reading it as parquet fails on day 2)."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake_pq, out_pq = str(tmp_path / "lake_pq"), str(tmp_path / "out_pq")
     lake_orc, out_orc = str(tmp_path / "lake_orc"), str(tmp_path / "out_orc")
     build_lake(spark, sf_small, lake_pq)
@@ -72,14 +147,16 @@ def test_daily_job_runs_on_orc_lake(spark, sf_small, tmp_path):
     written = spark.read.orc(os.path.join(out_orc, "user_level"))
     assert written.count() > 0
 
+    # the ORC footer is checked on the driver, with no Spark job
+    with jobs_of(spark, "test_daily_job_runs_on_orc_lake") as jobs:
+        check_lake(spark, lake_orc, "orc", DAYS)
+    assert jobs == []
+
     pipe_out = str(tmp_path / "out_orc_pipeline")
     day1 = os.path.join(lake_orc, "date=2024-01-01")
     before = sorted(map(tuple, spark.read.orc(day1).collect()))
     assert before, "day 1 empty — vacuous"
-    reports = [
-        run_daily_pipeline(spark, lake_orc, d, pipe_out, fmt="orc")
-        for d in ("2024-01-01", "2024-01-02")
-    ]
+    reports = [run_daily_pipeline(spark, lake_orc, d, pipe_out, fmt="orc") for d in DAYS]
     assert "compacted_previous" not in reports[0]
     compacted = reports[1]["compacted_previous"]
     assert compacted["path"].endswith("date=2024-01-01")
@@ -169,8 +246,6 @@ def test_unknown_verb_fails_before_spark(tmp_path, monkeypatch):
 def test_daily_pipeline_rejects_bad_ds_before_writing(spark, sf_small, tmp_path):
     """The pipeline parses ``ds`` before its first write: a malformed
     date leaves no quarantine, session or serving partition behind."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake = str(tmp_path / "lake")
     build_lake(spark, sf_small, lake)
     out = tmp_path / "serving"
@@ -278,8 +353,6 @@ def test_daily_pipeline_three_day_replay_idempotent(spark, sf_small, tmp_path):
     sessions, carry state, serving tables) must be byte-identical,
     and day 3 must still stitch correctly off day 2's re-written
     state."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake = str(tmp_path / "lake")
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)
@@ -342,17 +415,15 @@ def _settled_status(spark):
 
 def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     """One pipeline day with a prior day present (a carry state to
-    read, a partition to compact) launches at most 13 Spark jobs: the
-    steps share one lake read, the carry and the compacted partition
-    are read with declared schemas (no inference job), the hygiene
+    read, a partition to compact) launches at most 12 Spark jobs: the
+    steps share one lake read, the lake, the carry and the compacted
+    partition are read with declared schemas (no inference job), the hygiene
     and session counts are
     observed on their writes, the hot-key cap and ``user_level`` are
     one aggregate each, and the serving step does not cache the day.
     Every job carries the caller's group, also those launched from the
     threads that run the writes concurrently: a job that lost the
     group would escape the budget, so none may appear ungrouped."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake = str(tmp_path / "lake")
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)
@@ -360,7 +431,7 @@ def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     with jobs_of(spark, "test_daily_pipeline_job_budget") as jobs:
         report = run_daily_pipeline(spark, lake, "2024-01-02", out)
     assert "compacted_previous" in report
-    assert len(jobs) <= 13
+    assert len(jobs) <= 12
 
 
 def test_daily_job_budget_and_no_day_cache(spark, sf_small, tmp_path):
@@ -447,8 +518,6 @@ def test_daily_pipeline_joins_quarantine_when_serving_fails(spark, sf_small, tmp
     complete."""
     from py4j.protocol import Py4JJavaError
 
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake = str(tmp_path / "lake")
     out = tmp_path / "serving"
     build_lake(spark, sf_small, lake)
@@ -461,23 +530,23 @@ def test_daily_pipeline_joins_quarantine_when_serving_fails(spark, sf_small, tmp
     assert (out / "quarantine" / f"ds={ds}" / "_SUCCESS").exists()
 
 
-def test_daily_pipeline_on_stream_written_lake(spark, sf_small, tmp_path):
+def test_daily_pipeline_on_stream_written_lake(
+    spark, sf_small, tmp_path, build_lake_serving
+):
     """The paper's flow, stream -> lake -> daily: on a lake written by
     the file sink, the pipeline's compact step skips the partition
     under the sink's _spark_metadata log (compaction would orphan the
-    log) and says so in the report; every day runs and the lake keeps
-    every row."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
+    log) and says so in the report; every day runs, the lake keeps
+    every row, and the serving tables equal those of a ``build_lake``
+    lake of the same events."""
     from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
-        enrich_events,
         read_file_stream,
         write_lake_stream,
     )
 
-    days = ["2024-01-01", "2024-01-02"]
     src = str(tmp_path / "src")
     load_events(spark, sf_small).filter(
-        F.date_format("ts", "yyyy-MM-dd").isin(days)
+        F.date_format("ts", "yyyy-MM-dd").isin(*DAYS)
     ).repartition(4).write.parquet(src)
     lake = str(tmp_path / "stream_lake")
     q = write_lake_stream(
@@ -490,22 +559,74 @@ def test_daily_pipeline_on_stream_written_lake(spark, sf_small, tmp_path):
     q.awaitTermination(120)
     lake_rows = spark.read.parquet(lake).count()
     assert lake_rows > 0
+    # Spark's parquet writer stores the stream's TIMESTAMP ``ts`` as INT96
+    footer = pq.ParquetFile(first_data_file(os.path.join(lake, f"date={DAYS[0]}")))
+    assert footer.schema.column(footer.schema_arrow.get_field_index("ts")).physical_type == "INT96"
 
     out = str(tmp_path / "serving")
-    reports = [run_daily_pipeline(spark, lake, ds, out) for ds in days]
+    reports = [run_daily_pipeline(spark, lake, ds, out) for ds in DAYS]
     assert "compacted_previous" not in reports[0]
     skipped = reports[1]["compacted_previous"]["skipped"]
     assert skipped.endswith("_spark_metadata")
     assert sum(r["hygiene"]["rows"] for r in reports) == lake_rows
     assert spark.read.parquet(lake).count() == lake_rows
+    assert _serving_rows(spark, out) == build_lake_serving
+
+
+def test_daily_pipeline_on_pyarrow_written_lake(spark, sf_small, tmp_path, build_lake_serving):
+    """A lake written by pyarrow with a microsecond UTC ``ts`` (the
+    shape of perfbench's lake) passes the lake-schema check and serves
+    the same tables as the ``build_lake`` lake it was copied from."""
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    for ds in DAYS:
+        _rewrite_with_pyarrow(lake, ds, lambda t: _set_ts(t, pa.timestamp("us", tz="UTC")))
+    out = str(tmp_path / "serving")
+    for ds in DAYS:
+        run_daily_pipeline(spark, lake, ds, out)
+    assert _serving_rows(spark, out) == build_lake_serving
+
+
+#: lakes that disagree with LAKE_SCHEMA: (day rewritten, change, the
+#: column the error names).  The nanos case breaks ds-1, the partition
+#: only compaction reads, so the check must cover it before any write.
+DISAGREEING_LAKES = {
+    "missing_column": (DAYS[1], lambda t: t.drop_columns(["props"]), "props"),
+    "nanos_as_long_ts": (DAYS[0], lambda t: _set_ts(t, pa.timestamp("ns")), "'ts'.*bigint"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DISAGREEING_LAKES))
+def test_daily_pipeline_refuses_a_lake_that_disagrees(spark, sf_small, tmp_path, case):
+    """A declared read would return a column the files lack as nulls,
+    and a nanos-as-long ``ts`` as garbage; the pipeline must instead
+    raise ``ValueError`` naming the column before it writes anything."""
+    day, change, column = DISAGREEING_LAKES[case]
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    _rewrite_with_pyarrow(lake, day, change)
+    out = tmp_path / "serving"
+    with pytest.raises(ValueError, match=column):
+        run_daily_pipeline(spark, lake, DAYS[1], str(out))
+    assert not out.exists()
+
+
+def test_check_lake_refuses_ntz_ts_in_orc(spark, tmp_path):
+    """Parquet reads a TIMESTAMP_NTZ ``ts`` as TIMESTAMP, but ORC fails
+    on it mid-scan, so the check refuses it in an ORC lake up front."""
+    lake = tmp_path / "lake"
+    cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in LAKE_SCHEMA.fields[:-1]]
+    spark.range(1).select(*cols).withColumn("ts", F.lit(None).cast("timestamp_ntz")).write.orc(
+        str(lake / f"date={DAYS[0]}")
+    )
+    with pytest.raises(ValueError, match="'ts'.*timestamp_ntz"):
+        check_lake(spark, str(lake), "orc", DAYS)
 
 
 def test_daily_pipeline_quarantines_and_excludes_bad_rows(spark, sf_small, tmp_path):
     """A poison row (null user_id) must land in the quarantine sink
     AND be excluded from sessionization and serving — dead-lettered
     rows are never also served."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake = str(tmp_path / "lake")
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)
@@ -533,8 +654,6 @@ def test_quarantine_rerun_clears_stale_rows(spark, sf_small, tmp_path):
     previous run's quarantine rows — the per-day-overwrite invariant
     covers the dead-letter sink too (a stale quarantine row for a now-
     served event would be a contradiction in the audit record)."""
-    from data_engineering_user_session_analysis_spark.jobs.batch_job import run_daily_pipeline
-
     lake = str(tmp_path / "lake")
     out = str(tmp_path / "serving")
     build_lake(spark, sf_small, lake)

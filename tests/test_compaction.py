@@ -36,9 +36,9 @@ def test_stats_and_compact_roundtrip(spark, sf_small, tmp_path):
     other = [s for s in stats if s["path"] != target["path"]][0]
     other_files_before = {p for p, _ in _list(spark, other["path"])}
 
-    report = compact_partition(
-        spark, target["path"], target_file_bytes=1 << 30
-    )
+    # the fragmented lake's data columns are the events table's
+    schema = load_events(spark, sf_small).schema
+    report = compact_partition(spark, target["path"], schema, target_file_bytes=1 << 30)
     assert report["files_after"] == 1
     assert report["files_before"] == target["n_files"]
 
@@ -55,7 +55,8 @@ def test_needs_compaction_signal(spark, sf_small, tmp_path):
     s = max(stats, key=lambda s: s["n_files"])
     mean = s["bytes"] / s["n_files"]
     assert mean < (1 << 20)  # shattered: avg file well under 1 MB
-    compact_partition(spark, s["path"], target_file_bytes=1 << 30)
+    schema = load_events(spark, sf_small).schema
+    compact_partition(spark, s["path"], schema, target_file_bytes=1 << 30)
     s2 = [x for x in partition_file_stats(spark, lake) if x["path"] == s["path"]][0]
     assert s2["n_files"] == 1
     assert s2["bytes"] > 0
@@ -76,7 +77,10 @@ def test_compact_refuses_then_retires_filestream_sink_log(spark, sf_small, tmp_p
     import pytest
 
     from data_engineering_user_session_analysis_spark.sources.compaction import find_sink_log
+    from pyspark.sql.types import StructType
+
     from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
+        LAKE_SCHEMA,
         enrich_events,
         read_file_stream,
         write_lake_stream,
@@ -98,7 +102,8 @@ def test_compact_refuses_then_retires_filestream_sink_log(spark, sf_small, tmp_p
     assert find_sink_log(spark, lake) is not None
     target = max(partition_file_stats(spark, lake), key=lambda s: s["n_files"])
 
+    data = StructType(LAKE_SCHEMA.fields[:-1])  # all but ``date``
     with pytest.raises(RuntimeError, match="_spark_metadata"):
-        compact_partition(spark, target["path"], target_file_bytes=1 << 30)
+        compact_partition(spark, target["path"], data, target_file_bytes=1 << 30)
     with pytest.raises(RuntimeError, match="_spark_metadata"):
-        compact_partition(spark, lake, target_file_bytes=1 << 30)
+        compact_partition(spark, lake, data, target_file_bytes=1 << 30)

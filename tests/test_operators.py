@@ -113,16 +113,13 @@ def test_salted_agg_spreads_identical_rows(spark):
     """A hot key made of IDENTICAL rows (the realistic skew case) must
     land in multiple salt buckets — content-derived salt would put
     them all in one (round-1 defect)."""
-    from data_engineering_user_session_analysis_spark.operators.skew import _MERGE, _PARTIAL  # noqa: F401
+    from data_engineering_user_session_analysis_spark.operators.skew import _salt
 
     df = spark.range(0, 10_000).select(
         F.lit(7).alias("user_id"), F.lit(1.0).alias("value")
     ).repartition(8)
-    salt = F.pmod(
-        F.hash(F.monotonically_increasing_id(), F.spark_partition_id()),
-        F.lit(16),
-    )
-    n_buckets = df.withColumn("_salt", salt).select("_salt").distinct().count()
+    # the salt salted_agg itself gives each row when no row key is passed
+    n_buckets = df.select(_salt(16, None).alias("s")).distinct().count()
     assert n_buckets > 1, "identical-row hot key concentrated in one salt bucket"
     # and the end-to-end result is still exact
     out = salted_agg(
