@@ -17,9 +17,11 @@
   not ``count()`` jobs of their own.
 * **Independent writes overlap**: each write action is its own Spark
   query, and at paper size a day's jobs are a few tasks each, so run
-  one after another they leave most cores idle between launches.  A
-  step whose writes do not read each other's output submits them
-  together (``_concurrently``) and the scheduler fills the cores.
+  one after another they leave most cores idle between launches.
+  Writes that do not read each other's output are submitted together
+  (``_concurrently``) and the scheduler fills the cores: the daily
+  pipeline runs its quarantine write, stitch step and serving step
+  side by side, and each step overlaps its own writes in turn.
   The serving step re-scans the day's few partition-pruned files per
   table instead of caching it: concurrent writers would each launch
   their own job to build one cache.
@@ -299,8 +301,7 @@ def run_daily_pipeline(
     fmt: str = "parquet",
 ) -> dict:
     """The composed daily operational verb (``job daily <ds>``) — the
-    sequence a real deployment runs once per day, chaining the
-    individually-tested steps in dependency order:
+    steps a real deployment runs once per day, each tested on its own:
 
     1. **ingest hygiene**: quarantine structurally bad rows (null
        user/ts — rows sessionization cannot key) to
@@ -330,14 +331,21 @@ def run_daily_pipeline(
     one relation feeds the hygiene, stitch and serving steps.  Returns
     a per-step report dict for observability.
 
-    Steps 1-3 overlap: the quarantine write reads only the lake, so it
-    runs beside the stitch step followed by the serving step (those
-    two stay in order, in one thread), and both are joined before
-    step 4.  Compaction must not overlap a reader of the lake: it
-    swaps the previous day's directory by rename and refreshes the
-    file listing of every relation under the lake root, the one the
-    other steps share included, and a scan running through that
-    refresh can come back without the day's rows.
+    Steps 1-3 run side by side, one thread each: the quarantine write
+    and the serving step read only the lake, and the stitch step reads
+    the lake and the prior carry state; none reads another's output.
+    All three are joined before step 4.  Compaction must not overlap a
+    reader of the lake: it swaps the previous day's directory by
+    rename and refreshes the file listing of every relation under the
+    lake root, the one the other steps share included, and a scan
+    running through that refresh can come back without the day's rows.
+
+    A failing step does not stop the other two: they run to the end,
+    and the first failure in step order (quarantine, stitch, serving)
+    is raised only once every write has ended, so no job is left
+    running.  The day's other outputs may then be complete; re-running
+    the day overwrites every one of them, so a re-run after the fault
+    is mended restores the day exactly.
     """
     prev = (parse_ds(ds) - datetime.timedelta(days=1)).isoformat()
     report: dict = {"ds": ds}
@@ -368,18 +376,13 @@ def run_daily_pipeline(
     # so the quarantine sink is the RECORD of what they excluded —
     # a dead-lettered row is never also sessionized or served
 
-    # the stitch and serving steps stay in one thread, in order:
-    # perfbench's Tracer spans them with a single span stack
-    def stitch_then_serve() -> tuple[dict, dict]:
-        sessions = run_incremental_sessions(spark, lake, ds, out_dir, fmt=fmt)
-        return sessions, run_daily_job(spark, lake, ds, out_dir, fmt=fmt)
-
-    _, (sessions, serving) = _concurrently(
+    _, sessions, serving = _concurrently(
         spark,
         functools.partial(
             quarantine.save, os.path.join(out_dir, "quarantine", f"ds={ds}")
         ),
-        stitch_then_serve,
+        functools.partial(run_incremental_sessions, spark, lake, ds, out_dir, fmt=fmt),
+        functools.partial(run_daily_job, spark, lake, ds, out_dir, fmt=fmt),
     )
     report["hygiene"] = stats.get  # {"rows": …, "quarantined": …}
     report["sessions"] = sessions

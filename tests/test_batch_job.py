@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 
 import pyarrow as pa
@@ -39,14 +40,15 @@ def _frozen(x):
     return tuple(map(_frozen, x)) if isinstance(x, (list, tuple)) else x
 
 
-def _serving_rows(spark, out: str) -> dict:
-    """Every serving table of ``DAYS`` under ``out``, as row sets."""
+def _serving_rows(spark, out: str, tables=SERVING, days=DAYS) -> dict:
+    """Every table of ``tables`` (the serving tables by default) for
+    ``days`` under ``out``, as row sets."""
     return {
         (name, ds): {
             _frozen(r) for r in spark.read.parquet(os.path.join(out, name, f"ds={ds}")).collect()
         }
-        for name in SERVING
-        for ds in DAYS
+        for name in tables
+        for ds in days
     }
 
 
@@ -434,6 +436,34 @@ def test_daily_pipeline_job_budget(spark, sf_small, tmp_path):
     assert len(jobs) <= 12
 
 
+def test_daily_pipeline_overlaps_stitch_and_serving(spark, sf_small, tmp_path, monkeypatch):
+    """The stitch and serving steps run side by side: the stitch step
+    waits, before it starts, for the serving step to have started.
+    Were they run one after the other, the wait would time out."""
+    from data_engineering_user_session_analysis_spark.jobs import batch_job
+
+    serving_started = threading.Event()
+    seen = []
+    serve, stitch = batch_job.run_daily_job, batch_job.run_incremental_sessions
+
+    def started_serving(*args, **kwargs):
+        serving_started.set()
+        return serve(*args, **kwargs)
+
+    def stitch_after_serving_started(*args, **kwargs):
+        seen.append(serving_started.wait(timeout=60))
+        return stitch(*args, **kwargs)
+
+    monkeypatch.setattr(batch_job, "run_daily_job", started_serving)
+    monkeypatch.setattr(batch_job, "run_incremental_sessions", stitch_after_serving_started)
+    lake = str(tmp_path / "lake")
+    build_lake(spark, sf_small, lake)
+    report = run_daily_pipeline(spark, lake, DAYS[0], str(tmp_path / "serving"))
+    assert seen == [True]
+    assert report["sessions"]["closed"] > 0
+    assert report["serving_tables"] == sorted(SERVING)
+
+
 def test_daily_job_budget_and_no_day_cache(spark, sf_small, tmp_path):
     """The serving step alone launches at most 6 jobs and caches
     nothing: its three writes run concurrently, and a cached day would
@@ -451,8 +481,9 @@ def test_daily_job_budget_and_no_day_cache(spark, sf_small, tmp_path):
 
 
 def test_concurrently_joins_every_call_then_raises_the_first_failure(spark):
-    """``_concurrently`` hands each call the caller's job group,
-    returns results in call order, and on failure re-raises the first
+    """``_concurrently`` hands each call the caller's job group, also
+    to the calls of a ``_concurrently`` nested in one of them, returns
+    results in call order, and on failure re-raises the first
     failing call's error in CALL order (not the first to fail in time)
     only once every call has ended."""
     from data_engineering_user_session_analysis_spark.jobs.batch_job import _concurrently
@@ -471,14 +502,22 @@ def test_concurrently_joins_every_call_then_raises_the_first_failure(spark):
         time.sleep(0.5)
         ended.append("slowest")
 
+    def group_of_thread():
+        return sc.getLocalProperty("spark.jobGroup.id")
+
     group = "test_concurrently"
     with jobs_of(spark, group):
         got = _concurrently(
-            spark, lambda: sc.getLocalProperty("spark.jobGroup.id"), lambda: 2
+            spark,
+            group_of_thread,
+            lambda: 2,
+            # a step that overlaps its own writes opens a pool of its
+            # own inside a pool thread
+            lambda: _concurrently(spark, group_of_thread),
         )
         with pytest.raises(ValueError, match="first in call order"):
             _concurrently(spark, slow_failure, fast_failure, slowest)
-    assert got == [group, 2]
+    assert got == [group, 2, [group]]
     assert ended == ["slowest"]
 
 
@@ -528,6 +567,38 @@ def test_daily_pipeline_joins_quarantine_when_serving_fails(spark, sf_small, tmp
         run_daily_pipeline(spark, lake, ds, str(out))
     assert _settled_status(spark).getActiveJobsIds() == []
     assert (out / "quarantine" / f"ds={ds}" / "_SUCCESS").exists()
+
+
+def test_daily_pipeline_serves_when_stitch_fails_and_rerun_restores(
+    spark, sf_small, tmp_path
+):
+    """When the stitch step fails, the quarantine write and the serving
+    step beside it still run to the end: the error reaches the caller
+    with no job left running and every other table of the day written.
+    Once the fault is gone, re-running the day writes exactly what a
+    clean run writes."""
+    from py4j.protocol import Py4JJavaError
+
+    lake = str(tmp_path / "lake")
+    out = tmp_path / "serving"
+    build_lake(spark, sf_small, lake)
+    out.mkdir()
+    (out / "session_closed").write_text("")
+    ds = DAYS[0]
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        run_daily_pipeline(spark, lake, ds, str(out))
+    assert _settled_status(spark).getActiveJobsIds() == []
+    for name in ("quarantine", *SERVING):
+        assert (out / name / f"ds={ds}" / "_SUCCESS").exists(), name
+
+    (out / "session_closed").unlink()
+    run_daily_pipeline(spark, lake, ds, str(out))
+    clean = str(tmp_path / "clean")
+    run_daily_pipeline(spark, lake, ds, clean)
+    tables = ("session_closed", "session_state", *SERVING)
+    rerun = _serving_rows(spark, str(out), tables, [ds])
+    assert all(rerun.values()), "a table is empty — vacuous"
+    assert rerun == _serving_rows(spark, clean, tables, [ds])
 
 
 def test_daily_pipeline_on_stream_written_lake(
