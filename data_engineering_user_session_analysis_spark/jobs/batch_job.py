@@ -44,8 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
-from data_engineering_user_session_analysis_spark.operators.sessionize import session_rollup, sessionize
+from data_engineering_user_session_analysis_spark.operators.sessionize import (
+    session_rollup,
+    session_rollup_full,
+    sessionize,
+)
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 from data_engineering_user_session_analysis_spark.sources.formats import write_lake_table
 from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
@@ -146,7 +149,7 @@ def run_daily_job(
     sessionized = sessionize(day, order_cols=("event_id",))
     session_level = session_rollup(sessionized)
     # serving posture: bound the per-session event trace so one bot
-    # key cannot OOM an aggregation buffer (operators/rollup_full.py
+    # key cannot OOM an aggregation buffer (session_rollup_full's
     # hot-key policy); 10k events is far above any human session.
     session_full = session_rollup_full(sessionized, max_events=10_000)
 

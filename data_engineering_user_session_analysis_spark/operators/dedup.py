@@ -374,10 +374,10 @@ def connected_components(
       chains in O(log n) rounds instead of O(diameter).  All
       operations are plain joins/groupBys shuffling on node id; each
       round is localCheckpoint-ed so lineage stays constant, and the
-      loop's shuffle width is sized from the edge count.  The
-      convergence check is one count() every SECOND round (plus the
-      last): a no-change round is a fixed point, so convergence is
-      detected at worst one round late for half the actions.
+      loop's shuffle width is sized from the edge count.  Every round
+      ends with one convergence count() over its own checkpoint, and
+      the loop stops at the first round that changes no label (a
+      fixed point).
 
     Both paths produce identical output (min-id component labels are
     unique); equality is pinned on the real corpus in
@@ -489,7 +489,7 @@ def _driver_components(spark, edge_rows, id_type) -> DataFrame:
 def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
     """The min-label-propagation rounds of ``connected_components``,
     split out so the caller can scope the loop's shuffle width."""
-    for round_no in range(1, max_iter + 1):
+    for _ in range(max_iter):
         neighbor_min = (
             edges.join(
                 labels.select(F.col("node").alias("v"), F.col("label").alias("vl")),
@@ -532,13 +532,11 @@ def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
         )
         jumped = materialize(jumped, eager=True)
         labels = jumped.select("node", "label")
-        if round_no % 2 == 0 or round_no == max_iter:
-            # a no-change round is a fixed point: min-propagation and
-            # pointer jumping only ever LOWER labels, so label != _prev
-            # on any node is exactly the old join-count's predicate
-            changed = jumped.filter(F.col("label") != F.col("_prev")).count()
-            if changed == 0:
-                break
+        # a no-change round is a fixed point: min-propagation and
+        # pointer jumping only ever LOWER labels, so label != _prev on
+        # any node is exactly "this round changed something"
+        if jumped.filter(F.col("label") != F.col("_prev")).count() == 0:
+            break
     return labels
 
 

@@ -26,7 +26,8 @@ Design — mergeable partial aggregates, not event retention:
   carried ``last_ts``; it sorts before every day event (``_carry
   DESC`` breaks a tie), so "does the first local session continue
   the carry?" IS the ordinary lag-gap rule — the same strict-``>``
-  boundary as ``sessionize`` — evaluated by the one window that
+  boundary at ``GAP_SECONDS`` as ``sessionize``, bound into the
+  statement as ``:gap_us`` — evaluated by the one window that
   sessionizes the day.  The stitched result is event-identical to
   batch sessionization of the union.
 * Sessions emitted = closed forever; the invariant (pinned in
@@ -48,9 +49,12 @@ stays flat (and is what a restartable daily job needs anyway).  Days
 MUST be processed in ascending date order (the positional merge rule
 assumes carried events precede today's).
 
-Inputs use the events schema: ``user_id``, ``ts`` (TIMESTAMP or
-TIMESTAMP_NTZ), ``event_id`` (the tie-break), ``event_type`` and
-``value``; other columns are ignored.
+The session contract is ``operators/sessionize.py``'s: the gap, the
+``(ts, event_id)`` order and the aggregates.  ``_STEP_SQL`` writes
+each aggregate in its mergeable form (a carried partial combined with
+the day's rows).  Inputs use the lake's event columns: ``user_id``,
+``ts`` (TIMESTAMP or TIMESTAMP_NTZ), ``event_id`` (the tie-break),
+``event_type`` and ``value``; other columns are ignored.
 """
 
 from __future__ import annotations
@@ -59,7 +63,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.operators.sessionize import (
-    epoch_seconds,
+    GAP_SECONDS,
+    duration_seconds,
+    session_key,
 )
 
 # carried partial-aggregate columns (state table schema, keyed by user)
@@ -176,10 +182,10 @@ FROM combined
 def advance_sessions(
     day: DataFrame,
     state: DataFrame | None = None,
-    gap_seconds: int = 1800,
     materialize_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """One incremental step: fold one day of events into the carry.
+    """One incremental step: fold one day of events into the carry,
+    splitting sessions at ``sessionize``'s ``GAP_SECONDS``.
 
     Returns ``(closed, new_state)``: ``closed`` has the
     ``session_rollup`` schema and contains every session that ended
@@ -205,7 +211,7 @@ def advance_sessions(
         state = empty_state(day)
     combined = spark.sql(
         _STEP_SQL,
-        args={"gap_us": int(gap_seconds) * 1_000_000},
+        args={"gap_us": GAP_SECONDS * 1_000_000},
         day=day,
         state=state,
     )
@@ -232,15 +238,12 @@ def _to_rollup(partials: DataFrame) -> DataFrame:
     output schema (same names, same types, same column order)."""
     return partials.select(
         F.col("user_id"),
-        F.concat_ws(
-            "-", F.col("user_id").cast("string"), F.col("session_seq")
-        ).alias("session_id"),
+        session_key(F.col("session_seq")).alias("session_id"),
         F.col("session_start_time"),
         F.col("last_ts").alias("session_end_time"),
-        (
-            epoch_seconds(F.col("last_ts"))
-            - epoch_seconds(F.col("session_start_time"))
-        ).alias("session_duration_seconds"),
+        duration_seconds(F.col("session_start_time"), F.col("last_ts")).alias(
+            "session_duration_seconds"
+        ),
         F.col("number_of_events"),
         F.size("event_types").cast("long").alias("distinct_event_types"),
         F.col("is_purchase"),

@@ -6,8 +6,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
-from data_engineering_user_session_analysis_spark.operators.sessionize import sessionize
+from data_engineering_user_session_analysis_spark.operators.sessionize import (
+    session_aggregates,
+    session_rollup_full,
+    sessionize,
+)
 from data_engineering_user_session_analysis_spark.queries import register
 from data_engineering_user_session_analysis_spark.queries.session_queries import _SESSIONIZED_CTE
 from data_engineering_user_session_analysis_spark.sources.events import PROPS_SCHEMA, load_events
@@ -126,19 +129,13 @@ def session_event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = sessionize(ev, order_cols=("event_id",))
     sessions = (
         s.groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("w_start"),
-            F.max("ts").alias("w_end"),
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("has_purchase"),
-        )
-        .filter(F.col("has_purchase") == 1)
+        .agg(*session_aggregates("session_start_time", "session_end_time", "is_purchase"))
+        .filter(F.col("is_purchase") == 1)
         .select(
             "user_id",
             F.col("session_id").alias("purchase_session_id"),
-            "w_start",
-            "w_end",
+            F.col("session_start_time").alias("w_start"),
+            F.col("session_end_time").alias("w_end"),
         )
     )
     points = ev.select("event_id", "user_id", "ts")

@@ -13,11 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.operators.sessionize import session_rollup, sessionize
+from data_engineering_user_session_analysis_spark.operators.sessionize import (
+    GAP_SECONDS,
+    session_rollup,
+    sessionize,
+)
 from data_engineering_user_session_analysis_spark.queries import register
 from data_engineering_user_session_analysis_spark.sources.events import load_events
-
-GAP_SECONDS = 1800
 
 # Shared oracle CTE: gap-sessionization, the lag/cumsum construction.
 # The gap predicate compares native microsecond deltas — identical to
@@ -44,12 +46,9 @@ WITH ordered AS (
 """
 
 
-def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sessionize(load_events(spark, sf_dir), order_cols=("event_id",))
-
-
-@register(
-    "session_rollup",
+# Batch gap-sessionization rolled up per session: the oracle of every
+# row whose answer is `session_rollup(sessionize(events))`.
+_SESSION_ROLLUP_ORACLE = (
     _SESSIONIZED_CTE
     + """
 , firsts AS (
@@ -74,19 +73,31 @@ SELECT
   any_value(last_event_type) AS last_event_type
 FROM firsts
 GROUP BY user_id, session_id
-""",
+"""
 )
-def session_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: gap-sessionize + full session-level rollup
-    (reference Q1 + the `user_session` serving DDL columns,
-    ``spark_jobs/spark_stream.py:116-131``)."""
-    df = session_rollup(_sessionized(spark, sf_dir))
+
+
+def _oracle_types(df: DataFrame) -> DataFrame:
+    """A session rollup with the oracle's column types: the 0/1
+    ``is_purchase`` as int and the exact ``session_value`` as double."""
     return df.withColumns(
         {
             "is_purchase": F.col("is_purchase").cast("int"),
             "session_value": F.col("session_value").cast("double"),
         }
     )
+
+
+def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sessionize(load_events(spark, sf_dir), order_cols=("event_id",))
+
+
+@register("session_rollup", _SESSION_ROLLUP_ORACLE)
+def session_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flagship: gap-sessionize + full session-level rollup
+    (reference Q1 + the `user_session` serving DDL columns,
+    ``spark_jobs/spark_stream.py:116-131``)."""
+    return _oracle_types(session_rollup(_sessionized(spark, sf_dir)))
 
 
 @register(
@@ -250,31 +261,7 @@ def funnel_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle: batch gap-sessionization over the FULL events table —
     # the incremental day-replay must equal it EXACTLY (the operator's
     # core invariant, now driver-guarded rather than pytest-only)
-    _SESSIONIZED_CTE
-    + """
-, firsts AS (
-  SELECT *,
-    first_value(event_type) OVER w AS first_event_type,
-    last_value(event_type)  OVER w AS last_event_type
-  FROM sessionized
-  WINDOW w AS (PARTITION BY user_id, session_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-)
-SELECT
-  user_id,
-  session_id,
-  min(ts) AS session_start_time,
-  max(ts) AS session_end_time,
-  date_diff('second', min(ts), max(ts)) AS session_duration_seconds,
-  CAST(count(*) AS BIGINT) AS number_of_events,
-  CAST(count(DISTINCT event_type) AS BIGINT) AS distinct_event_types,
-  CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS INT) AS is_purchase,
-  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value,
-  any_value(first_event_type) AS first_event_type,
-  any_value(last_event_type) AS last_event_type
-FROM firsts
-GROUP BY user_id, session_id
-""",
+    _SESSION_ROLLUP_ORACLE,
 )
 def session_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day incremental sessionization replay
@@ -332,12 +319,7 @@ def session_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         closed.append(day_closed)
     full = reduce(DataFrame.unionByName, closed, finalize_sessions(state))
-    return full.withColumns(
-        {
-            "is_purchase": F.col("is_purchase").cast("int"),
-            "session_value": F.col("session_value").cast("double"),
-        }
-    )
+    return _oracle_types(full)
 
 
 @register(
@@ -484,10 +466,4 @@ def session_rollup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "-", F.col("user_id").cast("string"), F.date_format("ts", "yyyy-MM-dd")
         ),
     )
-    df = session_rollup(keyed, session_col="user_session")
-    return df.withColumns(
-        {
-            "is_purchase": F.col("is_purchase").cast("int"),
-            "session_value": F.col("session_value").cast("double"),
-        }
-    )
+    return _oracle_types(session_rollup(keyed, session_col="user_session"))

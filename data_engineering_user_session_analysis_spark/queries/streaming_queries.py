@@ -15,7 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_user_session_analysis_spark.queries import register
-from data_engineering_user_session_analysis_spark.queries.session_queries import _SESSIONIZED_CTE
+from data_engineering_user_session_analysis_spark.queries.session_queries import (
+    _SESSIONIZED_CTE,
+    _oracle_types,
+)
 from data_engineering_user_session_analysis_spark.streaming.ingest_stream import read_file_stream
 from data_engineering_user_session_analysis_spark.streaming.session_stream import (
     session_window_rollup,
@@ -94,12 +97,7 @@ def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = write_memory_sink(rollup, name, output_mode="complete")
         q.processAllAvailable()
         q.stop()
-    return spark.table(name).withColumns(
-        {
-            "is_purchase": F.col("is_purchase").cast("int"),
-            "session_value": F.col("session_value").cast("double"),
-        }
-    )
+    return _oracle_types(spark.table(name))
 
 
 @register(

@@ -13,30 +13,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-CSV_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
+from data_engineering_user_session_analysis_spark.streaming.ingest_stream import (
+    EVENT_MESSAGE_SCHEMA,
+    MESSAGE_TS_FORMAT,
 )
 
 
 def read_events_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV scan with explicit schema (never inferSchema on the hot
-    path) and explicit timestamp format."""
+    """CSV scan with the event message schema (never inferSchema on
+    the hot path) and an explicit timestamp format."""
     return (
         spark.read.option("header", "true")
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
         # NTZ columns parse via a separate option; pin it to the same
         # wire format so a TIMESTAMP_NTZ schema variant round-trips too.
         .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .schema(CSV_EVENT_SCHEMA)
+        .schema(EVENT_MESSAGE_SCHEMA)
         .csv(path)
     )
 
@@ -50,12 +43,7 @@ def as_kafka_messages(events: DataFrame, key_col: str = "user_id") -> DataFrame:
     a broker guarantee."""
     return events.select(
         F.col(key_col).cast("string").cast("binary").alias("key"),
-        # microsecond timestampFormat: to_json defaults to millis,
-        # which would silently truncate event time on the wire
-        F.to_json(
-            F.struct(*events.columns),
-            {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
-        )
+        F.to_json(F.struct(*events.columns), {"timestampFormat": MESSAGE_TS_FORMAT})
         .cast("binary")
         .alias("value"),
     )

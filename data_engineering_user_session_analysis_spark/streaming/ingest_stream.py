@@ -23,7 +23,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -47,6 +47,12 @@ EVENT_MESSAGE_SCHEMA = T.StructType(
         T.StructField("props", T.StringType(), True),
     ]
 )
+
+# The wire format of ``ts`` in a JSON event message.  Microseconds:
+# ``to_json`` defaults to millis, which would silently truncate event
+# time on the wire (the reference pins a parse hazard here —
+# SURVEY.md §1.2a).
+MESSAGE_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 # The nine data columns ``enrich_events`` yields over decoded messages,
 # then the ``date`` partition column.
@@ -92,20 +98,20 @@ def read_kafka_stream(
     )
 
 
+def _parsed_message() -> Column:
+    """The ``json_value`` message text parsed to an
+    ``EVENT_MESSAGE_SCHEMA`` struct: null for a malformed message."""
+    return F.from_json(
+        "json_value", EVENT_MESSAGE_SCHEMA, {"timestampFormat": MESSAGE_TS_FORMAT}
+    )
+
+
 def decode_json_messages(raw: DataFrame) -> DataFrame:
     """Message value bytes → typed event columns (reference S2/P2/P3):
     CAST(value AS STRING) → from_json(explicit schema) → flatten."""
     return (
         raw.selectExpr("CAST(value AS STRING) AS json_value")
-        .select(
-            F.from_json(
-                "json_value",
-                EVENT_MESSAGE_SCHEMA,
-                # mirror the producer's microsecond timestampFormat
-                # (reference pins a parse hazard here — SURVEY.md §1.2a)
-                {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
-            ).alias("data")
-        )
+        .select(_parsed_message().alias("data"))
         .select("data.*")
     )
 
@@ -132,12 +138,7 @@ def decode_json_messages_with_quarantine(
     spark_stream.py:57-64``); this is the production-shaped fix.
     """
     decoded = raw.selectExpr("CAST(value AS STRING) AS json_value").withColumn(
-        "data",
-        F.from_json(
-            "json_value",
-            EVENT_MESSAGE_SCHEMA,
-            {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
-        ),
+        "data", _parsed_message()
     )
     # isNotNull never evaluates to SQL NULL, so the negation below is
     # an exact complement — every message lands in exactly one branch.

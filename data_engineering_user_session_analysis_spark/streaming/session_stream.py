@@ -18,20 +18,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from data_engineering_user_session_analysis_spark.operators.sessionize import epoch_seconds
+from data_engineering_user_session_analysis_spark.operators.sessionize import (
+    GAP_SECONDS,
+    ROLLUP_COLS,
+    session_aggregates,
+)
+
+# ``session_rollup``'s columns less ``distinct_event_types``: streaming
+# aggregation has no distinct aggregates
+_WINDOW_COLS = tuple(c for c in ROLLUP_COLS if c != "distinct_event_types")
 
 
-def session_window_rollup(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    event_type_col: str = "event_type",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Per-user gap-session aggregate over an (unbounded) stream.
+def session_window_rollup(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """Per-user gap-session aggregate over an (unbounded) stream:
+    ``session_window`` with the ``GAP_SECONDS`` gap, aggregated with
+    ``sessionize.session_aggregates``.
 
     Watermark bounds state (late events beyond it are dropped —
     reference ST5) and lets append mode emit a session once it can
@@ -39,34 +40,14 @@ def session_window_rollup(
     supports session_window in batch), which is how the DuckDB
     oracle checks it.
     """
-    order = F.struct(F.col(ts_col), F.col(tiebreak_col))
-    win = F.session_window(F.col(ts_col), gap)
+    win = F.session_window(F.col("ts"), f"{GAP_SECONDS} seconds")
     df = events
     if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(F.col(user_col), win).agg(
-        F.min(ts_col).alias("session_start_time"),
-        F.max(ts_col).alias("session_end_time"),
-        (epoch_seconds(F.max(ts_col)) - epoch_seconds(F.min(ts_col))).alias(
-            "session_duration_seconds"
-        ),
-        F.count("*").alias("number_of_events"),
-        F.max(F.when(F.col(event_type_col) == "purchase", 1).otherwise(0)).alias(
-            "is_purchase"
-        ),
-        F.sum(F.col(value_col).cast("decimal(18,2)")).alias("session_value"),
-        F.min_by(event_type_col, order).alias("first_event_type"),
-        F.max_by(event_type_col, order).alias("last_event_type"),
-    ).select(
-        user_col,
-        "session_start_time",
-        "session_end_time",
-        "session_duration_seconds",
-        "number_of_events",
-        "is_purchase",
-        "session_value",
-        "first_event_type",
-        "last_event_type",
+        df = df.withWatermark("ts", watermark)
+    return (
+        df.groupBy(F.col("user_id"), win)
+        .agg(*session_aggregates(*_WINDOW_COLS))
+        .select("user_id", *_WINDOW_COLS)
     )
 
 

@@ -8,8 +8,12 @@ import json
 
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
-from data_engineering_user_session_analysis_spark.operators.sessionize import epoch_seconds, sessionize
+from data_engineering_user_session_analysis_spark.operators.sessionize import (
+    GAP_SECONDS,
+    epoch_seconds,
+    session_rollup_full,
+    sessionize,
+)
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 from data_engineering_user_session_analysis_spark.streaming.ingest_stream import enrich_events
 
@@ -44,8 +48,8 @@ def test_sessionize_invariants(spark, sf_small):
     gap = epoch_seconds(F.col("ts")) - epoch_seconds(F.col("prev_ts"))
     same = flagged.filter(F.col("session_id") == F.col("prev_session"))
     diff = flagged.filter(F.col("session_id") != F.col("prev_session"))
-    assert same.filter(gap > 1800).count() == 0
-    assert diff.filter(gap <= 1800).count() == 0
+    assert same.filter(gap > GAP_SECONDS).count() == 0
+    assert diff.filter(gap <= GAP_SECONDS).count() == 0
 
 
 def test_events_json_roundtrip(spark, sf_small):

@@ -26,15 +26,14 @@ from data_engineering_user_session_analysis_spark.operators.incremental_sessions
     finalize_sessions,
 )
 from data_engineering_user_session_analysis_spark.operators.sessionize import (
+    GAP_SECONDS,
     session_rollup,
     sessionize,
 )
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 
-GAP = 1800
 
-
-def _replay(spark, events, tmp, gap_seconds=GAP):
+def _replay(spark, events, tmp):
     """Drive the incremental operator one calendar day at a time,
     round-tripping state through parquet exactly as a daily job
     would.  (NOT localCheckpoint: chaining eager localCheckpoints
@@ -51,7 +50,7 @@ def _replay(spark, events, tmp, gap_seconds=GAP):
     state = None
     for i, d in enumerate(days):
         day = events.filter(F.to_date("ts") == F.lit(d))
-        closed, state = advance_sessions(day, state, gap_seconds=gap_seconds)
+        closed, state = advance_sessions(day, state)
         closed.write.mode("append").parquet(os.path.join(tmp, "closed"))
         sp = os.path.join(tmp, f"state_{i}")
         state.write.mode("overwrite").parquet(sp)
@@ -136,7 +135,7 @@ def test_midnight_boundary_cases(spark, tmp_path):
 
 
 
-def _lake_replay(spark, events, tmp, gap_seconds=GAP):
+def _lake_replay(spark, events, tmp):
     """Drive the step the way the registry row does: a date-partitioned
     lake, one ``advance_sessions`` per day over a partition filter,
     each fold written to a per-day ``materialize_dir``."""
@@ -153,7 +152,6 @@ def _lake_replay(spark, events, tmp, gap_seconds=GAP):
         closed, state = advance_sessions(
             lake.filter(F.col("_d") == d),
             state,
-            gap_seconds=gap_seconds,
             materialize_dir=os.path.join(tmp, f"step_{i}"),
         )
         parts.append(closed)
@@ -237,7 +235,7 @@ def test_sql_step_plan_has_one_exchange(spark, tmp_path):
     )
     step = spark.sql(
         _STEP_SQL,
-        args={"gap_us": GAP * 1_000_000},
+        args={"gap_us": GAP_SECONDS * 1_000_000},
         day=lake.filter(F.col("_d") == days[1]),
         state=state,
     )
@@ -383,7 +381,7 @@ def test_incremental_plan_is_user_partitioned(spark):
     _, state = advance_sessions(ev, None)
     day2 = _mk_events(spark, [(1, "2024-03-02 10:00:00", 2, "view", 1.0)])
     fold = spark.sql(
-        _STEP_SQL, args={"gap_us": GAP * 1_000_000}, day=day2, state=state
+        _STEP_SQL, args={"gap_us": GAP_SECONDS * 1_000_000}, day=day2, state=state
     )
     plan = fold._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan

@@ -10,7 +10,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from data_engineering_user_session_analysis_spark.operators.sessionize import sessionize
+from data_engineering_user_session_analysis_spark.operators.sessionize import GAP_SECONDS, sessionize
 from data_engineering_user_session_analysis_spark.operators.skew import salted_agg
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 
@@ -32,7 +32,7 @@ def test_salted_agg_equals_direct(spark, sf_small):
     assert salted.exceptAll(direct).count() == 0
 
 
-def _py_sessionize(events: list[tuple[int, datetime.datetime]], gap: int = 1800):
+def _py_sessionize(events: list[tuple[int, datetime.datetime]], gap: int = GAP_SECONDS):
     """Pure-Python reference: native MICROSECOND gap semantics (the
     streaming session_window contract the batch operator matches)."""
     out = {}
@@ -86,20 +86,33 @@ def test_sessionize_property(spark, events):
     assert got == expected
 
 
+def _boundary_pairs(base: datetime.datetime) -> list[tuple[int, datetime.datetime, int]]:
+    """(event_id, ts, user_id): one event pair per user, straddling the
+    gap.  User 0's SECOND-truncated delta equals the gap while its
+    true delta exceeds it; user 1's delta is exactly the gap; user 2's
+    is the gap plus one microsecond."""
+    gap = datetime.timedelta(seconds=GAP_SECONDS)
+    return [
+        (1, base, 0),
+        (2, base + gap + datetime.timedelta(milliseconds=50), 0),
+        (3, base, 1),
+        (4, base + gap, 1),
+        (5, base, 2),
+        (6, base + gap + datetime.timedelta(microseconds=1), 2),
+    ]
+
+
+#: sessions per user of ``_boundary_pairs``: a delta of exactly the gap
+#: merges (strict ``>``), anything past it splits
+_BOUNDARY_SESSIONS = {0: 2, 1: 1, 2: 2}
+
+
 def test_sessionize_subsecond_boundary_pair(spark):
     """The round-1 hazard made explicit: a pair whose SECOND-truncated
     delta equals the gap while the true microsecond delta exceeds it
     must SPLIT (streaming session_window semantics); a pair at exactly
     the gap in microseconds must MERGE (strict >)."""
-    base = datetime.datetime(2024, 1, 1, 12, 0, 0, 900_000)
-    rows = [
-        # user 0: truncated delta = 1800 s, true delta = 1800.05 s -> split
-        (1, base, 0),
-        (2, base + datetime.timedelta(seconds=1800, milliseconds=50), 0),
-        # user 1: true delta exactly 1800.000000 s -> merge (strict >)
-        (3, base, 1),
-        (4, base + datetime.timedelta(seconds=1800), 1),
-    ]
+    rows = _boundary_pairs(datetime.datetime(2024, 1, 1, 12, 0, 0, 900_000))
     df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
     got = {
         r.event_id: r.session_seq
@@ -107,6 +120,51 @@ def test_sessionize_subsecond_boundary_pair(spark):
     }
     assert got[1] == 1 and got[2] == 2, got  # split
     assert got[3] == 1 and got[4] == 1, got  # merge
+    assert got[5] == 1 and got[6] == 2, got  # split by one microsecond
+
+
+def _sessions_per_user(rollup) -> dict[int, int]:
+    return {
+        r.user_id: r.n for r in rollup.groupBy("user_id").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def test_gap_boundary_pairs_agree_across_sessionizers(spark, tmp_path):
+    """The incremental SQL fold and streaming ``session_window`` put
+    the gap boundary where ``sessionize`` does: the boundary pairs
+    merge at exactly ``GAP_SECONDS`` and split one microsecond past
+    it, through the fold with an empty carry, through the fold with
+    each pair split across midnight, and through ``session_window``
+    on a batch frame."""
+    from data_engineering_user_session_analysis_spark.operators.incremental_sessions import (
+        advance_sessions,
+        finalize_sessions,
+    )
+    from data_engineering_user_session_analysis_spark.streaming.session_stream import (
+        session_window_rollup,
+    )
+
+    def events(base):
+        return spark.createDataFrame(
+            [(e, ts, u, "view", 1.0) for e, ts, u in _boundary_pairs(base)],
+            "event_id long, ts timestamp, user_id long, event_type string, value double",
+        )
+
+    midday = events(datetime.datetime(2024, 1, 1, 12, 0, 0, 900_000))
+    closed, state = advance_sessions(midday, None)
+    assert _sessions_per_user(closed.unionByName(finalize_sessions(state))) == _BOUNDARY_SESSIONS
+
+    # every pair's first event on 2024-01-01, its second on 2024-01-02
+    midnight = events(datetime.datetime(2024, 1, 1, 23, 45, 0, 900_000))
+    day1 = midnight.filter(F.to_date("ts") == F.lit(datetime.date(2024, 1, 1)))
+    day2 = midnight.filter(F.to_date("ts") == F.lit(datetime.date(2024, 1, 2)))
+    assert day1.count() == day2.count() == 3
+    closed1, state = advance_sessions(day1, None, materialize_dir=str(tmp_path / "d1"))
+    closed2, state = advance_sessions(day2, state, materialize_dir=str(tmp_path / "d2"))
+    stitched = closed1.unionByName(closed2).unionByName(finalize_sessions(state))
+    assert _sessions_per_user(stitched) == _BOUNDARY_SESSIONS
+
+    assert _sessions_per_user(session_window_rollup(midday)) == _BOUNDARY_SESSIONS
 
 
 def test_salted_agg_spreads_identical_rows(spark):
@@ -466,16 +524,37 @@ def test_range_join_property_vs_naive(spark, pts, ivs):
     assert {(r.pid, r.iid) for r in left.collect()} == naive_left
 
 
+def _cc_rounds_to_fixed_point(edges: list[tuple[int, int]]) -> int:
+    """Pure-Python twin of the distributed CC rounds (min-label
+    propagation, then one pointer jump): the 1-based number of the
+    first round that changes no label."""
+    adj: dict[int, set[int]] = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    labels = {v: v for v in adj}
+    for round_no in range(1, len(adj) + 2):
+        stepped = {
+            u: min(labels[u], min(labels[v] for v in adj[u])) for u in adj
+        }
+        jumped = {u: min(stepped[u], stepped[stepped[u]]) for u in adj}
+        if jumped == labels:
+            return round_no
+        labels = jumped
+    raise AssertionError("no fixed point")
+
+
 def test_connected_components_batched_convergence_actions(spark, monkeypatch):
-    """Convergence is checked every SECOND round: the count() action
-    tally must be about half the rounds a per-round checker would
-    spend, while the result stays exact."""
+    """Convergence is checked every round: the loop stops at the FIRST
+    round that changes no label, so the count() tally is one per
+    round up to that round, plus one for the strategy decision
+    (driver vs distributed); with a lower ``max_iter`` every round
+    still checks.  The result stays exact."""
     from data_engineering_user_session_analysis_spark.operators.dedup import connected_components
 
     n = 256
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
+    edges = [(i, i + 1) for i in range(n - 1)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     # patch the CONCRETE DataFrame class (pyspark 4 routes instances
     # through pyspark.sql.classic, not the pyspark.sql.DataFrame ABC)
     cls = type(pairs)
@@ -487,12 +566,16 @@ def test_connected_components_batched_convergence_actions(spark, monkeypatch):
         return orig(self)
 
     monkeypatch.setattr(cls, "count", counting)
+    rounds = _cc_rounds_to_fixed_point(edges)
+    # a 256-chain needs a handful of pointer-jump rounds
+    assert 3 <= rounds < 25, rounds
     comp = connected_components(pairs, max_iter=25, driver_max_edges=0).collect()
     assert len(comp) == n and {r.component for r in comp} == {0}
-    # a 256-chain needs ~6-8 pointer-jump rounds; per-round checking
-    # would spend that many count() actions, every-2 spends <= 5,
-    # plus ONE for the strategy decision (driver vs distributed)
-    assert 0 < calls["n"] <= 6, calls["n"]
+    assert calls["n"] == 1 + rounds, (calls["n"], rounds)
+    # capped before the fixed point: every round up to the cap checks
+    calls["n"] = 0
+    connected_components(pairs, max_iter=rounds - 2, driver_max_edges=0).collect()
+    assert calls["n"] == 1 + rounds - 2, (calls["n"], rounds)
 
 
 def test_shingle_kernel_equals_hof_construction(spark, sf_small):

@@ -2,8 +2,7 @@
 
 from __future__ import annotations
 
-from data_engineering_user_session_analysis_spark.operators.rollup_full import session_rollup_full
-from data_engineering_user_session_analysis_spark.operators.sessionize import sessionize
+from data_engineering_user_session_analysis_spark.operators.sessionize import session_rollup_full, sessionize
 from data_engineering_user_session_analysis_spark.sources.events import load_events
 from data_engineering_user_session_analysis_spark.sources.serving_ddl import apply_ddl, ddl_for_schema
 
